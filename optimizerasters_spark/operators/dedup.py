@@ -1,9 +1,12 @@
 """Deduplication operators.
 
-* ``dedup_latest`` — keep the newest crawl per url (window row_number),
-  the reference's ledger dedup-on-add analog (Report.addFile,
-  OptimizeRasters.py:1908-1917) generalized to "latest snapshot wins".
-* ``dedup_exact`` — exact content dedup by sha2(text) hash-groupBy.
+* ``dedup_latest`` — keep the newest crawl per url (groupBy MAX of one
+  packed struct), the reference's ledger dedup-on-add analog
+  (Report.addFile, OptimizeRasters.py:1908-1917) generalized to "latest
+  snapshot wins".
+* ``dedup_exact`` — exact content dedup by sha2(text) hash-groupBy;
+  ``dedup_exact_rows`` returns the representatives' full rows from the
+  same single aggregate.
 * ``minhash_signatures`` / ``lsh_candidate_pairs`` — MinHash+LSH near-dup:
   word shingles -> per-hash min of md5(seed||shingle) -> band buckets ->
   bucket equi-join. Shingle construction is one vectorized Arrow batch
@@ -50,16 +53,6 @@ def dedup_latest(pages: DataFrame,
             .select(key, *[out[c] for c in pages.columns if c != key]))
 
 
-def dedup_latest_window(pages: DataFrame,
-                        key: str = "url",
-                        order: str = "warc_epoch") -> DataFrame:
-    """Window-function form (kept for parity testing / SURVEY §2.5)."""
-    w = Window.partitionBy(key).orderBy(F.col(order).desc(),
-                                        F.col("doc_id").asc())
-    return (pages.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1).drop("rn"))
-
-
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """One representative (min doc_id) per distinct sha256(text)."""
     return (docs
@@ -67,6 +60,42 @@ def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
             .groupBy("text_sha")
             .agg(F.min("doc_id").alias("doc_id"),
                  F.count(F.lit(1)).alias("dup_count")))
+
+
+def dedup_exact_rows(docs: DataFrame, text_col: str = "text"
+                     ) -> DataFrame:
+    """The full rows of :func:`dedup_exact`'s representatives: per
+    distinct sha256(text), the row with the min doc_id, in ``docs``'
+    column order.
+
+    One aggregate over ``docs``: MIN of one (doc_id, payload...) struct
+    per digest, so the payload rides the one shuffle the digest needs —
+    ``docs`` semi-joined to ``dedup_exact(docs)`` names its input twice
+    and shuffles it twice. doc_id leads the struct and is a row key, so
+    the comparison never reaches the payload; NULL doc_ids are dropped
+    first, as the semi-join on doc_id drops them. NULL text is one
+    digest group, like any other text."""
+    payload = [c for c in docs.columns if c != "doc_id"]
+    row = F.min(F.struct("doc_id", *payload)).alias("_row")
+    return (docs.where(F.col("doc_id").isNotNull())
+            .groupBy(F.sha2(F.col(text_col), 256).alias("_sha"))
+            .agg(row)
+            .select(*[F.col("_row")[c].alias(c) for c in docs.columns]))
+
+
+def _shingler(n: int, full_only: bool):
+    """toks -> distinct word n-grams in first-occurrence order
+    (dict.fromkeys == array_distinct); None when ``full_only`` and the
+    doc is shorter than n tokens, else a short doc gives its one
+    truncated shingle, as slice() does. A closure, so a UDF that calls
+    it ships it by value and workers need not import this package."""
+    def shingle(toks: list[str]):
+        if full_only and len(toks) < n:
+            return None
+        upper = max(len(toks) - n, 0)
+        return list(dict.fromkeys(
+            " ".join(toks[i:i + n]) for i in range(upper + 1)))
+    return shingle
 
 
 def shingles_col(text_col, n: int = 3, full_only: bool = False):
@@ -85,31 +114,46 @@ def shingles_col(text_col, n: int = 3, full_only: bool = False):
     exactly like the regex form, and docs shorter than n emit the one
     truncated shingle slice() produced)."""
 
+    shingle = _shingler(n, full_only)
+
     @F.pandas_udf("array<string>")
     def _sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for txt in texts:
-            if txt is None:
-                out.append(None)
-                continue
-            toks = txt.lower().split(" ")
-            if full_only and len(toks) < n:
-                out.append(None)
-                continue
-            upper = max(len(toks) - n, 0)
-            out.append(list(dict.fromkeys(
-                " ".join(toks[i:i + n]) for i in range(upper + 1))))
-        return pd.Series(out)
+        return pd.Series([None if txt is None
+                          else shingle(txt.lower().split(" "))
+                          for txt in texts])
 
     return _sh(F.col(text_col))
 
 
+def text_sets_col(text_col, shingle_n: int = 3, gram_n: int = 5):
+    """struct<sh, grams>: a doc's distinct ``shingle_n``-shingles (as
+    :func:`shingles_col`) and its distinct full ``gram_n``-grams (as
+    ``shingles_col(.., full_only=True)``, the decontamination grams),
+    from ONE Arrow batch pass that tokenizes each text once — the
+    corpus build's near-dup and decontamination stages read both sets
+    from one materialized table instead of re-running the pass."""
+
+    shingle, gram = _shingler(shingle_n, False), _shingler(gram_n, True)
+
+    @F.pandas_udf("struct<sh:array<string>,grams:array<string>>")
+    def _sets(texts: pd.Series) -> pd.DataFrame:
+        sh, grams = [], []
+        for txt in texts:
+            toks = None if txt is None else txt.lower().split(" ")
+            sh.append(None if toks is None else shingle(toks))
+            grams.append(None if toks is None else gram(toks))
+        return pd.DataFrame({"sh": sh, "grams": grams})
+
+    return _sets(F.col(text_col))
+
+
 def exploded_shingles(docs: DataFrame, shingle_n: int = 3,
                       text_col: str = "text") -> DataFrame:
-    """(doc_id, s) exploded distinct-shingle table — built ONCE and shared
-    between signature generation and exact-Jaccard verification so the
-    explode (the widest intermediate in the near-dup pipeline) is a single
-    plan subtree. Downstream groupBy(doc_id) consumers canonicalize to the
+    """(doc_id, s) exploded distinct-shingle table — the input
+    :func:`minhash_signatures` aggregates. Build it once and pass it as
+    ``shingles=`` where several consumers need it, so the explode (the
+    widest intermediate in the near-dup pipeline) is a single plan
+    subtree; downstream groupBy(doc_id) consumers canonicalize to the
     same Exchange and Catalyst reuses it (ReusedExchange)."""
     return docs.select(
         "doc_id",
@@ -160,28 +204,52 @@ def ngram_jaccard_pairs(docs: DataFrame, num_hashes: int = 8,
     after'). jaccard_micro = floor(|A∩B| * 1e6 / |A∪B|) — exact
     integers end to end. ``max_bucket`` passes through to the LSH stage
     (degenerate-bucket n² guard); pair it with lsh_oversized_buckets so
-    whatever the cap drops is reported, never silent."""
-    pairs = lsh_candidate_pairs(docs, num_hashes, bands, shingle_n,
-                                text_col, max_bucket=max_bucket)
-    sets = docs.select("doc_id",
-                       shingles_col(text_col, shingle_n).alias("_sh"))
+    whatever the cap drops is reported, never silent.
+
+    Payload: every candidate pair carries BOTH shingle arrays through
+    the join shuffles, so a doc in k pairs ships its array k times — a
+    hot doc (a large near-dup family) costs k x its shingle bytes. The
+    LSH bucket cap bounds k; the pair count itself is what the stage
+    exists to find.
+
+    The shingle-set table is built by one Arrow pass and materialized
+    once with a lazy local checkpoint, which signatures and both sides
+    of the verify join read. A local checkpoint lives in executor
+    storage and is NOT fault-tolerant: a lost executor loses it and
+    the query fails. Cluster runs use ``training_kept``'s ``reps_path``,
+    which writes the same table to parquet (the durable form)."""
+    sets = (docs.select("doc_id",
+                        shingles_col(text_col, shingle_n).alias("_sh"))
+            .localCheckpoint(eager=False))
+    return sets_jaccard_pairs(sets, num_hashes, bands, min_jaccard_micro,
+                              max_bucket)
+
+
+def sets_jaccard_pairs(sets: DataFrame, num_hashes: int = 8,
+                       bands: int = 4, min_jaccard_micro: int = 0,
+                       max_bucket: int | None = None) -> DataFrame:
+    """:func:`ngram_jaccard_pairs` over a precomputed (doc_id, _sh)
+    shingle-set table: MinHash/LSH candidates from its exploded sets,
+    then the exact Jaccard join back to the same table. Materialize
+    ``sets`` first; every consumer here re-reads it."""
+    pairs = lsh_candidate_pairs(
+        sets, num_hashes, bands,
+        shingles=sets.select("doc_id", F.explode("_sh").alias("s")),
+        max_bucket=max_bucket)
+    n_inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("bigint")
+    jaccard = F.floor(n_inter * 1000000 /
+                      (F.size("_sh_a") + F.size("_sh_b") - n_inter)
+                      ).cast("bigint")
     out = (pairs
            .join(sets.select(F.col("doc_id").alias("doc_a"),
                              F.col("_sh").alias("_sh_a")), "doc_a")
            .join(sets.select(F.col("doc_id").alias("doc_b"),
                              F.col("_sh").alias("_sh_b")), "doc_b")
-           .withColumn("n_inter",
-                       F.size(F.array_intersect("_sh_a", "_sh_b"))
-                       .cast("bigint"))
-           .withColumn("jaccard_micro",
-                       F.floor(F.col("n_inter") * 1000000 /
-                               (F.size("_sh_a") + F.size("_sh_b") -
-                                F.col("n_inter"))).cast("bigint")))
-    return (out.where(F.col("jaccard_micro") >= min_jaccard_micro)
-            .select(F.col("doc_a").cast("bigint"),
-                    F.col("doc_b").cast("bigint"),
-                    F.col("n_inter").cast("bigint").alias("n_inter"),
-                    "jaccard_micro"))
+           .select(F.col("doc_a").cast("bigint"),
+                   F.col("doc_b").cast("bigint"),
+                   n_inter.alias("n_inter"),
+                   jaccard.alias("jaccard_micro")))
+    return out.where(F.col("jaccard_micro") >= min_jaccard_micro)
 
 
 def _banded_signatures(docs: DataFrame, num_hashes: int, bands: int,

@@ -1,9 +1,10 @@
 """Text-analysis operators for the training-data pipeline (documents table).
 
-All pure built-in column functions (JVM-side, whole-stage codegen) — no
-Python in the hot path. Scores that would be floats are emitted as
-micro-units (x 1e6, floored) so results are exact integers and
-oracle-comparable across engines.
+Built-in column functions (JVM-side, whole-stage codegen), except the
+decontamination n-grams, which come from the vectorized Arrow batch
+pass the MinHash stage uses (dedup.shingles_col). Scores that would
+be floats are emitted as micro-units (x 1e6, floored) so results are
+exact integers and oracle-comparable across engines.
 """
 
 from __future__ import annotations
@@ -309,6 +310,30 @@ def repetition_quality(docs: DataFrame, text_col: str = "text",
                  .cast("bigint").alias("top_bigram_ratio_micro")))
 
 
+def benchmark_hits(grams: DataFrame, benchmark: DataFrame, n: int = 5,
+                   text_col: str = "text") -> DataFrame:
+    """(doc_id, n_hits) for every doc of ``grams`` — (doc_id, grams:
+    its distinct full word ``n``-grams, as
+    ``dedup.shingles_col(.., n, full_only=True)`` builds them) — that
+    shares at least one n-gram with ``benchmark``'s ``text_col``;
+    n_hits counts the shared distinct n-grams. Clean docs are absent,
+    so the result is the distinct dirty-id set.
+
+    The one decontamination implementation: the benchmark's n-gram set
+    is tiny by definition, so the exploded doc n-grams meet it in a
+    broadcast hash semi-join, then one partial-agg count per doc."""
+    from optimizerasters_spark.operators.dedup import shingles_col
+    bench_grams = (benchmark
+                   .select(F.explode(shingles_col(text_col, n,
+                                                  full_only=True))
+                           .alias("g"))
+                   .distinct())
+    return (grams.select("doc_id", F.explode("grams").alias("g"))
+            .join(F.broadcast(bench_grams), "g", "left_semi")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_hits")))
+
+
 def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
                         text_col: str = "text") -> DataFrame:
     """Benchmark decontamination: flag documents sharing any word
@@ -316,23 +341,17 @@ def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
     training corpus runs so test questions never leak into training
     (the n-gram-overlap method used for GPT-3/PaLM-style decontam).
 
-    Scale shape: DISTINCT doc n-grams explode (bounded by doc length),
-    the benchmark's n-gram set is tiny by definition -> broadcast hash
-    semi-join, then one partial-agg count per doc. Returns every doc
-    with n_hits (0 for clean docs) and the contaminated flag. Gram
-    construction is the vectorized Arrow batch builder shared with the
-    MinHash stage (dedup.shingles_col, guide §4.2) — full windows only,
-    exactly the old size>=n gate."""
-    def grams(df: DataFrame) -> DataFrame:
-        from optimizerasters_spark.operators.dedup import shingles_col
-        gs = shingles_col(text_col, n, full_only=True)
-        return df.select("doc_id", F.explode(gs).alias("g"))
-
-    bench_grams = grams(benchmark).select("g").distinct()
-    hits = (grams(docs)
-            .join(F.broadcast(bench_grams), "g", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_hits")))
+    Returns every doc with n_hits (0 for clean docs) and the
+    contaminated flag: :func:`benchmark_hits` over the docs' n-grams,
+    left-joined back to every doc. Gram construction is the vectorized
+    Arrow batch pass shared with the MinHash stage
+    (dedup.shingles_col, guide §4.2) — full windows only, exactly the
+    old size>=n gate."""
+    from optimizerasters_spark.operators.dedup import shingles_col
+    grams = docs.select(
+        "doc_id",
+        shingles_col(text_col, n, full_only=True).alias("grams"))
+    hits = benchmark_hits(grams, benchmark, n, text_col)
     return (docs.select("doc_id")
             .join(hits, "doc_id", "left")
             .select("doc_id",

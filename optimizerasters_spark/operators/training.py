@@ -1,18 +1,23 @@
 """The training-data flagship pipeline: the four LLM-corpus stages
 composed end to end over the documents table —
 
-    exact dedup (sha256 groupBy, keep min doc_id)
+    exact dedup (one sha256 groupBy, keep the min-doc_id row)
       -> near-dup removal (MinHash LSH candidates, exact n-gram Jaccard
          verify, drop the higher doc_id of every confirmed pair)
       -> quality / language gate (token count, mean word length,
          stopword-ratio lang score — integer micro-units)
       -> per-language token/byte rollup
 
-Every stage is built-in column functions (JVM-side); the only shuffles
-are the three natural keys (content hash, LSH band bucket, lang), all
-uniform. The LSH bucket join is the one spot with data-dependent skew —
-exactly the duplicate families the stage exists to find; its cost is
-bounded by candidate count, never all-pairs.
+The text features of each exact-dedup survivor — its distinct
+3-shingle set and, for the corpus build's decontamination, its distinct
+5-gram set — come from ONE vectorized Arrow batch pass, materialized
+once (a lazy local checkpoint, or parquet at ``reps_path``); MinHash,
+the Jaccard verify, the kept set and decontamination all read that
+table. Every other stage is built-in column functions (JVM-side). The
+only shuffles are the natural keys (content hash, LSH band bucket,
+lang), all uniform. The LSH bucket join is the one spot with
+data-dependent skew — exactly the duplicate families the stage exists
+to find; its cost is bounded by candidate count, never all-pairs.
 """
 
 from __future__ import annotations
@@ -27,48 +32,47 @@ MIN_TOKENS = 5               # quality gate: minimum whitespace tokens
 MAX_MEAN_WL_MICRO = 12_000_000   # ... and mean word length <= 12 chars
 
 
-def training_kept(docs: DataFrame,
-                  jaccard_micro: int = JACCARD_MICRO,
-                  min_tokens: int = MIN_TOKENS,
-                  max_mean_wl_micro: int = MAX_MEAN_WL_MICRO,
-                  reps_path: str | None = None,
-                  max_bucket: int | None = None,
-                  max_top_bigram_micro: int | None = None,
-                  max_dup_line_micro: int | None = None) -> DataFrame:
-    """Documents surviving dedup + near-dup removal + the quality gate,
-    with the gate features attached.
-
-    ``reps_path`` materializes the exact-dedup survivors to parquet
-    once and re-reads them — the 100 TB form: the near-dup pipeline
-    consumes the dedup output from several subtrees (signatures, set
-    sizes, both sides of the intersection join), and while AQE's
-    ReusedExchange collapses most of the duplication at runtime, a
-    corpus-scale run wants the deduped table written once and every
-    consumer scanning THAT (smaller) table instead of re-deriving it
-    from the raw corpus. Identical results either way.
-
-    ``max_bucket`` caps degenerate LSH buckets (the n² guard a corpus
-    run needs); pair it with ``training_oversized_buckets`` over the
-    same input so everything the cap drops is reported — never cap
-    silently."""
-    reps = docs.join(D.dedup_exact(docs).select("doc_id"),
-                     "doc_id", "left_semi")
+def _survivor_sets(docs: DataFrame, reps_path: str | None,
+                   grams: bool) -> DataFrame:
+    """The exact-dedup survivors with their text sets, materialized
+    once: ``docs``' columns, ``_sh`` (distinct 3-shingles) and, when
+    ``grams``, ``_grams`` (distinct full 5-grams for decontamination).
+    ``reps_path`` writes the table to parquet and re-reads it (durable);
+    otherwise it is a lazy local checkpoint, which a lost executor
+    loses (see dedup.ngram_jaccard_pairs)."""
+    sets = D.text_sets_col("text") if grams else \
+        F.struct(D.shingles_col("text").alias("sh"))
+    feats = D.dedup_exact_rows(docs).withColumn("_sets", sets)
     if reps_path is not None:
-        reps.write.mode("overwrite").parquet(reps_path)
-        reps = docs.sparkSession.read.parquet(reps_path)
-    victims = (D.ngram_jaccard_pairs(reps,
-                                     min_jaccard_micro=jaccard_micro,
-                                     max_bucket=max_bucket)
+        feats.write.mode("overwrite").parquet(reps_path)
+        feats = docs.sparkSession.read.parquet(reps_path)
+    else:
+        feats = feats.localCheckpoint(eager=False)
+    cols = [F.col("_sets.sh").alias("_sh")]
+    if grams:
+        cols.append(F.col("_sets.grams").alias("_grams"))
+    return feats.select(*docs.columns, *cols)
+
+
+def _gate(feats: DataFrame, jaccard_micro: int, min_tokens: int,
+          max_mean_wl_micro: int, max_bucket: int | None,
+          max_top_bigram_micro: int | None,
+          max_dup_line_micro: int | None) -> DataFrame:
+    """:func:`training_kept` over the survivors' table of
+    :func:`_survivor_sets`."""
+    victims = (D.sets_jaccard_pairs(feats.select("doc_id", "_sh"),
+                                    min_jaccard_micro=jaccard_micro,
+                                    max_bucket=max_bucket)
                .select(F.col("doc_b").alias("doc_id")).distinct())
-    kept = reps.join(victims, "doc_id", "left_anti")
+    kept = feats.drop("_sh").join(victims, "doc_id", "left_anti")
     toks = T.tokens_col("text")
     n_toks = F.size(toks).cast("bigint")
     mean_wl = F.floor(F.length(F.col("text")) * T.MICRO /
                       F.greatest(n_toks, F.lit(1))).cast("bigint")
     gated = (kept
-             .withColumn("n_tokens", n_toks)
-             .withColumn("mean_word_len_micro", mean_wl)
-             .withColumn("en_score_micro", T.stopword_ratio_col("text"))
+             .withColumns({"n_tokens": n_toks,
+                           "mean_word_len_micro": mean_wl,
+                           "en_score_micro": T.stopword_ratio_col("text")})
              .where((F.col("n_tokens") >= min_tokens) &
                     (F.col("mean_word_len_micro") <= max_mean_wl_micro)))
     # optional Gopher-style repetition gate (text.repetition_quality):
@@ -84,6 +88,35 @@ def training_kept(docs: DataFrame,
         gated = gated.join(rq.where(cond).select("doc_id"),
                            "doc_id", "left_semi")
     return gated
+
+
+def training_kept(docs: DataFrame,
+                  jaccard_micro: int = JACCARD_MICRO,
+                  min_tokens: int = MIN_TOKENS,
+                  max_mean_wl_micro: int = MAX_MEAN_WL_MICRO,
+                  reps_path: str | None = None,
+                  max_bucket: int | None = None,
+                  max_top_bigram_micro: int | None = None,
+                  max_dup_line_micro: int | None = None) -> DataFrame:
+    """Documents surviving dedup + near-dup removal + the quality gate,
+    with the gate features attached.
+
+    The exact-dedup survivors (:func:`dedup.dedup_exact_rows`, doc_id a
+    row key) and their shingle sets are computed once and materialized
+    once: signatures, the Jaccard verify's join back and the kept set
+    all read that table instead of re-deriving the dedup from ``docs``.
+    By default it is a lazy local checkpoint. ``reps_path`` writes it to
+    parquet and re-reads it instead — the 100 TB / cluster form, since a
+    local checkpoint does not survive a lost executor. Identical results
+    either way.
+
+    ``max_bucket`` caps degenerate LSH buckets (the n² guard a corpus
+    run needs); pair it with ``training_oversized_buckets`` over the
+    same input so everything the cap drops is reported — never cap
+    silently."""
+    return _gate(_survivor_sets(docs, reps_path, grams=False),
+                 jaccard_micro, min_tokens, max_mean_wl_micro, max_bucket,
+                 max_top_bigram_micro, max_dup_line_micro)
 
 
 def corpus_pipeline(pages: DataFrame,
@@ -134,14 +167,16 @@ def corpus_pipeline(pages: DataFrame,
         p = W.blocklist_filter(p, blocked).drop("host")
     p = D.dedup_latest(p)
     docs = p.select("doc_id", "text", "lang")
-    kept = training_kept(docs, jaccard_micro, min_tokens,
-                         max_mean_wl_micro, max_bucket=max_bucket,
-                         max_top_bigram_micro=max_top_bigram_micro,
-                         max_dup_line_micro=max_dup_line_micro)
+    feats = _survivor_sets(docs, None, grams=benchmark is not None)
+    kept = _gate(feats.drop("_grams"), jaccard_micro, min_tokens,
+                 max_mean_wl_micro, max_bucket, max_top_bigram_micro,
+                 max_dup_line_micro)
     if benchmark is not None:
-        dirty = (T.ngram_contamination(kept.select("doc_id", "text"),
-                                       benchmark)
-                 .where(F.col("contaminated")).select("doc_id"))
+        # the survivors' 5-grams from the materialized table: one
+        # semi-join to the distinct dirty ids, one anti-join
+        dirty = T.benchmark_hits(
+            feats.select("doc_id", F.col("_grams").alias("grams")),
+            benchmark).select("doc_id")
         kept = kept.join(dirty, "doc_id", "left_anti")
     if rates_milli is not None:
         kept = W.stratified_hash_sample(kept, rates_milli)
@@ -156,9 +191,8 @@ def training_oversized_buckets(docs: DataFrame,
     alongside a capped training_kept/rollup so the capped families
     surface in the job report and can be routed to a dedicated pass
     (exact dedup already caught their byte-identical members)."""
-    reps = docs.join(D.dedup_exact(docs).select("doc_id"),
-                     "doc_id", "left_semi")
-    return D.lsh_oversized_buckets(reps, max_bucket=max_bucket)
+    return D.lsh_oversized_buckets(D.dedup_exact_rows(docs),
+                                   max_bucket=max_bucket)
 
 
 def training_flagship_rollup(docs: DataFrame,

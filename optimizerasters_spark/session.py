@@ -15,6 +15,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+# Generated classes kept by the JVM-wide codegen cache. Spark's default
+# of 100 is about one corpus_pipeline plan (97-116 classes), so a
+# repeated build evicted and recompiled most of its own classes.
+CODEGEN_CACHE_ENTRIES = "1000"
 
 
 def _default_driver_mem() -> str:
@@ -72,6 +76,7 @@ def get_spark(app_name: str = "optimizerasters-spark",
         .config("spark.executor.memory",
                 os.environ.get("SPARK_EXECUTOR_MEMORY", "12g"))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .config("spark.ui.enabled", "false")
     )
     if local_dir:

@@ -396,3 +396,35 @@ def test_segment_cells_pure_codegen_explode(spark, sf_dir):
     plan = _plan(spatial.segment_cells(segs))
     assert "Generate" in plan and "explode(sequence" in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
+
+
+def test_corpus_pipeline_scans_pages_once_one_text_pass(spark, sf_dir,
+                                                         tmp_path):
+    """corpus_pipeline takes the exact-dedup survivors from one
+    aggregate and builds their 3-shingle and 5-gram sets in one Arrow
+    pass, materialized once; LSH, the Jaccard verify, the kept set and
+    decontamination read that table. So its plan scans the pages input
+    at most once and holds at most two ArrowEvalPython nodes (the
+    survivors' pass and the benchmark's n-grams). The double-shingle
+    form restated the web-filter and dedup front end in every consumer:
+    its plan held 30 scans of the pages input and 14 ArrowEvalPython
+    nodes."""
+    from optimizerasters_spark.operators import training
+    src = str(tmp_path / "pages.parquet")
+    synth_pages(spark, sf_dir).write.parquet(src)
+    pages = spark.read.parquet(src)
+    robots = spark.createDataFrame(
+        [("site3.example", "User-agent: *\nDisallow: /p/\n")],
+        "host string, robots_txt string")
+    blocked = spark.createDataFrame([("site5.example",)], "bdom string")
+    benchmark = spark.createDataFrame(
+        [(1, " ".join(f"qq{k}" for k in range(30)))],
+        "doc_id bigint, text string")
+    out = training.corpus_pipeline(pages, robots=robots, blocked=blocked,
+                                   benchmark=benchmark)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "simple")
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan parquet" in ln and "pages.parquet" in ln]
+    assert len(scans) <= 1, plan
+    assert plan.count("ArrowEvalPython") <= 2, plan

@@ -183,6 +183,39 @@ def test_training_flagship_materialized_reps_equivalent(spark, sf_dir,
     assert "documents.parquet" not in simple
 
 
+def test_exact_dedup_survivors_on_dirty_text(spark):
+    """The exact-dedup step (one aggregate: min (doc_id, payload) struct
+    per sha256(text)) keeps the same rows as the semi-join form
+    docs ⋉ dedup_exact(docs) on dirty input: NULL, empty and
+    whitespace-only texts, byte-identical texts under several doc_ids
+    (listed out of doc_id order, with differing payloads) and a NULL
+    doc_id. training_kept, with its near-dup and quality thresholds
+    opened, returns those survivors; only NULL text still falls to the
+    token gate (size(split(NULL)) is NULL)."""
+    from optimizerasters_spark.operators import dedup, training
+    same = "the same page text under several ids"
+    docs = spark.createDataFrame(
+        [(30, same, "de"), (20, same, "en"), (25, same, "fr"),
+         (1, None, "en"), (2, None, "de"),
+         (4, "", "en"), (3, "", "de"),
+         (6, "   ", "en"), (5, "   ", "de"), (7, "  ", "en"),
+         (None, "orphan text without an id", "en"),
+         (None, same, "en"),
+         (8, "a distinct page about rivers", "en")],
+        "doc_id bigint, text string, lang string")
+    old = docs.join(dedup.dedup_exact(docs).select("doc_id"), "doc_id",
+                    "left_semi")
+    expect = sorted(map(tuple, old.collect()), key=str)
+    assert sorted(map(tuple, dedup.dedup_exact_rows(docs).collect()),
+                  key=str) == expect
+    assert {r[0] for r in expect} == {20, 1, 3, 5, 7, 8}
+    kept = training.training_kept(docs, jaccard_micro=1_000_001,
+                                  min_tokens=0,
+                                  max_mean_wl_micro=10 ** 12)
+    assert sorted(map(tuple, kept.select(*docs.columns).collect()),
+                  key=str) == [r for r in expect if r[1] is not None]
+
+
 def test_dup_components_chains_and_isolated_families(spark):
     """Explicit graph: chain 1-2-3 (A~B, B~C, never A~C), pair 5-6,
     singleton-free by construction — labels converge to the family
