@@ -19,17 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: dedup -> tile assign -> PIP join -> per-tile/polygon counts
     at sf0.001 (the engine's 'tiled + spatially joined' headline path)."""
-    from pyspark.sql import functions as F
-
     from optimizerasters_spark.operators import dedup, spatial
     from optimizerasters_spark.pages import synth_boundaries, synth_pages
 
     sf_dir = "/root/testdata/sf0.001"
     pages = dedup.dedup_latest(synth_pages(spark, sf_dir))
-    tiled = spatial.with_tiles(pages)
-    joined = spatial.pip_join(tiled, synth_boundaries(spark), how="inner")
-    return (joined.groupBy("polygon_id", "tile_x", "tile_y")
-            .agg(F.count(F.lit(1)).alias("page_count"))
+    return (spatial.tile_polygon_counts(pages, synth_boundaries(spark))
             .orderBy("polygon_id", "tile_x", "tile_y"))
 
 

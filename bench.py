@@ -74,11 +74,7 @@ def main() -> None:
         p = dedup.dedup_latest(
             synth_pages_scaled(spark, SF_DIR, REPLICATE)
             .select("url", "doc_id", "warc_epoch", "lon_md", "lat_md"))
-        tiled = spatial.with_tiles(p)
-        joined = spatial.pip_join(tiled, synth_boundaries(spark),
-                                  how="inner")
-        (joined.groupBy("polygon_id", "tile_x", "tile_y")
-         .agg(F.count(F.lit(1)).alias("page_count"))
+        (spatial.tile_polygon_counts(p, synth_boundaries(spark))
          .write.mode("overwrite").format("noop").save())
 
     bench("flagship_e2e", flagship)

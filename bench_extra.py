@@ -88,16 +88,12 @@ def main() -> None:
         print(f"  {name}: min={srt[0]} median={srt[len(srt) // 2]} "
               f"samples={samples} steal={steals}", file=sys.stderr)
 
-    # -- composite (flagship) queries, replicating frozen bench.py code --
+    # -- composite (flagship) queries, the definitions bench.py times --
     def flagship_df():
         p = dedup.dedup_latest(
             synth_pages_scaled(spark, SF_DIR, args.replicate)
             .select("url", "doc_id", "warc_epoch", "lon_md", "lat_md"))
-        tiled = spatial.with_tiles(p)
-        joined = spatial.pip_join(tiled, synth_boundaries(spark),
-                                  how="inner")
-        return (joined.groupBy("polygon_id", "tile_x", "tile_y")
-                .agg(F.count(F.lit(1)).alias("page_count")))
+        return spatial.tile_polygon_counts(p, synth_boundaries(spark))
 
     def training_flagship_df():
         return training.training_flagship_rollup(

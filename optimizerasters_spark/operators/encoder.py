@@ -25,9 +25,9 @@ from the row — no driver-side argv assembly, no per-file subprocess.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from optimizerasters_spark.config import Config, get_boolean_value
 
@@ -261,15 +261,3 @@ def encoder_struct_col(mode: Column, compression: Column,
          .alias("block_size"),
         (F.when(comp == "lerc", F.lit("V2=ON")).otherwise(F.lit("")))
          .alias("options"))
-
-
-def with_encoder_params(tiles: DataFrame, conf: Config) -> DataFrame:
-    """Attach the job-default encoder struct to a tile table."""
-    p = resolve(conf)
-    return tiles.withColumn(
-        "encoder",
-        F.struct(F.lit(p.out_format).alias("out_format"),
-                 F.lit(p.compression).alias("compression"),
-                 F.lit(p.quality).cast("int").alias("quality"),
-                 F.lit(p.block_size).cast("int").alias("block_size"),
-                 F.lit(p.options).alias("options")))

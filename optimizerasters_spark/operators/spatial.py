@@ -6,10 +6,11 @@ Scale notes (100 TB design):
     the scan stage (whole-stage codegen).
   * PIP join is the classic theta-join made EQUI by grid-cover
     discretization (the reference's pixel->512-block idea,
-    OptimizeRasters.py:3992-3998): each polygon is expanded (driver-side,
-    dimension is small) into the set of coarse grid cells its bbox covers,
-    that cover table is BROADCAST, pages equi-join on their coarse cell,
-    and the exact predicate refines. Pages never shuffle.
+    OptimizeRasters.py:3992-3998): each polygon's bbox explodes on the
+    executors into the coarse grid cells it covers, that cover table is
+    BROADCAST, pages equi-join on their coarse cell, and the exact
+    predicate refines. Pages never shuffle. One skeleton (_probe) serves
+    every PIP form and the k-ring kNN.
   * kNN is radius-bounded: candidates = pages whose coarse cell is in the
     query point's k-ring (broadcast), then window row_number per query.
     Integer millidegree distances -> no float tie ambiguity.
@@ -113,24 +114,12 @@ def polyfill_ring(polys: DataFrame, res_md: int = 1000,
     (polygon_id, cell_x, cell_y) — the materialized cover a tile job
     plans from; compact_cells shrinks it to the minimal multi-level
     form."""
-    xs = F.transform(F.col(v_col), lambda p: p["x"])
-    ys = F.transform(F.col(v_col), lambda p: p["y"])
-    cx0 = F.floor(F.array_min(xs) / res_md).cast("bigint")
-    cx1 = F.floor(F.array_max(xs) / res_md).cast("bigint")
-    cy0 = F.floor(F.array_min(ys) / res_md).cast("bigint")
-    cy1 = F.floor(F.array_max(ys) / res_md).cast("bigint")
-    cand = (polys
-            .select(id_col, v_col,
-                    F.explode(F.sequence(cx0, cx1)).alias("cell_x"),
-                    cy0.alias("_cy0"), cy1.alias("_cy1"))
-            .select(id_col, v_col, "cell_x",
-                    F.explode(F.sequence("_cy0", "_cy1"))
-                    .alias("cell_y")))
     half = res_md // 2
     inside = _inside_ring(F.col("cell_x") * res_md + half,
                           F.col("cell_y") * res_md + half,
                           F.col(v_col))
-    return cand.where(inside).select(id_col, "cell_x", "cell_y")
+    return (_bbox_cells(_vertex_bbox(polys, v_col), res_md)
+            .where(inside).select(id_col, "cell_x", "cell_y"))
 
 
 def segment_cells(segments: DataFrame, id_col: str = "seg_id"
@@ -240,24 +229,80 @@ def pyramid_reduce_iterative(l0: DataFrame, max_level: int,
     return out.select("level", "tile_x", "tile_y", "avg_val", "near_val")
 
 
-def polygon_cover_df(boundaries: DataFrame,
-                     cell_md: int = COVER_CELL_MD) -> DataFrame:
-    """Distributed cover expansion: polygons -> (polygon_id, cell) rows
-    via explode(sequence) on the bbox — no driver collect, so the
-    polygon side can itself be a large table (county/parcel scale).
-    Output size = sum of covered cells per polygon; still broadcast-able
-    whenever it fits, and Catalyst decides."""
-    cx = F.explode(F.sequence(
-        F.floor(F.col("lon_lo_md") / cell_md),
-        F.floor((F.col("lon_hi_md") - 1) / cell_md))).alias("cx")
-    with_cx = boundaries.select("polygon_id", "lat_lo_md", "lat_hi_md", cx)
-    cy = F.explode(F.sequence(
-        F.floor(F.col("lat_lo_md") / cell_md),
-        F.floor((F.col("lat_hi_md") - 1) / cell_md))).alias("cy")
-    return (with_cx.select("polygon_id", "cx", cy)
-            .select("polygon_id",
-                    tiling.pack_cell_col(F.col("cx"), F.col("cy"))
-                    .alias("cell")))
+def _cell(lon, lat, cell_md: int) -> F.Column:
+    """Packed coarse grid cell of a point."""
+    return tiling.pack_cell_col(F.floor(lon / cell_md),
+                                F.floor(lat / cell_md))
+
+
+def _bbox_cells(boxes: DataFrame, cell_md: int) -> DataFrame:
+    """Every input column plus one (cell_x, cell_y) row per grid cell of
+    the half-open bbox [lon_lo_md, lon_hi_md) x [lat_lo_md, lat_hi_md),
+    exploded on the executors (explode(sequence) — no driver collect, so
+    the box side can itself be a large table)."""
+    def span(lo: str, hi: str) -> F.Column:
+        return F.explode(F.sequence(F.floor(F.col(lo) / cell_md),
+                                    F.floor((F.col(hi) - 1) / cell_md)))
+    cols = boxes.columns
+    return (boxes.select(*cols, span("lon_lo_md", "lon_hi_md")
+                         .alias("cell_x"))
+            .select(*cols, "cell_x", span("lat_lo_md", "lat_hi_md")
+                    .alias("cell_y")))
+
+
+def _probe(pages: DataFrame, polys: DataFrame, cell_md: int,
+           how: str = "inner") -> DataFrame:
+    """Broadcast the cell cover of ``polys`` (any columns plus the
+    half-open bbox) and equi-join each page on its own cell; the pages
+    side never shuffles.
+
+    ``inner``: one row per (page, covering polygon) with every polys
+    column, for the caller's exact refinement. ``left``: each page stays
+    ONE row and gains ``_cands``, its cell's sorted array of
+    (polygon_id, bbox) structs (NULL when no polygon covers the cell);
+    the per-cell aggregate runs on the dimension side, under the
+    broadcast."""
+    cover = _bbox_cells(polys, cell_md).select(
+        *polys.columns,
+        tiling.pack_cell_col(F.col("cell_x"), F.col("cell_y"))
+        .alias("cell"))
+    if how == "left":
+        cover = (cover.groupBy("cell")
+                 .agg(F.sort_array(F.collect_list(F.struct(
+                     "polygon_id", "lon_lo_md", "lon_hi_md", "lat_lo_md",
+                     "lat_hi_md"))).alias("_cands")))
+    return (pages.withColumn("cell", _cell(F.col("lon_md"), F.col("lat_md"),
+                                           cell_md))
+            .join(F.broadcast(cover), "cell", how))
+
+
+def _in_box(lon, lat, field) -> F.Column:
+    """Half-open bbox containment; ``field(name)`` reads a bbox bound."""
+    return ((lon >= field("lon_lo_md")) & (lon < field("lon_hi_md")) &
+            (lat >= field("lat_lo_md")) & (lat < field("lat_hi_md")))
+
+
+def _vertex_bbox(polys: DataFrame, v_col: str = "vertices") -> DataFrame:
+    """Vertex-array polygons plus the half-open bbox of their vertices
+    (array_min/array_max — pure array aggregates)."""
+    xs = F.transform(F.col(v_col), lambda v: v["x"])
+    ys = F.transform(F.col(v_col), lambda v: v["y"])
+    return polys.select(*polys.columns,
+                        F.array_min(xs).alias("lon_lo_md"),
+                        (F.array_max(xs) + 1).alias("lon_hi_md"),
+                        F.array_min(ys).alias("lat_lo_md"),
+                        (F.array_max(ys) + 1).alias("lat_hi_md"))
+
+
+def _edges(vertices) -> F.Column:
+    """The closed ring's edges: struct(a = vertex i, b = vertex i+1 mod n)
+    for every vertex i."""
+    n = F.size(vertices)
+    return F.transform(
+        F.sequence(F.lit(0), n - 1),
+        lambda i: F.struct(
+            F.get(vertices, i).alias("a"),
+            F.get(vertices, F.pmod(i + 1, n)).alias("b")))
 
 
 def pip_join(pages: DataFrame, boundaries: DataFrame,
@@ -268,67 +313,19 @@ def pip_join(pages: DataFrame, boundaries: DataFrame,
     [lo, hi). ``how='left'`` keeps pages matching no polygon (polygon_id
     NULL) — the reference's raster/non-raster split analog.
 
-    The cover table is built DISTRIBUTED (polygon_cover_df) and
-    broadcast; the pages side never shuffles. The inner path carries
-    the polygon's FULL row (bbox included) through the cover explode,
-    so refinement needs ONE broadcast probe per page instead of a
-    second polygon_id join over the whole page table (r06: two
-    BroadcastHashJoin -> one; the cover stays tiny — cells-per-polygon
-    x the dimension row)."""
-    if how == "inner":
-        cx = F.explode(F.sequence(
-            F.floor(F.col("lon_lo_md") / cell_md),
-            F.floor((F.col("lon_hi_md") - 1) / cell_md))).alias("cx")
-        cy = F.explode(F.sequence(
-            F.floor(F.col("lat_lo_md") / cell_md),
-            F.floor((F.col("lat_hi_md") - 1) / cell_md))).alias("cy")
-        cover = (boundaries.select(*boundaries.columns, cx)
-                 .select(*boundaries.columns, "cx", cy)
-                 .select(*boundaries.columns,
-                         tiling.pack_cell_col(F.col("cx"), F.col("cy"))
-                         .alias("cell")))
-        cands = pages.withColumn(
-            "cell",
-            tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                                 F.floor(F.col("lat_md") / cell_md)),
-        ).join(F.broadcast(cover), "cell", "inner")
-        return cands.where((F.col("lon_md") >= F.col("lon_lo_md")) &
-                           (F.col("lon_md") < F.col("lon_hi_md")) &
-                           (F.col("lat_md") >= F.col("lat_lo_md")) &
-                           (F.col("lat_md") < F.col("lat_hi_md")))
-    cover = polygon_cover_df(boundaries, cell_md)
-    cands = pages.withColumn(
-        "cell",
-        tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                             F.floor(F.col("lat_md") / cell_md)),
-    ).join(F.broadcast(cover), "cell", "left")
-    # left: ZERO page shuffle, single scan. The cover table pre-aggregates
-    # per cell into cell -> array<struct(polygon_id, bbox)> (one tiny
-    # Exchange on the DIMENSION side, under the broadcast), the pages
-    # join it 1:1 on cell — each page stays ONE row through the join —
-    # and refinement is a map-side filter() over the broadcast array;
-    # explode re-emits one row per match, or exactly one NULL row when
-    # no polygon refines. The round-2 shape recovered non-hits with a
-    # groupBy(doc_id) collect_list, which shuffled every page WITH its
-    # payload — the corpus text — once; this shape shuffles nothing on
-    # the pages side (mirror of the inner path's plan guarantee,
-    # asserted in tests/test_plans.py).
-    cell_polys = (cover.join(boundaries, "polygon_id")
-                  .groupBy("cell")
-                  .agg(F.sort_array(F.collect_list(F.struct(
-                      "polygon_id", "lon_lo_md", "lon_hi_md",
-                      "lat_lo_md", "lat_hi_md"))).alias("_cands")))
-    joined = pages.withColumn(
-        "cell",
-        tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                             F.floor(F.col("lat_md") / cell_md)),
-    ).join(F.broadcast(cell_polys), "cell", "left")
+    The inner path carries the polygon's FULL row (bbox included)
+    through the cover explode, so refinement is one filter after ONE
+    broadcast probe per page. The left path refines with a map-side
+    filter() over the page's broadcast candidate array and explodes one
+    row per match, or exactly one NULL row when no polygon refines: ZERO
+    page shuffle and a single scan (tests/test_plans.py asserts both)."""
     lon, lat = F.col("lon_md"), F.col("lat_md")
+    if how == "inner":
+        return _probe(pages, boundaries, cell_md).where(
+            _in_box(lon, lat, F.col))
+    joined = _probe(pages, boundaries, cell_md, "left")
     hits = F.transform(
-        F.filter(
-            "_cands",
-            lambda p: (lon >= p["lon_lo_md"]) & (lon < p["lon_hi_md"]) &
-                      (lat >= p["lat_lo_md"]) & (lat < p["lat_hi_md"])),
+        F.filter("_cands", lambda p: _in_box(lon, lat, p.getField)),
         lambda p: p["polygon_id"])
     polys_or_null = F.when(F.size(hits) > 0, hits) \
         .otherwise(F.array(F.lit(None).cast("bigint")))
@@ -337,31 +334,14 @@ def pip_join(pages: DataFrame, boundaries: DataFrame,
         F.explode(polys_or_null).alias("polygon_id"))
 
 
-def polygon_vertices_cover(polys: DataFrame,
-                           cell_md: int = COVER_CELL_MD) -> DataFrame:
-    """Vertex-list polygons -> (polygon_id, cell) cover rows via the
-    bbox of the vertex array (min/max are pure array aggregates) —
-    distributed exactly like polygon_cover_df."""
-    vx = F.transform(F.col("vertices"), lambda v: v["x"])
-    vy = F.transform(F.col("vertices"), lambda v: v["y"])
-    boxed = polys.select(
-        "polygon_id", "vertices",
-        F.array_min(vx).alias("lon_lo_md"),
-        (F.array_max(vx) + 1).alias("lon_hi_md"),
-        F.array_min(vy).alias("lat_lo_md"),
-        (F.array_max(vy) + 1).alias("lat_hi_md"))
-    cx = F.explode(F.sequence(
-        F.floor(F.col("lon_lo_md") / cell_md),
-        F.floor((F.col("lon_hi_md") - 1) / cell_md))).alias("cx")
-    with_cx = boxed.select("polygon_id", "vertices",
-                           "lat_lo_md", "lat_hi_md", cx)
-    cy = F.explode(F.sequence(
-        F.floor(F.col("lat_lo_md") / cell_md),
-        F.floor((F.col("lat_hi_md") - 1) / cell_md))).alias("cy")
-    return (with_cx.select("polygon_id", "vertices", "cx", cy)
-            .select("polygon_id", "vertices",
-                    tiling.pack_cell_col(F.col("cx"), F.col("cy"))
-                    .alias("cell")))
+def tile_polygon_counts(pages: DataFrame, boundaries: DataFrame
+                        ) -> DataFrame:
+    """The flagship chain after dedup: level-0 tile assignment, inner
+    PIP join, then the page count per (polygon_id, tile_x, tile_y). The
+    caller deduplicates the pages first."""
+    joined = pip_join(with_tiles(pages), boundaries, how="inner")
+    return (joined.groupBy("polygon_id", "tile_x", "tile_y")
+            .agg(F.count(F.lit(1)).alias("page_count")))
 
 
 def _inside_convex(lon, lat, vertices) -> F.Column:
@@ -369,39 +349,11 @@ def _inside_convex(lon, lat, vertices) -> F.Column:
     product (v2-v1) x (p-v1) is >= 0 for every edge. Integer millidegree
     coords -> exact arithmetic, no epsilon, oracle-identical on any
     engine."""
-    n = F.size(vertices)
-    edges = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.struct(
-            F.get(vertices, i).alias("a"),
-            F.get(vertices, F.pmod(i + 1, n)).alias("b")))
     return F.forall(
-        edges,
+        _edges(vertices),
         lambda e: ((e["b"]["x"] - e["a"]["x"]) * (lat - e["a"]["y"]) -
                    (e["b"]["y"] - e["a"]["y"]) * (lon - e["a"]["x"]))
         >= 0)
-
-
-def pip_join_convex(pages: DataFrame, polys: DataFrame,
-                    cell_md: int = COVER_CELL_MD) -> DataFrame:
-    """Point-in-polygon join against REAL (convex, CCW, integer-vertex)
-    polygons — the shape beyond the half-open-bbox form: cover equi-join
-    on the bbox grid cells (broadcast, pages never shuffle), exact
-    refinement by the all-edges cross-product test, entirely in Catalyst
-    (forall over the vertex array — no UDF, no epsilon). Non-convex
-    polygons decompose into convex pieces upstream (standard practice);
-    a shapely-backed pandas-UDF refiner slots into the same candidate
-    stream when arbitrary rings are needed (the UDF-boundary parity of
-    that slot is proven by cell_encode's twin test)."""
-    cover = polygon_vertices_cover(polys, cell_md)
-    cands = pages.withColumn(
-        "cell",
-        tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                             F.floor(F.col("lat_md") / cell_md)),
-    ).join(F.broadcast(cover), "cell")
-    return cands.where(_inside_convex(F.col("lon_md"), F.col("lat_md"),
-                                      F.col("vertices"))) \
-        .drop("cell", "vertices")
 
 
 def _inside_ring(lon, lat, vertices) -> F.Column:
@@ -413,13 +365,6 @@ def _inside_ring(lon, lat, vertices) -> F.Column:
     no division, no epsilon, oracle-identical on any engine. Boundary
     semantics are the half-open convention of the classic PNPOLY test
     (deterministic; a point exactly on an edge lands consistently)."""
-    n = F.size(vertices)
-    edges = F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.struct(
-            F.get(vertices, i).alias("a"),
-            F.get(vertices, F.pmod(i + 1, n)).alias("b")))
-
     def crossing(e):
         a, b = e["a"], e["b"]
         straddle = (a["y"] > lat) != (b["y"] > lat)
@@ -428,7 +373,31 @@ def _inside_ring(lon, lat, vertices) -> F.Column:
         right = F.when(b["y"] > a["y"], cross > 0).otherwise(cross < 0)
         return straddle & right
 
-    return F.size(F.filter(edges, crossing)) % 2 == 1
+    return F.size(F.filter(_edges(vertices), crossing)) % 2 == 1
+
+
+def _pip_join_exact(pages: DataFrame, polys: DataFrame, cell_md: int,
+                    inside) -> DataFrame:
+    """Vertex-array PIP: bbox-cell cover probe, then the exact
+    ``inside(lon, lat, vertices)`` refiner. Output: the page columns
+    plus polygon_id."""
+    cands = _probe(pages, _vertex_bbox(polys), cell_md)
+    return (cands.where(inside(F.col("lon_md"), F.col("lat_md"),
+                               F.col("vertices")))
+            .select(*pages.columns, "polygon_id"))
+
+
+def pip_join_convex(pages: DataFrame, polys: DataFrame,
+                    cell_md: int = COVER_CELL_MD) -> DataFrame:
+    """Point-in-polygon join against REAL (convex, CCW, integer-vertex)
+    polygons — the shape beyond the half-open-bbox form: cover equi-join
+    on the bbox grid cells (broadcast, pages never shuffle), exact
+    refinement by the all-edges cross-product test, entirely in Catalyst
+    (forall over the vertex array — no UDF, no epsilon). Non-convex
+    polygons decompose into convex pieces upstream, or use
+    pip_join_ring; functions/geo.make_convex_pip_udf is the Arrow twin
+    of this refiner, held value-equal by test."""
+    return _pip_join_exact(pages, polys, cell_md, _inside_convex)
 
 
 def pip_join_ring(pages: DataFrame, polys: DataFrame,
@@ -437,21 +406,32 @@ def pip_join_ring(pages: DataFrame, polys: DataFrame,
     admin boundaries — the real-boundary shape SURVEY §2.3 J4 calls
     for; the reference delegates the equivalent grid containment to
     GDAL georeferencing, OptimizeRasters.py:1404-1416). Same plan as
-    pip_join_convex: bbox-cell cover equi-join (broadcast — pages never
-    shuffle), then exact even-odd ray-cast refinement entirely in
-    Catalyst (filter + size over the vertex array — no UDF). A
-    shapely-backed pandas-UDF refiner slots into the same candidate
-    stream (functions/geo.make_ring_pip_udf is the Arrow twin, held
-    value-equal by test)."""
-    cover = polygon_vertices_cover(polys, cell_md)
-    cands = pages.withColumn(
-        "cell",
-        tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                             F.floor(F.col("lat_md") / cell_md)),
-    ).join(F.broadcast(cover), "cell")
-    return cands.where(_inside_ring(F.col("lon_md"), F.col("lat_md"),
-                                    F.col("vertices"))) \
-        .drop("cell", "vertices")
+    pip_join_convex, with the exact even-odd ray cast as the refiner
+    (filter + size over the vertex array — no UDF). A shapely-backed
+    pandas-UDF refiner slots into the same candidate stream
+    (functions/geo.make_ring_pip_udf is the Arrow twin, held value-equal
+    by test)."""
+    return _pip_join_exact(pages, polys, cell_md, _inside_ring)
+
+
+_QUERY_SCHEMA = "query_id BIGINT, qlon_md BIGINT, qlat_md BIGINT"
+
+
+def _nearest_k(cand: DataFrame, k: int, radius: int) -> DataFrame:
+    """The k nearest candidate pages per query within ``radius``
+    (squared integer millidegree distance; ties broken by doc_id — fully
+    deterministic). The window sorts only candidate rows."""
+    dx = F.col("lon_md") - F.col("qlon_md")
+    dy = F.col("lat_md") - F.col("qlat_md")
+    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
+                                               F.col("doc_id").asc())
+    return (cand.withColumn("dist2", dx * dx + dy * dy)
+            .where(F.col("dist2") <= radius * radius)
+            .withColumn("knn_rank", F.row_number().over(w))
+            .where(F.col("knn_rank") <= k)
+            .select("query_id",
+                    F.col("knn_rank").cast("int").alias("knn_rank"),
+                    "doc_id", F.col("dist2").cast("bigint").alias("dist2")))
 
 
 def knn_per_query(pages: DataFrame, query_points: list[tuple[int, int, int]],
@@ -463,113 +443,44 @@ def knn_per_query(pages: DataFrame, query_points: list[tuple[int, int, int]],
     Scale path: the query side is broadcast; pages are scanned once and
     pre-filtered by the bbox predicate BEFORE the shuffle, so the window
     only sorts candidate rows (tiny) rather than the full table."""
-    spark = pages.sparkSession
-    q = spark.createDataFrame(query_points,
-                              "query_id BIGINT, qlon_md BIGINT, qlat_md BIGINT")
+    q = pages.sparkSession.createDataFrame(query_points, _QUERY_SCHEMA)
+    lon, lat = F.col("lon_md"), F.col("lat_md")
+    qlon, qlat = F.col("qlon_md"), F.col("qlat_md")
     cand = pages.join(
         F.broadcast(q),
-        (F.col("lon_md") >= F.col("qlon_md") - radius_md) &
-        (F.col("lon_md") <= F.col("qlon_md") + radius_md) &
-        (F.col("lat_md") >= F.col("qlat_md") - radius_md) &
-        (F.col("lat_md") <= F.col("qlat_md") + radius_md),
-    ).withColumn(
-        "dist2",
-        (F.col("lon_md") - F.col("qlon_md")) *
-        (F.col("lon_md") - F.col("qlon_md")) +
-        (F.col("lat_md") - F.col("qlat_md")) *
-        (F.col("lat_md") - F.col("qlat_md")),
-    ).where(F.col("dist2") <= radius_md * radius_md)
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
-                                               F.col("doc_id").asc())
-    return (cand.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .select("query_id", F.col("knn_rank").cast("int").alias("knn_rank"),
-                    "doc_id", F.col("dist2").cast("bigint").alias("dist2")))
+        (lon >= qlon - radius_md) & (lon <= qlon + radius_md) &
+        (lat >= qlat - radius_md) & (lat <= qlat + radius_md))
+    return _nearest_k(cand, k, radius_md)
 
 
 def knn_kring_df(pages: DataFrame, queries: DataFrame, k: int = 5,
                  cell_md: int = 1000, ring: int = 1) -> DataFrame:
-    """DataFrame-native k-ring kNN: the query side is a TABLE
-    (query_id, qlon_md, qlat_md) and its (2*ring+1)^2 ring cells expand
-    DISTRIBUTED via explode(sequence) — no driver-side loop, so the
+    """Cell-bucketed kNN (SURVEY.md J5) over a query TABLE (query_id,
+    qlon_md, qlat_md). A query's (2*ring+1)^2 k-ring is exactly the cell
+    cover of its closed radius box [q - radius, q + radius] with radius
+    = ring * cell_md, so the ring expands DISTRIBUTED through the same
+    broadcast cover probe as the PIP joins — no driver-side loop, so the
     query set can itself be large (the reference's batch-of-AOIs case).
-    Identical semantics to knn_kring; pages equi-join the ring table on
-    their existing cell column and never shuffle when the ring table
-    broadcasts."""
-    dx = F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("dx")
-    with_dx = queries.select("query_id", "qlon_md", "qlat_md", dx)
-    dy = F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("dy")
-    ring_df = (with_dx.select("query_id", "qlon_md", "qlat_md", "dx", dy)
-               .select("query_id", "qlon_md", "qlat_md",
-                       tiling.pack_cell_col(
-                           F.floor(F.col("qlon_md") / cell_md) + F.col("dx"),
-                           F.floor(F.col("qlat_md") / cell_md) + F.col("dy"))
-                       .alias("cell")))
+    Every point within the radius lies in the ring; the dist2 filter
+    trims the corners, so results equal the bbox form (knn_per_query).
+    The big side never shuffles, and the per-query window sorts only
+    the ring cells' contents."""
     radius = ring * cell_md
-    cand = (pages.withColumn(
-                "cell",
-                tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                                     F.floor(F.col("lat_md") / cell_md)))
-            .join(F.broadcast(ring_df), "cell")
-            .withColumn(
-                "dist2",
-                (F.col("lon_md") - F.col("qlon_md")) *
-                (F.col("lon_md") - F.col("qlon_md")) +
-                (F.col("lat_md") - F.col("qlat_md")) *
-                (F.col("lat_md") - F.col("qlat_md")))
-            .where(F.col("dist2") <= radius * radius))
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
-                                               F.col("doc_id").asc())
-    return (cand.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .select("query_id",
-                    F.col("knn_rank").cast("int").alias("knn_rank"),
-                    "doc_id", F.col("dist2").cast("bigint").alias("dist2")))
+    boxes = queries.select(
+        "query_id", "qlon_md", "qlat_md",
+        (F.col("qlon_md") - radius).alias("lon_lo_md"),
+        (F.col("qlon_md") + radius + 1).alias("lon_hi_md"),
+        (F.col("qlat_md") - radius).alias("lat_lo_md"),
+        (F.col("qlat_md") + radius + 1).alias("lat_hi_md"))
+    return _nearest_k(_probe(pages, boxes, cell_md), k, radius)
 
 
 def knn_kring(pages: DataFrame, query_points: list[tuple[int, int, int]],
               k: int = 5, cell_md: int = 1000, ring: int = 1) -> DataFrame:
-    """Cell-bucketed kNN (SURVEY.md J5): pages carry their grid cell;
-    each query point expands to its (2*ring+1)^2 k-ring of cells
-    (driver-side — query set is small), the ring table is broadcast, and
-    candidates equi-join on cell. Identical results to the bbox form for
-    radius = ring * cell_md (every point within that radius lies in the
-    ring; the dist2 filter trims corners).
-
-    At scale this is the shape that wins: the big side never shuffles —
-    it equi-joins an existing integer column against a broadcast ring
-    table, and the per-query window sorts only candidate cells'
-    contents."""
-    spark = pages.sparkSession
-    rows = []
-    for (qid, qlon, qlat) in query_points:
-        cx0, cy0 = qlon // cell_md, qlat // cell_md
-        for dx in range(-ring, ring + 1):
-            for dy in range(-ring, ring + 1):
-                rows.append((qid, qlon, qlat,
-                             tiling.pack_cell(cx0 + dx, cy0 + dy)))
-    ring_df = spark.createDataFrame(
-        rows, "query_id BIGINT, qlon_md BIGINT, qlat_md BIGINT, cell BIGINT")
-    radius = ring * cell_md
-    cand = (pages.withColumn(
-                "cell",
-                tiling.pack_cell_col(F.floor(F.col("lon_md") / cell_md),
-                                     F.floor(F.col("lat_md") / cell_md)))
-            .join(F.broadcast(ring_df), "cell")
-            .withColumn(
-                "dist2",
-                (F.col("lon_md") - F.col("qlon_md")) *
-                (F.col("lon_md") - F.col("qlon_md")) +
-                (F.col("lat_md") - F.col("qlat_md")) *
-                (F.col("lat_md") - F.col("qlat_md")))
-            .where(F.col("dist2") <= radius * radius))
-    w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
-                                               F.col("doc_id").asc())
-    return (cand.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .select("query_id",
-                    F.col("knn_rank").cast("int").alias("knn_rank"),
-                    "doc_id", F.col("dist2").cast("bigint").alias("dist2")))
+    """knn_kring_df over a driver-side list of (query_id, qlon_md,
+    qlat_md) points."""
+    q = pages.sparkSession.createDataFrame(query_points, _QUERY_SCHEMA)
+    return knn_kring_df(pages, q, k=k, cell_md=cell_md, ring=ring)
 
 
 def ring_stats(polys: DataFrame) -> DataFrame:
@@ -582,15 +493,12 @@ def ring_stats(polys: DataFrame) -> DataFrame:
     array). Pure aggregate over the vertex array — codegen, no
     shuffle."""
     vs = F.col("vertices")
-    n = F.size(vs)
     area2 = F.aggregate(
-        F.sequence(F.lit(0), n - 1),
-        F.lit(0).cast("bigint"),
-        lambda acc, i: acc +
-        (F.get(vs, i)["x"] * F.get(vs, F.pmod(i + 1, n))["y"] -
-         F.get(vs, F.pmod(i + 1, n))["x"] * F.get(vs, i)["y"]))
+        _edges(vs), F.lit(0).cast("bigint"),
+        lambda acc, e: acc + (e["a"]["x"] * e["b"]["y"] -
+                              e["b"]["x"] * e["a"]["y"]))
     return polys.select(
         "polygon_id",
         area2.alias("area2"),
         (area2 > 0).alias("is_ccw"),
-        n.cast("int").alias("n_vertices"))
+        F.size(vs).cast("int").alias("n_vertices"))

@@ -265,19 +265,3 @@ boundaries AS (
 )
 """
 
-
-def with_pixels(pages: DataFrame, world_w: int = WORLD_W,
-                world_h: int = WORLD_H) -> DataFrame:
-    """Add px_x/px_y (exact integer mapping; operands < 2^53 so the
-    double-based floor is exact and dialect-safe)."""
-    return pages.withColumn(
-        "px_x", F.floor(F.col("lon_md") * world_w / 360000).cast("bigint")
-    ).withColumn(
-        "px_y", F.floor(F.col("lat_md") * world_h / 170000).cast("bigint")
-    )
-
-
-PIXELS_SQL = (
-    "CAST(FLOOR(lon_md * {w} / 360000) AS BIGINT) AS px_x, "
-    "CAST(FLOOR(lat_md * {h} / 170000) AS BIGINT) AS px_y"
-).format(w=WORLD_W, h=WORLD_H)

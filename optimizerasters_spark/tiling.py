@@ -114,24 +114,5 @@ def pyramid_factors_col(width: Column, height: Column,
     return F.array_join(factors, " ")
 
 
-def tile_col(px: Column, block_size: int = DEFAULT_BLOCK_SIZE) -> Column:
-    """floor(px / block_size) as INT — the 512-grid assignment."""
-    return F.floor(px / F.lit(block_size)).cast("int")
-
-
-def level_tile_col(tile: Column, level: int) -> Column:
-    """Parent tile at ``level`` via arithmetic shift (2x2 reduction/level)."""
-    return F.shiftright(tile.cast("int"), level)
-
-
 def pack_cell_col(x: Column, y: Column) -> Column:
     return (x.cast("bigint") * F.lit(CELL_Y_SPAN) + y.cast("bigint"))
-
-
-def px_from_lonlat(lon: Column, lat: Column, world_w: int, world_h: int
-                   ) -> tuple[Column, Column]:
-    """Deterministic pixel-space mapping (FIXTURES.md T1):
-    px_x = floor((lon+180)/360*W), px_y = floor((85-lat)/170*H)."""
-    px_x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(world_w)))
-    px_y = F.floor((F.lit(85.0) - lat) / F.lit(170.0) * F.lit(float(world_h)))
-    return px_x.cast("bigint"), px_y.cast("bigint")

@@ -110,6 +110,10 @@ def test_pip_left_join_single_scan_zero_page_shuffle(spark, sf_dir):
     plan = j._sc._jvm.PythonSQLUtils.explainString(
         j._jdf.queryExecution(), "simple")
     assert plan.count("FileScan parquet") == 1, plan
+    # one broadcast probe: the cover already carries each polygon's
+    # bbox, so the per-cell candidate arrays need no join back to the
+    # boundaries table
+    assert plan.count("BroadcastHashJoin") == 1, plan
     # no page re-aggregation: zero hash exchanges outside the broadcast
     # subtree (tree print: probe side precedes the BroadcastExchange)
     assert plan.count("Exchange hashpartitioning") <= 1, plan
