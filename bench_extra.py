@@ -6,7 +6,7 @@ bench.py is FROZEN for the driver's measurement; all extra benchmarking
 lives here.  Usage:
 
   python bench_extra.py q1 q2 ...          # time contract queries (noop sink)
-  python bench_extra.py --stages minhash    # stage breakdown of a hot path
+  python bench_extra.py --stages flagship   # stage breakdown of a hot path
   python bench_extra.py --plans plans/r06 --suffix before q1 q2
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py ivf_topk
 
@@ -46,7 +46,7 @@ def main() -> None:
     ap.add_argument("--runs", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     ap.add_argument("--stages", action="append", default=[],
-                    help="hot-path stage breakdown: minhash|flagship|substr")
+                    help="hot-path stage breakdown: flagship|substr")
     ap.add_argument("--plans", default=None,
                     help="directory to write explain('formatted') files")
     ap.add_argument("--suffix", default="before")
@@ -54,8 +54,6 @@ def main() -> None:
                     default=int(os.environ.get("SPARK_GRAFT_REPLICATE",
                                                "4000")))
     args = ap.parse_args()
-
-    from pyspark.sql import functions as F
 
     from optimizerasters_spark import contract
     from optimizerasters_spark.operators import dedup, spatial, training
@@ -108,24 +106,6 @@ def main() -> None:
         return contract.QUERIES[name](spark, SF_DIR)
 
     # -- stage breakdowns ------------------------------------------------
-    def stages_minhash() -> None:
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        sh = dedup.exploded_shingles(d)
-        bench("mh1_explode_shingles", lambda: _noop(sh))
-        sigs = dedup.minhash_signatures(d)
-        bench("mh2_signatures", lambda: _noop(sigs))
-        banded = dedup._banded_signatures(d, 8, 4, 3, "text", None)
-        bench("mh3_banded", lambda: _noop(banded))
-        pairs_nd = (banded.alias("a")
-                    .join(banded.alias("b"), ["band_id", "band_key"])
-                    .where(F.col("a.doc_id") < F.col("b.doc_id"))
-                    .select(F.col("a.doc_id").alias("doc_a"),
-                            F.col("b.doc_id").alias("doc_b")))
-        bench("mh4_pairs_nodistinct", lambda: _noop(pairs_nd))
-        bench("mh5_pairs_distinct", lambda: _noop(pairs_nd.distinct()))
-        jac = dedup.ngram_jaccard_pairs(d)
-        bench("mh6_jaccard_full", lambda: _noop(jac))
-
     def stages_flagship() -> None:
         bench("fs1_synth_count",
               lambda: synth_pages_scaled(spark, SF_DIR,
@@ -142,8 +122,7 @@ def main() -> None:
         df = q(spark, SF_DIR)
         bench("ss_full", lambda: _noop(df))
 
-    STAGES = {"minhash": stages_minhash, "flagship": stages_flagship,
-              "substr": stages_substr}
+    STAGES = {"flagship": stages_flagship, "substr": stages_substr}
 
     for s in args.stages:
         STAGES[s]()

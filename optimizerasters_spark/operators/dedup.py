@@ -7,10 +7,15 @@
 * ``dedup_exact`` — exact content dedup by sha2(text) hash-groupBy;
   ``dedup_exact_rows`` returns the representatives' full rows from the
   same single aggregate.
-* ``minhash_signatures`` / ``lsh_candidate_pairs`` — MinHash+LSH near-dup:
-  word shingles -> per-hash min of md5(seed||shingle) -> band buckets ->
-  bucket equi-join. Shingle construction is one vectorized Arrow batch
+* ``lsh_candidate_pairs`` — MinHash+LSH near-dup: word shingles ->
+  per-hash min of md5(seed||shingle) -> band buckets -> bucket
+  equi-join, every caller's bands from one builder over an exploded
+  (doc_id, s) table. Shingle construction is one vectorized Arrow batch
   pass (guide §4.2); the md5 mins and band keys stay JVM codegen.
+* ``jaccard_pairs`` — the one exact n-gram Jaccard: candidate pairs
+  joined to a (doc_id, _sh) shingle-set table, one array_intersect.
+* ``paragraph_dedup`` / ``boilerplate_paragraphs`` /
+  ``remove_boilerplate`` — one paragraph explode, one reassembly.
 
 Scale notes: dedup_latest shuffles once on url (the natural key);
 dedup_exact shuffles on the 256-bit digest (uniform — no skew); LSH
@@ -69,12 +74,11 @@ def dedup_exact_rows(docs: DataFrame, text_col: str = "text"
     column order.
 
     One aggregate over ``docs``: MIN of one (doc_id, payload...) struct
-    per digest, so the payload rides the one shuffle the digest needs —
-    ``docs`` semi-joined to ``dedup_exact(docs)`` names its input twice
-    and shuffles it twice. doc_id leads the struct and is a row key, so
-    the comparison never reaches the payload; NULL doc_ids are dropped
-    first, as the semi-join on doc_id drops them. NULL text is one
-    digest group, like any other text."""
+    per digest, so the payload rides the one shuffle the digest needs.
+    doc_id leads the struct and is a row key, so the comparison never
+    reaches the payload and repeated rows collapse to one; NULL doc_ids
+    are dropped first. NULL text is one digest group, like any other
+    text."""
     payload = [c for c in docs.columns if c != "doc_id"]
     row = F.min(F.struct("doc_id", *payload)).alias("_row")
     return (docs.where(F.col("doc_id").isNotNull())
@@ -106,13 +110,8 @@ def shingles_col(text_col, n: int = 3, full_only: bool = False):
     shingle slice() produces.
 
     Built in one vectorized Arrow batch pass (guide §4.2): Python's
-    C-level split/join over the whole batch replaces the interpreted
-    transform(i -> concat_ws(slice(toks))) + array_distinct lambda
-    chain, which evaluated per token position per row (measured 7.5 ->
-    1.6 s on the 250k-doc training corpus, content verified equal,
-    including NULL/short-doc edge cases: split(" ") keeps empty tokens
-    exactly like the regex form, and docs shorter than n emit the one
-    truncated shingle slice() produced)."""
+    C-level split/join over the whole batch; split(" ") keeps empty
+    tokens, and NULL text gives NULL."""
 
     shingle = _shingler(n, full_only)
 
@@ -147,70 +146,16 @@ def text_sets_col(text_col, shingle_n: int = 3, gram_n: int = 5):
     return _sets(F.col(text_col))
 
 
-def exploded_shingles(docs: DataFrame, shingle_n: int = 3,
-                      text_col: str = "text") -> DataFrame:
-    """(doc_id, s) exploded distinct-shingle table — the input
-    :func:`minhash_signatures` aggregates. Build it once and pass it as
-    ``shingles=`` where several consumers need it, so the explode (the
-    widest intermediate in the near-dup pipeline) is a single plan
-    subtree; downstream groupBy(doc_id) consumers canonicalize to the
-    same Exchange and Catalyst reuses it (ReusedExchange)."""
-    return docs.select(
-        "doc_id",
-        F.explode(shingles_col(text_col, shingle_n)).alias("s"))
-
-
-def minhash_signatures(docs: DataFrame, num_hashes: int = 8,
-                       shingle_n: int = 3,
-                       text_col: str = "text",
-                       shingles: DataFrame | None = None) -> DataFrame:
-    """doc_id -> array of num_hashes min-md5 values (hex strings).
-
-    hash_i(doc) = min over shingles of md5(i || ':' || shingle). md5 output
-    is identical across engines, making the signature oracle-checkable.
-
-    Shape: explode shingles -> groupBy(doc_id) with one MIN per hash seed.
-    The mins partial-aggregate map-side (shuffle carries num_hashes hex
-    strings per doc per map task) and the md5 calls run in whole-stage
-    codegen — nested array lambdas would evaluate interpreted."""
-    sh = shingles if shingles is not None \
-        else exploded_shingles(docs, shingle_n, text_col)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    wide = sh.groupBy("doc_id").agg(*aggs)
-    return wide.select(
-        "doc_id",
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
-
-
 def ngram_jaccard_pairs(docs: DataFrame, num_hashes: int = 8,
                         bands: int = 4, shingle_n: int = 3,
                         text_col: str = "text",
                         min_jaccard_micro: int = 0,
                         max_bucket: int | None = None) -> DataFrame:
-    """Exact n-gram Jaccard on LSH candidate pairs (doc_a < doc_b).
-
-    Pipeline shape for 10^12 docs: candidates come from LSH (bounded),
-    then each pair equi-joins its two DISTINCT-shingle ARRAYS (one row
-    per doc, not one per shingle) and the intersection is a single
-    array_intersect size — the same exact counts as the old exploded
-    (doc, shingle)-row join at a fraction of the shuffle: two shuffles
-    of the per-doc array table (N rows) replace two shuffles of the
-    exploded table (N x shingles-per-doc rows of strings), and the
-    per-pair set sizes fall out of F.size with no extra aggregation
-    (guide §2.3 'shuffle fewer bytes' / §3.3 'join first, explode
-    after'). jaccard_micro = floor(|A∩B| * 1e6 / |A∪B|) — exact
-    integers end to end. ``max_bucket`` passes through to the LSH stage
-    (degenerate-bucket n² guard); pair it with lsh_oversized_buckets so
-    whatever the cap drops is reported, never silent.
-
-    Payload: every candidate pair carries BOTH shingle arrays through
-    the join shuffles, so a doc in k pairs ships its array k times — a
-    hot doc (a large near-dup family) costs k x its shingle bytes. The
-    LSH bucket cap bounds k; the pair count itself is what the stage
-    exists to find.
+    """Exact n-gram Jaccard on LSH candidate pairs (doc_a < doc_b):
+    :func:`sets_jaccard_pairs` over the docs' shingle sets.
+    ``max_bucket`` passes through to the LSH stage (degenerate-bucket
+    n² guard); pair it with lsh_oversized_buckets so whatever the cap
+    drops is reported, never silent.
 
     The shingle-set table is built by one Arrow pass and materialized
     once with a lazy local checkpoint, which signatures and both sides
@@ -230,34 +175,58 @@ def sets_jaccard_pairs(sets: DataFrame, num_hashes: int = 8,
                        max_bucket: int | None = None) -> DataFrame:
     """:func:`ngram_jaccard_pairs` over a precomputed (doc_id, _sh)
     shingle-set table: MinHash/LSH candidates from its exploded sets,
-    then the exact Jaccard join back to the same table. Materialize
+    then :func:`jaccard_pairs` back to the same table. Materialize
     ``sets`` first; every consumer here re-reads it."""
-    pairs = lsh_candidate_pairs(
-        sets, num_hashes, bands,
-        shingles=sets.select("doc_id", F.explode("_sh").alias("s")),
-        max_bucket=max_bucket)
+    pairs = _candidate_pairs(
+        _bands(sets.select("doc_id", F.explode("_sh").alias("s")),
+               num_hashes, bands), max_bucket)
+    return jaccard_pairs(pairs, sets) \
+        .where(F.col("jaccard_micro") >= min_jaccard_micro)
+
+
+def jaccard_pairs(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, jaccard_micro) of each (doc_a, doc_b)
+    pair over the (doc_id, _sh) distinct-shingle table, with
+    jaccard_micro = floor(|A∩B| * 1e6 / |A∪B|) — exact integers.
+
+    Each pair joins its two shingle ARRAYS (one row per doc, not one per
+    shingle); the intersection is one array_intersect size and the set
+    sizes are F.size (guide §3.3 'join first, explode after'). Every
+    pair carries BOTH arrays through the join shuffles, so a doc in k
+    pairs ships its array k times; the LSH bucket cap bounds k."""
     n_inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("bigint")
     jaccard = F.floor(n_inter * 1000000 /
                       (F.size("_sh_a") + F.size("_sh_b") - n_inter)
                       ).cast("bigint")
-    out = (pairs
-           .join(sets.select(F.col("doc_id").alias("doc_a"),
-                             F.col("_sh").alias("_sh_a")), "doc_a")
-           .join(sets.select(F.col("doc_id").alias("doc_b"),
-                             F.col("_sh").alias("_sh_b")), "doc_b")
-           .select(F.col("doc_a").cast("bigint"),
-                   F.col("doc_b").cast("bigint"),
-                   n_inter.alias("n_inter"),
-                   jaccard.alias("jaccard_micro")))
-    return out.where(F.col("jaccard_micro") >= min_jaccard_micro)
+    return (pairs
+            .join(sets.select(F.col("doc_id").alias("doc_a"),
+                              F.col("_sh").alias("_sh_a")), "doc_a")
+            .join(sets.select(F.col("doc_id").alias("doc_b"),
+                              F.col("_sh").alias("_sh_b")), "doc_b")
+            .select(F.col("doc_a").cast("bigint"),
+                    F.col("doc_b").cast("bigint"),
+                    n_inter.alias("n_inter"),
+                    jaccard.alias("jaccard_micro")))
 
 
-def _banded_signatures(docs: DataFrame, num_hashes: int, bands: int,
-                       shingle_n: int, text_col: str,
-                       shingles: DataFrame | None) -> DataFrame:
+def _bands(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, band_id, band_key) LSH bands of an exploded (doc_id, s)
+    shingle table.
+
+    hash_i(doc) = min over shingles of md5(i || ':' || shingle). md5 output
+    is identical across engines, making the signature oracle-checkable.
+    One groupBy(doc_id) with one MIN per hash seed: the mins partial-
+    aggregate map-side (shuffle carries num_hashes hex strings per doc
+    per map task) and the md5 calls run in whole-stage codegen — nested
+    array lambdas would evaluate interpreted."""
     rpb = num_hashes // bands
-    sigs = minhash_signatures(docs, num_hashes, shingle_n, text_col,
-                              shingles=shingles)
+    aggs = [
+        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
+        for i in range(num_hashes)
+    ]
+    sigs = sh.groupBy("doc_id").agg(*aggs).select(
+        "doc_id",
+        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
     return sigs.select(
         "doc_id",
         F.explode(
@@ -270,26 +239,20 @@ def _banded_signatures(docs: DataFrame, num_hashes: int, bands: int,
     ).select("doc_id", "band.band_id", "band.band_key")
 
 
-def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
-                        shingle_n: int = 3,
-                        text_col: str = "text",
-                        shingles: DataFrame | None = None,
-                        max_bucket: int | None = None) -> DataFrame:
-    """Near-dup candidate pairs (doc_a < doc_b) sharing >= 1 LSH band.
+def _doc_bands(docs: DataFrame, num_hashes: int, bands: int,
+               shingle_n: int, text_col: str) -> DataFrame:
+    """:func:`_bands` of ``docs``' shingles. The explode takes the UDF
+    result itself: exploding a projected UDF column makes Spark infer a
+    size(...) > 0 filter that runs the Arrow pass a second time."""
+    return _bands(docs.select(
+        "doc_id", F.explode(shingles_col(text_col, shingle_n)).alias("s")),
+        num_hashes, bands)
 
-    bands of rows_per_band hashes each; band key = concat of its hashes.
-    The band explode shuffles on (band_id, band_key) — uniform unless
-    true near-dups exist, which is exactly the skew we want to find.
 
-    ``max_bucket`` guards the quadratic trap at corpus scale: a
-    degenerate key (empty docs, boilerplate-only pages) can put millions
-    of documents in ONE bucket, and the self-join then emits n^2 pairs.
-    Buckets larger than the cap are excluded from pairing (a bucket-
-    partitioned count — the same exchange the self-join needs anyway).
-    The cap is opt-in and NEVER silent: ``lsh_oversized_buckets`` with
-    the same arguments returns exactly what was dropped for reporting."""
-    banded = _banded_signatures(docs, num_hashes, bands, shingle_n,
-                                text_col, shingles)
+def _candidate_pairs(banded: DataFrame, max_bucket: int | None
+                     ) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a band bucket of
+    ``banded``, buckets over ``max_bucket`` docs excluded."""
     if max_bucket is not None:
         w = Window.partitionBy("band_id", "band_key")
         banded = (banded
@@ -304,48 +267,56 @@ def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
             .distinct())
 
 
+def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
+                        shingle_n: int = 3,
+                        text_col: str = "text",
+                        max_bucket: int | None = None) -> DataFrame:
+    """Near-dup candidate pairs (doc_a < doc_b) sharing >= 1 LSH band.
+
+    bands of rows_per_band hashes each; band key = concat of its hashes.
+    The band explode shuffles on (band_id, band_key) — uniform unless
+    true near-dups exist, which is exactly the skew we want to find.
+
+    ``max_bucket`` guards the quadratic trap at corpus scale: a
+    degenerate key (empty docs, boilerplate-only pages) can put millions
+    of documents in ONE bucket, and the self-join then emits n^2 pairs.
+    Buckets larger than the cap are excluded from pairing (a bucket-
+    partitioned count — the same exchange the self-join needs anyway).
+    The cap is opt-in and NEVER silent: ``lsh_oversized_buckets`` with
+    the same arguments returns exactly what was dropped for reporting."""
+    return _candidate_pairs(
+        _doc_bands(docs, num_hashes, bands, shingle_n, text_col),
+        max_bucket)
+
+
 def lsh_oversized_buckets(docs: DataFrame, num_hashes: int = 8,
                           bands: int = 4, shingle_n: int = 3,
                           text_col: str = "text",
-                          shingles: DataFrame | None = None,
                           max_bucket: int = 1000) -> DataFrame:
     """The buckets a ``max_bucket`` cap would drop — (band_id, band_key,
     n_docs). Report or route these to a dedicated handling pass (exact
     dedup already catches byte-identical members); never cap silently."""
-    banded = _banded_signatures(docs, num_hashes, bands, shingle_n,
-                                text_col, shingles)
+    banded = _doc_bands(docs, num_hashes, bands, shingle_n, text_col)
     return (banded.groupBy("band_id", "band_key")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .where(F.col("n_docs") > max_bucket))
 
 
-def paragraph_dedup(docs: DataFrame, sep: str = "\n",
-                    text_col: str = "text") -> DataFrame:
-    """Paragraph-granularity exact dedup — the sub-document pass (C4's
-    line dedup, RefinedWeb's paragraph dedup) that document-level
-    hashing cannot express: boilerplate paragraphs repeat across
-    MOSTLY-DIFFERENT pages, so whole-doc dedup never fires on them.
+def _paragraphs(docs: DataFrame, sep: str, text_col: str) -> DataFrame:
+    """(doc_id, idx, para, psha): one row per ``sep``-split paragraph,
+    with its index in the doc and its sha256."""
+    return (docs
+            .select("doc_id",
+                    F.posexplode(F.split(F.col(text_col), sep))
+                    .alias("idx", "para"))
+            .withColumn("psha", F.sha2(F.col("para"), 256)))
 
-    First occurrence wins globally, ordered by (doc_id, paragraph
-    index): explode paragraphs with their index, groupBy paragraph hash
-    with a min_by on the packed (doc_id, idx) key (partial map-side
-    agg — one row per distinct paragraph through the shuffle), then
-    mark and reassemble. Returns per doc: paragraph counts before and
-    after, and the sha256 of the kept text (byte-exact parity surface).
-    Shuffles only on sha256(paragraph) and doc_id — both uniform."""
-    paras = (docs
-             .select("doc_id",
-                     F.posexplode(F.split(F.col(text_col), sep))
-                     .alias("idx", "para"))
-             .withColumn("psha", F.sha2(F.col("para"), 256)))
-    # first-occurrence key is the lexicographic (doc_id, idx) struct min
-    # — no packed-integer arithmetic, so no collision at >=1e6
-    # paragraphs per doc; still a map-side partial aggregate
-    first = paras.groupBy("psha").agg(
-        F.min(F.struct("doc_id", "idx")).alias("first_key"))
-    marked = (paras.join(first, "psha")
-              .withColumn("kept",
-                          F.struct("doc_id", "idx") == F.col("first_key")))
+
+def _reassemble(marked: DataFrame, sep: str, sha_col: str) -> DataFrame:
+    """Per doc of a paragraph table marked ``kept``: n_paras, n_kept and
+    ``sha_col``, the sha256 of the kept paragraphs re-joined by ``sep``
+    in idx order. A doc that keeps nothing gets NULL, not sha256('')
+    (the oracle's string_agg FILTER yields NULL there)."""
     agg = (marked.groupBy("doc_id")
            .agg(F.count(F.lit(1)).cast("bigint").alias("n_paras"),
                 F.sum(F.col("kept").cast("bigint")).cast("bigint")
@@ -357,13 +328,35 @@ def paragraph_dedup(docs: DataFrame, sep: str = "\n",
                                    F.struct("idx", "para")))),
                         lambda s: s["para"]),
                     sep), 256).alias("_sha")))
-    # a doc whose every paragraph first occurred elsewhere keeps
-    # NOTHING — kept_sha must be NULL, not sha256('') (the oracle's
-    # string_agg FILTER yields NULL there; remove_boilerplate already
-    # guards the same case)
     return agg.select(
         "doc_id", "n_paras", "n_kept",
-        F.when(F.col("n_kept") > 0, F.col("_sha")).alias("kept_sha"))
+        F.when(F.col("n_kept") > 0, F.col("_sha")).alias(sha_col))
+
+
+def paragraph_dedup(docs: DataFrame, sep: str = "\n",
+                    text_col: str = "text") -> DataFrame:
+    """Paragraph-granularity exact dedup — the sub-document pass (C4's
+    line dedup, RefinedWeb's paragraph dedup) that document-level
+    hashing cannot express: boilerplate paragraphs repeat across
+    MOSTLY-DIFFERENT pages, so whole-doc dedup never fires on them.
+
+    First occurrence wins globally, ordered by (doc_id, paragraph
+    index): explode paragraphs with their index, groupBy paragraph hash
+    with a min on the (doc_id, idx) struct (partial map-side agg — one
+    row per distinct paragraph through the shuffle), then mark and
+    reassemble. Returns per doc: paragraph counts before and after, and
+    the sha256 of the kept text (byte-exact parity surface). Shuffles
+    only on sha256(paragraph) and doc_id — both uniform."""
+    paras = _paragraphs(docs, sep, text_col)
+    # first-occurrence key is the lexicographic (doc_id, idx) struct min
+    # — no packed-integer arithmetic, so no collision at >=1e6
+    # paragraphs per doc; still a map-side partial aggregate
+    first = paras.groupBy("psha").agg(
+        F.min(F.struct("doc_id", "idx")).alias("first_key"))
+    marked = (paras.join(first, "psha")
+              .withColumn("kept",
+                          F.struct("doc_id", "idx") == F.col("first_key")))
+    return _reassemble(marked, sep, "kept_sha")
 
 
 def exact_substr_overlap(docs: DataFrame, width: int = 32,
@@ -382,10 +375,7 @@ def exact_substr_overlap(docs: DataFrame, width: int = 32,
     shuffles ONCE on the 128-bit window hash (uniform — no skew), the
     interval-union cover is per-doc array math. Never all-pairs; the
     window hashes are built in one vectorized Arrow batch pass (guide
-    §4.2 — hashlib.md5 over C-level token joins replaces the per-
-    position slice+concat_ws+md5 lambda chain, byte-identical hex);
-    the removal pass (cutting covered ranges) reuses the same
-    (doc_id, pos) set."""
+    §4.2 — hashlib.md5 over C-level token joins)."""
     import hashlib
 
     @F.pandas_udf("array<struct<pos:int,wh:string>>")
@@ -472,9 +462,7 @@ def dup_components(pairs: DataFrame, max_iters: int = 20,
         nb = (edges.join(labels, edges["v"] == labels["doc_id"])
               .groupBy("u").agg(F.min("comp").alias("nb_comp")))
         # carry the previous label THROUGH the round so the changed
-        # count is a filter over the cached checkpoint — the old
-        # shape re-joined new and old labels (two more shuffles of
-        # the node table per round) just to compare them
+        # count is a filter over the cached checkpoint
         new = (labels.join(nb, labels["doc_id"] == nb["u"], "left")
                .select(labels["doc_id"],
                        labels["comp"].alias("_old"),
@@ -505,11 +493,7 @@ def boilerplate_paragraphs(docs: DataFrame, min_doc_freq: int = 2,
     the corpus-wide boilerplate census (nav bars, cookie banners,
     terms-of-service footers). One explode + one partial-agg
     countDistinct keyed on the paragraph sha."""
-    paras = (docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col(text_col), sep)).alias("idx", "para"))
-        .withColumn("psha", F.sha2(F.col("para"), 256)))
-    return (paras.groupBy("psha")
+    return (_paragraphs(docs, sep, text_col).groupBy("psha")
             .agg(F.min("para").alias("para"),
                  F.countDistinct("doc_id").cast("bigint")
                   .alias("doc_freq"))
@@ -525,25 +509,8 @@ def remove_boilerplate(docs: DataFrame, min_doc_freq: int = 2,
     noise, not content. Returns per doc: paragraph counts before and
     after and the sha256 of the cleaned text (NULL when nothing
     survives). Shuffles on paragraph sha and doc_id only."""
-    paras = (docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col(text_col), sep)).alias("idx", "para"))
-        .withColumn("psha", F.sha2(F.col("para"), 256)))
     hot = boilerplate_paragraphs(docs, min_doc_freq, sep, text_col) \
         .select("psha", F.lit(True).alias("hot"))
-    marked = (paras.join(hot, "psha", "left")
+    marked = (_paragraphs(docs, sep, text_col).join(hot, "psha", "left")
               .withColumn("kept", F.col("hot").isNull()))
-    out = (marked.groupBy("doc_id")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_paras"),
-                F.sum(F.col("kept").cast("bigint")).cast("bigint")
-                 .alias("n_kept"),
-                F.sha2(F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.when(F.col("kept"),
-                                   F.struct("idx", "para")))),
-                        lambda s: s["para"]),
-                    sep), 256).alias("_sha")))
-    return out.select(
-        "doc_id", "n_paras", "n_kept",
-        F.when(F.col("n_kept") > 0, F.col("_sha")).alias("clean_sha"))
+    return _reassemble(marked, sep, "clean_sha")

@@ -1,6 +1,8 @@
 """Incremental corpus build: the training-data pipeline as a RESUMABLE
-batch-ingest engine (the streaming-shaped twin of operators/training.py,
-state-on-parquet like engine.py's level-0 store).
+batch-ingest engine. It runs on the one-shot pipeline's kernels
+(operators/dedup.py: ``dedup_exact_rows``, ``shingles_col``, the LSH
+band builder and ``jaccard_pairs``) and keeps its state on parquet like
+engine.py's level-0 store.
 
 A 100 TB corpus is not deduplicated in one job — crawls arrive in
 batches, and each batch must dedup against everything ACCEPTED so far
@@ -24,14 +26,15 @@ No crash window loses documents.
 
 Ingest order is acceptance order: first-arrived wins (the old doc keeps
 its slot, the newcomer drops). Within a batch, the one-shot batch rule
-applies verbatim (exact: min doc_id per sha; near-dup: drop the higher
-id of every Jaccard-verified pair). Across batches the match to the
-one-shot pipeline holds for exact duplicates and for DIRECT near-dup
-pairs under id-ordered arrival; it intentionally diverges on TRANSITIVE
-chains: bands of dropped near-dup victims are not persisted, so a later
-doc that near-dups ONLY an already-dropped victim is accepted (it
-duplicates nothing in the corpus), whereas the one-shot pipeline's
-pair set over all reps would drop it. The equivalence test excludes
+applies verbatim (exact: ``training_kept``'s survivors, one row per sha
+with the min doc_id; near-dup: drop the higher id of every
+Jaccard-verified pair). Across batches the match to the one-shot
+pipeline holds for exact duplicates and for DIRECT near-dup pairs under
+id-ordered arrival; it intentionally diverges on TRANSITIVE chains:
+bands of dropped near-dup victims are not persisted, so a later doc that
+near-dups ONLY an already-dropped victim is accepted (it duplicates
+nothing in the corpus), whereas the one-shot pipeline's pair set over
+all reps would drop it. The equivalence test excludes
 such chains; the divergence is the better dedup semantics, not an
 accident.
 """
@@ -108,83 +111,69 @@ class CorpusBuilder:
         """Dedup ``batch`` against itself and all committed prior state;
         append survivors and commit. Returns acceptance stats."""
         n_in = batch.count()
-        # 1. exact: one representative (min doc_id) per sha within the
-        #    batch, then anti-join the accepted sha set
-        b = batch.withColumn("text_sha", F.sha2(F.col("text"), 256))
-        w_min = b.groupBy("text_sha").agg(F.min("doc_id").alias("doc_id"))
-        reps = b.join(w_min, ["text_sha", "doc_id"], "left_semi")
+        # 1. exact: training_kept's survivors (one row per sha, min
+        #    doc_id; NULL text never accepted), minus the accepted shas;
+        #    their shingle sets built once and checkpointed eagerly, so
+        #    later jobs read its blocks and never re-run its plan (a
+        #    lost executor fails the ingest before its commit marker)
+        cols = ["doc_id", *[c for c in batch.columns if c != "doc_id"]]
+        reps = (D.dedup_exact_rows(batch.where(F.col("text").isNotNull()))
+                .withColumn("text_sha", F.sha2(F.col("text"), 256)))
         old_shas = self._read(spark, "shas")
         if old_shas is not None:
             reps = reps.join(old_shas, "text_sha", "left_anti")
+        sets = (reps.withColumn("_sh", D.shingles_col("text", self.shingle_n))
+                .localCheckpoint())
+        new_bands = D._bands(
+            sets.select("doc_id", F.explode("_sh").alias("s")),
+            self.num_hashes, self.bands)
 
-        # 2. bands for the surviving batch docs (O(batch))
-        new_bands = D._banded_signatures(
-            reps, self.num_hashes, self.bands, self.shingle_n,
-            "text", None)
+        # 2. intra-batch near-dups: the batch rule verbatim
+        victims = D.sets_jaccard_pairs(
+            sets.select("doc_id", "_sh"), self.num_hashes, self.bands,
+            min_jaccard_micro=self.jaccard_micro).select("doc_b")
 
-        # 3a. intra-batch near-dups: the batch rule verbatim
-        intra_victims = (D.ngram_jaccard_pairs(
-            reps, self.num_hashes, self.bands, self.shingle_n,
-            min_jaccard_micro=self.jaccard_micro)
-            .select(F.col("doc_b").alias("doc_id")).distinct())
-        reps2 = reps.join(intra_victims, "doc_id", "left_anti")
-
-        # 3b. cross-state near-dups: new docs meeting ACCEPTED docs in a
-        #     band bucket, Jaccard-verified against those old docs only
+        # 3. cross-state near-dups: new docs meeting ACCEPTED docs in a
+        #    band bucket, Jaccard-verified against those old docs only.
+        #    bands and kept commit together, so one without the other
+        #    means a hand-mangled workdir: skip the cross-state verify
         old_bands = self._read(spark, "bands")
         kept_old = self._read(spark, "kept")
-        # bands and kept commit atomically (one marker per attempt), so
-        # bands-without-kept cannot happen; guard anyway so a manually
-        # mangled workdir degrades to "no cross-state verify" instead of
-        # an AttributeError
         if old_bands is not None and kept_old is not None:
-            cand = (new_bands.join(
-                        old_bands
-                        .withColumnRenamed("doc_id", "old_id"),
-                        ["band_id", "band_key"])
-                    .select("doc_id", "old_id").distinct())
-            if not cand.isEmpty():
-                old_docs = (kept_old
-                            .join(cand.select("old_id").distinct(),
-                                  kept_old["doc_id"] == F.col("old_id"),
-                                  "left_semi"))
-                both = reps2.select("doc_id", "text").unionByName(
-                    old_docs.select("doc_id", "text"))
-                sh = D.exploded_shingles(both, self.shingle_n, "text")
-                sizes = sh.groupBy("doc_id").agg(
-                    F.count(F.lit(1)).alias("n_sh"))
-                sa = sh.select(F.col("doc_id").alias("old_id"), "s")
-                sb = sh.select(F.col("doc_id"), "s")
-                inter = (cand.join(sa, "old_id").join(sb, ["doc_id", "s"])
-                         .groupBy("doc_id", "old_id")
-                         .agg(F.count(F.lit(1)).alias("n_inter")))
-                jac = (inter
-                       .join(sizes.select(
-                           F.col("doc_id").alias("old_id"),
-                           F.col("n_sh").alias("n_a")), "old_id")
-                       .join(sizes.select("doc_id",
-                                          F.col("n_sh").alias("n_b")),
-                             "doc_id")
-                       .where(F.floor(F.col("n_inter") * 1000000 /
-                              (F.col("n_a") + F.col("n_b") -
-                               F.col("n_inter")))
-                              >= self.jaccard_micro))
-                cross_victims = jac.select("doc_id").distinct()
-                reps2 = reps2.join(cross_victims, "doc_id", "left_anti")
+            cand = (new_bands
+                    .join(old_bands.withColumnRenamed("doc_id", "doc_a"),
+                          ["band_id", "band_key"])
+                    .select("doc_a", F.col("doc_id").alias("doc_b"))
+                    .distinct())
+            old_sets = kept_old.join(
+                cand.select(F.col("doc_a").alias("doc_id")), "doc_id",
+                "left_semi").select(
+                    "doc_id", D.shingles_col("text", self.shingle_n)
+                    .alias("_sh"))
+            both = sets.select("doc_id", "_sh").unionByName(old_sets)
+            victims = victims.unionByName(
+                D.jaccard_pairs(cand, both)
+                .where(F.col("jaccard_micro") >= self.jaccard_micro)
+                .select("doc_b"))
 
-        # 4. append survivors + their state under a fresh attempt id;
+        # 4. materialize the survivors once (the count fills the cache),
+        #    then append them and their state under a fresh attempt id;
         #    the commit marker lands LAST, so a crash between any two
         #    appends leaves only invisible orphan rows and the batch
-        #    re-ingests cleanly (no document is ever lost)
-        accepted = reps2
-        n_acc = accepted.count()
-        if n_acc > 0:
-            seq = self._claim_attempt()
-            self._append(accepted.select("text_sha"), "shas", seq)
-            self._append(
-                new_bands.join(accepted.select("doc_id"), "doc_id",
-                               "left_semi"),
-                "bands", seq)
-            self._append(accepted.drop("text_sha"), "kept", seq)
-            self._commit(seq)
+        #    re-ingests cleanly
+        accepted = (sets.join(victims.withColumnRenamed("doc_b", "doc_id"),
+                              "doc_id", "left_anti")
+                    .select(*cols, "text_sha").cache())
+        try:
+            n_acc = accepted.count()
+            if n_acc > 0:
+                seq = self._claim_attempt()
+                self._append(accepted.select("text_sha"), "shas", seq)
+                self._append(new_bands.join(accepted.select("doc_id"),
+                                            "doc_id", "left_semi"),
+                             "bands", seq)
+                self._append(accepted.select(*cols), "kept", seq)
+                self._commit(seq)
+        finally:
+            accepted.unpersist()
         return {"in": n_in, "accepted": n_acc}

@@ -432,3 +432,16 @@ def test_corpus_pipeline_scans_pages_once_one_text_pass(spark, sf_dir,
              if "FileScan parquet" in ln and "pages.parquet" in ln]
     assert len(scans) <= 1, plan
     assert plan.count("ArrowEvalPython") <= 2, plan
+
+
+def test_lsh_candidate_pairs_one_arrow_pass_per_side(spark, sf_dir):
+    """The docs-side band builder explodes the shingle UDF's result
+    itself, so each self-join side runs the Arrow pass once: exactly
+    two ArrowEvalPython nodes. Exploding a projected UDF column instead
+    lets Spark infer a size(...) > 0 filter that evaluates the UDF a
+    second time (four nodes)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    out = dedup.lsh_candidate_pairs(docs)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "simple")
+    assert plan.count("ArrowEvalPython") == 2, plan

@@ -99,3 +99,32 @@ def test_crash_between_appends_loses_no_documents(spark, sf_dir,
         got = {r["doc_id"] for r in
                cb.kept(spark).select("doc_id").collect()}
         assert got == want, (crash_point, sorted(got ^ want)[:10])
+
+
+def test_dirty_batch_kept_equals_one_shot_row_for_row(spark, sf_dir,
+                                                       tmp_path):
+    """One dirty batch: a (doc_id, text) row listed twice, a NULL text,
+    two empty texts under different doc_ids and a NULL doc_id. The
+    builder keeps exactly training_kept's rows (thresholds opened),
+    counting repeats: the repeated row once, NULL text never, one empty
+    text (the min doc_id), no NULL doc_id."""
+    cols = ["doc_id", "text", "lang"]
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+        .select(*cols).where(F.col("doc_id") < 40)
+    dirty = spark.createDataFrame(
+        [(900, None, "en"), (902, "", "en"), (901, "", "de"),
+         (None, "an orphan page without any id", "en")],
+        "doc_id bigint, text string, lang string")
+    batch = (base.unionByName(base.where(F.col("doc_id") == 3))
+             .unionByName(dirty))
+    want = training.training_kept(batch, min_tokens=0,
+                                  max_mean_wl_micro=1 << 60)
+    cb = CorpusBuilder(str(tmp_path / "dirty"))
+    s = cb.ingest(spark, batch)
+    got = sorted(map(tuple, cb.kept(spark).select(*cols).collect()),
+                 key=str)
+    assert got == sorted(map(tuple, want.select(*cols).collect()),
+                         key=str)
+    assert s["accepted"] == len(got)
+    assert [r[0] for r in got].count(3) == 1
+    assert 901 in {r[0] for r in got}
