@@ -52,6 +52,20 @@ def _read_spread(spark: SparkSession, path: str,
     single-threaded. At real scale the file set already splits past the
     core count and this no-ops."""
     return _spread(spark.read.parquet(path), key)
+
+
+def _ann_queries(vecs: DataFrame, n: int, vec_col: str) -> DataFrame:
+    """ANN query side: the vectors with vec_id < n as (query_id, qvec)."""
+    return vecs.where(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col(vec_col).alias("qvec"))
+
+
+def _planes(n: int) -> list[list[float]]:
+    """``n`` deterministic pseudo-random 64-dim SimHash hyperplanes."""
+    return [[(((i * 2654435761 + j * 40503) % 1000) - 500) / 500.0
+             for j in range(64)] for i in range(n)]
+
+
 KNN_QUERIES = [(0, HOT_LON_MD[0], HOT_LAT_MD[0]),
                (1, HOT_LON_MD[1], HOT_LAT_MD[1]),
                (2, HOT_LON_MD[2], HOT_LAT_MD[2])]
@@ -282,10 +296,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    q = e.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"))
-    return similarity.cosine_topk(e, q, k=5)
+    return similarity.cosine_topk(e, _ann_queries(e, 3, "embedding"), k=5)
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -735,12 +746,8 @@ def q_simhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH bucketed ANN (rows-only check: recall is
     probabilistic by design, not SQL-expressible)."""
     e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    q = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
-    # deterministic pseudo-random planes from a fixed seed table
-    planes = [[(((i * 2654435761 + j * 40503) % 1000) - 500) / 500.0
-               for j in range(64)] for i in range(6)]
-    return similarity.lsh_bucket_topk(e, q, planes, k=5)
+    return similarity.lsh_bucket_topk(e, _ann_queries(e, 8, "embedding"),
+                                      _planes(6), k=5)
 
 
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1592,10 +1599,8 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = e.where(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cvec"))
-    q = e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"))
-    return similarity.ivf_topk(e, q, cents, k=5, nprobe=2)
+    return similarity.ivf_topk(e, _ann_queries(e, 8, "embedding"), cents,
+                               k=5, nprobe=2)
 
 
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1603,8 +1608,7 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.rolling_fingerprint(d)
 
 
-NEAR_DUP_PLANES = [[(((i * 2654435761 + j * 40503) % 1000) - 500) / 500.0
-                    for j in range(64)] for i in range(4)]
+NEAR_DUP_PLANES = _planes(4)
 
 
 def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1853,14 +1857,19 @@ FROM pages
 KM_K, KM_DIM = 8, 64
 
 
+def _micro_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the embeddings quantized to micro-units."""
+    e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
+    return e.select("vec_id",
+                    similarity.quantize_micro(F.col("embedding")).alias("v"))
+
+
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-means assignment step (integer squared-L2 argmin against the
     hash-sampled seed centroids) — the deterministic kernel both the
-    trainer and the IVF build reuse; min_by aggregation, plan-asserted
-    elsewhere."""
-    e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    v = e.select("vec_id",
-                 similarity.quantize_micro(F.col("embedding")).alias("v"))
+    trainer and the IVF build reuse; one vectorized argmin projection,
+    plan-asserted in tests/test_kmeans.py and tests/test_plans.py."""
+    v = _micro_vecs(spark, sf_dir)
     seeds = similarity.kmeans_seeds(v, KM_K)
     out = similarity.kmeans_assign(v, seeds)
     return out.select(F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -1873,9 +1882,7 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     final centroids. Integer-exact end to end (micro-unit quantization,
     non-negative truncating means), so the whole TRAINING loop — not
     just one assignment — is oracle-checked."""
-    e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    v = e.select("vec_id",
-                 similarity.quantize_micro(F.col("embedding")).alias("v"))
+    v = _micro_vecs(spark, sf_dir)
     cents = similarity.kmeans_train(v, k=KM_K, iters=2)
     return cents.select("cent_id", "cluster_n",
                         F.posexplode("cvec").alias("d", "comp")) \
@@ -2055,9 +2062,7 @@ def q_sq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-bit scalar quantization of the embedding table (train bounds +
     encode), exploded to (vec_id, d, code) — the ANN memory lever,
     integer-exact end to end."""
-    e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    v = e.select("vec_id",
-                 similarity.quantize_micro(F.col("embedding")).alias("v"))
+    v = _micro_vecs(spark, sf_dir)
     lo, span = similarity.sq_train(v)
     return (v.select("vec_id",
                      F.posexplode(similarity.sq_encode_col(lo, span))
@@ -2963,11 +2968,13 @@ PQ_M, PQ_DIM = 2, 64
 
 
 def _pq_parts(spark: SparkSession, sf_dir: str):
-    e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
-    v = e.select(F.col("vec_id").cast("bigint").alias("vec_id"),
-                 similarity.quantize_micro(F.col("embedding")).alias("v"))
+    """(micro-unit vectors, stride-97 codebooks, stride-131 lists)."""
+    v = _micro_vecs(spark, sf_dir)
     cb = similarity.pq_codebooks_stride(v, m=PQ_M, dim=PQ_DIM)
-    return v, cb
+    coarse = v.where(F.col("vec_id") % 131 == 0).select(
+        (F.col("vec_id") / 131).cast("int").alias("cent_id"),
+        F.col("v").alias("cvec"))
+    return v, cb, coarse
 
 
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2980,7 +2987,7 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot hash list cells (r04's only red row); every registered
     query emits scalar columns only (pinned by
     tests/test_contract_order.py::test_gate_safe_output_schemas)."""
-    v, cb = _pq_parts(spark, sf_dir)
+    v, cb, _ = _pq_parts(spark, sf_dir)
     codes = similarity.pq_encode(v, cb, m=PQ_M, dim=PQ_DIM)
     return codes.select(
         "vec_id",
@@ -2993,12 +3000,10 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC search over the PQ-compressed corpus: per-query LUT of
     partial distances (broadcast), equi-join on (subspace, code), sum,
     top-3 per query — the decode-free compressed search path."""
-    v, cb = _pq_parts(spark, sf_dir)
+    v, cb, _ = _pq_parts(spark, sf_dir)
     codes = similarity.pq_encode(v, cb, m=PQ_M, dim=PQ_DIM)
-    queries = v.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec"))
-    return similarity.pq_adc_topk(queries, codes, cb, m=PQ_M, dim=PQ_DIM,
-                                  k=3)
+    return similarity.pq_adc_topk(_ann_queries(v, 4, "v"), codes, cb,
+                                  m=PQ_M, dim=PQ_DIM, k=3)
 
 
 def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3006,14 +3011,9 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stride-131 centroids) as M=2 PQ codes (stride-97 codebooks);
     each query probes its 2 nearest lists and ranks members by ADC —
     the full billion-scale search shape in one oracle-gated query."""
-    v, cb = _pq_parts(spark, sf_dir)
-    coarse = v.where(F.col("vec_id") % 131 == 0).select(
-        (F.col("vec_id") / 131).cast("int").alias("cent_id"),
-        F.col("v").alias("cvec"))
-    queries = v.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec"))
-    return similarity.ivf_pq_topk(queries, v, coarse, cb, m=PQ_M,
-                                  dim=PQ_DIM, nprobe=2, k=3)
+    v, cb, coarse = _pq_parts(spark, sf_dir)
+    return similarity.ivf_pq_topk(_ann_queries(v, 4, "v"), v, coarse, cb,
+                                  m=PQ_M, dim=PQ_DIM, nprobe=2, k=3)
 
 
 def q_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3024,10 +3024,7 @@ def q_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC estimate, so the codes spend their bits on within-list
     displacement. tests/test_kmeans.py proves the quantization error
     drops vs plain ivf_pq_topk on the same fixture."""
-    v, _ = _pq_parts(spark, sf_dir)
-    coarse = v.where(F.col("vec_id") % 131 == 0).select(
-        (F.col("vec_id") / 131).cast("int").alias("cent_id"),
-        F.col("v").alias("cvec"))
+    v, _, coarse = _pq_parts(spark, sf_dir)
     # checkpoint the residual table: the stride-codebook COLLECT, the
     # encode pass and the list-membership join would otherwise each
     # re-run the assignment job (r06: 3 build-time jobs -> 1; computed
@@ -3035,10 +3032,8 @@ def q_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = similarity.residual_vectors(v, coarse).localCheckpoint()
     cb = similarity.pq_codebooks_stride(res, m=PQ_M, dim=PQ_DIM,
                                         vec_col="rvec")
-    queries = v.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qvec"))
-    return similarity.ivf_pq_residual_topk(queries, res, coarse, cb,
-                                           m=PQ_M, dim=PQ_DIM,
+    return similarity.ivf_pq_residual_topk(_ann_queries(v, 4, "v"), res,
+                                           coarse, cb, m=PQ_M, dim=PQ_DIM,
                                            nprobe=2, k=3)
 
 

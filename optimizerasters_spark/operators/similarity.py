@@ -1,11 +1,12 @@
 """Similarity search over embedding columns (array<float>).
 
-  * ``cosine_topk`` — brute-force cosine top-k per query vector: the
-    correctness baseline. Dot products via F.aggregate/zip_with stay
-    JVM-side; the query side is broadcast so the big side never shuffles.
-  * ``lsh_bucket_topk`` — the scale path: random-hyperplane (SimHash-style)
-    bucketing; candidates only meet within a bucket (and its query-side
-    multiprobe neighbors), turning O(N*Q) into O(N + candidates).
+  * Search: brute-force ``cosine_topk`` (the correctness baseline, query
+    side broadcast), SimHash ``lsh_bucket_topk`` and inverted-file
+    ``ivf_topk`` (candidates meet only within a bucket / probed list),
+    ``embedding_near_dup`` pairs, and decode-free ADC over PQ codes
+    (``pq_adc_topk``, ``ivf_pq_topk``, ``ivf_pq_residual_topk``).
+  * Index BUILD: integer-exact k-means (``kmeans_*``), scalar (``sq_*``)
+    and product (``pq_*``) quantization.
 
 At 100 TB the brute-force form is still the right INNER loop — but only
 after a bucket/IVF prefilter bounds candidates per query; both pieces are
@@ -13,6 +14,9 @@ here and compose.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -30,27 +34,96 @@ def _norm2(a: Column) -> Column:
                               F.lit(0.0), lambda acc, v: acc + v))
 
 
+def _cos(a: Column, b: Column) -> Column:
+    """Cosine similarity of two array<double> columns, JVM-side."""
+    return _dot(a, b) / (_norm2(a) * _norm2(b))
+
+
+def _f64(df: DataFrame, id_col: str, vec_col: str, alias: str,
+         *keep: str) -> DataFrame:
+    """(id_col, *keep, alias) with the vector cast to array<double>."""
+    return df.select(id_col, *keep, F.col(vec_col).cast("array<double>")
+                     .alias(alias))
+
+
+def _topk(df: DataFrame, part: str, order: list[Column], k: int,
+          rank: str) -> DataFrame:
+    """The first ``k`` rows of each ``part`` partition by ``order``
+    (whose last key is unique), numbered 1..k in column ``rank``."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return (df.withColumn(rank, F.row_number().over(w))
+            .where(F.col(rank) <= k))
+
+
+def _cos_topk(e: DataFrame, q: DataFrame, k: int,
+              on: str | None = None) -> DataFrame:
+    """Top-k cosine (vec_id, vec) rows per broadcast (query_id, qvec)
+    row, ties -> lower vec_id: all pairs, or those sharing key ``on``."""
+    j = (e.crossJoin(F.broadcast(q)) if on is None
+         else e.join(F.broadcast(q), on))
+    sim = j.withColumn("cos_sim", _cos(F.col("vec"), F.col("qvec")))
+    return (_topk(sim, "query_id",
+                  [F.col("cos_sim").desc(), F.col("vec_id").asc()], k,
+                  "sim_rank")
+            .select(F.col("query_id").cast("bigint").alias("query_id"),
+                    F.col("sim_rank").cast("int").alias("sim_rank"),
+                    F.col("vec_id").cast("bigint").alias("vec_id")))
+
+
+def _kernel(schema: str):
+    """Decorator: a pandas (Arrow batch) UDF marked nondeterministic so
+    each vector goes through it ONCE: Spark infers filters on a
+    deterministic UDF's output (isnotnull from a join on it, size > 0
+    from an explode of it) and pushes them below the projection, which
+    evaluates the kernel again. Cost: Catalyst no longer pushes filters
+    through that projection. The kernels themselves are deterministic."""
+    return lambda fn: F.pandas_udf(fn, schema).asNondeterministic()
+
+
+def _books(codebooks: DataFrame, m: int) -> list:
+    """Collect a codebook table (a centroid table without ``m`` is one
+    book) to the driver: one (ids, C, |c|^2) NumPy triple per subspace
+    0..m-1, ids ascending so a first-occurrence argmin/argmax is the
+    'ties -> lower cent_id' rule (guide §4.2). [] for an empty table
+    (callers then return .limit(0) rows); ValueError when a subspace
+    has no entries. Runs a Spark job."""
+    has_m = "m" in codebooks.columns
+    rows = codebooks.select(*(["m"] if has_m else []), "cent_id",
+                            "cvec").collect()
+    if not rows:
+        return []
+    books = []
+    for mm in range(m):
+        sub = sorted(((r["cent_id"], list(r["cvec"])) for r in rows
+                      if not has_m or r["m"] == mm), key=lambda t: t[0])
+        if not sub:
+            raise ValueError(
+                f"codebook has no entries for subspace m={mm} "
+                f"(expected subspaces 0..{m - 1})")
+        C = np.asarray([c for _, c in sub], dtype=np.float64)
+        books.append((np.asarray([i for i, _ in sub], dtype=np.int64),
+                      C, (C * C).sum(axis=1)))
+    return books
+
+
+def _nearest(X, book):
+    """(ids, dist2) of each row of X's nearest entry (first min -> lower
+    id) by |x-c|^2 = |x|^2 + |c|^2 - 2<x,c>, one BLAS matmul. EXACT for
+    the micro-int domain: components are integers with |v| <= ~4.2e6,
+    so every partial sum over <= 64 dims is an integer < 2^53."""
+    ids, C, c_norm2 = book
+    D = (X * X).sum(axis=1)[:, None] + c_norm2[None, :] - 2.0 * (X @ C.T)
+    idx = np.argmin(D, axis=1)
+    return ids[idx], D[np.arange(len(idx)), idx]
+
+
 def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                 vec_col: str = "embedding") -> DataFrame:
     """For each row of ``queries`` (query_id, qvec) return the k most
     cosine-similar embeddings (ties -> lower vec_id). Query side broadcast;
     one window per query_id partition."""
-    e = embeddings.select(
-        "vec_id",
-        F.col(vec_col).cast("array<double>").alias("vec"))
-    q = queries.select(
-        "query_id", F.col("qvec").cast("array<double>").alias("qvec"))
-    sim = (e.crossJoin(F.broadcast(q))
-           .withColumn("cos_sim",
-                       _dot(F.col("vec"), F.col("qvec")) /
-                       (_norm2(F.col("vec")) * _norm2(F.col("qvec")))))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("vec_id").asc())
-    return (sim.withColumn("sim_rank", F.row_number().over(w))
-            .where(F.col("sim_rank") <= k)
-            .select(F.col("query_id").cast("bigint").alias("query_id"),
-                    F.col("sim_rank").cast("int").alias("sim_rank"),
-                    F.col("vec_id").cast("bigint").alias("vec_id")))
+    return _cos_topk(_f64(embeddings, "vec_id", vec_col, "vec"),
+                     _f64(queries, "query_id", "qvec", "qvec"), k)
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold_micro: int = 950000,
@@ -64,18 +137,13 @@ def embedding_near_dup(embeddings: DataFrame, threshold_micro: int = 950000,
     an LSH bucket, an IVF centroid id) — the O(N^2) cross stays bounded by
     the largest bucket, and buckets shuffle-join on their key. Pass
     block_col=None for the brute-force baseline."""
-    e = embeddings.select(
-        "vec_id",
-        *([block_col] if block_col else []),
-        F.col(vec_col).cast("array<double>").alias("vec"))
-    a = e.alias("a")
-    b = e.alias("b")
+    e = _f64(embeddings, "vec_id", vec_col, "vec",
+             *([block_col] if block_col else []))
     on = [F.col("a.vec_id") < F.col("b.vec_id")]
     if block_col:
         on.insert(0, F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    joined = a.join(b, on[0] if len(on) == 1 else (on[0] & on[1]))
-    sim = (_dot(F.col("a.vec"), F.col("b.vec")) /
-           (_norm2(F.col("a.vec")) * _norm2(F.col("b.vec"))))
+    joined = e.alias("a").join(e.alias("b"), reduce(operator.and_, on))
+    sim = _cos(F.col("a.vec"), F.col("b.vec"))
     return (joined
             .withColumn("sim_micro",
                         F.floor(sim * F.lit(1000000)).cast("bigint"))
@@ -93,33 +161,7 @@ def simhash_bucket(vec: Column, planes: list[list[float]]) -> Column:
          .otherwise(0)
         for i, p in enumerate(planes)
     ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("int")
-
-
-def _collect_centroids(cents: DataFrame, id_col: str, vec_col: str,
-                       dtype):
-    """Collect a small (id, vector) table to the driver sorted by id
-    ascending. The SAME bytes F.broadcast() would haul through the
-    driver — but as a NumPy matrix a vectorized kernel can consume
-    (guide §4.2). Ascending ids make first-occurrence argmin/argmax
-    the exact 'ties -> lower id' rule."""
-    rows = cents.select(id_col, vec_col).collect()
-    rows.sort(key=lambda r: r[0])
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    mat = np.asarray([list(r[1]) for r in rows], dtype=dtype)
-    return ids, mat
-
-
-def _np_dist2(X, C, c_norm2):
-    """Squared-L2 distance matrix |x-c|^2 = |x|^2 + |c|^2 - 2<x,c> via
-    one BLAS matmul. EXACT for the micro-int domain: every component is
-    an integer with |v| <= ~4.2e6, so each partial sum over <= 64 dims
-    is an integer < 2^53 and float64 arithmetic never rounds."""
-    G = X @ C.T
-    return (X * X).sum(axis=1)[:, None] + c_norm2[None, :] - 2.0 * G
+    return reduce(operator.add, bits, F.lit(0)).cast("int")
 
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame,
@@ -134,43 +176,39 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
     ONE NumPy matrix product per Arrow batch inside a pandas UDF
     (guide §4.2): K centroids are collected once (the same driver hop
     a broadcast pays) and the N*K candidate rows never materialize —
-    the stage stays a shuffle-free projection instead of a broadcast
-    nested-loop join + re-aggregation, and the per-pair cost is a BLAS
-    row, not an interpreted zip_with/aggregate lambda chain. The
+    the stage stays a shuffle-free projection, and the per-pair cost is
+    a BLAS row, not an interpreted zip_with/aggregate lambda chain. The
     window form is kept for nprobe>1, which only the small query side
-    uses."""
+    uses.
+
+    The nprobe=1 form collects the centroid table when this DataFrame
+    is BUILT, so a Spark job fires at that point. Its cosine argmax is
+    float64 arithmetic in NumPy summation order, so a near-tie can
+    resolve differently from the DuckDB oracle's summation order (the
+    integer-L2 kernels, kmeans_assign and pq_encode, are exact)."""
     if nprobe == 1:
-        ids, C = _collect_centroids(centroids, "cent_id", "cvec",
-                                    np.float64)
-        others = [c for c in vectors.columns if c != id_col]
-        if len(ids) == 0:
-            # no centroids: the old inner-join shape yields no rows
-            return (vectors.join(F.broadcast(centroids))
-                    .select(id_col, "cent_id", *others).limit(0))
-        c_norm = np.sqrt((C * C).sum(axis=1))
+        books = _books(centroids, 1)
         cent_dtype = dict(centroids.dtypes)["cent_id"]
 
-        @F.pandas_udf("bigint")
+        @_kernel("bigint")
         def _best_list(v: pd.Series) -> pd.Series:
+            ids, C, c_norm2 = books[0]
             X = np.asarray(v.tolist(), dtype=np.float64)
             x_norm = np.sqrt((X * X).sum(axis=1))
-            sims = (X @ C.T) / (x_norm[:, None] * c_norm[None, :])
-            # argmax takes the FIRST max -> lowest cent_id on ties,
-            # exactly max_by(struct(sim, -cent_id))
+            sims = (X @ C.T) / (x_norm[:, None] * np.sqrt(c_norm2)[None, :])
+            # argmax takes the FIRST max -> lowest cent_id on ties
             return pd.Series(ids[np.argmax(sims, axis=1)])
 
-        return vectors.select(
+        out = vectors.select(
             id_col,
             _best_list(F.col(vec_col)).cast(cent_dtype).alias("cent_id"),
-            *others)
+            *[c for c in vectors.columns if c != id_col])
+        return out if books else out.limit(0)
     sim = (vectors.join(F.broadcast(centroids))
-           .withColumn("cent_sim",
-                       _dot(F.col(vec_col), F.col("cvec")) /
-                       (_norm2(F.col(vec_col)) * _norm2(F.col("cvec")))))
-    w = Window.partitionBy(id_col).orderBy(F.col("cent_sim").desc(),
-                                           F.col("cent_id").asc())
-    return (sim.withColumn("cent_rank", F.row_number().over(w))
-            .where(F.col("cent_rank") <= nprobe)
+           .withColumn("cent_sim", _cos(F.col(vec_col), F.col("cvec"))))
+    return (_topk(sim, id_col,
+                  [F.col("cent_sim").desc(), F.col("cent_id").asc()],
+                  nprobe, "cent_rank")
             .drop("cvec", "cent_sim", "cent_rank"))
 
 
@@ -185,30 +223,14 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
     At 100 TB: the big side shuffles once on cent_id (or is written
     bucketed by it), queries are broadcast, and recall is tuned by
     nprobe without touching the stored lists."""
-    c = centroids.select("cent_id",
-                         F.col("cvec").cast("array<double>").alias("cvec"))
-    e = ivf_assign(
-        embeddings.select("vec_id",
-                          F.col(vec_col).cast("array<double>")
-                          .alias("vec")),
-        c, nprobe=1)
-    q = ivf_assign(
-        queries.select("query_id",
-                       F.col("qvec").cast("array<double>").alias("qvec")),
-        c, vec_col="qvec", id_col="query_id", nprobe=nprobe)
-    cand = (e.join(F.broadcast(q), "cent_id")
-            .withColumn("cos_sim",
-                        _dot(F.col("vec"), F.col("qvec")) /
-                        (_norm2(F.col("vec")) * _norm2(F.col("qvec")))))
+    c = _f64(centroids, "cent_id", "cvec", "cvec")
+    e = ivf_assign(_f64(embeddings, "vec_id", vec_col, "vec"), c,
+                   nprobe=1)
+    q = ivf_assign(_f64(queries, "query_id", "qvec", "qvec"), c,
+                   vec_col="qvec", id_col="query_id", nprobe=nprobe)
     # vectors hold ONE centroid (nprobe=1 on the build side), so
     # (query, vec) candidate pairs are unique — no dedup needed
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("vec_id").asc())
-    return (cand.withColumn("sim_rank", F.row_number().over(w))
-            .where(F.col("sim_rank") <= k)
-            .select(F.col("query_id").cast("bigint").alias("query_id"),
-                    F.col("sim_rank").cast("int").alias("sim_rank"),
-                    F.col("vec_id").cast("bigint").alias("vec_id")))
+    return _cos_topk(e, q, k, on="cent_id")
 
 
 # ---------------------------------------------------------------------------
@@ -224,14 +246,14 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
 #   * init is a hash-ordered sample (the K vectors with the smallest
 #     md5(vec_id)) — uniform-but-reproducible, TakeOrderedAndProject on
 #     the big side;
-#   * each Lloyd iteration is (a) assignment: broadcast centroids +
-#     min_by aggregation (ONE row per vector through the shuffle — same
-#     plan shape as ivf_assign), and (b) update: posexplode to
-#     (cent_id, dim) and re-aggregate — map-side partial combine
-#     collapses each task to K*dim rows, so the update shuffle is
-#     O(#tasks * K * dim), independent of N. Centroids (K*dim ints)
-#     hop through the driver between iterations exactly like MLlib's
-#     Lloyd loop — the one legitimate collect.
+#   * each Lloyd iteration is (a) assignment: one NumPy argmin per
+#     Arrow batch against the collected centroids (a shuffle-free
+#     projection — the kernel pq_encode runs per subspace), and
+#     (b) update: posexplode to (cent_id, dim) and re-aggregate —
+#     map-side partial combine collapses each task to K*dim rows, so
+#     the update shuffle is O(#tasks * K * dim), independent of N.
+#     Centroids (K*dim ints) hop through the driver between iterations
+#     exactly like MLlib's Lloyd loop — the one legitimate collect.
 # ---------------------------------------------------------------------------
 
 QUANT_OFFSET = 1_000_000  # valid for unit-scale embeddings (|x| < 1)
@@ -267,39 +289,27 @@ def kmeans_assign(vectors: DataFrame, cents: DataFrame,
     """Nearest centroid by integer squared L2 (ties -> lower cent_id).
 
     The argmin runs as ONE NumPy matrix product per Arrow batch inside
-    a pandas UDF (guide §4.2): the K centroids are collected once (the
-    same driver hop F.broadcast pays), |x-c|^2 expands to
-    |x|^2+|c|^2-2<x,c> — exact in float64 for the micro-int domain (see
-    _np_dist2) — and the N*K candidate rows never materialize. The
-    stage is a shuffle-free projection; the old broadcast-join + min_by
-    shape shuffled one row per vector and paid an interpreted
-    zip_with/aggregate lambda chain per candidate pair."""
-    ids, C = _collect_centroids(cents, "cent_id", "cvec", np.float64)
-    if len(ids) == 0:
-        return (vectors.join(F.broadcast(cents))
-                .select(id_col, "cent_id",
-                        F.lit(0).cast("bigint").alias("dist2"),
-                        vec_col).limit(0))
-    c_norm2 = (C * C).sum(axis=1)
+    a pandas UDF (guide §4.2, :func:`_nearest` — exact in float64 for
+    the micro-int domain): the K centroids are collected once (the
+    same driver hop F.broadcast pays) and the N*K candidate rows never
+    materialize, so the stage is a shuffle-free projection. The
+    centroid table is collected when this DataFrame is BUILT, so a
+    Spark job fires at that point."""
+    books = _books(cents, 1)
     cent_dtype = dict(cents.dtypes)["cent_id"]
 
-    @F.pandas_udf("struct<cent_id:bigint,dist2:bigint>")
-    def _nearest(v: pd.Series) -> pd.DataFrame:
-        X = np.asarray(v.tolist(), dtype=np.float64)
-        D = _np_dist2(X, C, c_norm2)
-        # argmin takes the FIRST min -> lowest cent_id on ties,
-        # exactly min_by(struct(dist2, cent_id))
-        idx = np.argmin(D, axis=1)
-        return pd.DataFrame(
-            {"cent_id": ids[idx],
-             "dist2": D[np.arange(len(idx)), idx].astype(np.int64)})
+    @_kernel("struct<cent_id:bigint,dist2:bigint>")
+    def _assign(v: pd.Series) -> pd.DataFrame:
+        ids, d2 = _nearest(np.asarray(v.tolist(), dtype=np.float64),
+                           books[0])
+        return pd.DataFrame({"cent_id": ids, "dist2": d2.astype(np.int64)})
 
-    best = vectors.withColumn("_b", _nearest(F.col(vec_col)))
-    return best.select(
+    out = vectors.withColumn("_b", _assign(F.col(vec_col))).select(
         id_col,
         F.col("_b.cent_id").cast(cent_dtype).alias("cent_id"),
         F.col("_b.dist2").alias("dist2"),
         F.col(vec_col))
+    return out if books else out.limit(0)
 
 
 def kmeans_update(assigned: DataFrame, cents: DataFrame,
@@ -407,23 +417,11 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame,
     """ANN: bucket both sides by hyperplane signs, join on bucket, rank
     within. Recall < 1 by construction (single-probe); callers add probes
     by unioning neighbor buckets on the (small) query side."""
-    e = embeddings.select(
-        "vec_id", F.col(vec_col).cast("array<double>").alias("vec")
-    ).withColumn("bucket", simhash_bucket(F.col("vec"), planes))
-    q = queries.select(
-        "query_id", F.col("qvec").cast("array<double>").alias("qvec")
-    ).withColumn("bucket", simhash_bucket(F.col("qvec"), planes))
-    sim = (e.join(F.broadcast(q), "bucket")
-           .withColumn("cos_sim",
-                       _dot(F.col("vec"), F.col("qvec")) /
-                       (_norm2(F.col("vec")) * _norm2(F.col("qvec")))))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("vec_id").asc())
-    return (sim.withColumn("sim_rank", F.row_number().over(w))
-            .where(F.col("sim_rank") <= k)
-            .select(F.col("query_id").cast("bigint").alias("query_id"),
-                    F.col("sim_rank").cast("int").alias("sim_rank"),
-                    F.col("vec_id").cast("bigint").alias("vec_id")))
+    e = _f64(embeddings, "vec_id", vec_col, "vec") \
+        .withColumn("bucket", simhash_bucket(F.col("vec"), planes))
+    q = _f64(queries, "query_id", "qvec", "qvec") \
+        .withColumn("bucket", simhash_bucket(F.col("qvec"), planes))
+    return _cos_topk(e, q, k, on="bucket")
 
 
 # --------------------------------------------------------------------------
@@ -431,6 +429,13 @@ def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame,
 # and IVF in the billion-vector stack — vectors become M small codes and
 # search runs decode-free against per-query lookup tables (ADC).
 # --------------------------------------------------------------------------
+
+def _stack(books: list[DataFrame]) -> DataFrame:
+    """(m, cent_id, cvec): the per-subspace codebooks, m = position."""
+    return reduce(DataFrame.unionByName, [
+        b.select(F.lit(mm).cast("int").alias("m"), "cent_id", "cvec")
+        for mm, b in enumerate(books)])
+
 
 def pq_codebooks_stride(vectors: DataFrame, m: int, dim: int,
                         stride: int = 97, id_col: str = "vec_id",
@@ -444,35 +449,27 @@ def pq_codebooks_stride(vectors: DataFrame, m: int, dim: int,
     base = vectors.where(F.col(id_col) % stride == 0).select(
         (F.col(id_col) / stride).cast("int").alias("cent_id"),
         F.col(vec_col))
-    out = None
-    for mm in range(m):
-        sub = base.select(
-            F.lit(mm).cast("int").alias("m"), "cent_id",
-            F.slice(F.col(vec_col), mm * dsub + 1, dsub).alias("cvec"))
-        out = sub if out is None else out.unionByName(sub)
-    return out
+    return _stack([
+        base.select("cent_id", F.slice(F.col(vec_col), mm * dsub + 1,
+                                       dsub).alias("cvec"))
+        for mm in range(m)])
 
 
 def pq_train(vectors: DataFrame, m: int, dim: int, k: int = 8,
              iters: int = 2, id_col: str = "vec_id",
              vec_col: str = "v") -> DataFrame:
     """Lloyd-refined PQ codebooks: M INDEPENDENT integer k-means runs
-    (kmeans_train — hash-seeded, broadcast assign, posexplode update)
-    over the subvector slices. Each subspace trains on the full corpus
-    but only dim/M components; the driver round-trip per iteration stays
-    K*dim/M integers. Returns (m, cent_id, cvec)."""
+    (kmeans_train — hash-seeded, vectorized argmin assignment,
+    posexplode update) over the subvector slices. Each subspace trains
+    on the full corpus but only dim/M components; the driver round-trip
+    per iteration stays K*dim/M integers. Returns (m, cent_id, cvec)."""
     dsub = dim // m
-    out = None
-    for mm in range(m):
-        sub = vectors.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), mm * dsub + 1, dsub).alias(vec_col))
-        cb = (kmeans_train(sub, k=k, iters=iters, id_col=id_col,
-                           vec_col=vec_col)
-              .select(F.lit(mm).cast("int").alias("m"), "cent_id",
-                      "cvec"))
-        out = cb if out is None else out.unionByName(cb)
-    return out
+    return _stack([
+        kmeans_train(
+            vectors.select(F.col(id_col), F.slice(
+                F.col(vec_col), mm * dsub + 1, dsub).alias(vec_col)),
+            k=k, iters=iters, id_col=id_col, vec_col=vec_col)
+        for mm in range(m)])
 
 
 def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int, dim: int,
@@ -481,38 +478,51 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int, dim: int,
     subspace (integer squared L2, ties -> lower cent_id). The M*K
     codebook rows are collected once (the driver hop a broadcast pays)
     and each Arrow batch computes all M argmins as NumPy matrix
-    products (guide §4.2) — a shuffle-free projection; the N*M*K
-    candidate rows and the two re-aggregations of the old broadcast-
-    join shape never happen. Distances are exact in float64 for the
-    micro-int domain (see _np_dist2). 64 micro-int dims at M=8 become
-    8 ints: the 8x memory lever on top of SQ's 4x."""
+    products (guide §4.2, :func:`_nearest` — exact in float64 for the
+    micro-int domain) — a shuffle-free projection; the N*M*K candidate
+    rows never materialize. 64 micro-int dims at M=8 become 8 ints: the
+    8x memory lever on top of SQ's 4x. The codebook table is collected
+    when this DataFrame is BUILT, so a Spark job fires at that point;
+    a codebook with rows but no entry for some subspace raises
+    ValueError."""
     dsub = dim // m
-    cb_rows = codebooks.select("m", "cent_id", "cvec").collect()
-    if not cb_rows:
-        return (vectors.join(F.broadcast(codebooks))
-                .select(id_col,
-                        F.expr("cast(array() as array<int>)")
-                        .alias("codes"))
-                .limit(0))
-    books = []
-    for mm in range(m):
-        sub = sorted([(r["cent_id"], list(r["cvec"])) for r in cb_rows
-                      if r["m"] == mm])
-        ids_m = np.asarray([c for c, _ in sub], dtype=np.int64)
-        C_m = np.asarray([v for _, v in sub], dtype=np.float64)
-        books.append((ids_m, C_m, (C_m * C_m).sum(axis=1)))
+    books = _books(codebooks, m)
 
-    @F.pandas_udf("array<int>")
+    @_kernel("array<int>")
     def _codes(v: pd.Series) -> pd.Series:
         X = np.asarray(v.tolist(), dtype=np.float64)
         out = np.empty((len(X), m), dtype=np.int32)
-        for mm, (ids_m, C_m, n_m) in enumerate(books):
-            D = _np_dist2(X[:, mm * dsub:(mm + 1) * dsub], C_m, n_m)
-            # first-min argmin == min_by(struct(dist2, cent_id))
-            out[:, mm] = ids_m[np.argmin(D, axis=1)]
+        for mm, book in enumerate(books):
+            out[:, mm] = _nearest(X[:, mm * dsub:(mm + 1) * dsub], book)[0]
         return pd.Series(list(out))
 
-    return vectors.select(id_col, _codes(F.col(vec_col)).alias("codes"))
+    out = vectors.select(id_col, _codes(F.col(vec_col)).alias("codes"))
+    return out if books else out.limit(0)
+
+
+def _lut(df: DataFrame, codebooks: DataFrame, vec: str,
+         dsub: int) -> DataFrame:
+    """``df`` x broadcast codebooks with pdist = integer squared L2 of
+    ``vec``'s subspace-m slice to cvec: the ADC lookup table."""
+    return (df.join(F.broadcast(codebooks))
+            .withColumn("pdist", _dist2_int(
+                F.slice(F.col(vec), F.col("m") * dsub + 1, dsub),
+                F.col("cvec"))))
+
+
+def _adc_topk(ex: DataFrame, lut: DataFrame, q_id: str, id_col: str,
+              k: int, on: tuple[Column, ...] = (),
+              key: Column | None = None) -> DataFrame:
+    """ADC: code rows ``ex`` (m, code) join the broadcast ``lut`` on
+    (lm, cent_id) and the ``on`` conditions; adc2 = sum of pdist per
+    (query ``key``, vector); the k smallest per query (ties -> lower
+    id) ranked 1..k as pq_rank."""
+    j = ex.join(F.broadcast(lut), reduce(operator.and_, [
+        *on, F.col("m") == F.col("lm"), F.col("code") == F.col("cent_id")]))
+    agg = j.groupBy(q_id if key is None else key, id_col).agg(
+        F.sum("pdist").cast("bigint").alias("adc2"))
+    return _topk(agg, q_id, [F.col("adc2").asc(), F.col(id_col).asc()],
+                 k, "pq_rank")
 
 
 def pq_adc_topk(queries: DataFrame, codes: DataFrame,
@@ -526,22 +536,10 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame,
     decoded; only the LUT touches full precision — the IVF probe's
     inner loop at billion scale (ADC runs per posting list there; here
     it scans the whole code table, which IS the nprobe=all case)."""
-    dsub = dim // m
-    lut = (queries.join(F.broadcast(codebooks))
-           .select(q_id, F.col("m").alias("lm"), "cent_id",
-                   _dist2_int(
-                       F.slice(F.col(q_vec), F.col("m") * dsub + 1, dsub),
-                       F.col("cvec")).alias("pdist")))
+    lut = _lut(queries, codebooks, q_vec, dim // m).select(
+        q_id, F.col("m").alias("lm"), "cent_id", "pdist")
     ex = codes.select(id_col, F.posexplode("codes").alias("m", "code"))
-    j = ex.join(F.broadcast(lut),
-                (F.col("m") == F.col("lm")) &
-                (F.col("code") == F.col("cent_id")))
-    agg = j.groupBy(q_id, id_col).agg(
-        F.sum("pdist").cast("bigint").alias("adc2"))
-    w = Window.partitionBy(q_id).orderBy(F.col("adc2").asc(),
-                                         F.col(id_col).asc())
-    return (agg.withColumn("pq_rank", F.row_number().over(w))
-            .where(F.col("pq_rank") <= k))
+    return _adc_topk(ex, lut, q_id, id_col, k)
 
 
 def residual_vectors(vectors: DataFrame, coarse: DataFrame,
@@ -552,9 +550,8 @@ def residual_vectors(vectors: DataFrame, coarse: DataFrame,
     after coarse assignment, only the residual to the list centroid is
     quantized, so the codebooks spend their entries on the small
     within-list displacement instead of the whole embedding space.
-    One kmeans_assign (broadcast centroids, min_by) + one broadcast
-    rejoin for the centroid vector; a single corpus-proportional
-    shuffle keyed on vec_id."""
+    One kmeans_assign (the vectorized argmin projection) + one
+    broadcast rejoin for the centroid vector: no shuffle of its own."""
     assigned = kmeans_assign(vectors, coarse, id_col, vec_col)
     withc = assigned.join(
         F.broadcast(coarse.select("cent_id",
@@ -575,13 +572,22 @@ def pq_quantization_error(vectors: DataFrame, codebooks: DataFrame,
     residual PQ the coarse centroid cancels, so the residual table's
     error IS the reconstruction error of centroid + codeword).
     Returns a single (err2) row."""
-    dsub = dim // m
-    cand = (vectors.join(F.broadcast(codebooks))
-            .withColumn("dist2", _dist2_int(
-                F.slice(F.col(vec_col), F.col("m") * dsub + 1, dsub),
-                F.col("cvec"))))
-    best = cand.groupBy(id_col, "m").agg(F.min("dist2").alias("d2"))
+    best = (_lut(vectors, codebooks, vec_col, dim // m)
+            .groupBy(id_col, "m").agg(F.min("pdist").alias("d2")))
     return best.agg(F.sum("d2").cast("bigint").alias("err2"))
+
+
+def _probed_lists(queries: DataFrame, coarse: DataFrame, q_id: str,
+                  q_vec: str, nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` nearest coarse lists (integer squared L2,
+    ties -> lower list_id), with list_id and list_vec."""
+    qc = (queries.join(F.broadcast(
+            coarse.select(F.col("cent_id").alias("list_id"),
+                          F.col("cvec").alias("list_vec"))))
+          .withColumn("qd2", _dist2_int(F.col(q_vec),
+                                        F.col("list_vec"))))
+    return _topk(qc, q_id, [F.col("qd2").asc(), F.col("list_id").asc()],
+                 nprobe, "pr")
 
 
 def ivf_pq_residual_topk(queries: DataFrame, residuals: DataFrame,
@@ -601,43 +607,22 @@ def ivf_pq_residual_topk(queries: DataFrame, residuals: DataFrame,
     bounded to probed lists by the broadcast LUT join, and the only
     corpus-proportional shuffles key on vec_id and the candidate
     (query, vector) pairs."""
-    dsub = dim // m
     codes = pq_encode(residuals, codebooks, m, dim, id_col, res_col)
-    qc = (queries.join(F.broadcast(
-            coarse.select(F.col("cent_id").alias("list_id"),
-                          F.col("cvec").alias("list_vec"))))
-          .withColumn("qd2", _dist2_int(F.col(q_vec),
-                                        F.col("list_vec"))))
-    wq = Window.partitionBy(q_id).orderBy(F.col("qd2").asc(),
-                                          F.col("list_id").asc())
-    probed = (qc.withColumn("pr", F.row_number().over(wq))
-              .where(F.col("pr") <= nprobe)
-              .select(q_id, "list_id",
-                      F.zip_with(F.col(q_vec), F.col("list_vec"),
-                                 lambda a, b: a - b).alias("qr")))
-    lut = (probed.join(F.broadcast(codebooks))
-           .select(F.col(q_id).alias("lq"),
-                   F.col("list_id").alias("ll"),
-                   F.col("m").alias("lm"), "cent_id",
-                   _dist2_int(
-                       F.slice(F.col("qr"), F.col("m") * dsub + 1,
-                               dsub),
-                       F.col("cvec")).alias("pdist")))
+    probed = _probed_lists(queries, coarse, q_id, q_vec, nprobe).select(
+        q_id, "list_id",
+        F.zip_with(F.col(q_vec), F.col("list_vec"),
+                   lambda a, b: a - b).alias("qr"))
+    lut = _lut(probed, codebooks, "qr", dim // m).select(
+        F.col(q_id).alias("lq"), F.col("list_id").alias("ll"),
+        F.col("m").alias("lm"), "cent_id", "pdist")
     ex = (codes.join(residuals.select(id_col, "list_id"), id_col)
           .select(id_col, "list_id",
                   F.posexplode("codes").alias("m", "code")))
     # the LUT carries only probed (query, list) pairs, so this join IS
     # the candidate restriction — unprobed lists never match
-    j = ex.join(F.broadcast(lut),
-                (F.col("list_id") == F.col("ll")) &
-                (F.col("m") == F.col("lm")) &
-                (F.col("code") == F.col("cent_id")))
-    agg = j.groupBy(F.col("lq").alias(q_id), id_col).agg(
-        F.sum("pdist").cast("bigint").alias("adc2"))
-    w = Window.partitionBy(q_id).orderBy(F.col("adc2").asc(),
-                                         F.col(id_col).asc())
-    return (agg.withColumn("pq_rank", F.row_number().over(w))
-            .where(F.col("pq_rank") <= k))
+    return _adc_topk(ex, lut, q_id, id_col, k,
+                     on=(F.col("list_id") == F.col("ll"),),
+                     key=F.col("lq").alias(q_id))
 
 
 def ivf_pq_topk(queries: DataFrame, vectors: DataFrame,
@@ -650,45 +635,25 @@ def ivf_pq_topk(queries: DataFrame, vectors: DataFrame,
     stored as M PQ codes; a query probes its ``nprobe`` nearest lists
     and ranks ONLY those lists' members by decode-free ADC distance.
 
-    Plan: one kmeans_assign for list membership (broadcast coarse,
-    min_by), one pq_encode (broadcast codebooks, min_by per subspace),
-    the probed (query, list) pairs and the per-query LUT both broadcast
-    — the only page-proportional shuffles key on vec_id and
-    (query, vec) within probed lists, i.e. the candidate set, never
-    the corpus times queries. :func:`ivf_pq_residual_topk` is the
-    residual-encoded variant (FAISS-IVFPQ semantics) behind the same
-    shape — finer codes."""
+    Plan: one kmeans_assign for list membership and one pq_encode
+    (each one NumPy argmin kernel over a collected table, a
+    shuffle-free projection), the probed (query, list) pairs and the
+    per-query LUT both broadcast — the only page-proportional shuffles
+    key on vec_id and (query, vec) within probed lists, i.e. the
+    candidate set, never the corpus times queries.
+    :func:`ivf_pq_residual_topk` is the residual-encoded variant
+    (FAISS-IVFPQ semantics) behind the same shape — finer codes."""
     assigned = kmeans_assign(vectors, coarse, id_col, vec_col) \
         .select(id_col, F.col("cent_id").alias("list_id"))
     codes = pq_encode(vectors, codebooks, m, dim, id_col, vec_col)
-    qc = (queries.join(F.broadcast(
-            coarse.select(F.col("cent_id").alias("list_id"),
-                          F.col("cvec").alias("list_vec"))))
-          .withColumn("qd2", _dist2_int(F.col(q_vec),
-                                        F.col("list_vec"))))
-    wq = Window.partitionBy(q_id).orderBy(F.col("qd2").asc(),
-                                          F.col("list_id").asc())
-    probed = (qc.withColumn("pr", F.row_number().over(wq))
-              .where(F.col("pr") <= nprobe).select(q_id, "list_id"))
-    dsub = dim // m
-    lut = (queries.join(F.broadcast(codebooks))
-           .select(F.col(q_id).alias("lq"), F.col("m").alias("lm"),
-                   "cent_id",
-                   _dist2_int(
-                       F.slice(F.col(q_vec), F.col("m") * dsub + 1,
-                               dsub),
-                       F.col("cvec")).alias("pdist")))
+    probed = _probed_lists(queries, coarse, q_id, q_vec, nprobe) \
+        .select(q_id, "list_id")
+    lut = _lut(queries, codebooks, q_vec, dim // m).select(
+        F.col(q_id).alias("lq"), F.col("m").alias("lm"), "cent_id",
+        "pdist")
     ex = (codes.join(assigned, id_col)
           .select(id_col, "list_id",
                   F.posexplode("codes").alias("m", "code")))
     cand = ex.join(F.broadcast(probed), "list_id")
-    j = cand.join(F.broadcast(lut),
-                  (F.col(q_id) == F.col("lq")) &
-                  (F.col("m") == F.col("lm")) &
-                  (F.col("code") == F.col("cent_id")))
-    agg = j.groupBy(q_id, id_col).agg(
-        F.sum("pdist").cast("bigint").alias("adc2"))
-    w = Window.partitionBy(q_id).orderBy(F.col("adc2").asc(),
-                                         F.col(id_col).asc())
-    return (agg.withColumn("pq_rank", F.row_number().over(w))
-            .where(F.col("pq_rank") <= k))
+    return _adc_topk(cand, lut, q_id, id_col, k,
+                     on=(F.col(q_id) == F.col("lq"),))

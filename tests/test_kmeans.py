@@ -4,6 +4,7 @@ cluster recovery, and end-to-end ANN recall with TRAINED centroids
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from optimizerasters_spark.operators import similarity
@@ -236,3 +237,14 @@ def test_ivf_pq_residual_ranks_within_probed_lists(spark, sf_dir):
         assert all(a["adc2"] <= b["adc2"] for a, b in zip(rs, rs[1:]))
         probed_lists = {assigned[r["vec_id"]] for r in rs}
         assert len(probed_lists) <= 2  # nprobe bound
+
+
+def test_pq_encode_names_a_missing_subspace(spark, sf_dir):
+    """A codebook table with rows but no entry for some subspace is a
+    named error at build time, not a NumPy axis error."""
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    v = e.select("vec_id",
+                 similarity.quantize_micro(F.col("embedding")).alias("v"))
+    cb = similarity.pq_codebooks_stride(v, m=2, dim=64)
+    with pytest.raises(ValueError, match="subspace"):
+        similarity.pq_encode(v, cb.where(F.col("m") == 0), m=2, dim=64)

@@ -3,9 +3,12 @@ in the plan (broadcast joins, pushdown, no gratuitous exchanges)."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
-from optimizerasters_spark.operators import dedup, spatial
+from optimizerasters_spark.operators import dedup, similarity, spatial
 from optimizerasters_spark.pages import synth_boundaries, synth_pages
 
 
@@ -148,15 +151,31 @@ def test_distributed_prefix_sum_no_global_window(spark, sf_dir):
     assert "FileScan" not in segment, final
 
 
-def test_ivf_build_assignment_is_vectorized_projection(spark, sf_dir):
-    """r06: the IVF build-side nearest-centroid argmax runs as one
-    NumPy matrix product per Arrow batch (ArrowEvalPython projection)
-    — the N*K candidate rows of the old broadcast-nested-loop + max_by
-    shape never materialize. Only the tiny query side (Q rows) may
-    still pay the nested-loop expansion for its nprobe>1 window."""
-    from optimizerasters_spark.contract import q_ivf_topk
-    plan = _plan(q_ivf_topk(spark, sf_dir))
-    assert "ArrowEvalPython" in plan, plan
+# ArrowEvalPython nodes per ANN plan: one per vector kernel (ivf_pq_topk
+# runs two: list assignment and PQ encode)
+ANN_KERNELS = {"ivf_topk": 1, "kmeans_assign": 1, "pq_encode": 1,
+               "pq_adc_topk": 1, "ivf_pq_topk": 2, "ivf_pq_residual": 1,
+               "residual_vectors": 1}
+
+
+@pytest.mark.parametrize("name", sorted(ANN_KERNELS))
+def test_ivf_build_assignment_is_vectorized_projection(spark, sf_dir, name):
+    """The nearest-centroid / nearest-codeword argmin/argmax runs as one
+    NumPy matrix product per Arrow batch (ArrowEvalPython projection):
+    no N*K candidate rows, no max_by re-aggregation. Each vector goes
+    through each kernel ONCE — a filter Spark infers on the kernel's
+    output (isnotnull from a join on cent_id, size > 0 from a
+    posexplode of the codes) must not be pushed below the projection,
+    where it would evaluate the kernel a second time."""
+    from optimizerasters_spark import contract
+    if name == "residual_vectors":
+        v, _, coarse = contract._pq_parts(spark, sf_dir)
+        df = similarity.residual_vectors(v, coarse)
+    else:
+        df = contract.QUERIES[name](spark, sf_dir)
+    plan = _plan(df)
+    kernels = re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)
+    assert len(kernels) == ANN_KERNELS[name], plan
     assert "partial_max_by" not in plan, plan
 
 
