@@ -42,16 +42,26 @@ def til_group_col():
             .cast("bigint") % TIL_GROUPS).alias("til_group")
 
 
+# manifest tile URIs live under this prefix, their cache paths under
+# "<prefix>_cache"; 'lerc' splits DataFile/IndexFile into .lrc/.idx in
+# the cache paths (UpdateMRF extensions_lup)
+OUTPUT_PREFIX = "tiles"
+COMPRESSION = "lerc"
+# level-0 tile store sidecar: the batch dirs folded into each version
+MERGED_BATCHES = "_merged_batches.txt"
+
+
 @dataclass
 class JobConf:
+    """Job settings. Input hygiene (URL canonicalization, sampling,
+    per-host caps, PII scrub, domain blocklists) is not configured here:
+    the caller applies the ``web.*`` operator to ``pages`` before
+    ``Engine.run``, which defines the job's input universe and so what
+    resume sees."""
     sf_dir: str
     workdir: str
     levels: list[int] = field(default_factory=lambda: [0, 4, 8])
     resume: str = "resume"          # or "retryall"
-    output_prefix: str = "tiles"
-    # proxy payload codec: 'lerc' splits DataFile/IndexFile into
-    # .lrc/.idx in the manifest cache paths (UpdateMRF extensions_lup)
-    compression: str | None = "lerc"
     # fault injection for quarantine tests: pages with doc_id % N == 0
     # "fail" on their first attempt (None = no injection). Mirrors the
     # reference's failed-upload list + end-of-run retry pass
@@ -68,29 +78,11 @@ class JobConf:
     # incremental merge of only-new batches. retryall implies it — cleared
     # statuses re-emit already-counted pages, invalidating merge history.
     repair: bool = False
-    # corpus hygiene applied BEFORE the ledger init (they define the
-    # job's input universe, so resume semantics see the filtered set):
-    # keep at most this many pages per host (web.domain_cap) ...
-    domain_cap_k: int | None = None
-    # ... and/or a deterministic md5-threshold sample rate out of 1000
-    # (web.hash_sample — the reproducible "1% CI sample" knob)
-    sample_milli: int | None = None
-    # ... and/or PII redaction at ingest (web.scrubbed_col): emails and
-    # phone numbers are rewritten to <EMAIL>/<PHONE> BEFORE the ledger
-    # init, so the job's byte-identity invariant holds over the
-    # SCRUBBED corpus — the form a compliance review wants (the raw
-    # text never lands in any output or checkpoint of this job)
-    scrub_pii: bool = False
-    # ... and/or URL canonicalization at ingest (web.url_canonicalize):
-    # tracking params stripped, host case-folded, default ports and
-    # fragments dropped, query params sorted — BEFORE dedup_latest, so
-    # byte-different URLs of the same resource collapse to one ledger
-    # row (the crawl-level dedup lever ahead of content hashing)
-    canonicalize_urls: bool = False
 
 
 class Engine:
-    """Engine(conf).run(spark) -> dict of result DataFrames.
+    """Engine(conf).run(spark, pages=None, til_members=None) -> dict of
+    result DataFrames.
 
     Public API mirroring the reference embedding contract
     (CodeSamples/processUsingAListOfFiles.py:50-69):
@@ -127,12 +119,11 @@ class Engine:
         return os.path.join(self.conf.workdir, "tile_counts_l0")
 
     # -- level-0 tile store ------------------------------------------------
-    # Versioned immutable snapshots behind a CURRENT pointer (same commit
-    # model as ledger._atomic_overwrite); each version carries the list of
-    # batch dirs folded into it as a `_merged_batches.txt` sidecar INSIDE
-    # the version dir, so counts and merge history commit atomically —
-    # a crash mid-finalize leaves the previous version current and the
-    # new batches simply re-merge next run.
+    # A ledger snapshot store (ledger._atomic_overwrite): each version
+    # carries the batch dirs folded into it as a MERGED_BATCHES sidecar
+    # INSIDE the version dir, so counts and merge history commit
+    # atomically — a crash mid-finalize leaves the previous version
+    # current and the new batches simply re-merge next run.
     def _batch_dirs(self) -> list[str]:
         root = self._pages_out()
         if not os.path.isdir(root):
@@ -141,90 +132,34 @@ class Engine:
 
     def _read_l0(self, spark: SparkSession
                  ) -> tuple[DataFrame | None, list[str]]:
-        ptr = os.path.join(self._l0_out(), "CURRENT")
-        if not os.path.exists(ptr):
+        vdir = L.current_snapshot(self._l0_out())
+        if vdir is None:
             return None, []
-        with open(ptr) as f:
-            vdir = os.path.join(self._l0_out(), f.read().strip())
-        with open(os.path.join(vdir, "_merged_batches.txt")) as f:
-            merged = [x for x in f.read().splitlines() if x]
-        return spark.read.parquet(vdir), merged
-
-    def _write_l0(self, l0: DataFrame, merged_batches: list[str]) -> None:
-        root = self._l0_out()
-        os.makedirs(root, exist_ok=True)
-        vname = f"v-{uuid.uuid4().hex[:12]}"
-        vdir = os.path.join(root, vname)
-        l0.write.mode("overwrite").parquet(vdir)
-        # sidecar lands before the pointer flip; '_'-prefixed files are
-        # invisible to parquet readers
-        with open(os.path.join(vdir, "_merged_batches.txt"), "w") as f:
-            f.write("\n".join(merged_batches))
-        ptr_tmp = os.path.join(root, f".CURRENT.tmp-{uuid.uuid4().hex[:6]}")
-        with open(ptr_tmp, "w") as f:
-            f.write(vname)
-        os.replace(ptr_tmp, os.path.join(root, "CURRENT"))
-
-    def _vacuum_l0(self) -> int:
-        """Drop superseded / orphaned (crash-before-pointer-flip) level-0
-        versions — the tile store's expire-snapshots. Runs at job start
-        like ledger.vacuum: no live plan can reference old versions."""
-        root = self._l0_out()
-        if not os.path.isdir(root):
-            return 0
-        cur = None
-        ptr = os.path.join(root, "CURRENT")
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                cur = f.read().strip()
-        import shutil
-        n = 0
-        for name in os.listdir(root):
-            full = os.path.join(root, name)
-            if name != "CURRENT" and name != cur and os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-                n += 1
-        return n
+        with open(os.path.join(vdir, MERGED_BATCHES)) as f:
+            return spark.read.parquet(vdir), f.read().split()
 
     # -- lifecycle ---------------------------------------------------------
     def run(self, spark: SparkSession,
             pages: DataFrame | None = None,
-            til_members: DataFrame | None = None,
-            blocked: DataFrame | None = None) -> dict[str, DataFrame]:
-        """``til_members`` (url, til_group) is the DECLARED group
+            til_members: DataFrame | None = None) -> dict[str, DataFrame]:
+        """Process ``pages`` (default: the synth pages of ``sf_dir``),
+        deduplicated latest-per-url, and return the outputs by name:
+        page_tiles, tile_counts, manifest, proxy_csv, ledger and
+        til_overviews (None until a group completes).
+
+        ``til_members`` (url, til_group) is the DECLARED group
         membership — the .til content analog. Completeness is judged
         against it, so members absent from this run's input keep their
         group un-finalized until a later run processes them. Defaults to
-        deriving membership from the current input. ``blocked`` (bdom)
-        is an optional domain blocklist applied with the other ingest
-        hygiene filters (web.blocklist_filter — exact host or subdomain
-        suffix), before the ledger init."""
+        deriving membership from the current input."""
         conf = self.conf
         os.makedirs(conf.workdir, exist_ok=True)
-        L.vacuum(conf.workdir)  # drop snapshots no plan can reference now
-        self._vacuum_l0()       # same for superseded level-0 versions
+        # drop snapshots no plan can reference now
+        L.vacuum(conf.workdir)
+        L.expire_snapshots(self._l0_out())
         if pages is None:
             pages = synth_pages(spark, conf.sf_dir)
-        if conf.canonicalize_urls:
-            from optimizerasters_spark.operators import web
-            pages = (web.url_canonicalize(pages)
-                     .withColumn("url", F.col("canon_url"))
-                     .drop("canon_url", "changed"))
         pages = dedup.dedup_latest(pages)
-        if conf.sample_milli is not None:
-            from optimizerasters_spark.operators import web
-            pages = web.hash_sample(pages, conf.sample_milli, "url")
-        if conf.domain_cap_k is not None:
-            from optimizerasters_spark.operators import web
-            pages = web.domain_cap(pages, conf.domain_cap_k) \
-                .drop("host")
-        if conf.scrub_pii and "text" in pages.columns:
-            from optimizerasters_spark.operators import web
-            pages = pages.withColumn("text",
-                                     web.scrubbed_col(F.col("text")))
-        if blocked is not None:
-            from optimizerasters_spark.operators import web
-            pages = web.blocklist_filter(pages, blocked).drop("host")
 
         led = L.read_ledger(spark, conf.workdir)
         if led is None:
@@ -252,16 +187,19 @@ class Engine:
                                 "processed", L.NO, self.run_id)
 
         # ---- retry pass: reprocess quarantined rows once ----------------
-        led_now = L.read_ledger(spark, conf.workdir)
-        retry = pages.join(
-            led_now.where(F.col("processed") == L.NO).select("url"),
-            "url", "left_semi")
-        if not retry.isEmpty():
-            with lineage.StageTimer(spark, conf.workdir, self.run_id,
-                                    "retry") as st:
-                self._process_batch(spark, st.observe(retry),
-                                    f"batch={self.run_id}-retry",
-                                    timer=st)
+        # Only a run that quarantined can leave an input page at 'no':
+        # the process stage took every input page not yet 'yes'.
+        if failed is not None:
+            led_now = L.read_ledger(spark, conf.workdir)
+            retry = pages.join(
+                led_now.where(F.col("processed") == L.NO).select("url"),
+                "url", "left_semi")
+            if not retry.isEmpty():
+                with lineage.StageTimer(spark, conf.workdir, self.run_id,
+                                        "retry") as st:
+                    self._process_batch(spark, st.observe(retry),
+                                        f"batch={self.run_id}-retry",
+                                        timer=st)
 
         # ---- stage "finalize": incremental pyramid merge + manifest -----
         # Counts are ASSOCIATIVE: aggregate only batch dirs not yet folded
@@ -294,17 +232,19 @@ class Engine:
                 delta_l0 = spatial.tile_counts_l0(fresh)
                 l0 = delta_l0 if full_rebuild \
                     else spatial.merge_l0(l0_base, delta_l0)
-                self._write_l0(l0, batches if full_rebuild
-                               else merged_batches + src)
+                merged = batches if full_rebuild else merged_batches + src
+                L._atomic_overwrite(
+                    l0, self._l0_out(),
+                    sidecars={MERGED_BATCHES: "\n".join(merged)})
                 L.upsert_status(spark, conf.workdir, fresh.select("url"),
                                 "uploaded", L.YES, self.run_id)
             counts = spatial.levels_from_l0(
                 self._read_l0(spark)[0], conf.levels)
             counts.write.mode("overwrite").parquet(self._tiles_out())
             m = manifest.tile_manifest(spark.read.parquet(self._tiles_out()),
-                                       conf.output_prefix)
-            m = manifest.with_cache_paths(m, conf.output_prefix + "_cache",
-                                          compression=conf.compression)
+                                       OUTPUT_PREFIX)
+            m = manifest.with_cache_paths(m, OUTPUT_PREFIX + "_cache",
+                                          compression=COMPRESSION)
             m.write.mode("overwrite").parquet(self._manifest_out())
             # S13 ObjectID;Raster rows (dense ids, no global sort)
             manifest.proxy_csv_rows(spark.read.parquet(self._manifest_out())) \
@@ -326,19 +266,17 @@ class Engine:
         with lineage.StageTimer(spark, conf.workdir, self.run_id,
                                 "til_finalize") as st:
             members = st.observe(members)
-            complete = groups.til_complete_groups(
+            releasing = groups.til_complete_groups(
                 members, "til_group", "processed").select("til_group")
             # resume anti-join runs BEFORE the stats aggregation: only
             # groups RELEASING THIS RUN (complete and not yet written)
             # send member rows through the shuffle — a steady-state
             # resume shuffles ~nothing instead of re-aggregating every
             # group's full history each run
-            try:
+            if os.path.isdir(self._til_out()):
                 done = spark.read.parquet(self._til_out()) \
                     .select("til_group").dropDuplicates(["til_group"])
-                releasing = complete.join(done, "til_group", "left_anti")
-            except Exception:  # first run — no output yet
-                releasing = complete
+                releasing = releasing.join(done, "til_group", "left_anti")
             # O(releasing), never O(history): `releasing` is computed
             # from the ledger + the tiny overview output, so a
             # steady-state resume (nothing releasing) short-circuits
@@ -346,45 +284,37 @@ class Engine:
             # page_tiles is semi-joined down to the releasing groups'
             # member urls BEFORE the url dedup — the shuffle is
             # proportional to the releasing members, not the corpus.
-            if releasing.isEmpty():
-                self.last_til_finalize_scanned = False
-            else:
-                self.last_til_finalize_scanned = True
+            self.last_til_finalize_scanned = not releasing.isEmpty()
+            if self.last_til_finalize_scanned:
                 # overview stats group by the DECLARED membership (join
                 # on url), not a re-derivation of the group key from the
                 # url — a caller-supplied til_members whose grouping
                 # differs from the default URL formula must aggregate
-                # under ITS groups
+                # under ITS groups. An empty result still appends a
+                # schema-only part file, which reads back as 0 rows.
                 release_members = declared.select("url", "til_group") \
                     .join(releasing, "til_group", "left_semi")
-                fresh = (spark.read.parquet(self._pages_out())
-                         .select("url", "tile_x", "tile_y")
-                         .join(release_members.select("url"),
-                               "url", "left_semi")
-                         .dropDuplicates(["url"])
-                         .join(release_members, "url")
-                         .groupBy("til_group")
-                         .agg(F.count(F.lit(1)).alias("member_count"),
-                              F.countDistinct("tile_x", "tile_y")
-                               .alias("n_tiles")))
-                if not fresh.isEmpty():
-                    fresh.withColumn("finalized_run",
-                                     F.lit(self.run_id)) \
-                        .write.mode("append").parquet(self._til_out())
+                (spark.read.parquet(self._pages_out())
+                 .select("url", "tile_x", "tile_y")
+                 .join(release_members.select("url"), "url", "left_semi")
+                 .dropDuplicates(["url"])
+                 .join(release_members, "url")
+                 .groupBy("til_group")
+                 .agg(F.count(F.lit(1)).alias("member_count"),
+                      F.countDistinct("tile_x", "tile_y").alias("n_tiles"))
+                 .withColumn("finalized_run", F.lit(self.run_id))
+                 .write.mode("append").parquet(self._til_out()))
 
-        out = {
+        return {
             "page_tiles": spark.read.parquet(self._pages_out())
                                .dropDuplicates(["url", "polygon_id"]),
             "tile_counts": spark.read.parquet(self._tiles_out()),
             "manifest": spark.read.parquet(self._manifest_out()),
             "proxy_csv": spark.read.parquet(self._proxy_csv_out()),
             "ledger": L.read_ledger(spark, conf.workdir),
+            "til_overviews": spark.read.parquet(self._til_out())
+            if os.path.isdir(self._til_out()) else None,
         }
-        try:
-            out["til_overviews"] = spark.read.parquet(self._til_out())
-        except Exception:
-            out["til_overviews"] = None
-        return out
 
     # -- internals -----------------------------------------------------------
     def _split_injected(self, todo: DataFrame):

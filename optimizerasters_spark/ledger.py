@@ -72,14 +72,14 @@ def _delta_root(workdir: str) -> str:
     return os.path.join(ledger_path(workdir), "delta")
 
 
-def _current_version_dir(workdir: str) -> str | None:
-    base = ledger_path(workdir)
-    ptr = os.path.join(base, "CURRENT")
+def current_snapshot(root: str) -> str | None:
+    """The version dir the CURRENT pointer under ``root`` names (see
+    ``_atomic_overwrite``), or None before the first commit."""
+    ptr = os.path.join(root, "CURRENT")
     if not os.path.exists(ptr):
         return None
     with open(ptr) as f:
-        name = f.read().strip()
-    d = os.path.join(base, name)
+        d = os.path.join(root, f.read().strip())
     return d if os.path.isdir(d) else None
 
 
@@ -120,20 +120,6 @@ def _commit_delta(workdir: str, rows: DataFrame) -> None:
     with open(marker_tmp, "w") as f:
         f.write(name)
     os.replace(marker_tmp, os.path.join(root, f"_COMMITTED.{name}"))
-
-
-def _read_base(spark: SparkSession, workdir: str) -> DataFrame | None:
-    d = _current_version_dir(workdir)
-    if d is None:
-        return None
-    return spark.read.parquet(d)
-
-
-def _read_deltas(spark: SparkSession, workdir: str) -> DataFrame | None:
-    dirs = [d for _, d in _committed_deltas(workdir)]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
 
 
 def resolve(base: DataFrame | None,
@@ -183,11 +169,12 @@ def resolve(base: DataFrame | None,
 
 
 def read_ledger(spark: SparkSession, workdir: str) -> DataFrame | None:
-    base = _read_base(spark, workdir)
-    deltas = _read_deltas(spark, workdir)
-    if base is None and deltas is None:
+    base = current_snapshot(ledger_path(workdir))
+    deltas = [d for _, d in _committed_deltas(workdir)]
+    if base is None and not deltas:
         return None
-    return resolve(base, deltas)
+    return resolve(None if base is None else spark.read.parquet(base),
+                   spark.read.parquet(*deltas) if deltas else None)
 
 
 def init_ledger(spark: SparkSession, workdir: str, keys: DataFrame,
@@ -289,16 +276,24 @@ def has_failures(led: DataFrame) -> bool:
     return led.where(cond).limit(1).count() > 0
 
 
-def _atomic_overwrite(df: DataFrame, path: str) -> None:
+def _atomic_overwrite(df: DataFrame, path: str,
+                      sidecars: dict[str, str] | None = None) -> None:
     """Commit a new IMMUTABLE snapshot version and flip the CURRENT
     pointer atomically (os.replace) — the local twin of an Iceberg
     snapshot commit. Plans built against older versions keep reading
     their own immutable directories (reader isolation); a crash between
     write and pointer flip leaves the previous version current (no torn
-    state). ``vacuum()`` reclaims superseded versions between runs."""
+    state). ``sidecars`` (file name -> text) land inside the version dir
+    before the flip, so they commit atomically with the data; name them
+    with a leading '_' to keep them invisible to parquet readers.
+    ``expire_snapshots()`` reclaims superseded versions between runs."""
     os.makedirs(path, exist_ok=True)
     vname = f"v-{uuid.uuid4().hex[:12]}"
-    df.write.mode("overwrite").parquet(os.path.join(path, vname))
+    vdir = os.path.join(path, vname)
+    df.write.mode("overwrite").parquet(vdir)
+    for name, text in (sidecars or {}).items():
+        with open(os.path.join(vdir, name), "w") as f:
+            f.write(text)
     ptr_tmp = os.path.join(path, f".CURRENT.tmp-{uuid.uuid4().hex[:6]}")
     with open(ptr_tmp, "w") as f:
         f.write(vname)
@@ -325,23 +320,28 @@ def _drop_deltas(workdir: str, only: list[str] | None = None) -> None:
             shutil.rmtree(full, ignore_errors=True)
 
 
-def vacuum(workdir: str) -> int:
-    """Drop superseded snapshot versions and orphaned (uncommitted)
-    delta dirs. Safe between runs (no live plans) — the Iceberg
-    expire-snapshots analog."""
-    base = ledger_path(workdir)
-    if not os.path.isdir(base):
+def expire_snapshots(root: str, keep: tuple[str, ...] = ()) -> int:
+    """Drop every directory under the snapshot root ``root`` except the
+    CURRENT version and the names in ``keep``: superseded versions and
+    orphans of a crash before the pointer flip. Safe between runs (no
+    live plans) — the Iceberg expire-snapshots analog."""
+    if not os.path.isdir(root):
         return 0
-    cur = _current_version_dir(workdir)
-    cur_name = os.path.basename(cur) if cur else None
+    cur = current_snapshot(root)
+    keep = {*keep, os.path.basename(cur) if cur else None}
     n = 0
-    for name in os.listdir(base):
-        if name in ("CURRENT", "delta") or name == cur_name:
-            continue
-        full = os.path.join(base, name)
-        if os.path.isdir(full):
+    for name in os.listdir(root):
+        full = os.path.join(root, name)
+        if name not in keep and os.path.isdir(full):
             shutil.rmtree(full, ignore_errors=True)
             n += 1
+    return n
+
+
+def vacuum(workdir: str) -> int:
+    """Drop superseded snapshot versions and orphaned (uncommitted)
+    delta dirs. Safe between runs (no live plans)."""
+    n = expire_snapshots(ledger_path(workdir), keep=("delta",))
     root = _delta_root(workdir)
     if os.path.isdir(root):
         committed = {os.path.basename(d) for _, d in

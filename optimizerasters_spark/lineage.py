@@ -35,7 +35,7 @@ def record_stage(spark: SparkSession, workdir: str, run_id: str,
                  stage: str, counts: list[tuple[int, int]],
                  wall_ms: int) -> None:
     rows = [(run_id, stage, int(p), int(n), int(wall_ms))
-            for (p, n) in counts] or [(run_id, stage, -1, 0, int(wall_ms))]
+            for (p, n) in counts]
     out = spark.createDataFrame(rows, METRICS_SCHEMA)
     out.write.mode("append").parquet(metrics_path(workdir))
 
@@ -65,23 +65,14 @@ class StageTimer:
 
     The observed count is recorded as one (partition_id=-1) row under
     the stage name; each registered output dir contributes per-file rows
-    under ``<stage>.files``. Passing ``df=`` to the constructor keeps
-    the round-1 snapshot behavior (one count job at entry) for callers
-    whose stage body performs no action on the observed lineage."""
+    under ``<stage>.files``."""
 
     def __init__(self, spark: SparkSession, workdir: str, run_id: str,
-                 stage: str, df: DataFrame | None = None):
+                 stage: str):
         self.spark, self.workdir = spark, workdir
         self.run_id, self.stage = run_id, stage
         self._obs: Observation | None = None
         self._out_dirs: list[str] = []
-        self._counts: list[tuple[int, int]] | None = None
-        if df is not None:
-            snap = (df.groupBy(F.spark_partition_id()
-                               .alias("partition_id"))
-                    .agg(F.count(F.lit(1)).alias("rows")))
-            self._counts = [(r["partition_id"], r["rows"])
-                            for r in snap.collect()]
 
     def observe(self, df: DataFrame) -> DataFrame:
         """Instrument the stage input: the returned DataFrame MUST flow
@@ -100,22 +91,19 @@ class StageTimer:
         if exc[0] is not None:
             return False
         wall = int((time.perf_counter() - self.t0) * 1000)
-        counts = self._counts
-        if counts is None:
-            n = 0
-            if self._obs is not None:
-                try:
-                    n = self._obs.get["rows"]
-                except Exception:
-                    # AQE empty-relation propagation replaces the whole
-                    # subtree (including CollectMetrics) with an empty
-                    # LocalTableScan when a shuffle stage materializes
-                    # empty — the observation then carries no row, which
-                    # MEANS zero input rows.
-                    n = 0
-            counts = [(-1, int(n))]
+        n = 0
+        if self._obs is not None:
+            try:
+                n = self._obs.get["rows"]
+            except Exception:
+                # AQE empty-relation propagation replaces the whole
+                # subtree (including CollectMetrics) with an empty
+                # LocalTableScan when a shuffle stage materializes
+                # empty — the observation then carries no row, which
+                # MEANS zero input rows.
+                n = 0
         record_stage(self.spark, self.workdir, self.run_id, self.stage,
-                     counts, wall)
+                     [(-1, int(n))], wall)
         for d in self._out_dirs:
             fc = parquet_file_counts(d)
             if fc:

@@ -9,8 +9,10 @@ The reference's streaming-shaped behaviors (SURVEY.md §2.9):
   * resume after crash (CLOAD_RESTORE_POINT :5921-5938) -> restart the
     query with the same checkpointLocation; processed files are not re-read
 
-Batch and streaming share the same stage functions — the batch Engine is
-the `availableNow` special case of this pipeline.
+``run_incremental`` is a lighter pipeline than the batch Engine, not a
+form of it: each micro-batch writes ``spatial.with_tiles`` rows (no PIP
+join, no ``polygon_id``) plus ``text_sha`` and upserts the ledger's
+``processed`` mark; there is no dedup, finalize or TIL stage.
 """
 
 from __future__ import annotations

@@ -92,21 +92,23 @@ def main():
               .select("doc_id", "polygon_id"))),
         ("Pyramid counts (ONE page-proportional shuffle + level explode)",
          plan(spatial.tile_counts_at_levels(spatial.with_tiles(p), [0, 4, 8]))),
-        ("Dedup latest-per-url (partial_max_by map-side combine, no Window)",
+        ("Dedup latest-per-url (MAX of one packed (warc_epoch, -doc_id) "
+         "struct, map-side partial combine, no Window)",
          plan(dedup.dedup_latest(p.select("url", "doc_id", "warc_epoch")))),
         ("Left PIP join (SINGLE pages scan, ZERO page-side shuffle: "
          "per-cell polygon arrays broadcast, map-side filter + "
          "explode-or-null)",
          plan(spatial.pip_join(p, synth_boundaries(spark), how="left")
               .select("doc_id", "polygon_id"))),
-        ("Corpus top-k (TakeOrderedAndProject — per-partition heaps, "
-         "no partition-less Window)",
+        ("Corpus top-k (TakeOrderedAndProject — per-partition heaps; "
+         "the only Window ranks the k survivors)",
          _top_tokens_plan(spark, sf, plan)),
         ("Proxy CSV dense ids (partition-offset zip-with-index; the only "
          "partition-less Window is over the O(#partitions) counts table)",
          _proxy_csv_plan(spark, sf, plan)),
-        ("k-means assignment (broadcast centroids + partial_min_by — one "
-         "row per vector through the shuffle, never N*K)",
+        ("k-means assignment (ONE Arrow projection: NumPy nearest "
+         "centroid per batch against the collected centroids — no join, "
+         "no aggregate, never N*K)",
          _kmeans_assign_plan(spark, sf, plan)),
         ("Arbitrary-ring PIP join (broadcast cover + inline even-odd "
          "ray cast — no page Exchange, no UDF)",
