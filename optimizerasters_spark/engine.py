@@ -1,10 +1,15 @@
 """End-to-end resumable pipeline — the OptimizeRasters job lifecycle
 (SURVEY.md §3.1) re-expressed as checkpointed DataFrame stages:
 
-    pages -> [ledger anti-join] -> dedup -> tile assign -> PIP join
-          -> per-page output (append)        [stage "process"]
-    per-page output -> pyramid counts -> manifest (overwrite)
-                                              [stage "finalize"]
+    pages -> dedup -> [ledger anti-join] -> tile assign -> PIP join
+          -> per-page output (append)             [stage "process"]
+    unmerged batches -> level-0 tile store -> one manifest table
+          -> tile_counts, manifest, proxy_csv     [stage "finalize"]
+    ledger -> releasing TIL groups (one collect)
+          -> til_overviews (append)               [stage "til_finalize"]
+
+Each derived table is computed once and written once; none is read
+back to derive the next.
 
 Exactly-once semantics: the per-page stage APPENDS batch directories and
 marks the ledger only after a successful write; a crash between write and
@@ -27,7 +32,8 @@ from pyspark.sql import functions as F
 
 from optimizerasters_spark import ledger as L
 from optimizerasters_spark import lineage
-from optimizerasters_spark.operators import dedup, groups, manifest, spatial
+from optimizerasters_spark.operators import (
+    dedup, filters, groups, manifest, spatial)
 from optimizerasters_spark.pages import synth_boundaries, synth_pages
 
 # TIL-group analog: pages sharing a group id finalize together (group
@@ -103,17 +109,8 @@ class Engine:
     def _pages_out(self) -> str:
         return os.path.join(self.conf.workdir, "page_tiles")
 
-    def _tiles_out(self) -> str:
-        return os.path.join(self.conf.workdir, "tile_counts")
-
-    def _manifest_out(self) -> str:
-        return os.path.join(self.conf.workdir, "manifest")
-
     def _til_out(self) -> str:
         return os.path.join(self.conf.workdir, "til_overviews")
-
-    def _proxy_csv_out(self) -> str:
-        return os.path.join(self.conf.workdir, "proxy_csv")
 
     def _l0_out(self) -> str:
         return os.path.join(self.conf.workdir, "tile_counts_l0")
@@ -145,7 +142,12 @@ class Engine:
         """Process ``pages`` (default: the synth pages of ``sf_dir``),
         deduplicated latest-per-url, and return the outputs by name:
         page_tiles, tile_counts, manifest, proxy_csv, ledger and
-        til_overviews (None until a group completes).
+        til_overviews (None until a group completes). These are the
+        run's own tables, not re-reads: tile_counts, manifest and
+        proxy_csv derive from the finalize stage's checkpointed
+        manifest, ledger is the one til_finalize resolved, and
+        page_tiles is the read til_finalize used. Only til_overviews
+        is read after its append.
 
         ``til_members`` (url, til_group) is the DECLARED group
         membership — the .til content analog. Completeness is judged
@@ -172,7 +174,7 @@ class Engine:
         # row counts ride the stage's own action (Observation) — no
         # extra count pass over the input; per-partition detail comes
         # from the written parquet footers (lineage.py)
-        todo = L.pending(pages, led, "processed", "url")
+        todo = filters.resume_pending(pages, led, key="url")
         with lineage.StageTimer(spark, conf.workdir, self.run_id,
                                 "process") as st:
             ok, failed = self._split_injected(st.observe(todo))
@@ -223,7 +225,7 @@ class Engine:
             os.path.join(self._pages_out(), b) for b in src]
         with lineage.StageTimer(spark, conf.workdir, self.run_id,
                                 "finalize") as st:
-            st.add_output_dir(self._tiles_out())
+            st.add_output_dir(os.path.join(conf.workdir, "tile_counts"))
             if src:
                 fresh = (spark.read.parquet(*self.last_finalize_inputs)
                          .dropDuplicates(["url", "polygon_id"])
@@ -238,17 +240,26 @@ class Engine:
                     sidecars={MERGED_BATCHES: "\n".join(merged)})
                 L.upsert_status(spark, conf.workdir, fresh.select("url"),
                                 "uploaded", L.YES, self.run_id)
-            counts = spatial.levels_from_l0(
-                self._read_l0(spark)[0], conf.levels)
-            counts.write.mode("overwrite").parquet(self._tiles_out())
-            m = manifest.tile_manifest(spark.read.parquet(self._tiles_out()),
-                                       OUTPUT_PREFIX)
-            m = manifest.with_cache_paths(m, OUTPUT_PREFIX + "_cache",
-                                          compression=COMPRESSION)
-            m.write.mode("overwrite").parquet(self._manifest_out())
-            # S13 ObjectID;Raster rows (dense ids, no global sort)
-            manifest.proxy_csv_rows(spark.read.parquet(self._manifest_out())) \
-                .write.mode("overwrite").parquet(self._proxy_csv_out())
+            # One manifest table feeds all three outputs; nothing is
+            # written and read back. Fault scope of the eager local
+            # checkpoint: a lost executor fails the stage, and the next
+            # run rebuilds all three outputs from the committed level-0
+            # snapshot.
+            m = manifest.with_cache_paths(
+                manifest.tile_manifest(
+                    spatial.levels_from_l0(self._read_l0(spark)[0],
+                                           conf.levels), OUTPUT_PREFIX),
+                OUTPUT_PREFIX + "_cache", compression=COMPRESSION
+            ).localCheckpoint(eager=True)
+            derived = {
+                "tile_counts": m.select("level", "tile_x", "tile_y",
+                                        "page_count"),
+                "manifest": m,
+                # S13 ObjectID;Raster rows (dense ids, no global sort)
+                "proxy_csv": manifest.proxy_csv_rows(m)}
+            for name, df in derived.items():
+                df.write.mode("overwrite").parquet(
+                    os.path.join(conf.workdir, name))
 
         # ---- stage "til_finalize": gated group-level overviews ----------
         # A complete group (every member's ledger row 'yes') gets ONE
@@ -258,6 +269,7 @@ class Engine:
         # skips groups already in the output (anti-join = the
         # _doPostProcessing ledger check).
         led_fin = L.read_ledger(spark, conf.workdir)
+        page_tiles = spark.read.parquet(self._pages_out())
         declared = til_members if til_members is not None \
             else pages.select("url", til_group_col())
         members = declared.join(
@@ -278,14 +290,16 @@ class Engine:
                     .select("til_group").dropDuplicates(["til_group"])
                 releasing = releasing.join(done, "til_group", "left_anti")
             # O(releasing), never O(history): `releasing` is computed
-            # from the ledger + the tiny overview output, so a
-            # steady-state resume (nothing releasing) short-circuits
-            # without touching page_tiles at all, and otherwise
-            # page_tiles is semi-joined down to the releasing groups'
-            # member urls BEFORE the url dedup — the shuffle is
+            # once, from the ledger + the tiny overview output, into an
+            # O(#groups) Python list (the reference keeps its .til list
+            # in memory too). A steady-state resume (nothing releasing)
+            # short-circuits without touching page_tiles at all, and
+            # otherwise page_tiles is semi-joined down to the releasing
+            # groups' member urls BEFORE the url dedup — the shuffle is
             # proportional to the releasing members, not the corpus.
-            self.last_til_finalize_scanned = not releasing.isEmpty()
-            if self.last_til_finalize_scanned:
+            ids = [r["til_group"] for r in releasing.collect()]
+            self.last_til_finalize_scanned = bool(ids)
+            if ids:
                 # overview stats group by the DECLARED membership (join
                 # on url), not a re-derivation of the group key from the
                 # url — a caller-supplied til_members whose grouping
@@ -293,9 +307,8 @@ class Engine:
                 # under ITS groups. An empty result still appends a
                 # schema-only part file, which reads back as 0 rows.
                 release_members = declared.select("url", "til_group") \
-                    .join(releasing, "til_group", "left_semi")
-                (spark.read.parquet(self._pages_out())
-                 .select("url", "tile_x", "tile_y")
+                    .where(F.col("til_group").isin(ids))
+                (page_tiles.select("url", "tile_x", "tile_y")
                  .join(release_members.select("url"), "url", "left_semi")
                  .dropDuplicates(["url"])
                  .join(release_members, "url")
@@ -305,13 +318,11 @@ class Engine:
                  .withColumn("finalized_run", F.lit(self.run_id))
                  .write.mode("append").parquet(self._til_out()))
 
+        # the run's own tables; nothing below writes the ledger
         return {
-            "page_tiles": spark.read.parquet(self._pages_out())
-                               .dropDuplicates(["url", "polygon_id"]),
-            "tile_counts": spark.read.parquet(self._tiles_out()),
-            "manifest": spark.read.parquet(self._manifest_out()),
-            "proxy_csv": spark.read.parquet(self._proxy_csv_out()),
-            "ledger": L.read_ledger(spark, conf.workdir),
+            "page_tiles": page_tiles.dropDuplicates(["url", "polygon_id"]),
+            **derived,
+            "ledger": led_fin,
             "til_overviews": spark.read.parquet(self._til_out())
             if os.path.isdir(self._til_out()) else None,
         }

@@ -257,16 +257,6 @@ def _maybe_compact(spark: SparkSession, workdir: str) -> None:
         compact(spark, workdir)
 
 
-def pending(work: DataFrame, led: DataFrame | None,
-            status_col: str = "processed", key_col: str = "url"
-            ) -> DataFrame:
-    """Anti-join: rows whose ledger status is not 'yes'."""
-    if led is None:
-        return work
-    done = led.where(F.col(status_col) == YES).select("url")
-    return work.join(done, work[key_col] == done["url"], "left_anti")
-
-
 def has_failures(led: DataFrame) -> bool:
     """Report.hasFailures (:2058-2066)."""
     cond = None

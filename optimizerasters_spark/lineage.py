@@ -12,6 +12,9 @@ Spark analog, at ZERO extra passes over the data:
   * per-partition detail comes from the parquet FOOTERS of whatever the
     stage wrote (one part file per write task): driver-side metadata
     reads, O(#files), no Spark job, recorded under ``<stage>.files``.
+
+Each stage appends its stage row and its ``<stage>.files`` rows to the
+metrics table in ONE write.
 """
 
 from __future__ import annotations
@@ -29,15 +32,6 @@ METRICS_SCHEMA = ("run_id STRING, stage STRING, partition_id INT, "
 
 def metrics_path(workdir: str) -> str:
     return os.path.join(workdir, "metrics")
-
-
-def record_stage(spark: SparkSession, workdir: str, run_id: str,
-                 stage: str, counts: list[tuple[int, int]],
-                 wall_ms: int) -> None:
-    rows = [(run_id, stage, int(p), int(n), int(wall_ms))
-            for (p, n) in counts]
-    out = spark.createDataFrame(rows, METRICS_SCHEMA)
-    out.write.mode("append").parquet(metrics_path(workdir))
 
 
 def parquet_file_counts(path: str) -> list[tuple[int, int]]:
@@ -102,13 +96,12 @@ class StageTimer:
                 # empty — the observation then carries no row, which
                 # MEANS zero input rows.
                 n = 0
-        record_stage(self.spark, self.workdir, self.run_id, self.stage,
-                     [(-1, int(n))], wall)
+        rows = [(self.run_id, self.stage, -1, int(n), wall)]
         for d in self._out_dirs:
-            fc = parquet_file_counts(d)
-            if fc:
-                record_stage(self.spark, self.workdir, self.run_id,
-                             f"{self.stage}.files", fc, wall)
+            rows += [(self.run_id, f"{self.stage}.files", i, k, wall)
+                     for i, k in parquet_file_counts(d)]
+        self.spark.createDataFrame(rows, METRICS_SCHEMA) \
+            .write.mode("append").parquet(metrics_path(self.workdir))
         return False
 
 

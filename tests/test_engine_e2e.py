@@ -20,19 +20,27 @@ def _sorted_rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_full_run_and_text_byte_identity(spark, sf_dir, workdir):
-    eng = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
+def _run_counting_jobs(spark, eng):
+    """eng.run(spark) in its own job group -> (result, Spark job count)."""
     sc = spark.sparkContext
     group = f"engine-run-{eng.run_id}"
-    sc.setJobGroup(group, "Engine.run load")
+    sc.setJobGroup(group, "Engine.run")
     try:
         res = eng.run(spark)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    # Spark jobs of a first run over sf0.001: 72; 91 with the retry
-    # stage's ledger re-read and the two fixed-answer isEmpty probes
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 72
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_full_run_and_text_byte_identity(spark, sf_dir, workdir):
+    eng = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
+    res, n_jobs = _run_counting_jobs(spark, eng)
+    # Spark jobs of a first run over sf0.001: 55; 72 when finalize read
+    # each derived table back and the result dict re-read every output,
+    # 91 with the retry stage's ledger re-read and the two fixed-answer
+    # isEmpty probes
+    assert n_jobs <= 55
 
     # every page processed
     led = res["ledger"]
@@ -75,7 +83,10 @@ def test_resume_skips_processed(spark, sf_dir, workdir):
 
     # second run: everything already 'yes' -> process stage sees 0 rows
     eng2 = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
-    res2 = eng2.run(spark)
+    res2, n_jobs = _run_counting_jobs(spark, eng2)
+    # Spark jobs of the resume: 54; 62 when finalize read each derived
+    # table back and the result dict re-read every output
+    assert n_jobs <= 54
     m = eng2.get_metrics(spark)
     second = m.where((F.col("run_id") == eng2.run_id) &
                      (F.col("stage") == "process"))
@@ -108,7 +119,16 @@ def test_retryall_reprocesses_everything(spark, sf_dir, workdir):
 
 
 def test_determinism_across_workdirs(spark, sf_dir, tmp_path):
-    r1 = Engine(JobConf(sf_dir=sf_dir, workdir=str(tmp_path / "a"))).run(spark)
+    wd = str(tmp_path / "a")
+    r1 = Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(spark)
+    # the returned tables are the run's own, and equal what it wrote
+    for name in ("tile_counts", "manifest", "proxy_csv"):
+        disk = spark.read.parquet(f"{wd}/{name}")
+        assert _sorted_rows(r1[name], disk.columns) == \
+            _sorted_rows(disk, disk.columns), name
+    led = L.read_ledger(spark, wd)
+    assert _sorted_rows(r1["ledger"], led.columns) == \
+        _sorted_rows(led, led.columns)
     r2 = Engine(JobConf(sf_dir=sf_dir, workdir=str(tmp_path / "b"))).run(spark)
     cols = ["level", "tile_x", "tile_y", "page_count"]
     assert _sorted_rows(r1["tile_counts"], cols) == \
