@@ -304,7 +304,8 @@ class Engine:
                 # on url), not a re-derivation of the group key from the
                 # url — a caller-supplied til_members whose grouping
                 # differs from the default URL formula must aggregate
-                # under ITS groups. An empty result still appends a
+                # under ITS groups. At most len(ids) rows: one part
+                # file per append. An empty result still appends a
                 # schema-only part file, which reads back as 0 rows.
                 release_members = declared.select("url", "til_group") \
                     .where(F.col("til_group").isin(ids))
@@ -316,6 +317,7 @@ class Engine:
                  .agg(F.count(F.lit(1)).alias("member_count"),
                       F.countDistinct("tile_x", "tile_y").alias("n_tiles"))
                  .withColumn("finalized_run", F.lit(self.run_id))
+                 .coalesce(1)
                  .write.mode("append").parquet(self._til_out()))
 
         # the run's own tables; nothing below writes the ledger

@@ -14,7 +14,7 @@ Spark analog, at ZERO extra passes over the data:
     reads, O(#files), no Spark job, recorded under ``<stage>.files``.
 
 Each stage appends its stage row and its ``<stage>.files`` rows to the
-metrics table in ONE write.
+metrics table in ONE write of one part file.
 """
 
 from __future__ import annotations
@@ -100,7 +100,10 @@ class StageTimer:
         for d in self._out_dirs:
             rows += [(self.run_id, f"{self.stage}.files", i, k, wall)
                      for i, k in parquet_file_counts(d)]
-        self.spark.createDataFrame(rows, METRICS_SCHEMA) \
+        # a handful of driver rows in one slice: one part file per
+        # append (a coalesce(1) of the default slices costs more)
+        self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(rows, 1), METRICS_SCHEMA) \
             .write.mode("append").parquet(metrics_path(self.workdir))
         return False
 

@@ -4,8 +4,15 @@ The reference (OptimizeRasters.py:3848, :6692-6709) hand-rolls a 10-thread
 pool; here parallelism is Spark's job. The confs below are the ones that
 matter at 100 TB: AQE (runtime coalesce + skew-join splitting), a shuffle
 partition count sized for the local harness but overridable via
-``spark.sql.shuffle.partitions`` at submit time, and Arrow for every
-pandas-UDF boundary.
+``spark.sql.shuffle.partitions`` at submit time, Arrow for every
+pandas-UDF boundary, and zstd as the Parquet codec of every table the
+package writes. Spark's default, snappy, has no entropy stage, so
+bit-packed dictionary ids, hex digests and URLs are stored near raw: in
+a perfbench tile_join output file (seed 7) the ``polygon_id``,
+``tile_x`` and ``tile_y`` chunks take 55,553 / 56,365, 72,240 / 72,217
+and 63,586 / 63,564 bytes (compressed / uncompressed) under snappy.
+Parquet records the codec per column chunk, so a table that mixes
+files of both codecs reads as one.
 """
 
 from __future__ import annotations
@@ -19,6 +26,8 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 # of 100 is about one corpus_pipeline plan (97-116 classes), so a
 # repeated build evicted and recompiled most of its own classes.
 CODEGEN_CACHE_ENTRIES = "1000"
+# Parquet codec of every table the package writes (module docstring).
+PARQUET_CODEC = "zstd"
 
 
 def _default_driver_mem() -> str:
@@ -77,6 +86,7 @@ def get_spark(app_name: str = "optimizerasters-spark",
                 os.environ.get("SPARK_EXECUTOR_MEMORY", "12g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
         .config("spark.ui.enabled", "false")
     )
     if local_dir:

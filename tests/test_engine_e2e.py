@@ -3,12 +3,17 @@ invariant, resume semantics, determinism, lineage metrics."""
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from optimizerasters_spark.engine import Engine, JobConf
 from optimizerasters_spark.pages import synth_pages
 from optimizerasters_spark import ledger as L
+from optimizerasters_spark import lineage
 
 
 @pytest.fixture()
@@ -396,6 +401,94 @@ def test_l0_store_vacuum_and_orphan_tolerance(spark, sf_dir, tmp_path):
                       .collect()))
     assert sorted(map(tuple, res2["tile_counts"].collect())) == full
     assert before != full  # run 2 really added the odd half
+
+
+def _codecs(root):
+    """Every column chunk codec of every parquet file under ``root``
+    (schema-only files have no row groups and no chunks)."""
+    out = set()
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".parquet"):
+                md = pq.ParquetFile(os.path.join(d, f)).metadata
+                out |= {md.row_group(g).column(c).compression
+                        for g in range(md.num_row_groups)
+                        for c in range(md.num_columns)}
+    return out
+
+
+def _load_half_then_resume(spark, sf_dir, wd, first_codec=None):
+    """Load the even doc_ids, then resume over every page; the load
+    writes parquet as ``first_codec`` (None = the session's codec)."""
+    pages = synth_pages(spark, sf_dir)
+    key = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(key)
+    eng1 = Engine(JobConf(sf_dir=sf_dir, workdir=wd))
+    try:
+        if first_codec:
+            spark.conf.set(key, first_codec)
+        eng1.run(spark, pages=pages.where(F.col("doc_id") % 2 == 0))
+    finally:
+        spark.conf.set(key, prev)
+    eng2 = Engine(JobConf(sf_dir=sf_dir, workdir=wd))
+    eng2.run(spark, pages=pages)
+    return [eng1, eng2]
+
+
+def _outputs(spark, wd):
+    """Each output table's rows, minus the columns that name a run."""
+    def rows(df, drop=()):
+        return _sorted_rows(df, [c for c in df.columns if c not in drop])
+    out = {n: rows(spark.read.parquet(os.path.join(wd, n)))
+           for n in ("tile_counts", "manifest", "proxy_csv")}
+    out["page_tiles"] = rows(spark.read.parquet(os.path.join(
+        wd, "page_tiles")), ("batch",))
+    out["ledger"] = rows(L.read_ledger(spark, wd), ("updated_run",))
+    out["til_overviews"] = rows(spark.read.parquet(os.path.join(
+        wd, "til_overviews")), ("finalized_run",))
+    return out
+
+
+@pytest.fixture(scope="module")
+def default_codec_job(spark, sf_dir, tmp_path_factory):
+    """(workdir, engines) of a load plus resume under the session codec."""
+    wd = str(tmp_path_factory.mktemp("codec") / "job")
+    return wd, _load_half_then_resume(spark, sf_dir, wd)
+
+
+def test_engine_outputs_zstd_and_bounded_appends_one_file(
+        spark, default_codec_job):
+    """Every table the engine writes is zstd, and the appends whose row
+    count the driver bounds (lineage metrics, til_overviews) write one
+    part file each."""
+    wd, engines = default_codec_job
+    assert _codecs(wd) == {"ZSTD"}
+    mdir = lineage.metrics_path(wd)
+    appends = spark.read.parquet(mdir) \
+        .where(F.col("partition_id") == -1).count()
+    assert appends == 6  # process, finalize, til_finalize per run
+    assert len(glob.glob(os.path.join(mdir, "part-*"))) == appends
+    til_appends = sum(e.last_til_finalize_scanned for e in engines)
+    assert til_appends == 1  # the resume releases no group
+    assert len(glob.glob(os.path.join(wd, "til_overviews", "part-*"))) \
+        == til_appends
+
+
+def test_mixed_codec_workdir_resumes_like_one_codec(
+        spark, sf_dir, tmp_path, default_codec_job):
+    """A workdir loaded under snappy and resumed under zstd reads both
+    codecs in one table (ledger base + deltas, page_tiles batches, the
+    level-0 merge) and ends with the outputs of a run made wholly under
+    the session codec."""
+    wd = str(tmp_path / "mixed")
+    _load_half_then_resume(spark, sf_dir, wd, first_codec="snappy")
+    led = os.path.join(wd, "ledger")
+    assert _codecs(L.current_snapshot(led)) == {"SNAPPY"}
+    assert _codecs(os.path.join(led, "delta")) == {"SNAPPY", "ZSTD"}
+    assert _codecs(os.path.join(wd, "page_tiles")) == {"SNAPPY", "ZSTD"}
+    # the superseded snappy level-0 version the resume merged from
+    assert _codecs(os.path.join(wd, "tile_counts_l0")) == {"SNAPPY", "ZSTD"}
+    assert _outputs(spark, wd) == _outputs(spark, default_codec_job[0])
 
 
 def test_engine_hygiene_knobs(spark, sf_dir, tmp_path):
