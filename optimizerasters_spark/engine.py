@@ -2,8 +2,9 @@
 (SURVEY.md §3.1) re-expressed as checkpointed DataFrame stages:
 
     pages -> dedup -> [ledger anti-join] -> tile assign -> PIP join
-          -> per-page output (append)             [stage "process"]
-    unmerged batches -> level-0 tile store -> one manifest table
+          -> per-page output (one batch dir)      [stage "process"]
+    unmerged batches -> ledger mark -> level-0 tile store
+          -> one manifest table
           -> tile_counts, manifest, proxy_csv     [stage "finalize"]
     ledger -> releasing TIL groups (one collect)
           -> til_overviews (append)               [stage "til_finalize"]
@@ -11,11 +12,17 @@
 Each derived table is computed once and written once; none is read
 back to derive the next.
 
-Exactly-once semantics: the per-page stage APPENDS batch directories and
-marks the ledger only after a successful write; a crash between write and
-mark causes reprocessing, and the finalize stage deduplicates by url —
-append + dedup = idempotent, the same trick the reference plays with
-updateRecordStatus path normalization (:1835-1891) but keyed by url.
+Exactly-once: a run writes its batch dirs, then makes ONE ledger commit
+(``processed`` and ``uploaded`` 'yes' for the urls of every unmerged
+batch), then commits the level-0 store that folds those batches.
+Finalize deduplicates by url over the unmerged batches, the trick the
+reference plays with updateRecordStatus path normalization (:1835-1891).
+A crash before the ledger commit leaves the pages pending: the next run
+reprocesses them into a new unmerged batch, whose copy the url dedup
+absorbs. A crash between the two commits leaves marked pages in an
+unmerged batch that the next finalize folds; in that window
+``uploaded='yes'`` runs one run ahead of the fold. The reverse order
+double-counts: a crash before the mark reprocesses counted pages.
 
 The ``text`` column rides through the per-page output untouched
 (byte-identity invariant per BASELINE.json input_hint).
@@ -67,10 +74,13 @@ class JobConf:
     sf_dir: str
     workdir: str
     levels: list[int] = field(default_factory=lambda: [0, 4, 8])
+    # "retryall" clears every status, reprocesses every page and
+    # rebuilds the level-0 store from every batch dir
     resume: str = "resume"          # or "retryall"
     # fault injection for quarantine tests: pages with doc_id % N == 0
-    # "fail" on their first attempt (None = no injection). Mirrors the
-    # reference's failed-upload list + end-of-run retry pass
+    # "fail" on their first attempt (None = no injection) and the retry
+    # stage reprocesses them once. Mirrors the reference's in-memory
+    # failed-upload list + end-of-run retry pass
     # (OptimizeRasters.py:3729-3740, :7004-7049).
     inject_fail_mod: int | None = None
     # task-granularity bound: at most this many pages per write task —
@@ -79,11 +89,6 @@ class JobConf:
     # scan/AQE. Costs one count job per batch when set, exactly like the
     # reference's len(list) chunk math.
     queue_length: int | None = None
-    # force the full-history finalize rebuild (cross-batch dedup + level-0
-    # recount from every batch dir ever written) instead of the default
-    # incremental merge of only-new batches. retryall implies it — cleared
-    # statuses re-emit already-counted pages, invalidating merge history.
-    repair: bool = False
 
 
 class Engine:
@@ -96,7 +101,7 @@ class Engine:
 
     def __init__(self, conf: JobConf):
         self.conf = conf
-        self.run_id = uuid.uuid4().hex[:12]
+        self.run_id = uuid.uuid4().hex[:12]  # run() draws a fresh one
         # batch dirs the last finalize actually read (test/inspection
         # hook for the incremental-cost claim)
         self.last_finalize_inputs: list[str] = []
@@ -149,12 +154,17 @@ class Engine:
         page_tiles is the read til_finalize used. Only til_overviews
         is read after its append.
 
+        Each call draws a fresh ``run_id``, which names its batch dirs.
+        ``resume="retryall"``, or a missing ``tile_counts_l0``, rebuilds
+        the level-0 store from every batch dir.
+
         ``til_members`` (url, til_group) is the DECLARED group
         membership — the .til content analog. Completeness is judged
         against it, so members absent from this run's input keep their
         group un-finalized until a later run processes them. Defaults to
         deriving membership from the current input."""
         conf = self.conf
+        self.run_id = uuid.uuid4().hex[:12]
         os.makedirs(conf.workdir, exist_ok=True)
         # drop snapshots no plan can reference now
         L.vacuum(conf.workdir)
@@ -180,47 +190,30 @@ class Engine:
             ok, failed = self._split_injected(st.observe(todo))
             self._process_batch(spark, ok, f"batch={self.run_id}",
                                 timer=st)
-            if failed is not None:
-                # quarantine: mark 'no' (A6); dedup-append like
-                # _addToFailedList, then ONE retry pass at the end.
-                # upsert (not merge): a failed page that entered the
-                # input after init must still be recorded
-                L.upsert_status(spark, conf.workdir, failed.select("url"),
-                                "processed", L.NO, self.run_id)
 
-        # ---- retry pass: reprocess quarantined rows once ----------------
-        # Only a run that quarantined can leave an input page at 'no':
-        # the process stage took every input page not yet 'yes'.
+        # ---- retry pass: reprocess the quarantined pages once -----------
+        # quarantine is the failed-page DataFrame itself (A6), held like
+        # the reference's in-memory failed list; an empty retry batch
+        # writes one schema-only part file, which reads back as 0 rows
         if failed is not None:
-            led_now = L.read_ledger(spark, conf.workdir)
-            retry = pages.join(
-                led_now.where(F.col("processed") == L.NO).select("url"),
-                "url", "left_semi")
-            if not retry.isEmpty():
-                with lineage.StageTimer(spark, conf.workdir, self.run_id,
-                                        "retry") as st:
-                    self._process_batch(spark, st.observe(retry),
-                                        f"batch={self.run_id}-retry",
-                                        timer=st)
+            with lineage.StageTimer(spark, conf.workdir, self.run_id,
+                                    "retry") as st:
+                self._process_batch(spark, st.observe(failed),
+                                    f"batch={self.run_id}-retry", timer=st)
 
-        # ---- stage "finalize": incremental pyramid merge + manifest -----
+        # ---- stage "finalize": ledger mark + incremental pyramid merge --
         # Counts are ASSOCIATIVE: aggregate only batch dirs not yet folded
         # into the persisted level-0 tile table and merge additively —
         # a resume that processes 0.1 % of pages pays 0.1 % of the
-        # finalize, never a corpus-wide re-dedup (the round-2 shape read
-        # and double-deduplicated the ENTIRE historical output each run).
-        # Cross-batch duplicates can only live among UNMERGED batches
-        # (a page re-emits only when its ledger mark was lost, and a
-        # batch merges only after its marks land), so the (url,
-        # polygon_id) dedup within the unmerged set is exhaustive.
-        # repair=True / retryall / missing base fall back to the full
-        # rebuild over every batch dir.
-        l0_base, merged_batches = self._read_l0(spark)
-        batches = self._batch_dirs()
-        full_rebuild = (conf.repair or conf.resume == "retryall"
-                        or l0_base is None)
-        src = batches if full_rebuild \
-            else [b for b in batches if b not in merged_batches]
+        # finalize, never a corpus-wide re-dedup. Cross-batch duplicates
+        # can only live among UNMERGED batches (a page re-emits only when
+        # the run that wrote it crashed before its ledger commit, and a
+        # batch merges only after that commit), so the (url, polygon_id)
+        # dedup within the unmerged set is exhaustive. retryall and a
+        # missing store start from an empty store: every batch dir is new.
+        l0_base, merged = (None, []) if conf.resume == "retryall" \
+            else self._read_l0(spark)
+        src = [b for b in self._batch_dirs() if b not in merged]
         self.last_finalize_inputs = [
             os.path.join(self._pages_out(), b) for b in src]
         with lineage.StageTimer(spark, conf.workdir, self.run_id,
@@ -231,15 +224,17 @@ class Engine:
                          .dropDuplicates(["url", "polygon_id"])
                          .dropDuplicates(["url"]))
                 fresh = st.observe(fresh)
-                delta_l0 = spatial.tile_counts_l0(fresh)
-                l0 = delta_l0 if full_rebuild \
-                    else spatial.merge_l0(l0_base, delta_l0)
-                merged = batches if full_rebuild else merged_batches + src
-                L._atomic_overwrite(
-                    l0, self._l0_out(),
-                    sidecars={MERGED_BATCHES: "\n".join(merged)})
+                # the run's one ledger commit, BEFORE the store commit;
+                # upsert: pages new since init are inserted
                 L.upsert_status(spark, conf.workdir, fresh.select("url"),
-                                "uploaded", L.YES, self.run_id)
+                                ("processed", "uploaded"), L.YES,
+                                self.run_id)
+                delta_l0 = spatial.tile_counts_l0(fresh)
+                L._atomic_overwrite(
+                    delta_l0 if l0_base is None
+                    else spatial.merge_l0(l0_base, delta_l0),
+                    self._l0_out(),
+                    sidecars={MERGED_BATCHES: "\n".join(merged + src)})
             # One manifest table feeds all three outputs; nothing is
             # written and read back. Fault scope of the eager local
             # checkpoint: a lost executor fails the stage, and the next
@@ -340,8 +335,9 @@ class Engine:
 
     def _process_batch(self, spark: SparkSession, batch: DataFrame,
                        batch_name: str, timer=None) -> None:
-        """Tile + PIP join a page batch, append its output dir, then MERGE
-        the ledger (write-before-mark = at-least-once + dedup)."""
+        """Tile + PIP join a page batch and write it as the batch dir
+        ``batch_name``. No ledger I/O: finalize marks the batch's pages
+        after every batch of the run has landed (write-before-mark)."""
         tiled = spatial.with_tiles(batch)
         joined = spatial.pip_join(tiled, synth_boundaries(spark),
                                   how="left")
@@ -363,12 +359,6 @@ class Engine:
         out.write.mode("overwrite").parquet(batch_dir)
         if timer is not None:
             timer.add_output_dir(batch_dir)
-        # upsert (not merge): pages that entered the input AFTER the
-        # ledger was initialized must be inserted, or they would
-        # reprocess on every resume with their status never recorded
-        L.upsert_status(spark, self.conf.workdir,
-                        spark.read.parquet(batch_dir).select("url"),
-                        "processed", L.YES, self.run_id)
 
     # -- embedding API ------------------------------------------------------
     def get_ledger(self, spark: SparkSession) -> DataFrame | None:

@@ -98,24 +98,3 @@ def make_ring_pip_udf():
 
     return inside_ring
 
-
-def make_haversine_udf():
-    """Great-circle distance in km, vectorized with numpy (the exact-geo
-    refinement hook for kNN; the engine's ranking path stays on integer
-    squared millidegrees, this is the human-facing measure). Built lazily
-    — pandas_udf registration needs an active session."""
-
-    @pandas_udf("double")
-    def haversine_km(lon1_md: pd.Series, lat1_md: pd.Series,
-                     lon2_md: pd.Series, lat2_md: pd.Series) -> pd.Series:
-        import numpy as np
-        lon1 = np.radians(lon1_md.to_numpy() / 1000.0 - 180.0)
-        lat1 = np.radians(85.0 - lat1_md.to_numpy() / 1000.0)
-        lon2 = np.radians(lon2_md.to_numpy() / 1000.0 - 180.0)
-        lat2 = np.radians(85.0 - lat2_md.to_numpy() / 1000.0)
-        dlon, dlat = lon2 - lon1, lat2 - lat1
-        a = (np.sin(dlat / 2) ** 2 +
-             np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2) ** 2)
-        return pd.Series(2 * 6371.0088 * np.arcsin(np.sqrt(a)))
-
-    return haversine_km

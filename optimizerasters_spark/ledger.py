@@ -13,9 +13,12 @@ reference's 20 s whole-file rewrite. This version is merge-on-read:
 
   * ``merge_status`` / ``upsert_status`` APPEND an immutable delta
     commit containing only the touched keys — O(batch), never O(ledger).
+    One commit may set several status columns at once (one delta row
+    per key and column, all under the commit's seq).
   * ``read_ledger`` resolves base ⋈ deltas with latest-wins per
     (url, column) by commit sequence — one aggregation over the delta
-    log (small after compaction) plus a join to the base snapshot.
+    log (small after compaction) plus a join to the base snapshot, both
+    read on their declared schemas (no schema-inference job).
   * compaction folds the delta log back into a new base snapshot when
     the log grows past ``COMPACT_AFTER`` commits (auto, or via
     ``compact()``), using the same CURRENT-pointer atomic swap.
@@ -173,8 +176,10 @@ def read_ledger(spark: SparkSession, workdir: str) -> DataFrame | None:
     deltas = [d for _, d in _committed_deltas(workdir)]
     if base is None and not deltas:
         return None
-    return resolve(None if base is None else spark.read.parquet(base),
-                   spark.read.parquet(*deltas) if deltas else None)
+    return resolve(
+        None if base is None
+        else spark.read.schema(LEDGER_SCHEMA).parquet(base),
+        spark.read.schema(DELTA_SCHEMA).parquet(*deltas) if deltas else None)
 
 
 def init_ledger(spark: SparkSession, workdir: str, keys: DataFrame,
@@ -191,33 +196,34 @@ def init_ledger(spark: SparkSession, workdir: str, keys: DataFrame,
     return read_ledger(spark, workdir)
 
 
-def _delta_rows(done_keys: DataFrame, status_col: str, value: str,
-                run_id: str, is_upsert: bool) -> DataFrame:
+def _delta_rows(done_keys: DataFrame, status_col: str | tuple[str, ...],
+                value: str, run_id: str, is_upsert: bool) -> DataFrame:
+    cols = (status_col,) if isinstance(status_col, str) else status_col
+    assert set(cols) <= set(STATUS_COLS), cols
     return (done_keys.select("url").dropDuplicates(["url"])
-            .withColumn("col", F.lit(status_col))
+            .withColumn("col", F.explode(F.array(*map(F.lit, cols))))
             .withColumn("value", F.lit(value))
             .withColumn("run_id", F.lit(run_id))
             .withColumn("is_upsert", F.lit(is_upsert)))
 
 
 def merge_status(spark: SparkSession, workdir: str, done_keys: DataFrame,
-                 status_col: str, value: str = YES,
+                 status_col: str | tuple[str, ...], value: str = YES,
                  run_id: str = "") -> None:
-    """MERGE: set ``status_col=value`` for known keys. O(batch) append —
-    one delta commit; unknown keys resolve to no-ops at read."""
-    assert status_col in STATUS_COLS
+    """MERGE: set ``status_col=value`` (one column or a tuple of them)
+    for known keys. O(batch) append — one delta commit; unknown keys
+    resolve to no-ops at read."""
     _commit_delta(workdir,
                   _delta_rows(done_keys, status_col, value, run_id, False))
     _maybe_compact(spark, workdir)
 
 
 def upsert_status(spark: SparkSession, workdir: str, done_keys: DataFrame,
-                  status_col: str, value: str = YES,
+                  status_col: str | tuple[str, ...], value: str = YES,
                   run_id: str = "") -> None:
     """MERGE with insert: keys absent from the ledger are added (other
-    statuses ''). O(batch) append; the streaming ingest path uses this —
-    new pages appear mid-stream."""
-    assert status_col in STATUS_COLS
+    statuses ''). O(batch) append, one delta commit; the engine's
+    finalize and the streaming ingest path use it."""
     _commit_delta(workdir,
                   _delta_rows(done_keys, status_col, value, run_id, True))
     _maybe_compact(spark, workdir)

@@ -86,16 +86,14 @@ class CorpusBuilder:
 
     def _read(self, spark: SparkSession, name: str) -> DataFrame | None:
         """Committed state only: orphan rows from crashed attempts are
-        filtered out here and never influence any later ingest."""
+        filtered out here and never influence any later ingest. None
+        before the first commit; after it all three state dirs exist,
+        so a missing one fails the read (Spark's PATH_NOT_FOUND)."""
         committed = self._ids("_commits.txt")
         if not committed:
             return None
-        try:
-            df = spark.read.parquet(self._p(name))
-        except Exception:
-            return None
-        return df.where(F.col("batch_seq").isin(committed)) \
-            .drop("batch_seq")
+        return spark.read.parquet(self._p(name)) \
+            .where(F.col("batch_seq").isin(committed)).drop("batch_seq")
 
     def _append(self, df: DataFrame, name: str, seq: int) -> None:
         df.withColumn("batch_seq", F.lit(seq)) \
@@ -134,18 +132,15 @@ class CorpusBuilder:
             min_jaccard_micro=self.jaccard_micro).select("doc_b")
 
         # 3. cross-state near-dups: new docs meeting ACCEPTED docs in a
-        #    band bucket, Jaccard-verified against those old docs only.
-        #    bands and kept commit together, so one without the other
-        #    means a hand-mangled workdir: skip the cross-state verify
+        #    band bucket, Jaccard-verified against those old docs only
         old_bands = self._read(spark, "bands")
-        kept_old = self._read(spark, "kept")
-        if old_bands is not None and kept_old is not None:
+        if old_bands is not None:
             cand = (new_bands
                     .join(old_bands.withColumnRenamed("doc_id", "doc_a"),
                           ["band_id", "band_key"])
                     .select("doc_a", F.col("doc_id").alias("doc_b"))
                     .distinct())
-            old_sets = kept_old.join(
+            old_sets = self._read(spark, "kept").join(
                 cand.select(F.col("doc_a").alias("doc_id")), "doc_id",
                 "left_semi").select(
                     "doc_id", D.shingles_col("text", self.shingle_n)

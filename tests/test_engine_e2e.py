@@ -41,11 +41,13 @@ def _run_counting_jobs(spark, eng):
 def test_full_run_and_text_byte_identity(spark, sf_dir, workdir):
     eng = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
     res, n_jobs = _run_counting_jobs(spark, eng)
-    # Spark jobs of a first run over sf0.001: 55; 72 when finalize read
-    # each derived table back and the result dict re-read every output,
-    # 91 with the retry stage's ledger re-read and the two fixed-answer
-    # isEmpty probes
-    assert n_jobs <= 55
+    # Spark jobs of a first run over sf0.001: 49; 55 with a second
+    # ledger commit in the process stage, which read its batch back,
+    # and ledger reads that inferred their schemas; 72 when finalize
+    # read each derived table back and the result dict re-read every
+    # output; 91 with the retry stage's ledger re-read and the two
+    # fixed-answer isEmpty probes
+    assert n_jobs <= 49
 
     # every page processed
     led = res["ledger"]
@@ -89,9 +91,10 @@ def test_resume_skips_processed(spark, sf_dir, workdir):
     # second run: everything already 'yes' -> process stage sees 0 rows
     eng2 = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
     res2, n_jobs = _run_counting_jobs(spark, eng2)
-    # Spark jobs of the resume: 54; 62 when finalize read each derived
+    # Spark jobs of the resume: 47; 54 with two ledger commits and
+    # schema-inferring ledger reads, 62 when finalize read each derived
     # table back and the result dict re-read every output
-    assert n_jobs <= 54
+    assert n_jobs <= 47
     m = eng2.get_metrics(spark)
     second = m.where((F.col("run_id") == eng2.run_id) &
                      (F.col("stage") == "process"))
@@ -205,8 +208,8 @@ def test_til_finalize_holds_back_incomplete_groups(spark, sf_dir, tmp_path):
 
 
 def test_quarantine_and_retry_pass(spark, sf_dir, tmp_path):
-    """A6: injected failures land in the ledger as 'no', the end-of-run
-    retry pass recovers them, final state is complete and failure-free."""
+    """A6: injected failures are quarantined, the end-of-run retry pass
+    recovers them, final state is complete and failure-free."""
     wd = str(tmp_path / "qjob")
     eng = Engine(JobConf(sf_dir=sf_dir, workdir=wd, inject_fail_mod=7))
     res = eng.run(spark)
@@ -252,7 +255,7 @@ def test_incremental_finalize_reads_only_new_batches(spark, sf_dir, tmp_path):
     """A resume run's finalize must read ONLY the batch dirs not yet
     folded into the level-0 tile store (cost O(new batch), never a
     corpus re-dedup), and the merged counts must equal both a
-    repair=True full rebuild and a from-scratch single run."""
+    retryall rebuild and a from-scratch single run."""
     wd = str(tmp_path / "incjob")
     pages = synth_pages(spark, sf_dir)
     half = pages.where(F.col("doc_id") % 2 == 0)
@@ -269,8 +272,8 @@ def test_incremental_finalize_reads_only_new_batches(spark, sf_dir, tmp_path):
                for p in eng2.last_finalize_inputs), eng2.last_finalize_inputs
     inc = sorted(map(tuple, res2["tile_counts"].collect()))
 
-    # repair mode re-reads every batch dir and must agree
-    eng3 = Engine(JobConf(sf_dir=sf_dir, workdir=wd, repair=True))
+    # retryall rebuilds the store from every batch dir and must agree
+    eng3 = Engine(JobConf(sf_dir=sf_dir, workdir=wd, resume="retryall"))
     res3 = eng3.run(spark, pages=pages)
     assert len(eng3.last_finalize_inputs) >= 2
     assert sorted(map(tuple, res3["tile_counts"].collect())) == inc
@@ -704,3 +707,53 @@ def test_corpus_pipeline_removes_every_junk_class(spark, sf_dir):
         max_top_bigram_micro=500000).collect()}
     assert 10064 in plain and 10064 not in gated
     assert gated == plain - {10064}
+
+
+def test_crash_windows_resume_to_the_clean_outputs(
+        spark, sf_dir, tmp_path, monkeypatch, default_codec_job):
+    """A resume that crashes at its ledger commit, or at the level-0
+    store commit after it, ends after one more resume with the tile
+    counts and ledger marks of a clean load plus resume."""
+    pages = synth_pages(spark, sf_dir)
+    overwrite = L._atomic_overwrite
+
+    def crash_at_ledger_commit(*args, **kwargs):
+        raise RuntimeError("injected crash at the ledger commit")
+
+    def crash_at_store_commit(df, path, *args, **kwargs):
+        if os.path.basename(path) == "tile_counts_l0":
+            raise RuntimeError("injected crash at the store commit")
+        return overwrite(df, path, *args, **kwargs)
+
+    def state(wd):
+        counts = spark.read.parquet(os.path.join(wd, "tile_counts"))
+        return (_sorted_rows(counts, counts.columns),
+                _sorted_rows(L.read_ledger(spark, wd),
+                             ["url", "processed", "uploaded"]))
+
+    want = state(default_codec_job[0])
+    for name, crash in (("upsert_status", crash_at_ledger_commit),
+                        ("_atomic_overwrite", crash_at_store_commit)):
+        wd = str(tmp_path / name)
+        Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(
+            spark, pages=pages.where(F.col("doc_id") % 2 == 0))
+        with monkeypatch.context() as mp:
+            mp.setattr(L, name, crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(
+                    spark, pages=pages)
+        Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(spark, pages=pages)
+        assert state(wd) == want, name
+
+
+def test_two_runs_of_one_engine_equal_two_engines(
+        spark, sf_dir, tmp_path, default_codec_job):
+    """Each run() writes its own batch dir: one Engine that loads the
+    even half and then resumes over every page ends with the outputs of
+    two Engines doing the same."""
+    wd = str(tmp_path / "one_engine")
+    pages = synth_pages(spark, sf_dir)
+    eng = Engine(JobConf(sf_dir=sf_dir, workdir=wd))
+    eng.run(spark, pages=pages.where(F.col("doc_id") % 2 == 0))
+    eng.run(spark, pages=pages)
+    assert _outputs(spark, wd) == _outputs(spark, default_codec_job[0])

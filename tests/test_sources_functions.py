@@ -73,16 +73,6 @@ def test_cell_encode_udf_matches_codegen(spark, sf_dir):
     assert out.where(F.col("cell_sql") != F.col("cell_udf")).count() == 0
 
 
-def test_haversine_sane(spark):
-    df = spark.createDataFrame(
-        [(285994, 44287, 362352, 36143)],  # NYC-ish vs Paris-ish (abs md)
-        "lon1 BIGINT, lat1 BIGINT, lon2 BIGINT, lat2 BIGINT")
-    km = df.select(geo.make_haversine_udf()(
-        F.col("lon1") - 180000, F.col("lat1"),
-        F.col("lon2") - 180000, F.col("lat2")).alias("km")).collect()[0][0]
-    assert 5000 < km < 7000  # NYC-Paris ~5840 km
-
-
 def test_expand_tars(spark, tmp_path):
     import io
     import tarfile

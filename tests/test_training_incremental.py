@@ -4,6 +4,10 @@ accepted corpus except for band-matched candidates."""
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from optimizerasters_spark.operators import training
@@ -128,3 +132,24 @@ def test_dirty_batch_kept_equals_one_shot_row_for_row(spark, sf_dir,
     assert s["accepted"] == len(got)
     assert [r[0] for r in got].count(3) == 1
     assert 901 in {r[0] for r in got}
+
+
+def test_missing_committed_state_fails_the_ingest(spark, sf_dir, tmp_path):
+    """Once an attempt commits, all three state dirs exist. A missing
+    one must fail the next ingest, naming the path, instead of skipping
+    the cross-state near-dup verify and accepting near-dups of
+    accepted docs."""
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+        .select("doc_id", "text", "lang")
+    even = base.where(F.col("doc_id") % 2 == 0)
+    near = (even.withColumn("doc_id", F.col("doc_id") + 10000)
+            .withColumn("text", F.concat(F.col("text"), F.lit(" zz"))))
+    intact = CorpusBuilder(str(tmp_path / "intact"))
+    intact.ingest(spark, even)
+    assert intact.ingest(spark, near)["accepted"] == 0
+
+    cb = CorpusBuilder(str(tmp_path / "no_bands"))
+    cb.ingest(spark, even)
+    shutil.rmtree(tmp_path / "no_bands" / "bands")
+    with pytest.raises(AnalysisException, match=r"PATH_NOT_FOUND.*no_bands/bands"):
+        cb.ingest(spark, near)
