@@ -23,6 +23,8 @@ absorbs. A crash between the two commits leaves marked pages in an
 unmerged batch that the next finalize folds; in that window
 ``uploaded='yes'`` runs one run ahead of the fold. The reverse order
 double-counts: a crash before the mark reprocesses counted pages.
+retryall drops the level-0 store before it resets the statuses: until
+its store commit, every run rebuilds the store from every batch dir.
 
 The ``text`` column rides through the per-page output untouched
 (byte-identity invariant per BASELINE.json input_hint).
@@ -177,6 +179,9 @@ class Engine:
         if led is None:
             led = L.init_ledger(spark, conf.workdir, pages, "url")
         elif conf.resume == "retryall":
+            # the store counts every page: drop it BEFORE the reset,
+            # so no run folds reprocessed pages onto it
+            L.drop_snapshot(self._l0_out())
             L.clear_statuses(spark, conf.workdir)
             led = L.read_ledger(spark, conf.workdir)
 
@@ -209,10 +214,9 @@ class Engine:
         # can only live among UNMERGED batches (a page re-emits only when
         # the run that wrote it crashed before its ledger commit, and a
         # batch merges only after that commit), so the (url, polygon_id)
-        # dedup within the unmerged set is exhaustive. retryall and a
-        # missing store start from an empty store: every batch dir is new.
-        l0_base, merged = (None, []) if conf.resume == "retryall" \
-            else self._read_l0(spark)
+        # dedup within the unmerged set is exhaustive. A missing store
+        # (first run, retryall) folds every batch dir.
+        l0_base, merged = self._read_l0(spark)
         src = [b for b in self._batch_dirs() if b not in merged]
         self.last_finalize_inputs = [
             os.path.join(self._pages_out(), b) for b in src]

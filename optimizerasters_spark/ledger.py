@@ -30,6 +30,13 @@ reference's 20 s whole-file rewrite. This version is merge-on-read:
     consistent view (snapshot isolation), exactly the Iceberg commit
     model scaled down to a filesystem.
 
+Both protocols serve more than the ledger. ``marker_commit`` (append
+one ``d-<seq>-<uuid>`` dir holding any number of tables, then its
+marker), ``committed`` and ``drop_uncommitted`` also keep the
+incremental corpus builder's state (operators/training_incremental.py);
+``_atomic_overwrite``, ``current_snapshot``, ``drop_snapshot`` and
+``expire_snapshots`` also keep the engine's level-0 tile store.
+
 ``init_ledger`` and ``clear_statuses`` (retryall) intentionally rewrite
 the base — they are whole-table operations by definition and run once
 per job, not per batch.
@@ -37,10 +44,11 @@ per job, not per batch.
 CONCURRENCY CONTRACT — single driver, single writer. The commit
 protocol makes each individual commit crash-safe and keeps READERS
 isolated, but it does not arbitrate between concurrent WRITERS:
-``_next_seq`` allocates by directory scan (two simultaneous writers can
-collide on seq and break latest-wins tiebreaks). This matches the
-reference exactly — one Application process owns its ``.orjob``
-(Report.write rewrites the whole file, OptimizeRasters.py:2068-2092).
+``marker_commit`` allocates its seq by directory scan, so two
+simultaneous writers can collide on seq and break latest-wins
+tiebreaks. This matches the reference exactly — one Application
+process owns its ``.orjob`` (Report.write rewrites the whole file,
+OptimizeRasters.py:2068-2092).
 Multi-writer coordination is what a real table format's metastore
 provides; swapping ``ledger`` for Iceberg/Delta ``MERGE INTO`` lifts
 this limit without touching callers. Compaction is safe against the
@@ -53,6 +61,8 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from contextlib import contextmanager, suppress
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,9 +96,17 @@ def current_snapshot(root: str) -> str | None:
     return d if os.path.isdir(d) else None
 
 
-def _committed_deltas(workdir: str) -> list[tuple[int, str]]:
-    """(seq, dir) for every delta commit whose marker landed, ascending."""
-    root = _delta_root(workdir)
+def drop_snapshot(root: str) -> None:
+    """Remove the CURRENT pointer under ``root``: readers see no
+    snapshot, as before the first commit, and the next
+    ``expire_snapshots`` reclaims every version dir."""
+    with suppress(FileNotFoundError):
+        os.remove(os.path.join(root, "CURRENT"))
+
+
+def committed(root: str) -> list[tuple[int, str]]:
+    """(seq, dir) for every marker commit under ``root`` whose marker
+    landed, ascending (see ``marker_commit``)."""
     if not os.path.isdir(root):
         return []
     out = []
@@ -102,27 +120,36 @@ def _committed_deltas(workdir: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def _next_seq(workdir: str) -> int:
-    root = _delta_root(workdir)
-    if not os.path.isdir(root):
-        return 1
-    seqs = [int(n.split("-")[1]) for n in os.listdir(root)
-            if n.startswith("d-")]
-    return (max(seqs) + 1) if seqs else 1
-
-
-def _commit_delta(workdir: str, rows: DataFrame) -> None:
-    """Write one immutable delta commit, then flip its marker (atomic)."""
-    root = _delta_root(workdir)
+@contextmanager
+def marker_commit(root: str) -> Iterator[tuple[str, int]]:
+    """Append one marker commit under ``root``: yields (commit dir,
+    seq) for the body to write any number of tables into, then flips
+    the dir's ``_COMMITTED.<name>`` marker (os.replace, atomic). A body
+    that raises leaves an unmarked dir, invisible to ``committed`` and
+    removed by ``drop_uncommitted``."""
     os.makedirs(root, exist_ok=True)
-    seq = _next_seq(workdir)
+    seq = 1 + max((int(n.split("-")[1]) for n in os.listdir(root)
+                   if n.startswith("d-")), default=0)
     name = f"d-{seq:08d}-{uuid.uuid4().hex[:8]}"
-    rows.withColumn("seq", F.lit(seq).cast("bigint")) \
-        .write.mode("overwrite").parquet(os.path.join(root, name))
+    yield os.path.join(root, name), seq
     marker_tmp = os.path.join(root, f".tmp-{uuid.uuid4().hex[:6]}")
     with open(marker_tmp, "w") as f:
         f.write(name)
     os.replace(marker_tmp, os.path.join(root, f"_COMMITTED.{name}"))
+
+
+def drop_uncommitted(root: str) -> int:
+    """Remove every dir under the marker-commit root ``root`` whose
+    marker never landed (a crashed commit). Safe between runs."""
+    return expire_snapshots(root, keep=tuple(
+        os.path.basename(d) for _, d in committed(root)))
+
+
+def _commit_delta(workdir: str, rows: DataFrame) -> None:
+    """One ledger delta commit: ``rows`` stamped with its seq."""
+    with marker_commit(_delta_root(workdir)) as (d, seq):
+        rows.withColumn("seq", F.lit(seq).cast("bigint")) \
+            .write.mode("overwrite").parquet(d)
 
 
 def resolve(base: DataFrame | None,
@@ -173,7 +200,7 @@ def resolve(base: DataFrame | None,
 
 def read_ledger(spark: SparkSession, workdir: str) -> DataFrame | None:
     base = current_snapshot(ledger_path(workdir))
-    deltas = [d for _, d in _committed_deltas(workdir)]
+    deltas = [d for _, d in committed(_delta_root(workdir))]
     if base is None and not deltas:
         return None
     return resolve(
@@ -250,7 +277,8 @@ def compact(spark: SparkSession, workdir: str) -> None:
     The folded delta set is pinned BEFORE resolving: only those commits
     are dropped afterwards, so a commit landing between the resolve and
     the drop survives in the log instead of being silently lost."""
-    folded = [os.path.basename(d) for _, d in _committed_deltas(workdir)]
+    folded = [os.path.basename(d)
+              for _, d in committed(_delta_root(workdir))]
     cur = read_ledger(spark, workdir)
     if cur is None:
         return
@@ -259,7 +287,7 @@ def compact(spark: SparkSession, workdir: str) -> None:
 
 
 def _maybe_compact(spark: SparkSession, workdir: str) -> None:
-    if len(_committed_deltas(workdir)) > COMPACT_AFTER:
+    if len(committed(_delta_root(workdir))) > COMPACT_AFTER:
         compact(spark, workdir)
 
 
@@ -303,17 +331,11 @@ def _drop_deltas(workdir: str, only: list[str] | None = None) -> None:
     named commits (compaction passes the set it folded); None drops
     everything (init/retryall whole-table rewrites)."""
     root = _delta_root(workdir)
-    if not os.path.isdir(root):
-        return
-    keep = None if only is None else set(only)
-    for name in sorted(os.listdir(root)):
-        if name.startswith("_COMMITTED.") and \
-                (keep is None or name[len("_COMMITTED."):] in keep):
-            os.remove(os.path.join(root, name))
-    for name in os.listdir(root):
-        full = os.path.join(root, name)
-        if os.path.isdir(full) and (keep is None or name in keep):
-            shutil.rmtree(full, ignore_errors=True)
+    for _, d in committed(root):
+        name = os.path.basename(d)
+        if only is None or name in only:
+            os.remove(os.path.join(root, f"_COMMITTED.{name}"))
+    drop_uncommitted(root)
 
 
 def expire_snapshots(root: str, keep: tuple[str, ...] = ()) -> int:
@@ -337,14 +359,5 @@ def expire_snapshots(root: str, keep: tuple[str, ...] = ()) -> int:
 def vacuum(workdir: str) -> int:
     """Drop superseded snapshot versions and orphaned (uncommitted)
     delta dirs. Safe between runs (no live plans)."""
-    n = expire_snapshots(ledger_path(workdir), keep=("delta",))
-    root = _delta_root(workdir)
-    if os.path.isdir(root):
-        committed = {os.path.basename(d) for _, d in
-                     _committed_deltas(workdir)}
-        for name in os.listdir(root):
-            full = os.path.join(root, name)
-            if os.path.isdir(full) and name not in committed:
-                shutil.rmtree(full, ignore_errors=True)
-                n += 1
-    return n
+    return (expire_snapshots(ledger_path(workdir), keep=("delta",))
+            + drop_uncommitted(_delta_root(workdir)))

@@ -6,8 +6,9 @@ engine.py's level-0 store.
 
 A 100 TB corpus is not deduplicated in one job — crawls arrive in
 batches, and each batch must dedup against everything ACCEPTED so far
-without re-scanning it. State per workdir (append-only parquet, every
-row stamped with its ``batch_seq``):
+without re-scanning it. State per workdir: one ledger marker commit
+(``ledger.marker_commit``) per accepting ingest under ``state/``, each
+holding three parquet tables:
 
   * ``shas``  — sha256 of every accepted text (exact-dup gate),
   * ``bands`` — (doc_id, band_id, band_key) LSH bands of accepted docs
@@ -15,14 +16,13 @@ row stamped with its ``batch_seq``):
     equi-join — O(batch + matched candidates), never O(corpus)),
   * ``kept``  — the accepted documents themselves.
 
-Crash safety (the ledger.py ``_commit`` pattern): each ingest first
-claims a monotonically increasing attempt id in ``_attempts.txt``,
-stamps every state row it appends with that id, and appends the id to
-``_commits.txt`` only AFTER all three parquet appends landed. Readers
-filter state to committed attempt ids, so a crash anywhere mid-ingest
-leaves orphan rows that are invisible forever — a re-ingest of the same
-batch dedups against committed state only and accepts the full batch.
-No crash window loses documents.
+Crash safety is the ledger's: a commit's dir becomes visible only when
+its ``_COMMITTED.<name>`` marker lands, after all three tables. Readers
+read committed dirs only, so a crash anywhere mid-ingest leaves an
+unmarked dir that no ingest ever sees, and the next builder opened on
+the workdir removes it. A re-ingest of the same batch dedups against
+committed state only and accepts the full batch. No crash window loses
+documents.
 
 Ingest order is acceptance order: first-arrived wins (the old doc keeps
 its slot, the newcomer drops). Within a batch, the one-shot batch rule
@@ -46,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from optimizerasters_spark import ledger as L
 from optimizerasters_spark.operators import dedup as D
 from optimizerasters_spark.operators import training as T
 
@@ -59,47 +60,24 @@ class CorpusBuilder:
         self.jaccard_micro = jaccard_micro
         self.num_hashes, self.bands, self.shingle_n = \
             num_hashes, bands, shingle_n
-        # test hook: raise after the named state append ("shas" |
+        # test hook: raise after the named state write ("shas" |
         # "bands" | "kept") to simulate a crash inside the write window
         self._crash_after: str | None = None
-        os.makedirs(workdir, exist_ok=True)
-
-    def _p(self, name: str) -> str:
-        return os.path.join(self.workdir, name)
-
-    def _ids(self, name: str) -> list[int]:
-        try:
-            with open(self._p(name)) as fh:
-                return [int(ln) for ln in fh.read().split() if ln]
-        except FileNotFoundError:
-            return []
-
-    def _claim_attempt(self) -> int:
-        seq = max(self._ids("_attempts.txt"), default=0) + 1
-        with open(self._p("_attempts.txt"), "a") as fh:
-            fh.write(f"{seq}\n")
-        return seq
-
-    def _commit(self, seq: int) -> None:
-        with open(self._p("_commits.txt"), "a") as fh:
-            fh.write(f"{seq}\n")
+        old_format = os.path.join(workdir, "_commits.txt")
+        if os.path.exists(old_format):
+            raise ValueError(
+                f"{old_format}: this workdir holds state in a retired "
+                "format (per-row batch ids); re-ingest its documents "
+                "into a new workdir")
+        self._state = os.path.join(workdir, "state")
+        L.drop_uncommitted(self._state)  # dirs of crashed ingests
 
     def _read(self, spark: SparkSession, name: str) -> DataFrame | None:
-        """Committed state only: orphan rows from crashed attempts are
-        filtered out here and never influence any later ingest. None
-        before the first commit; after it all three state dirs exist,
-        so a missing one fails the read (Spark's PATH_NOT_FOUND)."""
-        committed = self._ids("_commits.txt")
-        if not committed:
-            return None
-        return spark.read.parquet(self._p(name)) \
-            .where(F.col("batch_seq").isin(committed)).drop("batch_seq")
-
-    def _append(self, df: DataFrame, name: str, seq: int) -> None:
-        df.withColumn("batch_seq", F.lit(seq)) \
-            .write.mode("append").parquet(self._p(name))
-        if self._crash_after == name:
-            raise RuntimeError(f"injected crash after {name} append")
+        """The state table ``name`` over every committed ingest; None
+        before the first. A committed table gone missing fails the read
+        (Spark's PATH_NOT_FOUND)."""
+        dirs = [os.path.join(d, name) for _, d in L.committed(self._state)]
+        return spark.read.parquet(*dirs) if dirs else None
 
     def kept(self, spark: SparkSession) -> DataFrame | None:
         return self._read(spark, "kept")
@@ -107,7 +85,7 @@ class CorpusBuilder:
     def ingest(self, spark: SparkSession, batch: DataFrame
                ) -> dict[str, int]:
         """Dedup ``batch`` against itself and all committed prior state;
-        append survivors and commit. Returns acceptance stats."""
+        commit the survivors and their state. Returns acceptance stats."""
         n_in = batch.count()
         # 1. exact: training_kept's survivors (one row per sha, min
         #    doc_id; NULL text never accepted), minus the accepted shas;
@@ -152,23 +130,26 @@ class CorpusBuilder:
                 .select("doc_b"))
 
         # 4. materialize the survivors once (the count fills the cache),
-        #    then append them and their state under a fresh attempt id;
-        #    the commit marker lands LAST, so a crash between any two
-        #    appends leaves only invisible orphan rows and the batch
-        #    re-ingests cleanly
+        #    then write them and their state as one marker commit: a
+        #    crash before its marker leaves a dir no read sees, and the
+        #    batch re-ingests cleanly
         accepted = (sets.join(victims.withColumnRenamed("doc_b", "doc_id"),
                               "doc_id", "left_anti")
                     .select(*cols, "text_sha").cache())
         try:
             n_acc = accepted.count()
             if n_acc > 0:
-                seq = self._claim_attempt()
-                self._append(accepted.select("text_sha"), "shas", seq)
-                self._append(new_bands.join(accepted.select("doc_id"),
-                                            "doc_id", "left_semi"),
-                             "bands", seq)
-                self._append(accepted.select(*cols), "kept", seq)
-                self._commit(seq)
+                with L.marker_commit(self._state) as (d, _):
+                    for name, df in (
+                            ("shas", accepted.select("text_sha")),
+                            ("bands", new_bands.join(
+                                accepted.select("doc_id"), "doc_id",
+                                "left_semi")),
+                            ("kept", accepted.select(*cols))):
+                        df.write.parquet(os.path.join(d, name))
+                        if self._crash_after == name:
+                            raise RuntimeError(
+                                f"injected crash after {name} write")
         finally:
             accepted.unpersist()
         return {"in": n_in, "accepted": n_acc}

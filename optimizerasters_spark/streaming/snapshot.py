@@ -49,9 +49,9 @@ def run_incremental(spark: SparkSession, input_dir: str, workdir: str,
             "text_sha", F.sha2(F.col("text"), 256))
         batch_dir = os.path.join(out_dir, f"batch={batch_id}")
         tiled.write.mode("overwrite").parquet(batch_dir)
-        done = batch_df.sparkSession.read.parquet(batch_dir).select("url")
-        L.upsert_status(batch_df.sparkSession, workdir, done,
-                        "processed", L.YES, f"stream-{batch_id}")
+        L.upsert_status(batch_df.sparkSession, workdir,
+                        batch_df.select("url"), "processed", L.YES,
+                        f"stream-{batch_id}")
 
     writer = (stream.writeStream
               .foreachBatch(process_batch)
@@ -110,7 +110,7 @@ def streaming_corpus_ingest(spark: SparkSession, input_dir: str,
     batch dedups (exact + LSH near-dup) against everything ACCEPTED so
     far, O(batch), never O(corpus). Exactly-once without streaming
     state: foreachBatch may REPLAY a batch after a crash, and the
-    builder's attempt/commit markers + sha anti-join make a replayed
+    builder's marker commits + sha anti-join make a replayed
     ingest a no-op (re-accepted docs are exact dups of committed
     rows) — the same idempotence the batch engine gets from
     append+dedup.

@@ -712,8 +712,9 @@ def test_corpus_pipeline_removes_every_junk_class(spark, sf_dir):
 def test_crash_windows_resume_to_the_clean_outputs(
         spark, sf_dir, tmp_path, monkeypatch, default_codec_job):
     """A resume that crashes at its ledger commit, or at the level-0
-    store commit after it, ends after one more resume with the tile
-    counts and ledger marks of a clean load plus resume."""
+    store commit after it, and a retryall that crashes at its store
+    commit each end after one more resume with the tile counts and
+    ledger marks of a clean load plus resume."""
     pages = synth_pages(spark, sf_dir)
     overwrite = L._atomic_overwrite
 
@@ -732,18 +733,20 @@ def test_crash_windows_resume_to_the_clean_outputs(
                              ["url", "processed", "uploaded"]))
 
     want = state(default_codec_job[0])
-    for name, crash in (("upsert_status", crash_at_ledger_commit),
-                        ("_atomic_overwrite", crash_at_store_commit)):
-        wd = str(tmp_path / name)
+    for name, crash, resume in (
+            ("upsert_status", crash_at_ledger_commit, "resume"),
+            ("_atomic_overwrite", crash_at_store_commit, "resume"),
+            ("_atomic_overwrite", crash_at_store_commit, "retryall")):
+        wd = str(tmp_path / f"{name}-{resume}")
         Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(
             spark, pages=pages.where(F.col("doc_id") % 2 == 0))
         with monkeypatch.context() as mp:
             mp.setattr(L, name, crash)
             with pytest.raises(RuntimeError, match="injected crash"):
-                Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(
-                    spark, pages=pages)
+                Engine(JobConf(sf_dir=sf_dir, workdir=wd,
+                               resume=resume)).run(spark, pages=pages)
         Engine(JobConf(sf_dir=sf_dir, workdir=wd)).run(spark, pages=pages)
-        assert state(wd) == want, name
+        assert state(wd) == want, (name, resume)
 
 
 def test_two_runs_of_one_engine_equal_two_engines(

@@ -4,12 +4,17 @@ accepted corpus except for band-matched candidates."""
 
 from __future__ import annotations
 
+import glob
+import os
+import re
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from optimizerasters_spark import ledger as L
 from optimizerasters_spark.operators import training
 from optimizerasters_spark.operators.training_incremental import (
     CorpusBuilder,
@@ -38,8 +43,19 @@ def test_incremental_equals_one_shot_under_ordered_ingest(
 
     cb = CorpusBuilder(str(tmp_path / "corpus"))
     s1 = cb.ingest(spark, docs.where(F.col("doc_id") < 300))
-    s2 = cb.ingest(spark, docs.where((F.col("doc_id") >= 300) &
-                                     (F.col("doc_id") < 10000)))
+    sc = spark.sparkContext
+    group = f"ingest-{tmp_path.name}"
+    sc.setJobGroup(group, "CorpusBuilder.ingest")
+    try:
+        s2 = cb.ingest(spark, docs.where((F.col("doc_id") >= 300) &
+                                         (F.col("doc_id") < 10000)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    # 28 jobs on sf0.001; appends into the state dirs that the cached
+    # survivors' plan reads dropped that cache, for 41
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 28, n_jobs
     s3 = cb.ingest(spark, docs.where(F.col("doc_id") >= 10000))
     got = {r["doc_id"] for r in cb.kept(spark).select("doc_id").collect()}
     assert got == one_shot, (len(got), len(one_shot),
@@ -84,7 +100,8 @@ def test_crash_between_appends_loses_no_documents(spark, sf_dir,
                                    max_mean_wl_micro=1 << 60)
             .select("doc_id").collect()}
     for crash_point in ("shas", "bands", "kept"):
-        cb = CorpusBuilder(str(tmp_path / f"crash_{crash_point}"))
+        wd = str(tmp_path / f"crash_{crash_point}")
+        cb = CorpusBuilder(wd)
         s1 = cb.ingest(spark, b1)
         assert s1["accepted"] > 0
         cb._crash_after = crash_point
@@ -93,16 +110,24 @@ def test_crash_between_appends_loses_no_documents(spark, sf_dir,
             raise AssertionError("injected crash did not fire")
         except RuntimeError as e:
             assert "injected crash" in str(e)
-        cb._crash_after = None
         # the crashed attempt is invisible: kept() shows only batch 1
         assert cb.kept(spark).count() == s1["accepted"]
-        # re-ingest of the lost batch accepts its survivors in full —
-        # final corpus equals the one-shot pipeline over both batches
+        # re-ingest of the lost batch, by the builder a restart opens,
+        # accepts its survivors in full — final corpus equals the
+        # one-shot pipeline over both batches
+        cb = CorpusBuilder(wd)
         s2 = cb.ingest(spark, b2)
         assert s2["accepted"] > 0, (crash_point, s2)
         got = {r["doc_id"] for r in
                cb.kept(spark).select("doc_id").collect()}
         assert got == want, (crash_point, sorted(got ^ want)[:10])
+        # and the crashed attempt left no rows behind on disk
+        for name in ("shas", "bands", "kept"):
+            on_disk = sum(pq.ParquetFile(f).metadata.num_rows for f in
+                          glob.glob(f"{wd}/**/{name}/*.parquet",
+                                    recursive=True))
+            assert on_disk == cb._read(spark, name).count(), \
+                (crash_point, name)
 
 
 def test_dirty_batch_kept_equals_one_shot_row_for_row(spark, sf_dir,
@@ -135,9 +160,9 @@ def test_dirty_batch_kept_equals_one_shot_row_for_row(spark, sf_dir,
 
 
 def test_missing_committed_state_fails_the_ingest(spark, sf_dir, tmp_path):
-    """Once an attempt commits, all three state dirs exist. A missing
-    one must fail the next ingest, naming the path, instead of skipping
-    the cross-state near-dup verify and accepting near-dups of
+    """A committed ingest's commit dir holds all three state tables. A
+    missing one must fail the next ingest, naming the path, instead of
+    skipping the cross-state near-dup verify and accepting near-dups of
     accepted docs."""
     base = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text", "lang")
@@ -150,6 +175,21 @@ def test_missing_committed_state_fails_the_ingest(spark, sf_dir, tmp_path):
 
     cb = CorpusBuilder(str(tmp_path / "no_bands"))
     cb.ingest(spark, even)
-    shutil.rmtree(tmp_path / "no_bands" / "bands")
-    with pytest.raises(AnalysisException, match=r"PATH_NOT_FOUND.*no_bands/bands"):
+    (commit,) = [d for _, d in L.committed(str(tmp_path / "no_bands"
+                                               / "state"))]
+    shutil.rmtree(os.path.join(commit, "bands"))
+    with pytest.raises(AnalysisException,
+                       match=rf"PATH_NOT_FOUND.*{re.escape(commit)}/bands"):
         cb.ingest(spark, near)
+
+
+def test_workdir_in_the_retired_state_format_fails_to_open(tmp_path):
+    """Per-row batch ids with ``_commits.txt`` listing the committed ones
+    was the state format before the ledger's marker commits. A builder
+    opened on such a workdir fails, naming the file, instead of reading
+    it as empty and accepting every document again."""
+    wd = tmp_path / "retired"
+    wd.mkdir()
+    (wd / "_commits.txt").write_text("1\n")
+    with pytest.raises(ValueError, match=r"_commits\.txt.*new workdir"):
+        CorpusBuilder(str(wd))
