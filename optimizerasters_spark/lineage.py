@@ -23,8 +23,10 @@ import glob
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 METRICS_SCHEMA = ("run_id STRING, stage STRING, partition_id INT, "
                   "rows BIGINT, wall_ms BIGINT")
@@ -100,10 +102,13 @@ class StageTimer:
         for d in self._out_dirs:
             rows += [(self.run_id, f"{self.stage}.files", i, k, wall)
                      for i, k in parquet_file_counts(d)]
-        # a handful of driver rows in one slice: one part file per
-        # append (a coalesce(1) of the default slices costs more)
-        self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), METRICS_SCHEMA) \
+        # a handful of driver rows as one Arrow table: the JVM decodes
+        # the batch itself, so the append starts no Python worker (an
+        # RDD of the rows would, at 0.3-0.45 s per append); one part
+        # file per append
+        schema = StructType.fromDDL(METRICS_SCHEMA)
+        table = pa.table([list(c) for c in zip(*rows)], names=schema.names)
+        self.spark.createDataFrame(table, schema).coalesce(1) \
             .write.mode("append").parquet(metrics_path(self.workdir))
         return False
 

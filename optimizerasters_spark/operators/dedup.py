@@ -10,8 +10,9 @@
 * ``lsh_candidate_pairs`` — MinHash+LSH near-dup: word shingles ->
   per-hash min of md5(seed||shingle) -> band buckets -> bucket
   equi-join, every caller's bands from one builder over an exploded
-  (doc_id, s) table. Shingle construction is one vectorized Arrow batch
-  pass (guide §4.2); the md5 mins and band keys stay JVM codegen.
+  (doc_id, s) table. Shingles, the md5 mins and the band keys are all
+  JVM codegen: the shingles are one regex extraction per text
+  (``shingles_col``), so no stage starts a Python worker.
 * ``jaccard_pairs`` — the one exact n-gram Jaccard: candidate pairs
   joined to a (doc_id, _sh) shingle-set table, one array_intersect.
 * ``paragraph_dedup`` / ``boilerplate_paragraphs`` /
@@ -25,9 +26,10 @@ same-bucket docs ever meet, never the full cross product.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from optimizerasters_spark.operators import text as T
 
 
 def dedup_latest(pages: DataFrame,
@@ -87,63 +89,48 @@ def dedup_exact_rows(docs: DataFrame, text_col: str = "text"
             .select(*[F.col("_row")[c].alias(c) for c in docs.columns]))
 
 
-def _shingler(n: int, full_only: bool):
-    """toks -> distinct word n-grams in first-occurrence order
-    (dict.fromkeys == array_distinct); None when ``full_only`` and the
-    doc is shorter than n tokens, else a short doc gives its one
-    truncated shingle, as slice() does. A closure, so a UDF that calls
-    it ships it by value and workers need not import this package."""
-    def shingle(toks: list[str]):
-        if full_only and len(toks) < n:
-            return None
-        upper = max(len(toks) - n, 0)
-        return list(dict.fromkeys(
-            " ".join(toks[i:i + n]) for i in range(upper + 1)))
-    return shingle
+def _windows(low: Column, n: int) -> Column:
+    """Every ``n``-token window of ``low`` in order, repeats kept: the
+    " ".join(toks[i:i + n]) of toks = low.split(" "), one per token
+    start; empty when ``low`` has fewer than n tokens. One regex match
+    per token start (the text's start or any position right after a
+    space) whose lookahead captures the n tokens from there. The
+    lookbehind consumes nothing, so a token after a leading or doubled
+    space still starts a window — ``(?:^| )`` would eat the separator
+    and skip it."""
+    pattern = "(?<![^ ])(?=(" + " ".join(["[^ ]*"] * n) + "))"
+    return F.regexp_extract_all(low, F.lit(pattern), 1)
 
 
 def shingles_col(text_col, n: int = 3, full_only: bool = False):
-    """Word n-gram shingles as an array<string> (distinct, first-
-    occurrence order — dict.fromkeys == array_distinct).
-    ``full_only=True`` emits NOTHING for docs shorter than n tokens
-    (the n-gram-contamination contract) instead of the one truncated
-    shingle slice() produces.
+    """Word n-gram shingles of the lowercased text as an array<string>
+    (distinct, first-occurrence order). Tokens are split(" ") tokens,
+    empty ones kept. A doc shorter than n tokens gives its one
+    truncated shingle, the whole lowercased text, or NULL when
+    ``full_only`` (the n-gram-contamination contract). NULL text gives
+    NULL.
 
-    Built in one vectorized Arrow batch pass (guide §4.2): Python's
-    C-level split/join over the whole batch; split(" ") keeps empty
-    tokens, and NULL text gives NULL."""
-
-    shingle = _shingler(n, full_only)
-
-    @F.pandas_udf("array<string>")
-    def _sh(texts: pd.Series) -> pd.Series:
-        return pd.Series([None if txt is None
-                          else shingle(txt.lower().split(" "))
-                          for txt in texts])
-
-    return _sh(F.col(text_col))
+    One codegen'd JVM expression: :func:`_windows` then array_distinct.
+    The short-doc rule reads a separate token count, never the size of
+    the extraction: a CASE branch referencing the extraction would
+    evaluate the regex a second time (subexpression elimination does
+    not share it into a branch)."""
+    low = F.lower(F.col(text_col))
+    short = F.lit(None).cast("array<string>") if full_only \
+        else F.array(low)
+    return F.when(F.size(T.tokens_col(text_col)) < n, short) \
+        .otherwise(F.array_distinct(_windows(low, n)))
 
 
 def text_sets_col(text_col, shingle_n: int = 3, gram_n: int = 5):
     """struct<sh, grams>: a doc's distinct ``shingle_n``-shingles (as
     :func:`shingles_col`) and its distinct full ``gram_n``-grams (as
-    ``shingles_col(.., full_only=True)``, the decontamination grams),
-    from ONE Arrow batch pass that tokenizes each text once — the
-    corpus build's near-dup and decontamination stages read both sets
-    from one materialized table instead of re-running the pass."""
-
-    shingle, gram = _shingler(shingle_n, False), _shingler(gram_n, True)
-
-    @F.pandas_udf("struct<sh:array<string>,grams:array<string>>")
-    def _sets(texts: pd.Series) -> pd.DataFrame:
-        sh, grams = [], []
-        for txt in texts:
-            toks = None if txt is None else txt.lower().split(" ")
-            sh.append(None if toks is None else shingle(toks))
-            grams.append(None if toks is None else gram(toks))
-        return pd.DataFrame({"sh": sh, "grams": grams})
-
-    return _sets(F.col(text_col))
+    ``shingles_col(.., full_only=True)``, the decontamination grams) —
+    the corpus build's near-dup and decontamination stages read both
+    sets from one materialized table instead of re-deriving them."""
+    return F.struct(shingles_col(text_col, shingle_n).alias("sh"),
+                    shingles_col(text_col, gram_n, full_only=True)
+                    .alias("grams"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, num_hashes: int = 8,
@@ -157,12 +144,13 @@ def ngram_jaccard_pairs(docs: DataFrame, num_hashes: int = 8,
     n² guard); pair it with lsh_oversized_buckets so whatever the cap
     drops is reported, never silent.
 
-    The shingle-set table is built by one Arrow pass and materialized
-    once with a lazy local checkpoint, which signatures and both sides
-    of the verify join read. A local checkpoint lives in executor
-    storage and is NOT fault-tolerant: a lost executor loses it and
-    the query fails. Cluster runs use ``training_kept``'s ``reps_path``,
-    which writes the same table to parquet (the durable form)."""
+    The shingle-set table is built by one :func:`shingles_col`
+    projection and materialized once with a lazy local checkpoint,
+    which signatures and both sides of the verify join read. A local
+    checkpoint lives in executor storage and is NOT fault-tolerant: a
+    lost executor loses it and the query fails. Cluster runs use
+    ``training_kept``'s ``reps_path``, which writes the same table to
+    parquet (the durable form)."""
     sets = (docs.select("doc_id",
                         shingles_col(text_col, shingle_n).alias("_sh"))
             .localCheckpoint(eager=False))
@@ -241,9 +229,10 @@ def _bands(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
 
 def _doc_bands(docs: DataFrame, num_hashes: int, bands: int,
                shingle_n: int, text_col: str) -> DataFrame:
-    """:func:`_bands` of ``docs``' shingles. The explode takes the UDF
-    result itself: exploding a projected UDF column makes Spark infer a
-    size(...) > 0 filter that runs the Arrow pass a second time."""
+    """:func:`_bands` of ``docs``' shingles. The explode takes the
+    :func:`shingles_col` expression itself: exploding a projected
+    shingle column makes Spark infer a size(...) > 0 filter that
+    evaluates the regex extraction a second time."""
     return _bands(docs.select(
         "doc_id", F.explode(shingles_col(text_col, shingle_n)).alias("s")),
         num_hashes, bands)
@@ -374,34 +363,13 @@ def exact_substr_overlap(docs: DataFrame, width: int = 32,
     Scale shape: windows explode (≤ n_tokens rows/doc), the census
     shuffles ONCE on the 128-bit window hash (uniform — no skew), the
     interval-union cover is per-doc array math. Never all-pairs; the
-    window hashes are built in one vectorized Arrow batch pass (guide
-    §4.2 — hashlib.md5 over C-level token joins)."""
-    import hashlib
-
-    @F.pandas_udf("array<struct<pos:int,wh:string>>")
-    def _wins(texts: pd.Series) -> pd.Series:
-        out = []
-        for txt in texts:
-            if txt is None:
-                out.append(None)
-                continue
-            toks = txt.lower().split(" ")
-            if len(toks) < width:
-                out.append(None)
-                continue
-            out.append([
-                (i, hashlib.md5(
-                    " ".join(toks[i:i + width]).encode("utf-8"))
-                 .hexdigest())
-                for i in range(len(toks) - width + 1)])
-        return pd.Series(out)
-
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    n_toks = F.size(toks)
-    ex = (docs.select("doc_id", F.explode(_wins(F.col(text_col)))
-                      .alias("w"))
-          .select("doc_id", F.col("w.pos").alias("pos"),
-                  F.col("w.wh").alias("wh")))
+    windows are :func:`_windows` of the lowercased text (repeats kept,
+    posexplode's index is the window's token position) and each
+    window's hash is md5 of its UTF-8 bytes, all JVM codegen."""
+    low = F.lower(F.col(text_col))
+    ex = (docs.select("doc_id", F.posexplode(_windows(low, width))
+                      .alias("pos", "w"))
+          .select("doc_id", "pos", F.md5("w").alias("wh")))
     shared_hashes = (ex.groupBy("wh")
                      .agg(F.count_distinct("doc_id").alias("nd"))
                      .where(F.col("nd") >= 2).select("wh"))
@@ -421,6 +389,7 @@ def exact_substr_overlap(docs: DataFrame, width: int = 32,
     stats = per_doc.select(
         "doc_id", sz.cast("bigint").alias("n_shared_windows"),
         cover.cast("bigint").alias("n_dup_tokens"))
+    n_toks = F.size(T.tokens_col(text_col))
     base = docs.select("doc_id", n_toks.cast("bigint").alias("n_tokens"))
     return (base.join(stats, "doc_id", "left")
             .select(

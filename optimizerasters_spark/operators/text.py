@@ -1,10 +1,11 @@
 """Text-analysis operators for the training-data pipeline (documents table).
 
-Built-in column functions (JVM-side, whole-stage codegen), except the
-decontamination n-grams, which come from the vectorized Arrow batch
-pass the MinHash stage uses (dedup.shingles_col). Scores that would
-be floats are emitted as micro-units (x 1e6, floored) so results are
-exact integers and oracle-comparable across engines.
+Built-in column functions (JVM-side, whole-stage codegen); the
+decontamination n-grams are the MinHash stage's regex extraction
+(dedup.shingles_col), so no operator here starts a Python worker.
+Scores that would be floats are emitted as micro-units (x 1e6,
+floored) so results are exact integers and oracle-comparable across
+engines.
 """
 
 from __future__ import annotations
@@ -343,10 +344,9 @@ def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
 
     Returns every doc with n_hits (0 for clean docs) and the
     contaminated flag: :func:`benchmark_hits` over the docs' n-grams,
-    left-joined back to every doc. Gram construction is the vectorized
-    Arrow batch pass shared with the MinHash stage
-    (dedup.shingles_col, guide §4.2) — full windows only, exactly the
-    old size>=n gate."""
+    left-joined back to every doc. Gram construction is the regex
+    extraction shared with the MinHash stage (dedup.shingles_col) —
+    full windows only, exactly the old size>=n gate."""
     from optimizerasters_spark.operators.dedup import shingles_col
     grams = docs.select(
         "doc_id",

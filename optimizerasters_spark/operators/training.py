@@ -10,10 +10,11 @@ composed end to end over the documents table —
 
 The text features of each exact-dedup survivor — its distinct
 3-shingle set and, for the corpus build's decontamination, its distinct
-5-gram set — come from ONE vectorized Arrow batch pass, materialized
-once (a lazy local checkpoint, or parquet at ``reps_path``); MinHash,
-the Jaccard verify, the kept set and decontamination all read that
-table. Every other stage is built-in column functions (JVM-side). The
+5-gram set — come from one projection of two regex extractions
+(``dedup.text_sets_col``), materialized once (a lazy local checkpoint,
+or parquet at ``reps_path``); MinHash, the Jaccard verify, the kept set
+and decontamination all read that table. Every stage is built-in
+column functions (JVM-side): the pipeline starts no Python worker. The
 only shuffles are the natural keys (content hash, LSH band bucket,
 lang), all uniform. The LSH bucket join is the one spot with
 data-dependent skew — exactly the duplicate families the stage exists

@@ -51,6 +51,11 @@ from optimizerasters_spark.operators import dedup as D
 from optimizerasters_spark.operators import training as T
 
 
+# the state tables whose columns do not follow the batch
+_SCHEMAS = {"shas": "text_sha STRING",
+            "bands": "doc_id BIGINT, band_id INT, band_key STRING"}
+
+
 class CorpusBuilder:
     """CorpusBuilder(workdir).ingest(batch_df) -> per-batch stats."""
 
@@ -74,10 +79,17 @@ class CorpusBuilder:
 
     def _read(self, spark: SparkSession, name: str) -> DataFrame | None:
         """The state table ``name`` over every committed ingest; None
-        before the first. A committed table gone missing fails the read
-        (Spark's PATH_NOT_FOUND)."""
+        before the first. ``shas`` and ``bands`` read on their declared
+        schemas, with no schema-inference job; ``kept`` infers, as its
+        columns follow the batch. A committed table gone missing fails
+        the read (Spark's PATH_NOT_FOUND)."""
         dirs = [os.path.join(d, name) for _, d in L.committed(self._state)]
-        return spark.read.parquet(*dirs) if dirs else None
+        if not dirs:
+            return None
+        reader = spark.read
+        if name in _SCHEMAS:
+            reader = reader.schema(_SCHEMAS[name])
+        return reader.parquet(*dirs)
 
     def kept(self, spark: SparkSession) -> DataFrame | None:
         return self._read(spark, "kept")

@@ -302,10 +302,9 @@ def test_decontaminate_broadcasts_benchmark_ngrams(spark, sf_dir):
     bench = d.where(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     plan = _plan(T.ngram_contamination(d, bench, n=5))
     assert "BroadcastHashJoin" in plan, plan
-    # r06: gram construction is the vectorized Arrow batch builder
-    # (shared with the MinHash stage) — ArrowEvalPython is expected;
-    # the row-pickled scalar path must still never appear
-    assert "BatchEvalPython" not in plan, plan
+    # gram construction is the MinHash stage's regex extraction: no
+    # Python evaluation of either form
+    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, plan
 
 
 def test_robots_filter_broadcasts_rules_no_page_shuffle(spark, sf_dir):
@@ -424,14 +423,15 @@ def test_segment_cells_pure_codegen_explode(spark, sf_dir):
 def test_corpus_pipeline_scans_pages_once_one_text_pass(spark, sf_dir,
                                                          tmp_path):
     """corpus_pipeline takes the exact-dedup survivors from one
-    aggregate and builds their 3-shingle and 5-gram sets in one Arrow
-    pass, materialized once; LSH, the Jaccard verify, the kept set and
-    decontamination read that table. So its plan scans the pages input
-    at most once and holds at most two ArrowEvalPython nodes (the
-    survivors' pass and the benchmark's n-grams). The double-shingle
-    form restated the web-filter and dedup front end in every consumer:
-    its plan held 30 scans of the pages input and 14 ArrowEvalPython
-    nodes."""
+    aggregate and builds their 3-shingle and 5-gram sets in one
+    projection, materialized once; LSH, the Jaccard verify, the kept set
+    and decontamination read that table. So its plan scans the pages
+    input at most once. The sets and the benchmark's n-grams are regex
+    extractions, so the plan holds no Python evaluation node (it held
+    two ArrowEvalPython nodes when both were pandas UDFs). The
+    double-shingle form restated the web-filter and dedup front end in
+    every consumer: its plan held 30 scans of the pages input and 14
+    ArrowEvalPython nodes."""
     from optimizerasters_spark.operators import training
     src = str(tmp_path / "pages.parquet")
     synth_pages(spark, sf_dir).write.parquet(src)
@@ -450,17 +450,21 @@ def test_corpus_pipeline_scans_pages_once_one_text_pass(spark, sf_dir,
     scans = [ln for ln in plan.splitlines()
              if "FileScan parquet" in ln and "pages.parquet" in ln]
     assert len(scans) <= 1, plan
-    assert plan.count("ArrowEvalPython") <= 2, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
 
 
-def test_lsh_candidate_pairs_one_arrow_pass_per_side(spark, sf_dir):
-    """The docs-side band builder explodes the shingle UDF's result
-    itself, so each self-join side runs the Arrow pass once: exactly
-    two ArrowEvalPython nodes. Exploding a projected UDF column instead
-    lets Spark infer a size(...) > 0 filter that evaluates the UDF a
-    second time (four nodes)."""
+def test_lsh_candidate_pairs_one_shingle_extraction_per_side(spark,
+                                                             sf_dir):
+    """The docs-side band builder explodes the shingle expression
+    itself, so each self-join side evaluates the regex extraction once:
+    exactly two regexp_extract_all calls in the plan, and no Python
+    node. Exploding a projected shingle column instead lets Spark infer
+    a size(...) > 0 filter that evaluates the extraction again (six
+    calls)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = dedup.lsh_candidate_pairs(docs)
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "simple")
-    assert plan.count("ArrowEvalPython") == 2, plan
+    assert plan.count("regexp_extract_all(") == 2, plan
+    assert "ArrowEval" not in plan and "BatchEvalPython" not in plan, plan

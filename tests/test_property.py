@@ -122,3 +122,64 @@ def test_chunk_documents_coverage_invariants(spark):
             stitched += c["chunk_text"].split(" ")[:12]
         stitched += chunks[-1]["chunk_text"].split(" ")
         assert stitched[:len(base)] == base, (n, stitched, base)
+
+
+def _py_shingles(text, n, full_only):
+    """The pure-Python shingler the JVM extractor replaces: distinct
+    " ".join(toks[i:i + n]) of toks = text.lower().split(" ") in
+    first-occurrence order; a short doc gives its one truncated
+    shingle, or None when ``full_only``."""
+    if text is None:
+        return None
+    toks = text.lower().split(" ")
+    if full_only and len(toks) < n:
+        return None
+    upper = max(len(toks) - n, 0)
+    return list(dict.fromkeys(" ".join(toks[i:i + n])
+                              for i in range(upper + 1)))
+
+
+def test_shingle_extractor_matches_python_shingler(spark):
+    """dedup.shingles_col and text_sets_col (a regex extraction) equal
+    the Python shingler on seeded random texts: empty tokens, leading,
+    trailing and doubled spaces, newlines and tabs inside tokens, NULL
+    and short docs, and case pairs whose lowering is not one char to
+    one char (İ, Σ/ς, ß, ǅ, ﬀ, the Kelvin sign). Also the
+    exact-substring census's window hashes: md5 of every window, repeats
+    kept, equals hashlib's over the UTF-8 bytes."""
+    import hashlib
+    import random
+
+    from pyspark.sql import functions as F
+    from optimizerasters_spark.operators import dedup
+
+    rng = random.Random(19)
+    words = ["a", "B", "", "dog", "İstanbul", "ΣΟΦΟΣ", "ς", "straße",
+             "ǅemal", "ﬀ", "Kelvin", "x\ny", "t\tq", "AbC", "a"]
+    texts = [None, "", " ", "  ", "a", "a ", " a", "a  b", "A a A a"]
+    texts += [" ".join(rng.choice(words) for _ in range(rng.randint(0, 14)))
+              for _ in range(2000)]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id int, text string")
+    rows = docs.select(
+        "doc_id",
+        dedup.shingles_col("text", 1).alias("s1"),
+        dedup.shingles_col("text", 3).alias("s3"),
+        dedup.shingles_col("text", 5, full_only=True).alias("g5"),
+        dedup.text_sets_col("text").alias("sets"),
+        F.transform(dedup._windows(F.lower("text"), 4), F.md5)
+        .alias("w4")).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        t = texts[r["doc_id"]]
+        assert r["s1"] == _py_shingles(t, 1, False), t
+        assert r["s3"] == _py_shingles(t, 3, False), t
+        assert r["g5"] == _py_shingles(t, 5, True), t
+        assert r["sets"] is not None
+        assert r["sets"]["sh"] == _py_shingles(t, 3, False), t
+        assert r["sets"]["grams"] == _py_shingles(t, 5, True), t
+        toks = None if t is None else t.lower().split(" ")
+        want = None if t is None else [
+            hashlib.md5(" ".join(toks[i:i + 4]).encode("utf-8")).hexdigest()
+            for i in range(len(toks) - 3)]
+        assert r["w4"] == want, t

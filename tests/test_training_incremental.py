@@ -44,19 +44,28 @@ def test_incremental_equals_one_shot_under_ordered_ingest(
     cb = CorpusBuilder(str(tmp_path / "corpus"))
     s1 = cb.ingest(spark, docs.where(F.col("doc_id") < 300))
     sc = spark.sparkContext
-    group = f"ingest-{tmp_path.name}"
-    sc.setJobGroup(group, "CorpusBuilder.ingest")
-    try:
-        s2 = cb.ingest(spark, docs.where((F.col("doc_id") >= 300) &
-                                         (F.col("doc_id") < 10000)))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    # 28 jobs on sf0.001; appends into the state dirs that the cached
+
+    def ingest_counting_jobs(name, batch):
+        group = f"{name}-{tmp_path.name}"
+        sc.setJobGroup(group, "CorpusBuilder.ingest")
+        try:
+            stats = cb.ingest(spark, batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return stats, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    s2, n_jobs = ingest_counting_jobs(
+        "ingest2", docs.where((F.col("doc_id") >= 300) &
+                              (F.col("doc_id") < 10000)))
+    # 26 jobs on sf0.001: 28 when the shas and bands reads inferred
+    # their schemas; appends into the state dirs that the cached
     # survivors' plan reads dropped that cache, for 41
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 28, n_jobs
-    s3 = cb.ingest(spark, docs.where(F.col("doc_id") >= 10000))
+    assert n_jobs <= 26, n_jobs
+    s3, n_jobs = ingest_counting_jobs(
+        "ingest3", docs.where(F.col("doc_id") >= 10000))
+    # an ingest that accepts nothing: 21 jobs, 26 with inferred schemas
+    assert n_jobs <= 21, n_jobs
     got = {r["doc_id"] for r in cb.kept(spark).select("doc_id").collect()}
     assert got == one_shot, (len(got), len(one_shot),
                              sorted(got ^ one_shot)[:10])
