@@ -119,8 +119,9 @@ def q_pip_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_per_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = synth_pages(spark, sf_dir)
-    out = spatial.knn_per_query(p, KNN_QUERIES, k=KNN_K,
-                                radius_md=KNN_RADIUS_MD)
+    q = spark.createDataFrame(
+        KNN_QUERIES, "query_id BIGINT, qlon_md BIGINT, qlat_md BIGINT")
+    out = spatial.knn_ring(p, q, k=KNN_K, radius_md=KNN_RADIUS_MD)
     return out.select(F.col("query_id").cast("bigint"),
                       F.col("knn_rank").cast("int"),
                       F.col("doc_id").cast("bigint"),
@@ -209,7 +210,8 @@ def q_free_space_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .withColumn("cents", F.floor(F.col("value") * 100).cast("bigint"))
     out = windows.cumulative_until_target(
-        ev, ["ts", "event_id"], "cents", target_num=1, target_den=10)
+        ev.select("event_id", "ts", "cents"), ["ts", "event_id"], "cents",
+        target_num=1, target_den=10)
     return out.select("event_id",
                       F.col("cum_amount").cast("bigint").alias("cum_cents"))
 
@@ -783,16 +785,8 @@ FROM t0 GROUP BY 1, 2
 
 
 # ---------------------------------------------------------------------------
-# Batch 4: k-ring kNN, embedding near-dup
+# Batch 4: embedding near-dup
 # ---------------------------------------------------------------------------
-
-def q_knn_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-bucketed kNN — must equal the bbox-radius form (same oracle)
-    for radius = ring * cell_md."""
-    p = synth_pages(spark, sf_dir)
-    return spatial.knn_kring(p, KNN_QUERIES, k=KNN_K,
-                             cell_md=KNN_RADIUS_MD, ring=1)
-
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _read_spread(spark, f"{sf_dir}/embeddings.parquet", "vec_id")
@@ -800,26 +794,11 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          block_col="label")
 
 
-def q_knn_kring_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame-native ring expansion (distributed, no driver loop) —
-    must equal the list-driven form (same oracle)."""
-    p = synth_pages(spark, sf_dir)
-    q = spark.createDataFrame(
-        KNN_QUERIES, "query_id BIGINT, qlon_md BIGINT, qlat_md BIGINT")
-    return spatial.knn_kring_df(p, q, k=KNN_K, cell_md=KNN_RADIUS_MD,
-                                ring=1)
-
-
 QUERIES.update({
-    "knn_kring": q_knn_kring,
-    "knn_kring_df": q_knn_kring_df,
     "embedding_near_dup": q_embedding_near_dup,
 })
 
 ORACLES.update({
-    # identical semantics to the bbox-radius kNN for ring*cell == radius
-    "knn_kring": ORACLES["knn_per_cell"],
-    "knn_kring_df": ORACLES["knn_per_cell"],
     "embedding_near_dup": """
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
            FROM embeddings)
@@ -1224,8 +1203,9 @@ FROM ev GROUP BY 1
 # ---------------------------------------------------------------------------
 
 def q_proxy_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S13 ObjectID;Raster rows — dense ids via partition-offset
-    zip-with-index (no partition-less Window over the manifest)."""
+    """S13 ObjectID;Raster rows — dense ids as a running count
+    (windows.running_sum: no partition-less Window over the
+    manifest)."""
     p = spatial.with_tiles(synth_pages(spark, sf_dir))
     counts = spatial.tile_counts_at_levels(p, MANIFEST_LEVELS)
     m = manifest.tile_manifest(counts)
@@ -1641,18 +1621,6 @@ def q_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         udf(F.col("lon_md"), F.col("lat_md")).alias("cell_udf"))
 
 
-def q_free_space_scan_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed two-phase prefix sum — must equal the simple global-
-    window form (same oracle), with no partition-less window over the
-    event relation."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .withColumn("cents", F.floor(F.col("value") * 100).cast("bigint"))
-    out = windows.cumulative_until_target_distributed(
-        ev, ["ts", "event_id"], "cents", target_num=1, target_den=10)
-    return out.select("event_id",
-                      F.col("cum_amount").cast("bigint").alias("cum_cents"))
-
-
 def q_cell_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew diagnostic: per-cell counts + floored-micro skew ratio (the
     three urban hot cells surface as ratio >= 10x median)."""
@@ -1671,9 +1639,7 @@ QUERIES.update({"til_finalize": q_til_finalize,
                 "rolling_fingerprint": q_rolling_fingerprint,
                 "cell_histogram": q_cell_histogram,
                 "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-                "cell_encode": q_cell_encode,
-                "free_space_scan_dist": q_free_space_scan_dist})
-ORACLES["free_space_scan_dist"] = ORACLES["free_space_scan"]
+                "cell_encode": q_cell_encode})
 ORACLES.update({
     "til_finalize": f"""
 WITH {FILES_CTE.strip()}, {LEDGER_CTE.strip()},
@@ -3651,12 +3617,11 @@ GATE_PRIORITY = [
     "tfidf_topk",           # NEW: integer TF-IDF keyword extraction
     "route_cells",          # NEW: line rasterization (segment trace)
     # the queries whose last gate row is r03 (rotate so no row goes
-    # >1 round stale); 34 of the 42 fit — url_encode / output_ext /
-    # dir_depth / url_parts / hash_sample / proxy_paths / domain_cap /
-    # html_extract (trivial,
+    # >1 round stale); 34 of the 39 fit — url_parts / hash_sample /
+    # proxy_paths / domain_cap / html_extract (trivial,
     # golden/property-tested, code untouched since r03) disclosed as
-    # riding their r03 rows one more round. The registry now holds 103
-    # queries ≈ 2 x the 50-slot window: from r06 on, the steady state
+    # riding their r03 rows one more round. The registry now holds 100
+    # queries = 2 x the 50-slot window: from r06 on, the steady state
     # is a two-round alternation (each round's window = the ~50 slots
     # the previous round left out, plus any new/changed queries
     # swapped to the front), so no row goes more than ~2 rounds stale
@@ -3666,18 +3631,18 @@ GATE_PRIORITY = [
     "dedup_latest", "asof_join",
     "ledger_resolve", "ivf_topk",
     "rolling_fingerprint", "cell_histogram",
-    "embedding_near_dup_lsh", "cell_encode", "free_space_scan_dist",
+    "embedding_near_dup_lsh", "cell_encode",
     "salted_topk", "pyramid_resample", "proxy_csv", "tile_manifest",
     "free_space_scan", "tile_counts_pyramid", "simhash_ann",
-    "embedding_near_dup", "cosine_topk", "knn_kring", "knn_kring_df",
+    "embedding_near_dup", "cosine_topk",
     "salted_join", "salted_cell_payloads", "til_barrier", "til_members",
     "stem_groups", "assoc_join", "resume_pending",
+    "url_encode", "output_ext", "dir_depth",
     # ------------------- gate-window boundary (50) -----------------------
     # everything below holds a green r04 row (CORRECTNESS_r04.json)
-    # with implementing code unchanged since, or is one of the eight
+    # with implementing code unchanged since, or is one of the five
     # disclosed r03 riders above
-    "url_encode", "output_ext", "dir_depth", "url_parts",
-    "hash_sample", "proxy_paths", "domain_cap", "html_extract",
+    "url_parts", "hash_sample", "proxy_paths", "domain_cap", "html_extract",
     "pip_join_ring", "pii_scrub", "decontaminate", "ring_stats",
     "pq_adc_topk", "ivf_pq_topk", "blocklist_filter",
     "remove_boilerplate", "stratified_sample", "geoparse",

@@ -213,7 +213,7 @@ class Engine:
         # finalize, never a corpus-wide re-dedup. Cross-batch duplicates
         # can only live among UNMERGED batches (a page re-emits only when
         # the run that wrote it crashed before its ledger commit, and a
-        # batch merges only after that commit), so the (url, polygon_id)
+        # batch merges only after that commit), so the per-url
         # dedup within the unmerged set is exhaustive. A missing store
         # (first run, retryall) folds every batch dir.
         l0_base, merged = self._read_l0(spark)
@@ -225,7 +225,6 @@ class Engine:
             st.add_output_dir(os.path.join(conf.workdir, "tile_counts"))
             if src:
                 fresh = (spark.read.parquet(*self.last_finalize_inputs)
-                         .dropDuplicates(["url", "polygon_id"])
                          .dropDuplicates(["url"]))
                 fresh = st.observe(fresh)
                 # the run's one ledger commit, BEFORE the store commit;

@@ -4,7 +4,8 @@ per-row compute via vectorized pandas UDFs — never row-at-a-time Python).
 Two interchangeable implementations of the hierarchical cell encoder:
 
   * ``cell_encode_col`` — pure Catalyst column expression (preferred:
-    whole-stage codegen, zero Python). Used by the engine.
+    whole-stage codegen, zero Python), packed by
+    ``tiling.pack_cell_col``, the one home of the cell-key format.
   * ``cell_encode_udf`` — @pandas_udf over numpy int64 arrays (the Arrow
     path). This is where a REAL H3/S2 encoder (h3.latlng_to_cell
     vectorized) plugs in unchanged; the container has no h3 lib, so the
@@ -24,17 +25,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-CELL_Y_BITS = 29
-CELL_Y_SPAN = 1 << CELL_Y_BITS
+from optimizerasters_spark import tiling
 
 
 def cell_encode_col(lon_md: Column, lat_md: Column, res_cells: int
                     ) -> Column:
     """Pack (lon, lat) millidegrees into a cell id at a resolution of
     ``res_cells`` columns across the 360-degree domain. JVM-side."""
-    cx = F.floor(lon_md * res_cells / 360000)
-    cy = F.floor(lat_md * res_cells / 360000)
-    return (cx.cast("bigint") * CELL_Y_SPAN + cy.cast("bigint"))
+    return tiling.pack_cell_col(F.floor(lon_md * res_cells / 360000),
+                                F.floor(lat_md * res_cells / 360000))
 
 
 def make_cell_encode_udf(res_cells: int):
@@ -44,7 +43,7 @@ def make_cell_encode_udf(res_cells: int):
     def cell_encode(lon_md: pd.Series, lat_md: pd.Series) -> pd.Series:
         cx = (lon_md.astype("int64") * res_cells) // 360000
         cy = (lat_md.astype("int64") * res_cells) // 360000
-        return cx * CELL_Y_SPAN + cy
+        return cx * tiling.CELL_Y_SPAN + cy
 
     return cell_encode
 

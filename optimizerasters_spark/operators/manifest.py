@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from optimizerasters_spark.operators import windows
+
 DEFAULT_SCALE = 2
 DEFAULT_BLOCK = 512
 
@@ -62,48 +64,17 @@ def with_cache_paths(manifest: DataFrame, cache_prefix: str = "cache",
             .withColumn("index_file", index_file))
 
 
-def proxy_csv_rows(manifest: DataFrame, id_offset: int = 0,
-                   num_partitions: int | None = None) -> DataFrame:
+def proxy_csv_rows(manifest: DataFrame, id_offset: int = 0) -> DataFrame:
     """S13: the ``ObjectID;Raster`` flattened form, one row per tile.
     Deterministic dense object ids equal to ROW_NUMBER() OVER (ORDER BY
-    tile_id) — but WITHOUT a partition-less Window (which would sort the
-    full manifest, billions of tiles at 100x, on one reducer).
-
-    Zip-with-index per partition instead: range-partition on tile_id,
-    stamp each row with its partition id, then ROW_NUMBER() windowed BY
-    PARTITION ID (each window partition = one range bucket, so the sort
-    is bucket-local, never global); aggregate per-partition counts
-    (O(#partitions) rows), turn them into cumulative offsets, and
-    broadcast-join the offsets back. Global id = offset(pid) + local
-    index. The only partition-less window runs over the #partitions-row
-    offsets table — bounded by the shuffle-partition count, never by
-    data volume. (An earlier version derived the local index from
-    monotonically_increasing_id's pid*2^33 bit layout — an
-    implementation detail of Spark, and silently wrong past 2^33 rows
-    per partition; row_number depends only on documented semantics.)
-
-    pid stamping happens under the range Exchange, so the window's
-    re-shuffle on _pid redistributes CONSISTENT pids; the offsets branch
-    hangs off the same window output — one range exchange, one hash
-    exchange on the tile-manifest table (tiles, not pages)."""
-    from pyspark.sql.window import Window
-    staged = (manifest
-              .repartitionByRange(*([num_partitions] if num_partitions
-                                    else []), "tile_id")
-              .withColumn("_pid", F.spark_partition_id())
-              .withColumn("_local",
-                          F.row_number().over(
-                              Window.partitionBy("_pid")
-                                    .orderBy("tile_id")) - 1))
-    counts = staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_cnt").over(w), F.lit(0)).alias("_off"))
-    return (staged.join(F.broadcast(offsets), "_pid")
+    tile_id) + ``id_offset``: a running count from
+    ``windows.running_sum``, so no partition-less Window sorts the full
+    manifest (billions of tiles at 100x) on one reducer, and its jobs
+    fire when this DataFrame is built."""
+    keyed = manifest.select("tile_id", "source_uri")
+    return (windows.running_sum(keyed, ["tile_id"], F.lit(1))
             .withColumn("object_id",
-                        (F.col("_off") + F.col("_local") + 1 + id_offset)
-                        .cast("bigint"))
+                        (F.col("_cum") + id_offset).cast("bigint"))
             .select("object_id",
                     F.concat_ws(";", F.col("object_id").cast("string"),
                                 F.col("source_uri")).alias("csv_row")))

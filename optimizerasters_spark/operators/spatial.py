@@ -414,73 +414,39 @@ def pip_join_ring(pages: DataFrame, polys: DataFrame,
     return _pip_join_exact(pages, polys, cell_md, _inside_ring)
 
 
-_QUERY_SCHEMA = "query_id BIGINT, qlon_md BIGINT, qlat_md BIGINT"
+def knn_ring(pages: DataFrame, queries: DataFrame, k: int = 5,
+             radius_md: int = 1000) -> DataFrame:
+    """Radius-bounded kNN (SURVEY.md J5) over a query TABLE (query_id,
+    qlon_md, qlat_md): for each query, the k nearest pages within
+    ``radius_md`` (squared integer millidegree distance; ties broken by
+    doc_id — fully deterministic).
 
-
-def _nearest_k(cand: DataFrame, k: int, radius: int) -> DataFrame:
-    """The k nearest candidate pages per query within ``radius``
-    (squared integer millidegree distance; ties broken by doc_id — fully
-    deterministic). The window sorts only candidate rows."""
+    With a cover cell equal to the radius, the cell cover of a query's
+    closed radius box [q - radius, q + radius] is its 3x3 cell ring, so
+    the ring expands distributed through the same broadcast cover probe
+    as the PIP joins — no driver-side loop, so the query set can itself
+    be large (the reference's batch-of-AOIs case). Every point within
+    the radius lies in the ring and the dist2 filter trims the corners.
+    The big side never shuffles, and the per-query window sorts only
+    the ring cells' contents."""
+    boxes = queries.select(
+        "query_id", "qlon_md", "qlat_md",
+        (F.col("qlon_md") - radius_md).alias("lon_lo_md"),
+        (F.col("qlon_md") + radius_md + 1).alias("lon_hi_md"),
+        (F.col("qlat_md") - radius_md).alias("lat_lo_md"),
+        (F.col("qlat_md") + radius_md + 1).alias("lat_hi_md"))
     dx = F.col("lon_md") - F.col("qlon_md")
     dy = F.col("lat_md") - F.col("qlat_md")
     w = Window.partitionBy("query_id").orderBy(F.col("dist2").asc(),
                                                F.col("doc_id").asc())
-    return (cand.withColumn("dist2", dx * dx + dy * dy)
-            .where(F.col("dist2") <= radius * radius)
+    return (_probe(pages, boxes, radius_md)
+            .withColumn("dist2", dx * dx + dy * dy)
+            .where(F.col("dist2") <= radius_md * radius_md)
             .withColumn("knn_rank", F.row_number().over(w))
             .where(F.col("knn_rank") <= k)
             .select("query_id",
                     F.col("knn_rank").cast("int").alias("knn_rank"),
                     "doc_id", F.col("dist2").cast("bigint").alias("dist2")))
-
-
-def knn_per_query(pages: DataFrame, query_points: list[tuple[int, int, int]],
-                  k: int = 5, radius_md: int = 1000) -> DataFrame:
-    """Radius-bounded kNN: for each (query_id, qlon_md, qlat_md) return the
-    k nearest pages within ``radius_md`` (squared integer millidegree
-    distance; ties broken by doc_id — fully deterministic).
-
-    Scale path: the query side is broadcast; pages are scanned once and
-    pre-filtered by the bbox predicate BEFORE the shuffle, so the window
-    only sorts candidate rows (tiny) rather than the full table."""
-    q = pages.sparkSession.createDataFrame(query_points, _QUERY_SCHEMA)
-    lon, lat = F.col("lon_md"), F.col("lat_md")
-    qlon, qlat = F.col("qlon_md"), F.col("qlat_md")
-    cand = pages.join(
-        F.broadcast(q),
-        (lon >= qlon - radius_md) & (lon <= qlon + radius_md) &
-        (lat >= qlat - radius_md) & (lat <= qlat + radius_md))
-    return _nearest_k(cand, k, radius_md)
-
-
-def knn_kring_df(pages: DataFrame, queries: DataFrame, k: int = 5,
-                 cell_md: int = 1000, ring: int = 1) -> DataFrame:
-    """Cell-bucketed kNN (SURVEY.md J5) over a query TABLE (query_id,
-    qlon_md, qlat_md). A query's (2*ring+1)^2 k-ring is exactly the cell
-    cover of its closed radius box [q - radius, q + radius] with radius
-    = ring * cell_md, so the ring expands DISTRIBUTED through the same
-    broadcast cover probe as the PIP joins — no driver-side loop, so the
-    query set can itself be large (the reference's batch-of-AOIs case).
-    Every point within the radius lies in the ring; the dist2 filter
-    trims the corners, so results equal the bbox form (knn_per_query).
-    The big side never shuffles, and the per-query window sorts only
-    the ring cells' contents."""
-    radius = ring * cell_md
-    boxes = queries.select(
-        "query_id", "qlon_md", "qlat_md",
-        (F.col("qlon_md") - radius).alias("lon_lo_md"),
-        (F.col("qlon_md") + radius + 1).alias("lon_hi_md"),
-        (F.col("qlat_md") - radius).alias("lat_lo_md"),
-        (F.col("qlat_md") + radius + 1).alias("lat_hi_md"))
-    return _nearest_k(_probe(pages, boxes, cell_md), k, radius)
-
-
-def knn_kring(pages: DataFrame, query_points: list[tuple[int, int, int]],
-              k: int = 5, cell_md: int = 1000, ring: int = 1) -> DataFrame:
-    """knn_kring_df over a driver-side list of (query_id, qlon_md,
-    qlat_md) points."""
-    q = pages.sparkSession.createDataFrame(query_points, _QUERY_SCHEMA)
-    return knn_kring_df(pages, q, k=k, cell_md=cell_md, ring=ring)
 
 
 def ring_stats(polys: DataFrame) -> DataFrame:

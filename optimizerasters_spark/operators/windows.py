@@ -1,9 +1,11 @@
 """Window / ordered operators (SURVEY.md §2.5-2.6).
 
-  * A8 free-space target scan — CleanMRFCache.py:168-196: oldest-first
-    cumulative size until the target is freed -> running SUM() OVER
-    (ORDER BY ...) + threshold. Money/size kept in integer cents so the
-    cumulative comparison is exact and engine-independent.
+  * ``running_sum`` — the one running total over an ordered table. A8
+    free-space target scan (CleanMRFCache.py:168-196: oldest-first
+    cumulative size until the target is freed) is a threshold on it;
+    the S13 proxy CSV's dense ids (manifest.proxy_csv_rows) are a
+    running count. Money/size kept in integer cents so the cumulative
+    comparison is exact and engine-independent.
   * A7 per-file timing pivot — TimeIt (:245-282) + writeTimeItReport
     (:2094-2108): rows of (entity, stage, seconds) -> one row per entity
     with a column per stage.
@@ -11,66 +13,62 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
+
+
+def running_sum(rows: DataFrame, order_cols: list[str],
+                amount: Column) -> DataFrame:
+    """Every row of ``rows`` plus ``_cum``, the inclusive running total
+    of ``amount`` in ``order_cols`` order, and ``_total``, its sum over
+    all rows. Ties in ``order_cols`` take an arbitrary order.
+
+    Two-phase prefix sum, with no partition-less window over ``rows``:
+    range-partition on the order columns and stamp each row with its
+    partition id ``_pid``; run the running sum within each ``_pid``
+    (bucket-local sorts, in parallel) and add the summed totals of the
+    buckets before it, taken from the per-``_pid`` totals table
+    (O(#partitions) rows, broadcast back). Both branches must see one
+    bucket per row, and a range exchange samples its own bounds each
+    time it runs, so the stamped table is local-checkpointed and both
+    branches read that one partition assignment. Building this
+    DataFrame therefore fires the range sampling and the shuffle below
+    the checkpoint; the checkpoint fills on the first action. It keeps
+    every column of ``rows``, so callers project first."""
+    ordered = [F.col(c) for c in order_cols]
+    staged = (rows.repartitionByRange(*ordered)
+              .withColumn("_pid", F.spark_partition_id())
+              .withColumn("_amt", amount)
+              .localCheckpoint(eager=False))
+    totals = staged.groupBy("_pid").agg(F.sum("_amt").alias("_t"))
+    before = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding,
+                                                -1)
+    offsets = totals.select(
+        "_pid",
+        F.coalesce(F.sum("_t").over(before), F.lit(0)).alias("_off"),
+        F.sum("_t").over(Window.partitionBy()).alias("_total"))
+    upto = Window.partitionBy("_pid").orderBy(*ordered) \
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return (staged.withColumn("_cum", F.sum("_amt").over(upto))
+            .join(F.broadcast(offsets), "_pid")
+            .withColumn("_cum", F.col("_off") + F.col("_cum"))
+            .drop("_pid", "_amt", "_off"))
 
 
 def cumulative_until_target(events: DataFrame, order_cols: list[str],
                             amount_col: str, target_num: int,
                             target_den: int) -> DataFrame:
-    """Rows (in order) whose running total stays <= total * num/den.
+    """Rows (in order) whose running total stays <= total * num/den,
+    with that running total as ``cum_amount``.
 
     Exact integer arithmetic: amounts must already be integral (cents).
-    A global ordered window is a single-partition sort — correct for the
-    reference's cache-clean use case (one cache dir); for distributed use
-    the caller pre-partitions by cache root and orders within."""
-    w = Window.orderBy(*[F.col(c) for c in order_cols]) \
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = Window.partitionBy()
-    return (events
-            .withColumn("cum_amount", F.sum(amount_col).over(w))
-            .withColumn("total_amount", F.sum(amount_col).over(tot))
-            .where(F.col("cum_amount") * target_den <=
-                   F.col("total_amount") * target_num)
-            .drop("total_amount"))
-
-
-def cumulative_until_target_distributed(events: DataFrame,
-                                        order_cols: list[str],
-                                        amount_col: str, target_num: int,
-                                        target_den: int) -> DataFrame:
-    """Distributed form of ``cumulative_until_target`` — identical
-    rows, NO partition-less window.
-
-    Two-phase prefix sum: range-partition on the order columns, run the
-    running sum per partition (the window is partitioned by
-    spark_partition_id, so each partition sorts independently —
-    parallel), then add per-partition offsets computed from the tiny
-    totals table (O(#partitions) rows; its cumulative window is bounded
-    by the shuffle-partition count). The range Exchange feeds both the
-    local-cumsum branch and the totals branch, so Catalyst computes it
-    once (ReusedExchange). Use this when the ordered relation is large
-    (fleet-wide cache eviction across cache roots); the simple form
-    remains for the reference's one-cache-dir case."""
-    ordered = [F.col(c) for c in order_cols]
-    staged = (events.repartitionByRange(*ordered)
-              .withColumn("_pid", F.spark_partition_id()))
-    w_local = Window.partitionBy("_pid").orderBy(*ordered) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = staged.withColumn("_local_cum",
-                              F.sum(amount_col).over(w_local))
-    totals = staged.groupBy("_pid").agg(F.sum(amount_col).alias("_t"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding,
-                                               -1)
-    offsets = totals.select(
-        "_pid",
-        F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_t").over(Window.partitionBy()).alias("_total"))
-    return (local.join(F.broadcast(offsets), "_pid")
-            .withColumn("cum_amount", F.col("_off") + F.col("_local_cum"))
-            .where(F.col("cum_amount") * target_den <=
+    A filter on ``running_sum``, so its jobs fire when this DataFrame is
+    built."""
+    return (running_sum(events, order_cols, F.col(amount_col))
+            .where(F.col("_cum") * target_den <=
                    F.col("_total") * target_num)
-            .drop("_pid", "_local_cum", "_off", "_total"))
+            .withColumnRenamed("_cum", "cum_amount")
+            .drop("_total"))
 
 
 def apply_eviction(victims: DataFrame, path_col: str = "path") -> int:

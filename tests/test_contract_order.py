@@ -3,7 +3,7 @@ evaluates the first 50 entries of contract.QUERIES in dict order. The
 round-5 invariant: every query added or behavior-changed in round 5
 sits inside the window, plus as many of the r03-row riders as fit —
 so CORRECTNESS_r05 ∪ r04 covers all registered queries with rows at
-most one round old, except eight disclosed trivial queries
+most one round old, except five disclosed trivial queries
 (R03_STRAGGLERS below — golden/property/e2e-tested elsewhere, code
 untouched since r03) that ride their r03 rows one more round."""
 
@@ -26,17 +26,18 @@ R03_RIDERS = [
     "dedup_latest", "asof_join",
     "ledger_resolve", "ivf_topk",
     "rolling_fingerprint", "cell_histogram",
-    "embedding_near_dup_lsh", "cell_encode", "free_space_scan_dist",
+    "embedding_near_dup_lsh", "cell_encode",
     "salted_topk", "pyramid_resample", "proxy_csv", "tile_manifest",
     "free_space_scan", "tile_counts_pyramid", "simhash_ann",
-    "embedding_near_dup", "cosine_topk", "knn_kring", "knn_kring_df",
+    "embedding_near_dup", "cosine_topk",
     "salted_join", "salted_cell_payloads", "til_barrier", "til_members",
     "stem_groups", "assoc_join", "resume_pending",
+    "url_encode", "output_ext", "dir_depth",
 ]
 
 # disclosed: trivial queries riding their green r03 row a second round
-R03_STRAGGLERS = {"url_encode", "output_ext", "dir_depth", "url_parts",
-                  "hash_sample", "proxy_paths", "domain_cap", "html_extract"}
+R03_STRAGGLERS = {"url_parts", "hash_sample", "proxy_paths", "domain_cap",
+                  "html_extract"}
 
 # green rows in CORRECTNESS_r04.json (the driver's r04 gate window),
 # minus pq_encode which ERRORED there (it is in R05_NEW_OR_CHANGED)
@@ -84,9 +85,9 @@ def test_every_query_has_a_fresh_row_source():
 
 def test_reorder_loses_no_queries():
     # every registered query survived the reorder and still has its
-    # oracle; the registry (103) is ~2x the 50-slot gate window, so
+    # oracle; the registry (100) is 2x the 50-slot gate window, so
     # rounds alternate halves and no row goes more than ~2 rounds stale
-    assert len(contract.QUERIES) == 103
+    assert len(contract.QUERIES) == 100
     assert len(set(contract.QUERIES)) == len(contract.QUERIES)
     no_oracle = [n for n in contract.QUERIES if n not in contract.ORACLES]
     assert not no_oracle, f"queries without oracle SQL: {no_oracle}"

@@ -41,13 +41,15 @@ def _run_counting_jobs(spark, eng):
 def test_full_run_and_text_byte_identity(spark, sf_dir, workdir):
     eng = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
     res, n_jobs = _run_counting_jobs(spark, eng)
-    # Spark jobs of a first run over sf0.001: 49; 55 with a second
-    # ledger commit in the process stage, which read its batch back,
-    # and ledger reads that inferred their schemas; 72 when finalize
+    # Spark jobs of a first run over sf0.001: 46; 49 with a second
+    # range exchange under the proxy ids and a two-step url dedup in
+    # finalize; 55 with a second ledger commit in the process stage,
+    # which read its batch back, and ledger reads that inferred their
+    # schemas; 72 when finalize
     # read each derived table back and the result dict re-read every
     # output; 91 with the retry stage's ledger re-read and the two
     # fixed-answer isEmpty probes
-    assert n_jobs <= 49
+    assert n_jobs <= 46
 
     # every page processed
     led = res["ledger"]
@@ -91,10 +93,11 @@ def test_resume_skips_processed(spark, sf_dir, workdir):
     # second run: everything already 'yes' -> process stage sees 0 rows
     eng2 = Engine(JobConf(sf_dir=sf_dir, workdir=workdir))
     res2, n_jobs = _run_counting_jobs(spark, eng2)
-    # Spark jobs of the resume: 47; 54 with two ledger commits and
-    # schema-inferring ledger reads, 62 when finalize read each derived
-    # table back and the result dict re-read every output
-    assert n_jobs <= 47
+    # Spark jobs of the resume: 45; 47 with a second range exchange
+    # under the proxy ids and a two-step url dedup; 54 with two ledger
+    # commits and schema-inferring ledger reads, 62 when finalize read
+    # each derived table back and the result dict re-read every output
+    assert n_jobs <= 45
     m = eng2.get_metrics(spark)
     second = m.where((F.col("run_id") == eng2.run_id) &
                      (F.col("stage") == "process"))

@@ -57,13 +57,24 @@ def test_dedup_uses_partial_aggregation(spark, sf_dir):
 
 
 def test_knn_prefilters_before_window(spark, sf_dir):
-    from optimizerasters_spark.contract import KNN_QUERIES
-    out = spatial.knn_per_query(synth_pages(spark, sf_dir), KNN_QUERIES,
-                                k=5, radius_md=1000)
-    plan = _plan(out)
-    # bbox predicate must sit below the join (pages filtered pre-shuffle)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "Window" in plan
+    """kNN probes the broadcast cell cover of the query radius boxes:
+    the pages reach the probe with no Exchange, and the per-query
+    Window, with the one hash Exchange on query_id, sits above the
+    probe and sorts its candidate rows only."""
+    from optimizerasters_spark.contract import q_knn_per_cell
+    df = q_knn_per_cell(spark, sf_dir)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple")
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "NestedLoopJoin" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    # tree print, top down: Window, its query_id Exchange, the probe,
+    # the pages scan, then the broadcast cover
+    w, ex = plan.find("Window ["), plan.find("Exchange hashpartitioning")
+    bhj, bc = plan.find("BroadcastHashJoin"), plan.find("BroadcastExchange")
+    assert -1 < w < ex < bhj < bc, plan
+    assert "hashpartitioning(query_id" in plan[ex:bhj], plan
+    assert "Exchange" not in plan[bhj:bc], plan
 
 
 def test_top_tokens_uses_take_ordered(spark, sf_dir):
@@ -75,29 +86,57 @@ def test_top_tokens_uses_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_proxy_csv_no_global_window_over_manifest(spark, sf_dir):
-    """Dense id assignment must not globally sort the manifest: the
-    manifest-sized window is partitioned by _pid (parallel), the only
-    single-partition stage consumes the per-partition counts AGGREGATE
-    (O(#partitions) rows), and the shared exchange under both branches
-    is computed once (ReusedExchange)."""
-    from optimizerasters_spark.contract import q_proxy_csv
-    df = q_proxy_csv(spark, sf_dir)
-    df.collect()  # let AQE finalize so reuse shows in the executed plan
+def _scanned_rdd_ids(df) -> list[int]:
+    """Ids of the RDDs that df's executed (final AQE) plan scans, one
+    per scan node, through query stages and reused exchanges."""
+    ids = []
+
+    def walk(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "RDDScanExec":
+            ids.append(node.rdd().id())
+        elif kind == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            walk(node.plan())
+        else:
+            kids = node.children()
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return ids
+
+
+def _assert_one_partition_assignment(df):
+    """The running sum's two branches, the per-_pid window and the
+    per-_pid totals, read ONE materialized range-partition assignment:
+    the final plan scans one checkpointed RDD twice and holds no range
+    Exchange of its own (a second one would sample its own bounds).
+    The manifest-sized window is partitioned by _pid, and the only
+    single-partition stage consumes the per-partition totals AGGREGATE
+    (O(#partitions) rows), never the input relation."""
+    df.collect()  # let AQE finalize the executed plan
+    ids = _scanned_rdd_ids(df)
+    assert len(ids) == 2 and len(set(ids)) == 1, ids
     executed = df._jdf.queryExecution().executedPlan().toString()
     final = executed.split("== Initial Plan ==")[0]
-    assert "ReusedExchange" in final or "tableCacheQueryStage" \
-        in final, final
-    # the big-relation window is partitioned by _pid, never global
+    assert "rangepartitioning" not in final, final
     assert "], [_pid" in final, final
-    # the only single-partition stage consumes the per-partition counts
-    # aggregate, never the manifest relation
     sp = final.find("Exchange SinglePartition")
     assert sp != -1
     nxt = final.find("Exchange", sp + 10)
     segment = final[sp:nxt] if nxt != -1 else final[sp:]
     assert "HashAggregate" in segment, final
     assert "FileScan" not in segment, final
+    assert "ExistingRDD" not in segment, final
+
+
+def test_proxy_csv_no_global_window_over_manifest(spark, sf_dir):
+    """Dense proxy ids are a running count: no global sort of the
+    manifest, and one partition assignment feeds both branches."""
+    from optimizerasters_spark.contract import q_proxy_csv
+    _assert_one_partition_assignment(q_proxy_csv(spark, sf_dir))
 
 
 def test_pip_left_join_single_scan_zero_page_shuffle(spark, sf_dir):
@@ -130,25 +169,11 @@ def test_pip_left_join_single_scan_zero_page_shuffle(spark, sf_dir):
 
 
 def test_distributed_prefix_sum_no_global_window(spark, sf_dir):
-    """The distributed cumulative form's only partition-less windows run
-    over the tiny per-partition totals aggregate, never the event
-    relation, and the range Exchange is computed once (ReusedExchange)."""
-    from optimizerasters_spark.contract import q_free_space_scan_dist
-    df = q_free_space_scan_dist(spark, sf_dir)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    final = executed.split("== Initial Plan ==")[0]
-    assert "ReusedExchange" in final, final
-    # the big-relation window is partitioned by _pid (parallel)
-    assert "], [_pid" in final, final
-    # the only single-partition stage consumes the per-partition totals
-    # AGGREGATE (O(#partitions) rows), never the events relation
-    sp = final.find("Exchange SinglePartition")
-    assert sp != -1
-    nxt = final.find("Exchange", sp + 10)
-    segment = final[sp:nxt] if nxt != -1 else final[sp:]
-    assert "HashAggregate" in segment, final
-    assert "FileScan" not in segment, final
+    """The free-space scan's only partition-less windows run over the
+    tiny per-partition totals aggregate, never the event relation, and
+    one partition assignment feeds both branches."""
+    from optimizerasters_spark.contract import q_free_space_scan
+    _assert_one_partition_assignment(q_free_space_scan(spark, sf_dir))
 
 
 # ArrowEvalPython nodes per ANN plan: one per vector kernel (ivf_pq_topk

@@ -183,3 +183,49 @@ def test_shingle_extractor_matches_python_shingler(spark):
             hashlib.md5(" ".join(toks[i:i + 4]).encode("utf-8")).hexdigest()
             for i in range(len(toks) - 3)]
         assert r["w4"] == want, t
+
+
+def test_running_sum_and_proxy_ids_match_python_reference(spark):
+    """``manifest.proxy_csv_rows``' ids and ``windows.running_sum``'s
+    ``_cum`` equal a Python rank and prefix sum on 24,000 seeded rows
+    whose input order is a hash-shuffle output, with AQE partition
+    coalescing off and on. The two-phase sum adds per-partition offsets
+    to per-partition running totals, so both must come from one range
+    partitioning: a second range exchange samples its own bounds, and
+    mixing the two gives wrong and duplicate ids."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from optimizerasters_spark.operators import manifest, windows
+    rng = random.Random(22)
+    rows = [(f"L0/{k}", rng.randrange(1, 10**6))
+            for k in rng.sample(range(10**9), 24000)]
+    df = (spark.createDataFrame(rows, "tile_id string, amt bigint")
+          .repartition(8, "amt")
+          .withColumn("source_uri", F.concat(F.lit("tiles/"), "tile_id")))
+    ordered = sorted(rows)
+    want_id = {t: 1000 + i for i, (t, _) in enumerate(ordered, 1)}
+    want_cum, run = {}, 0
+    for t, a in ordered:
+        run += a
+        want_cum[t] = run
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for coalesce in ("false", "true"):
+            spark.conf.set(key, coalesce)
+            got_id = {}
+            for r in manifest.proxy_csv_rows(df, id_offset=1000).collect():
+                oid, uri = r["csv_row"].split(";", 1)
+                assert int(oid) == r["object_id"]
+                got_id[uri[len("tiles/"):]] = r["object_id"]
+            assert got_id == want_id, coalesce
+            got = windows.running_sum(df, ["tile_id"], F.col("amt")) \
+                .select("tile_id", "_cum", "_total").collect()
+            assert len(got) == len(rows)
+            assert {r["tile_id"]: r["_cum"] for r in got} == want_cum, \
+                coalesce
+            assert {r["_total"] for r in got} == {run}
+    finally:
+        spark.conf.set(key, saved)

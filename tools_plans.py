@@ -103,8 +103,9 @@ def main():
         ("Corpus top-k (TakeOrderedAndProject — per-partition heaps; "
          "the only Window ranks the k survivors)",
          _top_tokens_plan(spark, sf, plan)),
-        ("Proxy CSV dense ids (partition-offset zip-with-index; the only "
-         "partition-less Window is over the O(#partitions) counts table)",
+        ("Proxy CSV dense ids (a running count over one checkpointed "
+         "range-partition assignment; the only partition-less Window is "
+         "over the O(#partitions) totals table)",
          _proxy_csv_plan(spark, sf, plan)),
         ("k-means assignment (ONE Arrow projection: NumPy nearest "
          "centroid per batch against the collected centroids — no join, "
