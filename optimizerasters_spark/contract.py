@@ -291,7 +291,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _read_spread(spark, f"{sf_dir}/documents.parquet", "doc_id")
-    return dedup.lsh_candidate_pairs(d, num_hashes=8, bands=4, shingle_n=3) \
+    return dedup.lsh_candidate_pairs(d) \
         .select(F.col("doc_a").cast("bigint").alias("doc_a"),
                 F.col("doc_b").cast("bigint").alias("doc_b"))
 
@@ -933,7 +933,7 @@ FROM (SELECT til_name,
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _read_spread(spark, f"{sf_dir}/documents.parquet", "doc_id")
-    return dedup.ngram_jaccard_pairs(d, num_hashes=8, bands=4, shingle_n=3)
+    return dedup.ngram_jaccard_pairs(d)
 
 
 def q_lang_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2513,7 +2513,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from optimizerasters_spark.operators import text as T
     d = _read_spread(spark, f"{sf_dir}/documents.parquet", "doc_id")
     bench = d.where(F.col("doc_id") % 97 == 0).select("doc_id", "text")
-    return T.ngram_contamination(d, bench, n=5)
+    return T.ngram_contamination(d, bench)
 
 
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,10 +9,12 @@
   same single aggregate.
 * ``lsh_candidate_pairs`` — MinHash+LSH near-dup: word shingles ->
   per-hash min of md5(seed||shingle) -> band buckets -> bucket
-  equi-join, every caller's bands from one builder over an exploded
-  (doc_id, s) table. Shingles, the md5 mins and the band keys are all
-  JVM codegen: the shingles are one regex extraction per text
-  (``shingles_col``), so no stage starts a Python worker.
+  equi-join. One geometry (the module constants ``SHINGLE_N``,
+  ``NUM_HASHES``, ``BANDS``) and one path: every entry point's bands
+  come from ``_bands`` over one materialized (doc_id, _sh) shingle-set
+  table. Shingles, the md5 mins and the band keys are all JVM codegen:
+  the shingles are one regex extraction per text (``shingles_col``),
+  so no stage starts a Python worker.
 * ``jaccard_pairs`` — the one exact n-gram Jaccard: candidate pairs
   joined to a (doc_id, _sh) shingle-set table, one array_intersect.
 * ``paragraph_dedup`` / ``boilerplate_paragraphs`` /
@@ -31,6 +33,15 @@ from pyspark.sql.window import Window
 
 from optimizerasters_spark.operators import text as T
 
+# The near-dup geometry, fixed: MinHash over word SHINGLE_N-shingles,
+# NUM_HASHES md5 mins cut into BANDS bands; decontamination over word
+# GRAM_N-grams. CorpusBuilder persists its bands under this geometry,
+# so changing it orphans the bands of every existing workdir.
+SHINGLE_N = 3
+GRAM_N = 5
+NUM_HASHES = 8
+BANDS = 4
+
 
 def dedup_latest(pages: DataFrame,
                  key: str = "url",
@@ -47,8 +58,14 @@ def dedup_latest(pages: DataFrame,
     max_by's aggregation buffer carries the ordering key NEXT TO the
     value struct, duplicating both fields through the shuffle (guide
     §2.3 'shuffle fewer bytes'; measured −19 % on the 200M-row
-    flagship dedup). doc_id is unique per row in every corpus this
-    engine builds, so comparison never reaches the payload fields."""
+    flagship dedup).
+
+    Ties: the struct compares (order, -doc_id) first, and a NULL order
+    sorts below any value, so a NULL ``order`` loses to any non-NULL one
+    and a key whose orders are all NULL keeps its lowest doc_id — the
+    row max_by(row, (order, -doc_id)) keeps. A full (key, order,
+    doc_id) tie falls through to the payload fields in column order:
+    the greatest payload wins, whatever the input order."""
     others = [c for c in pages.columns if c not in (key, order, "doc_id")]
     packed = F.struct(F.col(order), (-F.col("doc_id")).alias("_inv"),
                       *[F.col(c) for c in others])
@@ -102,7 +119,7 @@ def _windows(low: Column, n: int) -> Column:
     return F.regexp_extract_all(low, F.lit(pattern), 1)
 
 
-def shingles_col(text_col, n: int = 3, full_only: bool = False):
+def shingles_col(text_col, n: int = SHINGLE_N, full_only: bool = False):
     """Word n-gram shingles of the lowercased text as an array<string>
     (distinct, first-occurrence order). Tokens are split(" ") tokens,
     empty ones kept. A doc shorter than n tokens gives its one
@@ -122,52 +139,48 @@ def shingles_col(text_col, n: int = 3, full_only: bool = False):
         .otherwise(F.array_distinct(_windows(low, n)))
 
 
-def text_sets_col(text_col, shingle_n: int = 3, gram_n: int = 5):
-    """struct<sh, grams>: a doc's distinct ``shingle_n``-shingles (as
-    :func:`shingles_col`) and its distinct full ``gram_n``-grams (as
-    ``shingles_col(.., full_only=True)``, the decontamination grams) —
-    the corpus build's near-dup and decontamination stages read both
-    sets from one materialized table instead of re-deriving them."""
-    return F.struct(shingles_col(text_col, shingle_n).alias("sh"),
-                    shingles_col(text_col, gram_n, full_only=True)
+def text_sets_col():
+    """struct<sh, grams>: a doc's distinct ``SHINGLE_N``-shingles (as
+    :func:`shingles_col`) and its distinct full ``GRAM_N``-grams (as
+    ``shingles_col(.., full_only=True)``, the decontamination grams) of
+    its ``text`` — the corpus build's near-dup and decontamination
+    stages read both sets from one materialized table instead of
+    re-deriving them."""
+    return F.struct(shingles_col("text").alias("sh"),
+                    shingles_col("text", GRAM_N, full_only=True)
                     .alias("grams"))
 
 
-def ngram_jaccard_pairs(docs: DataFrame, num_hashes: int = 8,
-                        bands: int = 4, shingle_n: int = 3,
-                        text_col: str = "text",
-                        min_jaccard_micro: int = 0,
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """The (doc_id, _sh) shingle-set table of ``docs``' text: one
+    :func:`shingles_col` projection, materialized once with a lazy local
+    checkpoint, which the signatures and both sides of any join over
+    them read. A local checkpoint lives in executor storage and is NOT
+    fault-tolerant: a lost executor loses it and the query fails.
+    Cluster runs use ``training_kept``'s ``reps_path``, which writes the
+    same table to parquet (the durable form)."""
+    return (docs.select("doc_id", shingles_col("text").alias("_sh"))
+            .localCheckpoint(eager=False))
+
+
+def ngram_jaccard_pairs(docs: DataFrame, min_jaccard_micro: int = 0,
                         max_bucket: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard on LSH candidate pairs (doc_a < doc_b):
-    :func:`sets_jaccard_pairs` over the docs' shingle sets.
+    :func:`sets_jaccard_pairs` over :func:`_shingle_sets` of ``docs``.
     ``max_bucket`` passes through to the LSH stage (degenerate-bucket
     n² guard); pair it with lsh_oversized_buckets so whatever the cap
-    drops is reported, never silent.
-
-    The shingle-set table is built by one :func:`shingles_col`
-    projection and materialized once with a lazy local checkpoint,
-    which signatures and both sides of the verify join read. A local
-    checkpoint lives in executor storage and is NOT fault-tolerant: a
-    lost executor loses it and the query fails. Cluster runs use
-    ``training_kept``'s ``reps_path``, which writes the same table to
-    parquet (the durable form)."""
-    sets = (docs.select("doc_id",
-                        shingles_col(text_col, shingle_n).alias("_sh"))
-            .localCheckpoint(eager=False))
-    return sets_jaccard_pairs(sets, num_hashes, bands, min_jaccard_micro,
+    drops is reported, never silent."""
+    return sets_jaccard_pairs(_shingle_sets(docs), min_jaccard_micro,
                               max_bucket)
 
 
-def sets_jaccard_pairs(sets: DataFrame, num_hashes: int = 8,
-                       bands: int = 4, min_jaccard_micro: int = 0,
+def sets_jaccard_pairs(sets: DataFrame, min_jaccard_micro: int = 0,
                        max_bucket: int | None = None) -> DataFrame:
     """:func:`ngram_jaccard_pairs` over a precomputed (doc_id, _sh)
-    shingle-set table: MinHash/LSH candidates from its exploded sets,
+    shingle-set table: MinHash/LSH candidates from its :func:`_bands`,
     then :func:`jaccard_pairs` back to the same table. Materialize
     ``sets`` first; every consumer here re-reads it."""
-    pairs = _candidate_pairs(
-        _bands(sets.select("doc_id", F.explode("_sh").alias("s")),
-               num_hashes, bands), max_bucket)
+    pairs = _candidate_pairs(_bands(sets), max_bucket)
     return jaccard_pairs(pairs, sets) \
         .where(F.col("jaccard_micro") >= min_jaccard_micro)
 
@@ -197,45 +210,37 @@ def jaccard_pairs(pairs: DataFrame, sets: DataFrame) -> DataFrame:
                     jaccard.alias("jaccard_micro")))
 
 
-def _bands(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(doc_id, band_id, band_key) LSH bands of an exploded (doc_id, s)
-    shingle table.
+def _bands(sets: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) LSH bands of a (doc_id, _sh)
+    shingle-set table: ``BANDS`` bands of ``NUM_HASHES // BANDS``
+    hashes each, the band key the concat of its hashes.
 
     hash_i(doc) = min over shingles of md5(i || ':' || shingle). md5 output
     is identical across engines, making the signature oracle-checkable.
     One groupBy(doc_id) with one MIN per hash seed: the mins partial-
-    aggregate map-side (shuffle carries num_hashes hex strings per doc
+    aggregate map-side (shuffle carries NUM_HASHES hex strings per doc
     per map task) and the md5 calls run in whole-stage codegen — nested
     array lambdas would evaluate interpreted."""
-    rpb = num_hashes // bands
+    rpb = NUM_HASHES // BANDS
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     ]
-    sigs = sh.groupBy("doc_id").agg(*aggs).select(
-        "doc_id",
-        F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"))
+    sigs = (sets.select("doc_id", F.explode("_sh").alias("s"))
+            .groupBy("doc_id").agg(*aggs).select(
+                "doc_id",
+                F.array(*[F.col(f"h{i}") for i in range(NUM_HASHES)])
+                .alias("sig")))
     return sigs.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda b: F.struct(
                     b.cast("int").alias("band_id"),
                     F.concat_ws("|", F.slice(F.col("sig"), b * rpb + 1, rpb))
                      .alias("band_key")))).alias("band"),
     ).select("doc_id", "band.band_id", "band.band_key")
-
-
-def _doc_bands(docs: DataFrame, num_hashes: int, bands: int,
-               shingle_n: int, text_col: str) -> DataFrame:
-    """:func:`_bands` of ``docs``' shingles. The explode takes the
-    :func:`shingles_col` expression itself: exploding a projected
-    shingle column makes Spark infer a size(...) > 0 filter that
-    evaluates the regex extraction a second time."""
-    return _bands(docs.select(
-        "doc_id", F.explode(shingles_col(text_col, shingle_n)).alias("s")),
-        num_hashes, bands)
 
 
 def _candidate_pairs(banded: DataFrame, max_bucket: int | None
@@ -256,13 +261,11 @@ def _candidate_pairs(banded: DataFrame, max_bucket: int | None
             .distinct())
 
 
-def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
-                        shingle_n: int = 3,
-                        text_col: str = "text",
-                        max_bucket: int | None = None) -> DataFrame:
-    """Near-dup candidate pairs (doc_a < doc_b) sharing >= 1 LSH band.
+def lsh_candidate_pairs(docs: DataFrame, max_bucket: int | None = None
+                        ) -> DataFrame:
+    """Near-dup candidate pairs (doc_a < doc_b) sharing >= 1 LSH band of
+    :func:`_shingle_sets` of ``docs``.
 
-    bands of rows_per_band hashes each; band key = concat of its hashes.
     The band explode shuffles on (band_id, band_key) — uniform unless
     true near-dups exist, which is exactly the skew we want to find.
 
@@ -273,20 +276,15 @@ def lsh_candidate_pairs(docs: DataFrame, num_hashes: int = 8, bands: int = 4,
     partitioned count — the same exchange the self-join needs anyway).
     The cap is opt-in and NEVER silent: ``lsh_oversized_buckets`` with
     the same arguments returns exactly what was dropped for reporting."""
-    return _candidate_pairs(
-        _doc_bands(docs, num_hashes, bands, shingle_n, text_col),
-        max_bucket)
+    return _candidate_pairs(_bands(_shingle_sets(docs)), max_bucket)
 
 
-def lsh_oversized_buckets(docs: DataFrame, num_hashes: int = 8,
-                          bands: int = 4, shingle_n: int = 3,
-                          text_col: str = "text",
-                          max_bucket: int = 1000) -> DataFrame:
+def lsh_oversized_buckets(docs: DataFrame, max_bucket: int = 1000
+                          ) -> DataFrame:
     """The buckets a ``max_bucket`` cap would drop — (band_id, band_key,
     n_docs). Report or route these to a dedicated handling pass (exact
     dedup already catches byte-identical members); never cap silently."""
-    banded = _doc_bands(docs, num_hashes, bands, shingle_n, text_col)
-    return (banded.groupBy("band_id", "band_key")
+    return (_bands(_shingle_sets(docs)).groupBy("band_id", "band_key")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .where(F.col("n_docs") > max_bucket))
 

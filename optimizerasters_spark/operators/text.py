@@ -311,21 +311,20 @@ def repetition_quality(docs: DataFrame, text_col: str = "text",
                  .cast("bigint").alias("top_bigram_ratio_micro")))
 
 
-def benchmark_hits(grams: DataFrame, benchmark: DataFrame, n: int = 5,
-                   text_col: str = "text") -> DataFrame:
+def benchmark_hits(grams: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(doc_id, n_hits) for every doc of ``grams`` — (doc_id, grams:
-    its distinct full word ``n``-grams, as
-    ``dedup.shingles_col(.., n, full_only=True)`` builds them) — that
-    shares at least one n-gram with ``benchmark``'s ``text_col``;
+    its distinct full word ``dedup.GRAM_N``-grams, as
+    ``dedup.shingles_col(.., GRAM_N, full_only=True)`` builds them) —
+    that shares at least one n-gram with ``benchmark``'s ``text``;
     n_hits counts the shared distinct n-grams. Clean docs are absent,
     so the result is the distinct dirty-id set.
 
     The one decontamination implementation: the benchmark's n-gram set
     is tiny by definition, so the exploded doc n-grams meet it in a
     broadcast hash semi-join, then one partial-agg count per doc."""
-    from optimizerasters_spark.operators.dedup import shingles_col
+    from optimizerasters_spark.operators.dedup import GRAM_N, shingles_col
     bench_grams = (benchmark
-                   .select(F.explode(shingles_col(text_col, n,
+                   .select(F.explode(shingles_col("text", GRAM_N,
                                                   full_only=True))
                            .alias("g"))
                    .distinct())
@@ -335,23 +334,24 @@ def benchmark_hits(grams: DataFrame, benchmark: DataFrame, n: int = 5,
             .agg(F.count(F.lit(1)).alias("n_hits")))
 
 
-def ngram_contamination(docs: DataFrame, benchmark: DataFrame, n: int = 5,
-                        text_col: str = "text") -> DataFrame:
+def ngram_contamination(docs: DataFrame, benchmark: DataFrame
+                        ) -> DataFrame:
     """Benchmark decontamination: flag documents sharing any word
-    ``n``-gram with a benchmark/eval set — the filter every serious
-    training corpus runs so test questions never leak into training
-    (the n-gram-overlap method used for GPT-3/PaLM-style decontam).
+    ``dedup.GRAM_N``-gram with a benchmark/eval set — the filter every
+    serious training corpus runs so test questions never leak into
+    training (the n-gram-overlap method used for GPT-3/PaLM-style
+    decontam).
 
     Returns every doc with n_hits (0 for clean docs) and the
     contaminated flag: :func:`benchmark_hits` over the docs' n-grams,
     left-joined back to every doc. Gram construction is the regex
-    extraction shared with the MinHash stage (dedup.shingles_col) —
-    full windows only, exactly the old size>=n gate."""
-    from optimizerasters_spark.operators.dedup import shingles_col
+    extraction shared with the MinHash stage (dedup.shingles_col),
+    full windows only: a doc shorter than GRAM_N tokens has none."""
+    from optimizerasters_spark.operators.dedup import GRAM_N, shingles_col
     grams = docs.select(
         "doc_id",
-        shingles_col(text_col, n, full_only=True).alias("grams"))
-    hits = benchmark_hits(grams, benchmark, n, text_col)
+        shingles_col("text", GRAM_N, full_only=True).alias("grams"))
+    hits = benchmark_hits(grams, benchmark)
     return (docs.select("doc_id")
             .join(hits, "doc_id", "left")
             .select("doc_id",

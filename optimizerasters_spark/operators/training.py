@@ -40,8 +40,8 @@ def _survivor_sets(docs: DataFrame, reps_path: str | None,
     ``grams``, ``_grams`` (distinct full 5-grams for decontamination).
     ``reps_path`` writes the table to parquet and re-reads it (durable);
     otherwise it is a lazy local checkpoint, which a lost executor
-    loses (see dedup.ngram_jaccard_pairs)."""
-    sets = D.text_sets_col("text") if grams else \
+    loses (see dedup._shingle_sets)."""
+    sets = D.text_sets_col() if grams else \
         F.struct(D.shingles_col("text").alias("sh"))
     feats = D.dedup_exact_rows(docs).withColumn("_sets", sets)
     if reps_path is not None:

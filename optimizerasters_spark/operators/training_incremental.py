@@ -1,8 +1,8 @@
 """Incremental corpus build: the training-data pipeline as a RESUMABLE
 batch-ingest engine. It runs on the one-shot pipeline's kernels
-(operators/dedup.py: ``dedup_exact_rows``, ``shingles_col``, the LSH
-band builder and ``jaccard_pairs``) and keeps its state on parquet like
-engine.py's level-0 store.
+(operators/dedup.py: ``dedup_exact_rows``, ``shingles_col``, ``_bands``
+and ``jaccard_pairs``, under dedup's one fixed LSH geometry) and keeps
+its state on parquet like engine.py's level-0 store.
 
 A 100 TB corpus is not deduplicated in one job — crawls arrive in
 batches, and each batch must dedup against everything ACCEPTED so far
@@ -59,12 +59,9 @@ _SCHEMAS = {"shas": "text_sha STRING",
 class CorpusBuilder:
     """CorpusBuilder(workdir).ingest(batch_df) -> per-batch stats."""
 
-    def __init__(self, workdir: str, jaccard_micro: int = T.JACCARD_MICRO,
-                 num_hashes: int = 8, bands: int = 4, shingle_n: int = 3):
+    def __init__(self, workdir: str, jaccard_micro: int = T.JACCARD_MICRO):
         self.workdir = workdir
         self.jaccard_micro = jaccard_micro
-        self.num_hashes, self.bands, self.shingle_n = \
-            num_hashes, bands, shingle_n
         # test hook: raise after the named state write ("shas" |
         # "bands" | "kept") to simulate a crash inside the write window
         self._crash_after: str | None = None
@@ -110,15 +107,13 @@ class CorpusBuilder:
         old_shas = self._read(spark, "shas")
         if old_shas is not None:
             reps = reps.join(old_shas, "text_sha", "left_anti")
-        sets = (reps.withColumn("_sh", D.shingles_col("text", self.shingle_n))
+        sets = (reps.withColumn("_sh", D.shingles_col("text"))
                 .localCheckpoint())
-        new_bands = D._bands(
-            sets.select("doc_id", F.explode("_sh").alias("s")),
-            self.num_hashes, self.bands)
+        new_bands = D._bands(sets)
 
         # 2. intra-batch near-dups: the batch rule verbatim
         victims = D.sets_jaccard_pairs(
-            sets.select("doc_id", "_sh"), self.num_hashes, self.bands,
+            sets.select("doc_id", "_sh"),
             min_jaccard_micro=self.jaccard_micro).select("doc_b")
 
         # 3. cross-state near-dups: new docs meeting ACCEPTED docs in a
@@ -133,8 +128,7 @@ class CorpusBuilder:
             old_sets = self._read(spark, "kept").join(
                 cand.select(F.col("doc_a").alias("doc_id")), "doc_id",
                 "left_semi").select(
-                    "doc_id", D.shingles_col("text", self.shingle_n)
-                    .alias("_sh"))
+                    "doc_id", D.shingles_col("text").alias("_sh"))
             both = sets.select("doc_id", "_sh").unionByName(old_sets)
             victims = victims.unionByName(
                 D.jaccard_pairs(cand, both)

@@ -325,7 +325,7 @@ def test_decontaminate_broadcasts_benchmark_ngrams(spark, sf_dir):
     from optimizerasters_spark.operators import text as T
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = d.where(F.col("doc_id") % 97 == 0).select("doc_id", "text")
-    plan = _plan(T.ngram_contamination(d, bench, n=5))
+    plan = _plan(T.ngram_contamination(d, bench))
     assert "BroadcastHashJoin" in plan, plan
     # gram construction is the MinHash stage's regex extraction: no
     # Python evaluation of either form
@@ -479,17 +479,22 @@ def test_corpus_pipeline_scans_pages_once_one_text_pass(spark, sf_dir,
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_lsh_candidate_pairs_one_shingle_extraction_per_side(spark,
-                                                             sf_dir):
-    """The docs-side band builder explodes the shingle expression
-    itself, so each self-join side evaluates the regex extraction once:
-    exactly two regexp_extract_all calls in the plan, and no Python
-    node. Exploding a projected shingle column instead lets Spark infer
-    a size(...) > 0 filter that evaluates the extraction again (six
-    calls)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = dedup.lsh_candidate_pairs(docs)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple")
-    assert plan.count("regexp_extract_all(") == 2, plan
-    assert "ArrowEval" not in plan and "BatchEvalPython" not in plan, plan
+def test_lsh_candidate_pairs_reuses_signature_exchange(spark, sf_dir):
+    """The LSH self-join reads one materialized shingle-set table: in
+    the final AQE plan of ``q_minhash_lsh_pairs`` (input hash-spread on
+    doc_id) no regex extraction runs above the checkpoint scan, the one
+    ``Scan ExistingRDD`` feeds both join sides, and the second side
+    reuses the exchange that carries the md5 mins, so the 8 mins run
+    once per doc. No Python node."""
+    from optimizerasters_spark.contract import q_minhash_lsh_pairs
+    out = q_minhash_lsh_pairs(spark, sf_dir)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan[plan.index("== Final Plan =="):
+                 plan.index("== Initial Plan ==")]
+    assert "regexp_extract_all(" not in final, final
+    assert final.count("Scan ExistingRDD") == 1, final
+    reused = [ln for ln in final.splitlines() if "ReusedExchange" in ln]
+    assert len(reused) == 1 and "min#" in reused[0], final
+    assert "ArrowEval" not in final and "BatchEvalPython" not in final, \
+        final

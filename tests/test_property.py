@@ -166,7 +166,7 @@ def test_shingle_extractor_matches_python_shingler(spark):
         dedup.shingles_col("text", 1).alias("s1"),
         dedup.shingles_col("text", 3).alias("s3"),
         dedup.shingles_col("text", 5, full_only=True).alias("g5"),
-        dedup.text_sets_col("text").alias("sets"),
+        dedup.text_sets_col().alias("sets"),
         F.transform(dedup._windows(F.lower("text"), 4), F.md5)
         .alias("w4")).collect()
     assert len(rows) == len(texts)

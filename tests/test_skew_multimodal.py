@@ -216,6 +216,51 @@ def test_exact_dedup_survivors_on_dirty_text(spark):
                   key=str) == [r for r in expect if r[1] is not None]
 
 
+_PAGES = "url string, doc_id bigint, warc_epoch bigint, text string, " \
+         "lang string"
+
+
+def test_dedup_latest_null_epochs_match_max_by(spark):
+    """A NULL warc_epoch loses to any non-NULL one (negative included),
+    a url whose epochs are all NULL keeps its lowest doc_id, and an
+    epoch tie keeps the lowest doc_id: the rows the earlier
+    max_by(row, (warc_epoch, -doc_id)) form keeps."""
+    from optimizerasters_spark.operators import dedup
+    pages = spark.createDataFrame(
+        [("a", 10, None, "a10", "en"), ("a", 11, 5, "a11", "de"),
+         ("a", 12, None, "a12", "fr"),
+         ("b", 21, None, "b21", "en"), ("b", 20, None, "b20", "de"),
+         ("b", 22, None, None, "fr"),
+         ("c", 31, 7, "c31", "en"), ("c", 30, 7, "c30", "de"),
+         ("d", 40, None, "d40", "en"), ("d", 41, -3, "d41", "de")],
+        _PAGES).repartition(3)
+    others = [c for c in pages.columns if c != "url"]
+    order = F.struct("warc_epoch", (-F.col("doc_id")).alias("_inv"))
+    max_by = (pages.groupBy("url")
+              .agg(F.max_by(F.struct(*others), order).alias("_row"))
+              .select("url", *[F.col(f"_row.{c}").alias(c)
+                               for c in others]))
+    got = sorted(map(tuple, dedup.dedup_latest(pages).collect()))
+    assert got == sorted(map(tuple, max_by.collect()))
+    assert [r[1] for r in got] == [11, 20, 30, 41]
+
+
+def test_dedup_latest_full_tie_is_order_independent(spark):
+    """Rows tied on (url, warc_epoch, doc_id) resolve on the payload
+    fields in column order, so the same row wins under two input
+    orders: the greatest (text, lang), NULL text lowest."""
+    from optimizerasters_spark.operators import dedup
+    rows = [("u", 1, 5, "alpha", "de"), ("u", 1, 5, "zeta", "en"),
+            ("u", 1, 5, None, "fr"), ("u", 1, 5, "zeta", "de"),
+            ("u", 2, 5, "zzz", "en"), ("v", 3, None, "v", "en")]
+    one = spark.createDataFrame(rows, _PAGES).repartition(4)
+    two = spark.createDataFrame(rows[::-1], _PAGES).coalesce(1)
+    want = [("u", 1, 5, "zeta", "en"), ("v", 3, None, "v", "en")]
+    for pages in (one, two):
+        assert sorted(map(tuple, dedup.dedup_latest(pages).collect())) \
+            == want
+
+
 def test_dup_components_chains_and_isolated_families(spark):
     """Explicit graph: chain 1-2-3 (A~B, B~C, never A~C), pair 5-6,
     singleton-free by construction — labels converge to the family
