@@ -54,11 +54,7 @@ def main() -> None:
     from optimizerasters_spark.pages import synth_pages
     from optimizerasters_spark.session import get_spark
 
-    if args.master:
-        spark = get_spark("oraspark-corpus", master=args.master)
-    else:
-        os.environ["SPARK_GRAFT_NO_MASTER"] = "1"
-        spark = get_spark("oraspark-corpus")
+    spark = get_spark("oraspark-corpus", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
 
     pages = synth_pages(spark, args.sf_dir)

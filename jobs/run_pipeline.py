@@ -38,11 +38,7 @@ def main() -> None:
     from optimizerasters_spark import Engine, JobConf
     from optimizerasters_spark.session import get_spark
 
-    if args.master:
-        spark = get_spark("oraspark-pipeline", master=args.master)
-    else:
-        os.environ["SPARK_GRAFT_NO_MASTER"] = "1"
-        spark = get_spark("oraspark-pipeline")
+    spark = get_spark("oraspark-pipeline", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
 
     conf = JobConf(sf_dir=args.sf_dir, workdir=args.workdir,

@@ -44,11 +44,7 @@ def main() -> None:
     from optimizerasters_spark.operators import training
     from optimizerasters_spark.session import get_spark
 
-    if args.master:
-        spark = get_spark("oraspark-training", master=args.master)
-    else:
-        os.environ["SPARK_GRAFT_NO_MASTER"] = "1"
-        spark = get_spark("oraspark-training")
+    spark = get_spark("oraspark-training", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
 
     path = args.docs

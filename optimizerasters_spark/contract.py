@@ -19,14 +19,14 @@ from optimizerasters_spark.fixtures import (
     synth_ledger,
 )
 from optimizerasters_spark.pages import (
-    BOUNDARIES_CTE, HOT_LAT_MD, HOT_LON_MD, PAGES_CTE, WORLD_H, WORLD_W,
-    synth_boundaries, synth_pages,
+    BOUNDARIES_CTE, HOT_LAT_MD, HOT_LON_MD, PAGES_CTE, synth_boundaries,
+    synth_pages,
 )
+from optimizerasters_spark.tiling import BLOCK_SIZE, WORLD_H, WORLD_W
 from optimizerasters_spark.operators import (
     dedup, filters, groups, manifest, similarity, spatial, text, windows,
 )
 
-BLOCK = tiling.DEFAULT_BLOCK_SIZE
 PYRAMID_LEVELS = [0, 2, 4, 6, 8, 10]
 
 
@@ -76,8 +76,10 @@ _W = f"WITH {PAGES_CTE.strip()}"
 _WB = f"WITH {PAGES_CTE.strip()}, {BOUNDARIES_CTE.strip()}"
 
 _TILE_SQL = (
-    f"CAST(FLOOR(FLOOR(lon_md * {WORLD_W} / 360000) / {BLOCK}) AS INT) AS tile_x, "
-    f"CAST(FLOOR(FLOOR(lat_md * {WORLD_H} / 170000) / {BLOCK}) AS INT) AS tile_y"
+    f"CAST(FLOOR(FLOOR(lon_md * {WORLD_W} / 360000) / {BLOCK_SIZE}) "
+    "AS INT) AS tile_x, "
+    f"CAST(FLOOR(FLOOR(lat_md * {WORLD_H} / 170000) / {BLOCK_SIZE}) "
+    "AS INT) AS tile_y"
 )
 
 

@@ -41,53 +41,55 @@ SHINGLE_N = 3
 GRAM_N = 5
 NUM_HASHES = 8
 BANDS = 4
+PARA_SEP = "\n"    # paragraph separator of the paragraph dedups
 
 
-def dedup_latest(pages: DataFrame,
-                 key: str = "url",
-                 order: str = "warc_epoch") -> DataFrame:
-    """Keep the newest row per key (ties -> lowest doc_id).
+def dedup_latest(pages: DataFrame) -> DataFrame:
+    """Keep the newest row per url (ties -> lowest doc_id).
 
-    Implemented as groupBy + MAX of ONE packed struct rather than a
-    window: partial aggregation combines map-side, so the shuffle
-    carries one row per key per map task instead of every row — the
-    difference between OK and catastrophic on a 10^12-row crawl with
-    few duplicates. The ordering key (order, -doc_id) leads the struct,
-    so a plain lexicographic MAX reproduces max_by(row, (order,
-    -doc_id)) exactly while shuffling each of order/doc_id ONCE —
+    Implemented as groupBy + MAX of ONE packed struct rather than a window:
+    partial aggregation combines map-side, so the shuffle carries one
+    row per key per map task instead of every row — the difference
+    between OK and catastrophic on a 10^12-row crawl with few
+    duplicates. The ordering key (warc_epoch, -doc_id) leads the struct,
+    so a plain lexicographic MAX reproduces max_by(row, (warc_epoch,
+    -doc_id)) exactly while shuffling each of warc_epoch/doc_id ONCE —
     max_by's aggregation buffer carries the ordering key NEXT TO the
     value struct, duplicating both fields through the shuffle (guide
-    §2.3 'shuffle fewer bytes'; measured −19 % on the 200M-row
-    flagship dedup).
+    §2.3 'shuffle fewer bytes'; measured −19 % on the 200M-row flagship
+    dedup).
 
-    Ties: the struct compares (order, -doc_id) first, and a NULL order
-    sorts below any value, so a NULL ``order`` loses to any non-NULL one
-    and a key whose orders are all NULL keeps its lowest doc_id — the
-    row max_by(row, (order, -doc_id)) keeps. A full (key, order,
-    doc_id) tie falls through to the payload fields in column order:
-    the greatest payload wins, whatever the input order."""
-    others = [c for c in pages.columns if c not in (key, order, "doc_id")]
-    packed = F.struct(F.col(order), (-F.col("doc_id")).alias("_inv"),
+    Ties: the struct compares (warc_epoch, -doc_id) first, and a NULL
+    warc_epoch sorts below any value, so it loses to any non-NULL one
+    and a url whose epochs are all NULL keeps its lowest doc_id — the
+    row max_by(row, (warc_epoch, -doc_id)) keeps. A full (url,
+    warc_epoch, doc_id) tie falls through to the payload fields in
+    column order: the greatest payload wins, whatever the input
+    order."""
+    others = [c for c in pages.columns
+              if c not in ("url", "warc_epoch", "doc_id")]
+    packed = F.struct(F.col("warc_epoch"),
+                      (-F.col("doc_id")).alias("_inv"),
                       *[F.col(c) for c in others])
-    out = {order: F.col(f"_row.{order}").alias(order),
+    out = {"warc_epoch": F.col("_row.warc_epoch").alias("warc_epoch"),
            "doc_id": (-F.col("_row._inv")).alias("doc_id")}
     for c in others:
         out[c] = F.col(f"_row.{c}").alias(c)
-    return (pages.groupBy(key).agg(F.max(packed).alias("_row"))
-            .select(key, *[out[c] for c in pages.columns if c != key]))
+    return (pages.groupBy("url").agg(F.max(packed).alias("_row"))
+            .select("url", *[out[c] for c in pages.columns
+                             if c != "url"]))
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """One representative (min doc_id) per distinct sha256(text)."""
     return (docs
-            .withColumn("text_sha", F.sha2(F.col(text_col), 256))
+            .withColumn("text_sha", F.sha2(F.col("text"), 256))
             .groupBy("text_sha")
             .agg(F.min("doc_id").alias("doc_id"),
                  F.count(F.lit(1)).alias("dup_count")))
 
 
-def dedup_exact_rows(docs: DataFrame, text_col: str = "text"
-                     ) -> DataFrame:
+def dedup_exact_rows(docs: DataFrame) -> DataFrame:
     """The full rows of :func:`dedup_exact`'s representatives: per
     distinct sha256(text), the row with the min doc_id, in ``docs``'
     column order.
@@ -101,7 +103,7 @@ def dedup_exact_rows(docs: DataFrame, text_col: str = "text"
     payload = [c for c in docs.columns if c != "doc_id"]
     row = F.min(F.struct("doc_id", *payload)).alias("_row")
     return (docs.where(F.col("doc_id").isNotNull())
-            .groupBy(F.sha2(F.col(text_col), 256).alias("_sha"))
+            .groupBy(F.sha2(F.col("text"), 256).alias("_sha"))
             .agg(row)
             .select(*[F.col("_row")[c].alias(c) for c in docs.columns]))
 
@@ -163,15 +165,12 @@ def _shingle_sets(docs: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False))
 
 
-def ngram_jaccard_pairs(docs: DataFrame, min_jaccard_micro: int = 0,
-                        max_bucket: int | None = None) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, min_jaccard_micro: int = 0
+                        ) -> DataFrame:
     """Exact n-gram Jaccard on LSH candidate pairs (doc_a < doc_b):
-    :func:`sets_jaccard_pairs` over :func:`_shingle_sets` of ``docs``.
-    ``max_bucket`` passes through to the LSH stage (degenerate-bucket
-    n² guard); pair it with lsh_oversized_buckets so whatever the cap
-    drops is reported, never silent."""
-    return sets_jaccard_pairs(_shingle_sets(docs), min_jaccard_micro,
-                              max_bucket)
+    :func:`sets_jaccard_pairs` over :func:`_shingle_sets` of ``docs``,
+    no LSH bucket cap."""
+    return sets_jaccard_pairs(_shingle_sets(docs), min_jaccard_micro)
 
 
 def sets_jaccard_pairs(sets: DataFrame, min_jaccard_micro: int = 0,
@@ -289,21 +288,21 @@ def lsh_oversized_buckets(docs: DataFrame, max_bucket: int = 1000
             .where(F.col("n_docs") > max_bucket))
 
 
-def _paragraphs(docs: DataFrame, sep: str, text_col: str) -> DataFrame:
-    """(doc_id, idx, para, psha): one row per ``sep``-split paragraph,
-    with its index in the doc and its sha256."""
+def _paragraphs(docs: DataFrame) -> DataFrame:
+    """(doc_id, idx, para, psha): one row per ``PARA_SEP``-split
+    paragraph of ``text``, with its index in the doc and its sha256."""
     return (docs
             .select("doc_id",
-                    F.posexplode(F.split(F.col(text_col), sep))
+                    F.posexplode(F.split(F.col("text"), PARA_SEP))
                     .alias("idx", "para"))
             .withColumn("psha", F.sha2(F.col("para"), 256)))
 
 
-def _reassemble(marked: DataFrame, sep: str, sha_col: str) -> DataFrame:
+def _reassemble(marked: DataFrame, sha_col: str) -> DataFrame:
     """Per doc of a paragraph table marked ``kept``: n_paras, n_kept and
-    ``sha_col``, the sha256 of the kept paragraphs re-joined by ``sep``
-    in idx order. A doc that keeps nothing gets NULL, not sha256('')
-    (the oracle's string_agg FILTER yields NULL there)."""
+    ``sha_col``, the sha256 of the kept paragraphs re-joined by
+    ``PARA_SEP`` in idx order. A doc that keeps nothing gets NULL, not
+    sha256('') (the oracle's string_agg FILTER yields NULL there)."""
     agg = (marked.groupBy("doc_id")
            .agg(F.count(F.lit(1)).cast("bigint").alias("n_paras"),
                 F.sum(F.col("kept").cast("bigint")).cast("bigint")
@@ -314,14 +313,13 @@ def _reassemble(marked: DataFrame, sep: str, sha_col: str) -> DataFrame:
                             F.when(F.col("kept"),
                                    F.struct("idx", "para")))),
                         lambda s: s["para"]),
-                    sep), 256).alias("_sha")))
+                    PARA_SEP), 256).alias("_sha")))
     return agg.select(
         "doc_id", "n_paras", "n_kept",
         F.when(F.col("n_kept") > 0, F.col("_sha")).alias(sha_col))
 
 
-def paragraph_dedup(docs: DataFrame, sep: str = "\n",
-                    text_col: str = "text") -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """Paragraph-granularity exact dedup — the sub-document pass (C4's
     line dedup, RefinedWeb's paragraph dedup) that document-level
     hashing cannot express: boilerplate paragraphs repeat across
@@ -334,7 +332,7 @@ def paragraph_dedup(docs: DataFrame, sep: str = "\n",
     reassemble. Returns per doc: paragraph counts before and after, and
     the sha256 of the kept text (byte-exact parity surface). Shuffles
     only on sha256(paragraph) and doc_id — both uniform."""
-    paras = _paragraphs(docs, sep, text_col)
+    paras = _paragraphs(docs)
     # first-occurrence key is the lexicographic (doc_id, idx) struct min
     # — no packed-integer arithmetic, so no collision at >=1e6
     # paragraphs per doc; still a map-side partial aggregate
@@ -343,11 +341,10 @@ def paragraph_dedup(docs: DataFrame, sep: str = "\n",
     marked = (paras.join(first, "psha")
               .withColumn("kept",
                           F.struct("doc_id", "idx") == F.col("first_key")))
-    return _reassemble(marked, sep, "kept_sha")
+    return _reassemble(marked, "kept_sha")
 
 
-def exact_substr_overlap(docs: DataFrame, width: int = 32,
-                         text_col: str = "text") -> DataFrame:
+def exact_substr_overlap(docs: DataFrame, width: int = 32) -> DataFrame:
     """ExactSubstr-style duplicated-substring census — the semantics of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
     Better") bounded to fixed token windows: for every document, how
@@ -364,7 +361,7 @@ def exact_substr_overlap(docs: DataFrame, width: int = 32,
     windows are :func:`_windows` of the lowercased text (repeats kept,
     posexplode's index is the window's token position) and each
     window's hash is md5 of its UTF-8 bytes, all JVM codegen."""
-    low = F.lower(F.col(text_col))
+    low = F.lower(F.col("text"))
     ex = (docs.select("doc_id", F.posexplode(_windows(low, width))
                       .alias("pos", "w"))
           .select("doc_id", "pos", F.md5("w").alias("wh")))
@@ -387,7 +384,7 @@ def exact_substr_overlap(docs: DataFrame, width: int = 32,
     stats = per_doc.select(
         "doc_id", sz.cast("bigint").alias("n_shared_windows"),
         cover.cast("bigint").alias("n_dup_tokens"))
-    n_toks = F.size(T.tokens_col(text_col))
+    n_toks = F.size(T.tokens_col())
     base = docs.select("doc_id", n_toks.cast("bigint").alias("n_tokens"))
     return (base.join(stats, "doc_id", "left")
             .select(
@@ -402,15 +399,13 @@ def exact_substr_overlap(docs: DataFrame, width: int = 32,
                  .cast("bigint").alias("dup_ratio_micro")))
 
 
-def dup_components(pairs: DataFrame, max_iters: int = 20,
-                   a_col: str = "doc_a", b_col: str = "doc_b"
-                   ) -> DataFrame:
-    """Connected components over the near-dup pair graph -> (doc_id,
-    comp) with comp = the smallest doc_id in the component. This is
-    the transitive closure the pairwise drop rule approximates: pick
-    ONE canonical representative per duplicate FAMILY (A~B, B~C => one
-    family even when A!~C directly), the semantics large corpus dedups
-    (e.g. MinHashLSH + CC) actually want.
+def dup_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+    """Connected components over the near-dup pair graph (doc_a, doc_b) ->
+    (doc_id, comp) with comp = the smallest doc_id in the component.
+    This is the transitive closure the pairwise drop rule approximates:
+    pick ONE canonical representative per duplicate FAMILY (A~B, B~C =>
+    one family even when A!~C directly), the semantics large corpus
+    dedups (e.g. MinHashLSH + CC) actually want.
 
     Distributed min-label propagation: every node repeatedly takes the
     minimum label in its neighborhood; converges in O(component
@@ -419,7 +414,7 @@ def dup_components(pairs: DataFrame, max_iters: int = 20,
     over the EDGE table (never all-pairs); labels are
     localCheckpoint-ed per round so the plan stays flat, and the
     driver sees only a converged/changed counter."""
-    e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+    e = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = (e.unionByName(e.select(F.col("v").alias("u"),
                                     F.col("u").alias("v")))
              .distinct().localCheckpoint())
@@ -453,31 +448,29 @@ def dup_components(pairs: DataFrame, max_iters: int = 20,
     return labels
 
 
-def boilerplate_paragraphs(docs: DataFrame, min_doc_freq: int = 2,
-                           sep: str = "\n",
-                           text_col: str = "text") -> DataFrame:
+def boilerplate_paragraphs(docs: DataFrame, min_doc_freq: int = 2
+                           ) -> DataFrame:
     """Paragraphs appearing in >= min_doc_freq DISTINCT documents —
     the corpus-wide boilerplate census (nav bars, cookie banners,
     terms-of-service footers). One explode + one partial-agg
     countDistinct keyed on the paragraph sha."""
-    return (_paragraphs(docs, sep, text_col).groupBy("psha")
+    return (_paragraphs(docs).groupBy("psha")
             .agg(F.min("para").alias("para"),
                  F.countDistinct("doc_id").cast("bigint")
                   .alias("doc_freq"))
             .where(F.col("doc_freq") >= min_doc_freq))
 
 
-def remove_boilerplate(docs: DataFrame, min_doc_freq: int = 2,
-                       sep: str = "\n",
-                       text_col: str = "text") -> DataFrame:
+def remove_boilerplate(docs: DataFrame, min_doc_freq: int = 2
+                       ) -> DataFrame:
     """C4-style boilerplate REMOVAL: unlike paragraph_dedup (first
     occurrence kept), a paragraph frequent enough to be boilerplate is
     dropped from EVERY document including the first — boilerplate is
     noise, not content. Returns per doc: paragraph counts before and
     after and the sha256 of the cleaned text (NULL when nothing
     survives). Shuffles on paragraph sha and doc_id only."""
-    hot = boilerplate_paragraphs(docs, min_doc_freq, sep, text_col) \
+    hot = boilerplate_paragraphs(docs, min_doc_freq) \
         .select("psha", F.lit(True).alias("hot"))
-    marked = (_paragraphs(docs, sep, text_col).join(hot, "psha", "left")
+    marked = (_paragraphs(docs).join(hot, "psha", "left")
               .withColumn("kept", F.col("hot").isNull()))
-    return _reassemble(marked, sep, "clean_sha")
+    return _reassemble(marked, "clean_sha")

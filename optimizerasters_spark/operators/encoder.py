@@ -30,9 +30,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, functions as F
 
 from optimizerasters_spark.config import Config, get_boolean_value
+from optimizerasters_spark.tiling import BLOCK_SIZE
 
 DEF_JPEG_QUALITY = 85  # DefJpegQuality, OptimizeRasters.py:97
-DEF_BLOCK = 512
 
 
 # Proxy-only modes: no GDAL conversion; pyramids off; raster proxies are
@@ -62,7 +62,7 @@ class EncoderParams:
     out_format: str = "MRF"          # GTiff | MRF | COG
     compression: str = "lerc"
     quality: int = DEF_JPEG_QUALITY
-    block_size: int = DEF_BLOCK
+    block_size: int = BLOCK_SIZE
     interleave: str = "PIXEL"
     predictor: int = 1
     lerc_prec: str | None = None
@@ -181,7 +181,7 @@ def resolve(conf: Config, n_bands: int = 3, meta: bool = False
     q = conf.get_value("Quality")
     p.quality = int(q) if q else DEF_JPEG_QUALITY
     bs = conf.get_value("BlockSize")
-    p.block_size = int(bs) if bs else DEF_BLOCK
+    p.block_size = int(bs) if bs else BLOCK_SIZE
     p.predictor = int(conf.get_value("Predictor", 1))
     p.interleave = str(conf.get_value("Interleave", "PIXEL")).upper()
     p.lerc_prec = conf.get_value("LERCPrecision")
@@ -257,7 +257,7 @@ def encoder_struct_col(mode: Column, compression: Column,
         comp.alias("compression"),
         F.coalesce(quality, F.lit(DEF_JPEG_QUALITY)).cast("int")
          .alias("quality"),
-        F.coalesce(block_size, F.lit(DEF_BLOCK)).cast("int")
+        F.coalesce(block_size, F.lit(BLOCK_SIZE)).cast("int")
          .alias("block_size"),
         (F.when(comp == "lerc", F.lit("V2=ON")).otherwise(F.lit("")))
          .alias("options"))

@@ -9,7 +9,8 @@ Reference semantics re-expressed as Catalyst predicates:
   * F2 raster/non-raster split — exclude wins over the raster match except
     for ``.til`` files which are always kept (:4254-4259).
   * F3 resume-status anti-join — getRecordStatus (:1807-1815): skip rows the
-    ledger marks 'yes'; ``retryall`` ignores the ledger (:2001-2011).
+    ledger marks 'yes' (``retryall``, :2001-2011, is the engine clearing
+    the ledger's statuses before this filter runs).
   * F7 hashkey path injection — insertUserTextToOutputPath (:1036-1063):
     md5(url)[:8] inserted as a path segment (our salting analog).
   * F8 header-byte sniff — threadProxyRaster (:7205-7252): first bytes of
@@ -63,13 +64,12 @@ def matches_patterns(path: Column, patterns: list[str]) -> Column:
 
 
 def classify_paths(files: DataFrame, raster_patterns: list[str],
-                   exclude_patterns: list[str],
-                   path_col: str = "path") -> DataFrame:
+                   exclude_patterns: list[str]) -> DataFrame:
     """F1+F2: add is_raster / is_excluded / action columns.
 
     action: 'convert' (raster, not excluded), 'skip' (excluded),
     'copy' (everything else). ``.til`` files are never excluded."""
-    p = F.col(path_col)
+    p = F.col("path")
     is_raster = matches_patterns(p, raster_patterns)
     is_excluded = matches_patterns(p, exclude_patterns) & \
         ~F.lower(p).endswith(".til")
@@ -82,21 +82,18 @@ def classify_paths(files: DataFrame, raster_patterns: list[str],
 
 
 def resume_pending(work: DataFrame, ledger: DataFrame,
-                   key: str = "doc_id", status_col: str = "processed",
-                   retryall: bool = False) -> DataFrame:
+                   key: str = "doc_id") -> DataFrame:
     """F3: rows not yet marked 'yes' in the ledger (anti-join). At scale the
     ledger is a fraction of the input and Catalyst broadcasts it when small;
     otherwise AQE picks a shuffled hash anti-join on the key."""
-    if retryall:
-        return work
-    done = ledger.where(F.col(status_col) == "yes").select(key)
+    done = ledger.where(F.col("processed") == "yes").select(key)
     return work.join(done, key, "left_anti")
 
 
-def with_hashkey_path(df: DataFrame, path_col: str = "path",
-                      key_col: str = "url", position: int = 2) -> DataFrame:
+def with_hashkey_path(df: DataFrame, key_col: str = "url",
+                      position: int = 2) -> DataFrame:
     """F7: insert substring(md5(key),1,8) as path segment #position."""
-    segs = F.split(F.col(path_col), "/")
+    segs = F.split(F.col("path"), "/")
     hk = F.substring(F.md5(F.col(key_col)), 1, 8)
     out = F.concat_ws(
         "/",
@@ -106,13 +103,12 @@ def with_hashkey_path(df: DataFrame, path_col: str = "path",
     return df.withColumn("hashed_path", out)
 
 
-def with_depth(files: DataFrame, path_col: str = "path",
-               base_depth: int = 0) -> DataFrame:
-    """F4: subdirectory depth of each path (number of directory segments
-    below the base). Pure projection — the depth predicate folds into the
+def with_depth(files: DataFrame, path_col: str = "path") -> DataFrame:
+    """F4: subdirectory depth of each path (number of directory
+    segments). Pure projection — the depth predicate folds into the
     scan (the reference walked only ``IncludeSubdirectories`` levels;
     here it is a pushable WHERE)."""
-    depth = F.size(F.split(F.col(path_col), "/")) - 1 - base_depth
+    depth = F.size(F.split(F.col(path_col), "/")) - 1
     return files.withColumn("depth", depth.cast("int"))
 
 

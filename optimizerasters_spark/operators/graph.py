@@ -31,10 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 MICRO = 1_000_000
+DAMPING_MILLI = 850     # PageRank damping factor 0.85
 
 
-def extract_links(pages: DataFrame, html_col: str = "html",
-                  url_col: str = "url") -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """(src, href, dst_url) per anchor: decode the BINARY html
     payload, pull every href attribute (one regexp_extract_all +
     explode, pure codegen), and resolve host-relative hrefs
@@ -42,9 +42,9 @@ def extract_links(pages: DataFrame, html_col: str = "html",
     hrefs pass through; anything else (mailto:, javascript:,
     fragment-only, protocol-relative) is dropped — the corpus filter
     wants same-crawl navigability, not a URL parser."""
-    raw = F.decode(F.col(html_col), "UTF-8")
+    raw = F.decode(F.col("html"), "UTF-8")
     hrefs = F.regexp_extract_all(raw, F.lit('href="([^"]+)"'), F.lit(1))
-    base = F.regexp_extract(F.col(url_col), "^(https?://[^/?#]+)", 1)
+    base = F.regexp_extract(F.col("url"), "^(https?://[^/?#]+)", 1)
     e = pages.select(F.col("doc_id").alias("src"),
                      base.alias("_base"),
                      F.explode(hrefs).alias("href"))
@@ -56,15 +56,14 @@ def extract_links(pages: DataFrame, html_col: str = "html",
             .where(F.col("dst_url").isNotNull()))
 
 
-def link_edges(pages: DataFrame, html_col: str = "html",
-               url_col: str = "url") -> DataFrame:
+def link_edges(pages: DataFrame) -> DataFrame:
     """The in-corpus (src, dst) doc-id edge table: extracted links
     whose resolved URL exists as a page, self-loops dropped. The url
     equi-join is the only shuffle and its key is uniform; links to
     URLs outside the corpus vanish here (they belong to the frontier,
     not the graph)."""
-    links = extract_links(pages, html_col, url_col)
-    urls = pages.select(F.col(url_col).alias("dst_url"),
+    links = extract_links(pages)
+    urls = pages.select(F.col("url").alias("dst_url"),
                         F.col("doc_id").alias("dst"))
     return (links.join(urls, "dst_url")
             .where(F.col("src") != F.col("dst"))
@@ -90,12 +89,11 @@ def degree_census(edges: DataFrame) -> DataFrame:
                      .alias("in_deg")))
 
 
-def pagerank(edges: DataFrame, iters: int = 3,
-             damping_milli: int = 850) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Deterministic integer PageRank, fixed iteration count:
 
-        r_v  <-  (1000 - damping_milli) * 1000
-                 + (damping_milli * Σ_{u→v} (r_u div outdeg_u)) div 1000
+        r_v  <-  (1000 - DAMPING_MILLI) * 1000
+                 + (DAMPING_MILLI * Σ_{u→v} (r_u div outdeg_u)) div 1000
 
     with every rank in micro-units and every division a floored
     integer division — bit-identical across engines and cluster
@@ -119,7 +117,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("out_deg"))
     e = edges.join(deg, "src").localCheckpoint(eager=False)
-    base = (1000 - damping_milli) * 1000
+    base = (1000 - DAMPING_MILLI) * 1000
     ranks = nodes.withColumn("rank_micro",
                              F.lit(MICRO).cast("bigint"))
     for _ in range(iters):
@@ -131,7 +129,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
                             "left")
                  .select("node",
                          (F.lit(base) +
-                          F.expr(f"({damping_milli} * coalesce(s, 0))"
+                          F.expr(f"({DAMPING_MILLI} * coalesce(s, 0))"
                                  f" div 1000"))
                          .cast("bigint").alias("rank_micro"))
                  .localCheckpoint(eager=False))

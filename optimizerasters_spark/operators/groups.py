@@ -19,16 +19,15 @@ from pyspark.sql import DataFrame, functions as F
 # addRelatedExtensions('img;IMG', 'ige;IGE') and
 # addRelatedExtensions('ntf;NTF;tif;TIF', 'RPB;rpb') — each primary in the
 # list pairs with each sidecar in the list (full cross).
-DEFAULT_ASSOCIATES = (
+ASSOCIATES = (
     [(p, s) for p in ("img", "IMG") for s in ("ige", "IGE")] +
     [(p, s) for p in ("ntf", "NTF", "tif", "TIF") for s in ("RPB", "rpb")]
 )
 
 
-def associate_join(files: DataFrame,
-                   associates: list[tuple[str, str]] | None = None
-                   ) -> DataFrame:
-    """Pair each sidecar row with its primary raster by stem.
+def associate_join(files: DataFrame) -> DataFrame:
+    """Pair each sidecar row with its primary raster by stem, under
+    ``ASSOCIATES``.
 
     files needs (doc_id, stem, ext, path). Returns
     (primary_doc_id, sidecar_doc_id, stem, primary_ext, sidecar_ext).
@@ -36,7 +35,7 @@ def associate_join(files: DataFrame,
     shuffles both sides on stem — at scale stems are near-unique so no
     skew."""
     assoc = files.sparkSession.createDataFrame(
-        associates or DEFAULT_ASSOCIATES, "primary_ext STRING, sidecar_ext STRING")
+        ASSOCIATES, "primary_ext STRING, sidecar_ext STRING")
     side = (files.select(F.col("doc_id").alias("sidecar_doc_id"),
                          F.col("stem"), F.col("ext").alias("sidecar_ext"))
             .join(F.broadcast(assoc.select("sidecar_ext").distinct()),
@@ -89,16 +88,14 @@ def til_finalize(members: DataFrame, group_col: str = "group_id",
                      .alias("total_payload")))
 
 
-def stem_groups(files: DataFrame, stem_col: str = "stem",
-                size_col: str = "size") -> DataFrame:
+def stem_groups(files: DataFrame) -> DataFrame:
     """J3: per-stem artifact rollup (count + bytes) for grouped upload."""
-    return (files.groupBy(stem_col)
+    return (files.groupBy("stem")
             .agg(F.count(F.lit(1)).alias("n_files"),
-                 F.sum(size_col).alias("total_size")))
+                 F.sum("size").alias("total_size")))
 
 
-def parse_til_members(tils: DataFrame, content_col: str = "content",
-                      name_col: str = "til_name") -> DataFrame:
+def parse_til_members(tils: DataFrame) -> DataFrame:
     """X10: parse `.til` tile-index content — lines of
     ``filename = "member.tif";`` — into (til_name, member) rows
     (TIL._processContent semantics, OptimizeRasters.py:2256-2279:
@@ -107,16 +104,15 @@ def parse_til_members(tils: DataFrame, content_col: str = "content",
     rx = 'filename\\s*=\\s*"?([^";\\n]+)"?\\s*;'
     # lit pattern (not F.expr) — SQL string literals would eat the
     # backslash escapes
-    members = F.regexp_extract_all(F.col(content_col), F.lit(rx), F.lit(1))
-    return (tils.select(F.col(name_col),
+    members = F.regexp_extract_all(F.col("content"), F.lit(rx), F.lit(1))
+    return (tils.select(F.col("til_name"),
                         F.explode(members).alias("member"))
             .withColumn("member", F.trim(F.col("member"))))
 
 
-def job_success(ledger: DataFrame, status_col: str = "processed"
-                ) -> DataFrame:
+def job_success(ledger: DataFrame) -> DataFrame:
     """A5: single-row job verdict + status histogram."""
-    s = F.col(status_col)
+    s = F.col("processed")
     return ledger.agg(
         F.max(F.when(s == "no", 1).otherwise(0)).cast("int")
          .alias("has_failures"),

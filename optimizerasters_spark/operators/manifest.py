@@ -13,14 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from optimizerasters_spark.operators import windows
+from optimizerasters_spark.tiling import BLOCK_SIZE
 
-DEFAULT_SCALE = 2
-DEFAULT_BLOCK = 512
+SCALE = 2   # UNIFORM_SCALE default, OptimizeRasters.py:4066-4068
 
 
-def tile_manifest(tile_counts: DataFrame, output_prefix: str = "tiles",
-                  scale: int = DEFAULT_SCALE,
-                  block: int = DEFAULT_BLOCK) -> DataFrame:
+def tile_manifest(tile_counts: DataFrame, output_prefix: str = "tiles"
+                  ) -> DataFrame:
     """tile_counts: (level, tile_x, tile_y, page_count) ->
     manifest rows (tile_id, level, tile_x, tile_y, page_count, blocksize,
     scale, source_uri, manifest_json)."""
@@ -30,8 +29,8 @@ def tile_manifest(tile_counts: DataFrame, output_prefix: str = "tiles",
     uri = F.concat(F.lit(output_prefix + "/"), tile_id, F.lit(".mrf"))
     out = (tile_counts
            .withColumn("tile_id", tile_id)
-           .withColumn("blocksize", F.lit(block).cast("int"))
-           .withColumn("scale", F.lit(scale).cast("int"))
+           .withColumn("blocksize", F.lit(BLOCK_SIZE).cast("int"))
+           .withColumn("scale", F.lit(SCALE).cast("int"))
            .withColumn("source_uri", uri))
     return out.withColumn(
         "manifest_json",

@@ -2,9 +2,9 @@
 
 The Spark-side plumbing is real and tested — schemas, Arrow batch shapes,
 partition-preserving mapInPandas stages; the actual media decoding is
-STUBBED (this container ships no image/audio libs) behind
-``decoder=`` hooks that default to a deterministic fake. Swapping in a
-real decoder (PIL/ffmpeg/torchaudio) changes ONE function, not the plan.
+STUBBED (no image/audio libraries are a dependency) behind one
+deterministic stand-in, ``_fake_decode``. Swapping in a real decoder
+(PIL/ffmpeg/torchaudio) changes that ONE function, not the plan.
 
 Design rules for 100 TB media tables:
   * media rides as BINARY next to its metadata struct; never base64/UTF-8.
@@ -16,7 +16,7 @@ Design rules for 100 TB media tables:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -47,9 +47,7 @@ def _fake_decode(buf: bytes) -> tuple[int, int, int, int]:
     return w, h, c, luma_micro
 
 
-def decode_images(media: DataFrame,
-                  decoder: Callable[[bytes], tuple] = _fake_decode,
-                  batch_col: str = "media") -> DataFrame:
+def decode_images(media: DataFrame) -> DataFrame:
     """Arrow-batched decode: one pandas batch in, one fixed-width batch
     out; rows that fail decode surface as decode_ok=false (dead-letter
     pattern) instead of failing the task."""
@@ -58,10 +56,10 @@ def decode_images(media: DataFrame,
         for pdf in batches:
             out = {"doc_id": pdf["doc_id"], "width": [], "height": [],
                    "channels": [], "mean_luma_micro": [], "decode_ok": []}
-            for buf in pdf[batch_col]:
+            for buf in pdf["media"]:
                 try:
-                    w, h, c, luma = decoder(bytes(buf)
-                                            if buf is not None else b"")
+                    w, h, c, luma = _fake_decode(bytes(buf)
+                                                 if buf is not None else b"")
                     out["width"].append(w)
                     out["height"].append(h)
                     out["channels"].append(c)
@@ -109,9 +107,7 @@ RESIZE_OUT_SCHEMA = ("doc_id BIGINT, width INT, height INT, out_w INT, "
 
 
 def resize_images(media: DataFrame, target_w: int = 256,
-                  target_h: int = 256,
-                  decoder: Callable[[bytes], tuple] = _fake_decode
-                  ) -> DataFrame:
+                  target_h: int = 256) -> DataFrame:
     """Fit-within resize plumbing: decode dims, compute the integer
     micro-unit scale (never upscale), emit output dims + a thumbnail
     content hash. The 'thumbnail' is a deterministic byte-prefix slice —
@@ -131,7 +127,7 @@ def resize_images(media: DataFrame, target_w: int = 256,
             for doc_id, buf in zip(pdf["doc_id"], pdf["media"]):
                 data = bytes(buf) if buf is not None else b""
                 try:
-                    w, h, _, _ = decoder(data)
+                    w, h, _, _ = _fake_decode(data)
                     scale = min(M, (target_w * M) // w,
                                 (target_h * M) // h)
                     ow = max((w * scale) // M, 1)

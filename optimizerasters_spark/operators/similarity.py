@@ -117,17 +117,16 @@ def _nearest(X, book):
     return ids[idx], D[np.arange(len(idx)), idx]
 
 
-def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5
+                ) -> DataFrame:
     """For each row of ``queries`` (query_id, qvec) return the k most
     cosine-similar embeddings (ties -> lower vec_id). Query side broadcast;
     one window per query_id partition."""
-    return _cos_topk(_f64(embeddings, "vec_id", vec_col, "vec"),
+    return _cos_topk(_f64(embeddings, "vec_id", "embedding", "vec"),
                      _f64(queries, "query_id", "qvec", "qvec"), k)
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold_micro: int = 950000,
-                       vec_col: str = "embedding",
                        block_col: str | None = "label") -> DataFrame:
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine >=
     threshold). Similarity is quantized to integer micro-units (floored)
@@ -137,7 +136,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold_micro: int = 950000,
     an LSH bucket, an IVF centroid id) — the O(N^2) cross stays bounded by
     the largest bucket, and buckets shuffle-join on their key. Pass
     block_col=None for the brute-force baseline."""
-    e = _f64(embeddings, "vec_id", vec_col, "vec",
+    e = _f64(embeddings, "vec_id", "embedding", "vec",
              *([block_col] if block_col else []))
     on = [F.col("a.vec_id") < F.col("b.vec_id")]
     if block_col:
@@ -213,8 +212,8 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame,
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame,
-             centroids: DataFrame, k: int = 5, nprobe: int = 2,
-             vec_col: str = "embedding") -> DataFrame:
+             centroids: DataFrame, k: int = 5, nprobe: int = 2
+             ) -> DataFrame:
     """IVF-bucketed ANN (the inverted-file scale path next to the
     SimHash one): vectors live in their single nearest centroid's list;
     each query probes its ``nprobe`` nearest centroids; candidates meet
@@ -224,7 +223,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
     bucketed by it), queries are broadcast, and recall is tuned by
     nprobe without touching the stored lists."""
     c = _f64(centroids, "cent_id", "cvec", "cvec")
-    e = ivf_assign(_f64(embeddings, "vec_id", vec_col, "vec"), c,
+    e = ivf_assign(_f64(embeddings, "vec_id", "embedding", "vec"), c,
                    nprobe=1)
     q = ivf_assign(_f64(queries, "query_id", "qvec", "qvec"), c,
                    vec_col="qvec", id_col="query_id", nprobe=nprobe)
@@ -239,7 +238,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
 # The missing half of the IVF story (round-2 consumed given centroids).
 # Everything is INTEGER-exact so training is deterministic and
 # cross-engine oracle-checkable:
-#   * components quantize to micro-units with a +offset shift into the
+#   * components quantize to micro-units with a +QUANT_OFFSET shift into the
 #     non-negative domain (squared-L2 distances are translation-
 #     invariant, and non-negative integer division truncates identically
 #     everywhere, so the centroid means match any engine bit-for-bit);
@@ -257,13 +256,14 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
 # ---------------------------------------------------------------------------
 
 QUANT_OFFSET = 1_000_000  # valid for unit-scale embeddings (|x| < 1)
+PQ_STRIDE = 97            # pq_codebooks_stride samples every 97th vec_id
 
 
-def quantize_micro(vec: Column, offset: int = QUANT_OFFSET) -> Column:
+def quantize_micro(vec: Column) -> Column:
     """array<float> -> array<bigint> micro-units, shifted non-negative."""
     return F.transform(
         vec.cast("array<double>"),
-        lambda x: F.floor(x * 1000000).cast("bigint") + F.lit(offset))
+        lambda x: F.floor(x * 1000000).cast("bigint") + F.lit(QUANT_OFFSET))
 
 
 def _dist2_int(a: Column, b: Column) -> Column:
@@ -271,22 +271,22 @@ def _dist2_int(a: Column, b: Column) -> Column:
                        F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
 
-def kmeans_seeds(vectors: DataFrame, k: int, id_col: str = "vec_id",
-                 vec_col: str = "v") -> DataFrame:
-    """Deterministic sampled init: the k vectors with the smallest
-    md5(id). orderBy+limit compiles to per-partition heaps + driver
-    merge (TakeOrderedAndProject) — no global sort."""
-    key = F.md5(F.col(id_col).cast("string"))
-    seeds = vectors.orderBy(key, F.col(id_col)).limit(k)
-    w = Window.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+def kmeans_seeds(vectors: DataFrame, k: int) -> DataFrame:
+    """Deterministic sampled init: the k (vec_id, v) vectors with the
+    smallest md5(vec_id). orderBy+limit compiles to per-partition heaps
+    + driver merge (TakeOrderedAndProject) — no global sort."""
+    key = F.md5(F.col("vec_id").cast("string"))
+    seeds = vectors.orderBy(key, F.col("vec_id")).limit(k)
+    w = Window.orderBy(F.md5(F.col("vec_id").cast("string")),
+                       F.col("vec_id"))
     return seeds.select(
         (F.row_number().over(w) - 1).cast("int").alias("cent_id"),
-        F.col(vec_col).alias("cvec"))
+        F.col("v").alias("cvec"))
 
 
-def kmeans_assign(vectors: DataFrame, cents: DataFrame,
-                  id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
-    """Nearest centroid by integer squared L2 (ties -> lower cent_id).
+def kmeans_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest centroid of each (vec_id, v) by integer squared L2 (ties
+    -> lower cent_id).
 
     The argmin runs as ONE NumPy matrix product per Arrow batch inside
     a pandas UDF (guide §4.2, :func:`_nearest` — exact in float64 for
@@ -304,22 +304,21 @@ def kmeans_assign(vectors: DataFrame, cents: DataFrame,
                            books[0])
         return pd.DataFrame({"cent_id": ids, "dist2": d2.astype(np.int64)})
 
-    out = vectors.withColumn("_b", _assign(F.col(vec_col))).select(
-        id_col,
+    out = vectors.withColumn("_b", _assign(F.col("v"))).select(
+        "vec_id",
         F.col("_b.cent_id").cast(cent_dtype).alias("cent_id"),
         F.col("_b.dist2").alias("dist2"),
-        F.col(vec_col))
+        F.col("v"))
     return out if books else out.limit(0)
 
 
-def kmeans_update(assigned: DataFrame, cents: DataFrame,
-                  vec_col: str = "v") -> DataFrame:
+def kmeans_update(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     """Component-wise integer mean per cluster: posexplode to
     (cent_id, dim, comp), partial-aggregated sum/count (K*dim rows per
     task through the shuffle), re-assembled with array_sort + transform.
     Empty clusters keep their previous centroid."""
     ex = assigned.select(
-        "cent_id", F.posexplode(F.col(vec_col)).alias("d", "comp"))
+        "cent_id", F.posexplode(F.col("v")).alias("d", "comp"))
     sums = ex.groupBy("cent_id", "d").agg(
         F.sum("comp").alias("s"), F.count(F.lit(1)).alias("n"))
     upd = (sums.groupBy("cent_id")
@@ -336,20 +335,21 @@ def kmeans_update(assigned: DataFrame, cents: DataFrame,
                      .alias("cluster_n")))
 
 
-def kmeans_train(vectors: DataFrame, k: int = 8, iters: int = 2,
-                 id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
-    """k-means over quantized vectors -> (cent_id, cvec, cluster_n),
+def kmeans_train(vectors: DataFrame, k: int = 8, iters: int = 2
+                 ) -> DataFrame:
+    """k-means over quantized (vec_id, v) vectors -> (cent_id, cvec,
+    cluster_n),
     where cluster_n is the membership count observed at the FINAL
     update step (assignment under the previous iteration's centroids).
     Centroids round-trip through the driver between iterations (K*dim
     integers), keeping every iteration's job independent and the final
     plan shallow."""
     spark = vectors.sparkSession
-    cents = kmeans_seeds(vectors, k, id_col, vec_col)
+    cents = kmeans_seeds(vectors, k)
     rows = []
     for _ in range(iters):
-        assigned = kmeans_assign(vectors, cents, id_col, vec_col)
-        rows = sorted(kmeans_update(assigned, cents, vec_col).collect(),
+        assigned = kmeans_assign(vectors, cents)
+        rows = sorted(kmeans_update(assigned, cents).collect(),
                       key=lambda r: r["cent_id"])
         cents = spark.createDataFrame(
             [(r["cent_id"], r["cvec"]) for r in rows],
@@ -359,14 +359,13 @@ def kmeans_train(vectors: DataFrame, k: int = 8, iters: int = 2,
         "cent_id INT, cvec ARRAY<BIGINT>, cluster_n BIGINT")
 
 
-def sq_train(vectors: DataFrame, vec_col: str = "v"
-             ) -> tuple[list[int], list[int]]:
+def sq_train(vectors: DataFrame) -> tuple[list[int], list[int]]:
     """Scalar-quantization bounds: per-dimension (lo, span) over the
     corpus — ONE posexplode + partial-aggregated min/max pass (K*dim
     rows per task through the shuffle), bounds hop the driver like
     k-means centroids (dim integers). Returns (lo[], span[]) with
     span >= 1."""
-    ex = vectors.select(F.posexplode(F.col(vec_col)).alias("d", "comp"))
+    ex = vectors.select(F.posexplode(F.col("v")).alias("d", "comp"))
     rows = sorted(ex.groupBy("d")
                   .agg(F.min("comp").alias("lo"), F.max("comp").alias("hi"))
                   .collect(), key=lambda r: r["d"])
@@ -375,49 +374,47 @@ def sq_train(vectors: DataFrame, vec_col: str = "v"
     return lo, span
 
 
-def sq_encode_col(lo: list[int], span: list[int],
-                  vec_col: str = "v") -> Column:
-    """8-bit scalar quantization: code_d = (v_d - lo_d) * 255 div
-    span_d, an int in [0, 255] — 4x smaller than float32 embeddings and
-    8x smaller than the micro-int form, the standard memory lever for
-    billion-vector ANN. Integer division on a non-negative numerator ->
-    exact on any engine. Plan-time constant bound arrays; whole-stage
-    codegen."""
+def sq_encode_col(lo: list[int], span: list[int]) -> Column:
+    """8-bit scalar quantization of the ``v`` column: code_d = (v_d - lo_d) *
+    255 div span_d, an int in [0, 255] — 4x smaller than float32
+    embeddings and 8x smaller than the micro-int form, the standard
+    memory lever for billion-vector ANN. Integer division on a
+    non-negative numerator -> exact on any engine. Plan-time constant
+    bound arrays; whole-stage codegen."""
     los = ", ".join(str(x) for x in lo)
     spans = ", ".join(str(x) for x in span)
     return F.expr(
         f"transform(sequence(0, {len(lo) - 1}), i -> CAST("
-        f"(element_at({vec_col}, i + 1) - element_at(array({los}), i + 1))"
+        f"(element_at(v, i + 1) - element_at(array({los}), i + 1))"
         f" * 255 div element_at(array({spans}), i + 1) AS INT))")
 
 
-def sq_decode_col(lo: list[int], span: list[int],
-                  code_col: str = "codes") -> Column:
-    """Reconstruct micro-int vectors from SQ codes (midpoint-free floor
-    form, the exact inverse scale of sq_encode_col)."""
+def sq_decode_col(lo: list[int], span: list[int]) -> Column:
+    """Reconstruct micro-int vectors from the SQ ``codes`` column
+    (midpoint-free floor form, the exact inverse scale of
+    sq_encode_col)."""
     los = ", ".join(str(x) for x in lo)
     spans = ", ".join(str(x) for x in span)
     return F.expr(
         f"transform(sequence(0, {len(lo) - 1}), i -> "
         f"element_at(array({los}), i + 1) + "
-        f"element_at({code_col}, i + 1) * "
+        f"element_at(codes, i + 1) * "
         f"element_at(array({spans}), i + 1) div 255)")
 
 
-def dequantize_micro(cvec: Column, offset: int = QUANT_OFFSET) -> Column:
+def dequantize_micro(cvec: Column) -> Column:
     """Trained integer centroids -> double arrays for the cosine-space
     IVF probe path (ivf_topk)."""
     return F.transform(
-        cvec, lambda x: (x - F.lit(offset)).cast("double") / 1000000.0)
+        cvec, lambda x: (x - F.lit(QUANT_OFFSET)).cast("double") / 1000000.0)
 
 
 def lsh_bucket_topk(embeddings: DataFrame, queries: DataFrame,
-                    planes: list[list[float]], k: int = 5,
-                    vec_col: str = "embedding") -> DataFrame:
+                    planes: list[list[float]], k: int = 5) -> DataFrame:
     """ANN: bucket both sides by hyperplane signs, join on bucket, rank
     within. Recall < 1 by construction (single-probe); callers add probes
     by unioning neighbor buckets on the (small) query side."""
-    e = _f64(embeddings, "vec_id", vec_col, "vec") \
+    e = _f64(embeddings, "vec_id", "embedding", "vec") \
         .withColumn("bucket", simhash_bucket(F.col("vec"), planes))
     q = _f64(queries, "query_id", "qvec", "qvec") \
         .withColumn("bucket", simhash_bucket(F.col("qvec"), planes))
@@ -438,16 +435,16 @@ def _stack(books: list[DataFrame]) -> DataFrame:
 
 
 def pq_codebooks_stride(vectors: DataFrame, m: int, dim: int,
-                        stride: int = 97, id_col: str = "vec_id",
                         vec_col: str = "v") -> DataFrame:
     """Deterministic stride-sampled PQ codebooks -> (m, cent_id, cvec):
-    subspace ``mm``'s codebook is the mm-th slice of every stride-th
-    vector. The fixture/bootstrap form (exactly q_ivf_topk's fixed-
-    centroid trick, so the encode/ADC stages are SQL-oracle-checkable);
+    subspace ``mm``'s codebook is the mm-th slice of every
+    ``PQ_STRIDE``-th vec_id. The fixture/bootstrap form (exactly
+    q_ivf_topk's fixed-centroid trick, so the encode/ADC stages are
+    SQL-oracle-checkable);
     pq_train swaps in Lloyd-refined codebooks behind the same shape."""
     dsub = dim // m
-    base = vectors.where(F.col(id_col) % stride == 0).select(
-        (F.col(id_col) / stride).cast("int").alias("cent_id"),
+    base = vectors.where(F.col("vec_id") % PQ_STRIDE == 0).select(
+        (F.col("vec_id") / PQ_STRIDE).cast("int").alias("cent_id"),
         F.col(vec_col))
     return _stack([
         base.select("cent_id", F.slice(F.col(vec_col), mm * dsub + 1,
@@ -456,8 +453,7 @@ def pq_codebooks_stride(vectors: DataFrame, m: int, dim: int,
 
 
 def pq_train(vectors: DataFrame, m: int, dim: int, k: int = 8,
-             iters: int = 2, id_col: str = "vec_id",
-             vec_col: str = "v") -> DataFrame:
+             iters: int = 2) -> DataFrame:
     """Lloyd-refined PQ codebooks: M INDEPENDENT integer k-means runs
     (kmeans_train — hash-seeded, vectorized argmin assignment,
     posexplode update) over the subvector slices. Each subspace trains
@@ -466,14 +462,14 @@ def pq_train(vectors: DataFrame, m: int, dim: int, k: int = 8,
     dsub = dim // m
     return _stack([
         kmeans_train(
-            vectors.select(F.col(id_col), F.slice(
-                F.col(vec_col), mm * dsub + 1, dsub).alias(vec_col)),
-            k=k, iters=iters, id_col=id_col, vec_col=vec_col)
+            vectors.select(F.col("vec_id"), F.slice(
+                F.col("v"), mm * dsub + 1, dsub).alias("v")),
+            k=k, iters=iters)
         for mm in range(m)])
 
 
 def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int, dim: int,
-              id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
+              vec_col: str = "v") -> DataFrame:
     """vector -> array<int> of M codes: nearest codebook entry per
     subspace (integer squared L2, ties -> lower cent_id). The M*K
     codebook rows are collected once (the driver hop a broadcast pays)
@@ -496,7 +492,7 @@ def pq_encode(vectors: DataFrame, codebooks: DataFrame, m: int, dim: int,
             out[:, mm] = _nearest(X[:, mm * dsub:(mm + 1) * dsub], book)[0]
         return pd.Series(list(out))
 
-    out = vectors.select(id_col, _codes(F.col(vec_col)).alias("codes"))
+    out = vectors.select("vec_id", _codes(F.col(vec_col)).alias("codes"))
     return out if books else out.limit(0)
 
 
@@ -510,25 +506,25 @@ def _lut(df: DataFrame, codebooks: DataFrame, vec: str,
                 F.col("cvec"))))
 
 
-def _adc_topk(ex: DataFrame, lut: DataFrame, q_id: str, id_col: str,
-              k: int, on: tuple[Column, ...] = (),
+def _adc_topk(ex: DataFrame, lut: DataFrame, k: int,
+              on: tuple[Column, ...] = (),
               key: Column | None = None) -> DataFrame:
-    """ADC: code rows ``ex`` (m, code) join the broadcast ``lut`` on
-    (lm, cent_id) and the ``on`` conditions; adc2 = sum of pdist per
-    (query ``key``, vector); the k smallest per query (ties -> lower
-    id) ranked 1..k as pq_rank."""
+    """ADC: code rows ``ex`` (vec_id, m, code) join the broadcast
+    ``lut`` on (lm, cent_id) and the ``on`` conditions; adc2 = sum of
+    pdist per (query ``key``, vector); the k smallest per query_id
+    (ties -> lower vec_id) ranked 1..k as pq_rank."""
     j = ex.join(F.broadcast(lut), reduce(operator.and_, [
         *on, F.col("m") == F.col("lm"), F.col("code") == F.col("cent_id")]))
-    agg = j.groupBy(q_id if key is None else key, id_col).agg(
+    agg = j.groupBy("query_id" if key is None else key, "vec_id").agg(
         F.sum("pdist").cast("bigint").alias("adc2"))
-    return _topk(agg, q_id, [F.col("adc2").asc(), F.col(id_col).asc()],
+    return _topk(agg, "query_id",
+                 [F.col("adc2").asc(), F.col("vec_id").asc()],
                  k, "pq_rank")
 
 
 def pq_adc_topk(queries: DataFrame, codes: DataFrame,
-                codebooks: DataFrame, m: int, dim: int, k: int = 5,
-                q_id: str = "query_id", q_vec: str = "qvec",
-                id_col: str = "vec_id") -> DataFrame:
+                codebooks: DataFrame, m: int, dim: int, k: int = 5
+                ) -> DataFrame:
     """Asymmetric distance computation: build the per-query lookup
     table (Q*M*K partial distances — tiny, broadcast), equi-join the
     code table on (subspace, code), sum the M partial distances per
@@ -536,15 +532,13 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame,
     decoded; only the LUT touches full precision — the IVF probe's
     inner loop at billion scale (ADC runs per posting list there; here
     it scans the whole code table, which IS the nprobe=all case)."""
-    lut = _lut(queries, codebooks, q_vec, dim // m).select(
-        q_id, F.col("m").alias("lm"), "cent_id", "pdist")
-    ex = codes.select(id_col, F.posexplode("codes").alias("m", "code"))
-    return _adc_topk(ex, lut, q_id, id_col, k)
+    lut = _lut(queries, codebooks, "qvec", dim // m).select(
+        "query_id", F.col("m").alias("lm"), "cent_id", "pdist")
+    ex = codes.select("vec_id", F.posexplode("codes").alias("m", "code"))
+    return _adc_topk(ex, lut, k)
 
 
-def residual_vectors(vectors: DataFrame, coarse: DataFrame,
-                     id_col: str = "vec_id",
-                     vec_col: str = "v") -> DataFrame:
+def residual_vectors(vectors: DataFrame, coarse: DataFrame) -> DataFrame:
     """(id, list_id, rvec = v − coarse_centroid[list_id]) — the input
     to RESIDUAL product quantization (what FAISS IVFPQ encodes):
     after coarse assignment, only the residual to the list centroid is
@@ -552,20 +546,20 @@ def residual_vectors(vectors: DataFrame, coarse: DataFrame,
     within-list displacement instead of the whole embedding space.
     One kmeans_assign (the vectorized argmin projection) + one
     broadcast rejoin for the centroid vector: no shuffle of its own."""
-    assigned = kmeans_assign(vectors, coarse, id_col, vec_col)
+    assigned = kmeans_assign(vectors, coarse)
     withc = assigned.join(
         F.broadcast(coarse.select("cent_id",
                                   F.col("cvec").alias("_lv"))),
         "cent_id")
     return withc.select(
-        id_col, F.col("cent_id").alias("list_id"),
-        F.zip_with(F.col(vec_col), F.col("_lv"),
+        "vec_id", F.col("cent_id").alias("list_id"),
+        F.zip_with(F.col("v"), F.col("_lv"),
                    lambda a, b: a - b).alias("rvec"))
 
 
 def pq_quantization_error(vectors: DataFrame, codebooks: DataFrame,
-                          m: int, dim: int, id_col: str = "vec_id",
-                          vec_col: str = "v") -> DataFrame:
+                          m: int, dim: int, vec_col: str = "v"
+                          ) -> DataFrame:
     """Total squared PQ quantization error: sum over (vector,
     subspace) of the winning codebook entry's squared distance — the
     FAISS-style diagnostic that justifies residual encoding (for
@@ -573,29 +567,27 @@ def pq_quantization_error(vectors: DataFrame, codebooks: DataFrame,
     error IS the reconstruction error of centroid + codeword).
     Returns a single (err2) row."""
     best = (_lut(vectors, codebooks, vec_col, dim // m)
-            .groupBy(id_col, "m").agg(F.min("pdist").alias("d2")))
+            .groupBy("vec_id", "m").agg(F.min("pdist").alias("d2")))
     return best.agg(F.sum("d2").cast("bigint").alias("err2"))
 
 
-def _probed_lists(queries: DataFrame, coarse: DataFrame, q_id: str,
-                  q_vec: str, nprobe: int) -> DataFrame:
+def _probed_lists(queries: DataFrame, coarse: DataFrame,
+                  nprobe: int) -> DataFrame:
     """Each query's ``nprobe`` nearest coarse lists (integer squared L2,
     ties -> lower list_id), with list_id and list_vec."""
     qc = (queries.join(F.broadcast(
             coarse.select(F.col("cent_id").alias("list_id"),
                           F.col("cvec").alias("list_vec"))))
-          .withColumn("qd2", _dist2_int(F.col(q_vec),
+          .withColumn("qd2", _dist2_int(F.col("qvec"),
                                         F.col("list_vec"))))
-    return _topk(qc, q_id, [F.col("qd2").asc(), F.col("list_id").asc()],
+    return _topk(qc, "query_id", [F.col("qd2").asc(), F.col("list_id").asc()],
                  nprobe, "pr")
 
 
 def ivf_pq_residual_topk(queries: DataFrame, residuals: DataFrame,
                          coarse: DataFrame, codebooks: DataFrame,
-                         m: int, dim: int, nprobe: int = 2, k: int = 5,
-                         q_id: str = "query_id", q_vec: str = "qvec",
-                         id_col: str = "vec_id",
-                         res_col: str = "rvec") -> DataFrame:
+                         m: int, dim: int, nprobe: int = 2, k: int = 5
+                         ) -> DataFrame:
     """IVF + RESIDUAL PQ — FAISS-IVFPQ semantics: vectors are stored
     as PQ codes of their residual to the list centroid, and a query's
     LUT is built from ITS residual to each probed list's centroid
@@ -607,29 +599,27 @@ def ivf_pq_residual_topk(queries: DataFrame, residuals: DataFrame,
     bounded to probed lists by the broadcast LUT join, and the only
     corpus-proportional shuffles key on vec_id and the candidate
     (query, vector) pairs."""
-    codes = pq_encode(residuals, codebooks, m, dim, id_col, res_col)
-    probed = _probed_lists(queries, coarse, q_id, q_vec, nprobe).select(
-        q_id, "list_id",
-        F.zip_with(F.col(q_vec), F.col("list_vec"),
+    codes = pq_encode(residuals, codebooks, m, dim, vec_col="rvec")
+    probed = _probed_lists(queries, coarse, nprobe).select(
+        "query_id", "list_id",
+        F.zip_with(F.col("qvec"), F.col("list_vec"),
                    lambda a, b: a - b).alias("qr"))
     lut = _lut(probed, codebooks, "qr", dim // m).select(
-        F.col(q_id).alias("lq"), F.col("list_id").alias("ll"),
+        F.col("query_id").alias("lq"), F.col("list_id").alias("ll"),
         F.col("m").alias("lm"), "cent_id", "pdist")
-    ex = (codes.join(residuals.select(id_col, "list_id"), id_col)
-          .select(id_col, "list_id",
+    ex = (codes.join(residuals.select("vec_id", "list_id"), "vec_id")
+          .select("vec_id", "list_id",
                   F.posexplode("codes").alias("m", "code")))
     # the LUT carries only probed (query, list) pairs, so this join IS
     # the candidate restriction — unprobed lists never match
-    return _adc_topk(ex, lut, q_id, id_col, k,
+    return _adc_topk(ex, lut, k,
                      on=(F.col("list_id") == F.col("ll"),),
-                     key=F.col("lq").alias(q_id))
+                     key=F.col("lq").alias("query_id"))
 
 
 def ivf_pq_topk(queries: DataFrame, vectors: DataFrame,
                 coarse: DataFrame, codebooks: DataFrame, m: int,
-                dim: int, nprobe: int = 2, k: int = 5,
-                q_id: str = "query_id", q_vec: str = "qvec",
-                id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
+                dim: int, nprobe: int = 2, k: int = 5) -> DataFrame:
     """IVF + PQ composed — the billion-scale search shape: every vector
     lives in the posting list of its nearest coarse centroid and is
     stored as M PQ codes; a query probes its ``nprobe`` nearest lists
@@ -643,17 +633,17 @@ def ivf_pq_topk(queries: DataFrame, vectors: DataFrame,
     candidate set, never the corpus times queries.
     :func:`ivf_pq_residual_topk` is the residual-encoded variant
     (FAISS-IVFPQ semantics) behind the same shape — finer codes."""
-    assigned = kmeans_assign(vectors, coarse, id_col, vec_col) \
-        .select(id_col, F.col("cent_id").alias("list_id"))
-    codes = pq_encode(vectors, codebooks, m, dim, id_col, vec_col)
-    probed = _probed_lists(queries, coarse, q_id, q_vec, nprobe) \
-        .select(q_id, "list_id")
-    lut = _lut(queries, codebooks, q_vec, dim // m).select(
-        F.col(q_id).alias("lq"), F.col("m").alias("lm"), "cent_id",
+    assigned = kmeans_assign(vectors, coarse) \
+        .select("vec_id", F.col("cent_id").alias("list_id"))
+    codes = pq_encode(vectors, codebooks, m, dim)
+    probed = _probed_lists(queries, coarse, nprobe) \
+        .select("query_id", "list_id")
+    lut = _lut(queries, codebooks, "qvec", dim // m).select(
+        F.col("query_id").alias("lq"), F.col("m").alias("lm"), "cent_id",
         "pdist")
-    ex = (codes.join(assigned, id_col)
-          .select(id_col, "list_id",
+    ex = (codes.join(assigned, "vec_id")
+          .select("vec_id", "list_id",
                   F.posexplode("codes").alias("m", "code")))
     cand = ex.join(F.broadcast(probed), "list_id")
-    return _adc_topk(cand, lut, q_id, id_col, k,
-                     on=(F.col(q_id) == F.col("lq"),))
+    return _adc_topk(cand, lut, k,
+                     on=(F.col("query_id") == F.col("lq"),))

@@ -19,7 +19,7 @@ random/md5 path segment. Here:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def with_salt(df: DataFrame, key_col: str = "url",
@@ -30,39 +30,33 @@ def with_salt(df: DataFrame, key_col: str = "url",
 
 
 def salted_collect_per_cell(pages: DataFrame, cell_cols: list[str],
-                            payload_col: str, nsalt: int = 16,
-                            max_per_cell: int | None = None) -> DataFrame:
+                            payload_col: str, nsalt: int = 16
+                            ) -> DataFrame:
     """collect_list per cell without a skewed single-reducer:
     phase 1 collects per (cell, salt); phase 2 flattens the nsalt partial
-    lists per cell. Optionally truncates to max_per_cell (deterministic:
-    lists sorted before truncation)."""
+    lists per cell (sorted, so the result is deterministic)."""
     salted = with_salt(pages, payload_col, nsalt)
     p1 = (salted.groupBy(*cell_cols, "salt")
           .agg(F.sort_array(F.collect_list(payload_col)).alias("part")))
-    p2 = (p1.groupBy(*cell_cols)
-          .agg(F.sort_array(F.flatten(F.collect_list("part")))
-               .alias("payloads")))
-    if max_per_cell is not None:
-        p2 = p2.withColumn("payloads",
-                           F.slice(F.col("payloads"), 1, max_per_cell))
-    return p2
+    return (p1.groupBy(*cell_cols)
+            .agg(F.sort_array(F.flatten(F.collect_list("part")))
+                 .alias("payloads")))
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
-                nsalt: int = 16,
-                salt_cols: list[str] | None = None) -> DataFrame:
+                nsalt: int = 16) -> DataFrame:
     """Skew-proof equi-join: salt the big side, explode the small side
     across all salt values, join on (key, salt). Use when the small side
     is too large to broadcast and the key distribution is known-skewed;
     otherwise prefer broadcast or AQE skew-join.
 
     The salt MUST vary WITHIN a join key (a hot key's rows must spread
-    across buckets), so it is derived from the big side's other columns
-    (default: every non-key column) — hashing the join key itself would
-    put each key's rows in one bucket and provide zero skew relief. The
-    salt never changes the result: the small side is replicated across
-    all nsalt values, so (key, salt) matches exactly where key matches."""
-    salt_cols = salt_cols or [c for c in big.columns if c != key]
+    across buckets), so it is derived from every non-key column of the
+    big side — hashing the join key itself would put each key's rows in
+    one bucket and provide zero skew relief. The salt never changes the
+    result: the small side is replicated across all nsalt values, so
+    (key, salt) matches exactly where key matches."""
+    salt_cols = [c for c in big.columns if c != key]
     if not salt_cols:  # degenerate: key-only relation; any spread works
         salt_cols = [key]
     b = big.withColumn(
@@ -100,17 +94,16 @@ def salted_topk_per_group(df: DataFrame, group_cols: list[str],
             .where(F.col("rnk") <= k))
 
 
-def cell_histogram(pages_with_tiles: DataFrame,
-                   cell_cols: list[str] | None = None) -> DataFrame:
-    """Skew diagnostic: per-cell counts + global skew ratio.
+def cell_histogram(pages_with_tiles: DataFrame) -> DataFrame:
+    """Skew diagnostic: per-(tile_x, tile_y) counts + global skew
+    ratio.
 
     Exact interpolated median here (oracle-checkable;
     ``percentile_approx`` swaps in plan-compatibly at 10^12 rows — one
     pass either way, the stats row stays a 1-row broadcast). The ratio
     is also emitted in floored micro-units so downstream thresholds are
     integer-exact across engines."""
-    cell_cols = cell_cols or ["tile_x", "tile_y"]
-    counts = (pages_with_tiles.groupBy(*cell_cols)
+    counts = (pages_with_tiles.groupBy("tile_x", "tile_y")
               .agg(F.count(F.lit(1)).alias("n")))
     stats = counts.agg(F.max("n").alias("max_n"),
                        F.expr("percentile(n, 0.5)").alias("median_n"))

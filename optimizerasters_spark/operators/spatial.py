@@ -22,19 +22,17 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from optimizerasters_spark import tiling
-from optimizerasters_spark.pages import WORLD_H, WORLD_W
 
 # Coarse cell resolution for cover joins (millidegree domain).
 COVER_CELL_MD = 10000  # 10-degree-ish cells -> 36 x 17 grid
+ZORDER_BITS = 16       # bits per coordinate in zorder_key
 
 
-def with_tiles(pages: DataFrame, world_w: int = WORLD_W,
-               world_h: int = WORLD_H,
-               block: int = tiling.DEFAULT_BLOCK_SIZE) -> DataFrame:
-    """Assign level-0 tile coords on the declared world raster. Pure
-    projection — no shuffle."""
-    px_x = F.floor(F.col("lon_md") * world_w / 360000)
-    px_y = F.floor(F.col("lat_md") * world_h / 170000)
+def with_tiles(pages: DataFrame) -> DataFrame:
+    """Assign level-0 tile coords on the declared world raster
+    (tiling.py's grid). Pure projection — no shuffle."""
+    px_x, px_y = tiling.pixel_cols()
+    block = tiling.BLOCK_SIZE
     return (pages
             .withColumn("tile_x", F.floor(px_x / block).cast("int"))
             .withColumn("tile_y", F.floor(px_y / block).cast("int")))
@@ -83,7 +81,7 @@ def levels_from_l0(l0: DataFrame, levels: list[int]) -> DataFrame:
             .agg(F.sum("page_count").alias("page_count")))
 
 
-def zorder_key(x, y, bits: int = 16) -> F.Column:
+def zorder_key(x, y) -> F.Column:
     """Morton/Z-order interleave of two non-negative grid coordinates
     (x bit b -> key bit 2b, y bit b -> key bit 2b+1) — the
     space-filling-curve sort key that makes RANGE partitioning
@@ -93,7 +91,7 @@ def zorder_key(x, y, bits: int = 16) -> F.Column:
     a pure column expression — literal shifts only, whole-stage
     codegen, no UDF)."""
     total = F.lit(0).cast("bigint")
-    for b in range(bits):
+    for b in range(ZORDER_BITS):
         total = (total
                  + F.shiftleft(F.shiftright(x, b).bitwiseAND(1)
                                .cast("bigint"), 2 * b)
@@ -102,9 +100,7 @@ def zorder_key(x, y, bits: int = 16) -> F.Column:
     return total
 
 
-def polyfill_ring(polys: DataFrame, res_md: int = 1000,
-                  id_col: str = "polygon_id",
-                  v_col: str = "vertices") -> DataFrame:
+def polyfill_ring(polys: DataFrame, res_md: int = 1000) -> DataFrame:
     """H3/S2-``polyfill`` analog on the integer millidegree grid:
     every res_md-cell whose CENTER lies inside the arbitrary simple
     ring, by the same pure-Catalyst even-odd ray cast as
@@ -117,13 +113,12 @@ def polyfill_ring(polys: DataFrame, res_md: int = 1000,
     half = res_md // 2
     inside = _inside_ring(F.col("cell_x") * res_md + half,
                           F.col("cell_y") * res_md + half,
-                          F.col(v_col))
-    return (_bbox_cells(_vertex_bbox(polys, v_col), res_md)
-            .where(inside).select(id_col, "cell_x", "cell_y"))
+                          F.col("vertices"))
+    return (_bbox_cells(_vertex_bbox(polys), res_md)
+            .where(inside).select("polygon_id", "cell_x", "cell_y"))
 
 
-def segment_cells(segments: DataFrame, id_col: str = "seg_id"
-                  ) -> DataFrame:
+def segment_cells(segments: DataFrame) -> DataFrame:
     """Line -> cells: the grid cells a segment traverses, by exact
     half-cell-step sampling — 2·max(|dx|,|dy|)+1 evenly spaced points
     interpolated in INTEGER arithmetic (floor((p0·(2n−k)+p1·k)/2n),
@@ -140,13 +135,13 @@ def segment_cells(segments: DataFrame, id_col: str = "seg_id"
     dy = F.abs(F.col("y1") - F.col("y0"))
     n2 = F.greatest(dx, dy) * 2
     ks = F.explode(F.sequence(F.lit(0), n2))
-    cand = segments.select(id_col, "x0", "y0", "x1", "y1",
+    cand = segments.select("seg_id", "x0", "y0", "x1", "y1",
                            n2.alias("_n2"), ks.alias("k"))
     # integer div == floor on the non-negative grid (matches DuckDB //)
     interp = lambda a, b: F.when(  # noqa: E731
         F.col("_n2") == 0, F.col(a).cast("bigint")).otherwise(
         F.expr(f"({a} * (_n2 - k) + {b} * k) div _n2").cast("bigint"))
-    return (cand.select(id_col,
+    return (cand.select("seg_id",
                         interp("x0", "x1").alias("cell_x"),
                         interp("y0", "y1").alias("cell_y"))
             .distinct())
@@ -192,11 +187,11 @@ def compact_cells(cells: DataFrame, max_level: int = 3,
     return out.unionByName(top) if out is not None else top
 
 
-def pyramid_reduce_iterative(l0: DataFrame, max_level: int,
-                             value_col: str = "val") -> DataFrame:
-    """gdaladdo-faithful ITERATIVE pyramid: each level L+1 tile derives
-    from its (up to 4) level-L children, like createaOverview builds
-    level N from N-1 (OptimizeRasters.py:5060-5143) — required for the
+def pyramid_reduce_iterative(l0: DataFrame, max_level: int) -> DataFrame:
+    """gdaladdo-faithful ITERATIVE pyramid over a (tile_x, tile_y, val)
+    table: each level L+1 tile derives from its (up to 4) level-L
+    children, like createaOverview builds level N from N-1
+    (OptimizeRasters.py:5060-5143) — required for the
     non-associative resamplers, where a single jump from level 0 gives
     different answers than the level-by-level chain:
 
@@ -213,8 +208,8 @@ def pyramid_reduce_iterative(l0: DataFrame, max_level: int,
     the level-1 shuffle."""
     cur = l0.select(
         "tile_x", "tile_y",
-        F.col(value_col).cast("bigint").alias("avg_val"),
-        F.col(value_col).cast("bigint").alias("near_val"))
+        F.col("val").cast("bigint").alias("avg_val"),
+        F.col("val").cast("bigint").alias("near_val"))
     out = cur.withColumn("level", F.lit(0).cast("int"))
     for lv in range(1, max_level + 1):
         child_key = (F.col("tile_y").cast("bigint") * F.lit(1 << 31) +
@@ -282,11 +277,11 @@ def _in_box(lon, lat, field) -> F.Column:
             (lat >= field("lat_lo_md")) & (lat < field("lat_hi_md")))
 
 
-def _vertex_bbox(polys: DataFrame, v_col: str = "vertices") -> DataFrame:
+def _vertex_bbox(polys: DataFrame) -> DataFrame:
     """Vertex-array polygons plus the half-open bbox of their vertices
     (array_min/array_max — pure array aggregates)."""
-    xs = F.transform(F.col(v_col), lambda v: v["x"])
-    ys = F.transform(F.col(v_col), lambda v: v["y"])
+    xs = F.transform(F.col("vertices"), lambda v: v["x"])
+    ys = F.transform(F.col("vertices"), lambda v: v["y"])
     return polys.select(*polys.columns,
                         F.array_min(xs).alias("lon_lo_md"),
                         (F.array_max(xs) + 1).alias("lon_hi_md"),
@@ -306,7 +301,7 @@ def _edges(vertices) -> F.Column:
 
 
 def pip_join(pages: DataFrame, boundaries: DataFrame,
-             cell_md: int = COVER_CELL_MD, how: str = "inner") -> DataFrame:
+             how: str = "inner") -> DataFrame:
     """Point-in-polygon equi-join via broadcast cell cover.
 
     Emits one row per (page, containing polygon); half-open box semantics
@@ -321,9 +316,9 @@ def pip_join(pages: DataFrame, boundaries: DataFrame,
     page shuffle and a single scan (tests/test_plans.py asserts both)."""
     lon, lat = F.col("lon_md"), F.col("lat_md")
     if how == "inner":
-        return _probe(pages, boundaries, cell_md).where(
+        return _probe(pages, boundaries, COVER_CELL_MD).where(
             _in_box(lon, lat, F.col))
-    joined = _probe(pages, boundaries, cell_md, "left")
+    joined = _probe(pages, boundaries, COVER_CELL_MD, "left")
     hits = F.transform(
         F.filter("_cands", lambda p: _in_box(lon, lat, p.getField)),
         lambda p: p["polygon_id"])
@@ -376,19 +371,18 @@ def _inside_ring(lon, lat, vertices) -> F.Column:
     return F.size(F.filter(_edges(vertices), crossing)) % 2 == 1
 
 
-def _pip_join_exact(pages: DataFrame, polys: DataFrame, cell_md: int,
+def _pip_join_exact(pages: DataFrame, polys: DataFrame,
                     inside) -> DataFrame:
     """Vertex-array PIP: bbox-cell cover probe, then the exact
     ``inside(lon, lat, vertices)`` refiner. Output: the page columns
     plus polygon_id."""
-    cands = _probe(pages, _vertex_bbox(polys), cell_md)
+    cands = _probe(pages, _vertex_bbox(polys), COVER_CELL_MD)
     return (cands.where(inside(F.col("lon_md"), F.col("lat_md"),
                                F.col("vertices")))
             .select(*pages.columns, "polygon_id"))
 
 
-def pip_join_convex(pages: DataFrame, polys: DataFrame,
-                    cell_md: int = COVER_CELL_MD) -> DataFrame:
+def pip_join_convex(pages: DataFrame, polys: DataFrame) -> DataFrame:
     """Point-in-polygon join against REAL (convex, CCW, integer-vertex)
     polygons — the shape beyond the half-open-bbox form: cover equi-join
     on the bbox grid cells (broadcast, pages never shuffle), exact
@@ -397,11 +391,10 @@ def pip_join_convex(pages: DataFrame, polys: DataFrame,
     polygons decompose into convex pieces upstream, or use
     pip_join_ring; functions/geo.make_convex_pip_udf is the Arrow twin
     of this refiner, held value-equal by test."""
-    return _pip_join_exact(pages, polys, cell_md, _inside_convex)
+    return _pip_join_exact(pages, polys, _inside_convex)
 
 
-def pip_join_ring(pages: DataFrame, polys: DataFrame,
-                  cell_md: int = COVER_CELL_MD) -> DataFrame:
+def pip_join_ring(pages: DataFrame, polys: DataFrame) -> DataFrame:
     """Point-in-polygon join against ARBITRARY simple rings (non-convex
     admin boundaries — the real-boundary shape SURVEY §2.3 J4 calls
     for; the reference delegates the equivalent grid containment to
@@ -411,7 +404,7 @@ def pip_join_ring(pages: DataFrame, polys: DataFrame,
     pandas-UDF refiner slots into the same candidate stream
     (functions/geo.make_ring_pip_udf is the Arrow twin, held value-equal
     by test)."""
-    return _pip_join_exact(pages, polys, cell_md, _inside_ring)
+    return _pip_join_exact(pages, polys, _inside_ring)
 
 
 def knn_ring(pages: DataFrame, queries: DataFrame, k: int = 5,

@@ -22,50 +22,49 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.split(F.lower(F.col(text_col)), " ")
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace tokens, regex word tokens (the BPE-ish pre-tokenizer
     split), a 4-chars/token BPE estimate, and char count."""
-    toks = tokens_col(text_col)
-    re_toks = F.regexp_extract_all(F.col(text_col),
+    toks = tokens_col()
+    re_toks = F.regexp_extract_all(F.col("text"),
                                    F.lit("\\w+|[^\\w\\s]"), F.lit(0))
     return docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
         F.size(re_toks).cast("bigint").alias("n_re_tokens"),
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars_calc"),
-        F.ceil(F.length(F.col(text_col)) / 4).cast("bigint")
+        F.length(F.col("text")).cast("bigint").alias("n_chars_calc"),
+        F.ceil(F.length(F.col("text")) / 4).cast("bigint")
          .alias("n_bpe_est"))
 
 
-def stopword_ratio_col(text_col: str = "text",
-                       stopwords: list[str] | None = None) -> Column:
+def stopword_ratio_col(text_col: str = "text") -> Column:
     toks = tokens_col(text_col)
-    sw = F.array(*[F.lit(w) for w in (stopwords or EN_STOPWORDS)])
+    sw = F.array(*[F.lit(w) for w in EN_STOPWORDS])
     n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.floor(n_sw * MICRO / F.greatest(F.size(toks), F.lit(1))) \
             .cast("bigint")
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Length / mean-word-length / stopword-ratio features in micro-units.
     The classic cheap quality gate for web text."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     n_toks = F.greatest(F.size(toks), F.lit(1))
-    mean_wl = F.floor(F.length(F.col(text_col)) * MICRO / n_toks) \
+    mean_wl = F.floor(F.length(F.col("text")) * MICRO / n_toks) \
                .cast("bigint")
     return docs.select(
         "doc_id",
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars_calc"),
+        F.length(F.col("text")).cast("bigint").alias("n_chars_calc"),
         F.size(toks).cast("bigint").alias("n_tokens"),
         mean_wl.alias("mean_word_len_micro"),
-        stopword_ratio_col(text_col).alias("stopword_ratio_micro"))
+        stopword_ratio_col().alias("stopword_ratio_micro"))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: English-stopword hit ratio -> en/other.
     (A real model slots in as a pandas UDF; the Spark-side contract —
     one pass, one derived column — is what matters here.)"""
-    ratio = stopword_ratio_col(text_col)
+    ratio = stopword_ratio_col()
     return docs.select(
         "doc_id", F.col("lang").alias("lang_declared"),
         ratio.alias("en_score_micro"),
@@ -73,18 +72,18 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
          .alias("lang_pred"))
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprints: full-text sha256, md5, and a normalized
     (lowercase, collapsed whitespace) md5 — the cheap canonical-form key."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " ")
+    norm = F.regexp_replace(F.lower(F.col("text")), "\\s+", " ")
     return docs.select(
         "doc_id",
-        F.sha2(F.col(text_col), 256).alias("sha256_hex"),
-        F.md5(F.col(text_col)).alias("md5_hex"),
+        F.sha2(F.col("text"), 256).alias("sha256_hex"),
+        F.md5(F.col("text")).alias("md5_hex"),
         F.md5(norm).alias("norm_md5_hex"))
 
 
-def html_to_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def html_to_text(pages: DataFrame) -> DataFrame:
     """Payload extraction: decode the BINARY html column as UTF-8 and
     strip markup tags — the pages-table twin of the reference's
     payload-classify path (it never parses payloads either; GDAL does —
@@ -94,13 +93,13 @@ def html_to_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
     byte-identity invariant closes the loop: on the synthetic corpus
     (html = <html><body>{text}</body></html>) extraction must return
     the text column byte-for-byte."""
-    raw = F.decode(F.col(html_col), "UTF-8")
+    raw = F.decode(F.col("html"), "UTF-8")
     return pages.withColumn(
         "extracted_text", F.regexp_replace(raw, "<[^>]*>", ""))
 
 
-def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
-                    text_col: str = "text") -> DataFrame:
+def chunk_documents(docs: DataFrame, window: int = 64,
+                    stride: int = 48) -> DataFrame:
     """Split each document into overlapping token windows — the
     training-data slicing pass (context-window packing's upstream).
     chunk i covers tokens [i*stride, i*stride + window); the chunk count
@@ -110,7 +109,7 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
     the only row amplification and it carries the chunk text, not the
     whole document. Text case/bytes preserved verbatim (the byte-
     identity invariant applies to chunks too)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     n_chunks = F.when(n <= window, F.lit(1)).otherwise(
         F.floor((n - window + stride - 1) / stride).cast("bigint") + 1)
@@ -130,8 +129,7 @@ ROLL_BASE = 1000003           # Karp-Rabin base (prime > 10^6)
 ROLL_MOD = 2147483647         # 2^31 - 1: h*B + t stays < 2^52, exact
 
 
-def rolling_fingerprint(docs: DataFrame,
-                        text_col: str = "text") -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Order-sensitive document fingerprint: Karp-Rabin polynomial
     rolling hash over the token sequence,
     h = fold(tokens, 0, (h, t) -> (h * B + val(t)) mod M), with
@@ -143,7 +141,7 @@ def rolling_fingerprint(docs: DataFrame,
     — whole-stage codegen, no Python. Integer domain keeps it exact and
     oracle-checkable across engines (M < 2^31, so the fold accumulator
     never exceeds 2^52)."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.split(F.lower(F.col("text")), " ")
     tval = lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)  # noqa: E731
                       .cast("bigint") % ROLL_MOD)
     h = F.aggregate(
@@ -156,8 +154,7 @@ def rolling_fingerprint(docs: DataFrame,
         F.size(toks).cast("bigint").alias("n_tokens"))
 
 
-def tfidf_topk(docs: DataFrame, k: int = 5,
-               text_col: str = "text") -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     """Integer-scaled TF-IDF: the corpus inverted index — (doc, term)
     term frequencies and per-term document frequencies — scored as
     tf * (1e6 div doc_freq) and ranked top-k per document. The
@@ -171,7 +168,7 @@ def tfidf_topk(docs: DataFrame, k: int = 5,
     only corpus-proportional shuffle, uniform key), a vocabulary-sized
     term aggregate, one equi-join on term, then the per-doc window.
     Returns (doc_id, term, tf, doc_freq, score_micro, term_rank)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     tf = (docs.select("doc_id", F.explode(toks).alias("term"))
           .groupBy("doc_id", "term")
           .agg(F.count(F.lit(1)).cast("bigint").alias("tf")))
@@ -190,25 +187,23 @@ def tfidf_topk(docs: DataFrame, k: int = 5,
                     "term_rank"))
 
 
-def pack_shards(docs: DataFrame, budget_tokens: int,
-                strat_col: str = "lang", order_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Token-budget shard packing — the step between a filtered corpus
-    and training: lay documents out in deterministic (stratum,
-    order_col) order and open shard floor(cum_tokens_before / budget)
-    for each, so every shard holds ~budget tokens and the SAME
-    documents land in the SAME shards on any engine, cluster size, or
-    partitioning (unlike coalesce/repartition-based packing, which is
+def pack_shards(docs: DataFrame, budget_tokens: int) -> DataFrame:
+    """Token-budget shard packing — the step between a filtered corpus and
+    training: lay documents out in deterministic (lang, doc_id) order
+    and open shard floor(cum_tokens_before / budget) for each, so every
+    shard holds ~budget tokens and the SAME documents land in the SAME
+    shards on any engine, cluster size, or partitioning (unlike
+    coalesce/repartition-based packing, which is
     placement-nondeterministic). A doc larger than the budget gets its
     own shard(s) — the budget is a target, not a splitter.
 
     Plan: one window cumsum per stratum. Languages are few but huge,
     so at 100 TB the stratum key becomes (lang, date_bucket) — each
     bucket sorts independently, same packing contract per bucket."""
-    toks = F.size(tokens_col(text_col)).cast("bigint")
-    w = (Window.partitionBy(strat_col).orderBy(order_col)
+    toks = F.size(tokens_col()).cast("bigint")
+    w = (Window.partitionBy("lang").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
-    base = docs.select(strat_col, order_col, toks.alias("n_tokens"))
+    base = docs.select("lang", "doc_id", toks.alias("n_tokens"))
     return (base
             .withColumn("cum_before",
                         F.coalesce(F.sum("n_tokens").over(w),
@@ -218,8 +213,7 @@ def pack_shards(docs: DataFrame, budget_tokens: int,
                         .cast("int")))
 
 
-def repetition_quality(docs: DataFrame, text_col: str = "text",
-                       line_sep: str = "\n",
+def repetition_quality(docs: DataFrame,
                        max_exact_lines: int = 512) -> DataFrame:
     """Gopher-style repetition signals — the cheap structural filters
     that catch boilerplate/SEO spam which per-token quality scores miss:
@@ -239,7 +233,7 @@ def repetition_quality(docs: DataFrame, text_col: str = "text",
     (doc_id, bigram) partial-agg count -> max per doc: two shuffles on
     uniform high-cardinality keys — the corpus-scale shape, never an
     O(n²) per-row loop."""
-    lines = F.split(F.col(text_col), line_sep)
+    lines = F.split(F.col("text"), "\n")
     n_lines = F.size(lines).cast("bigint")
     n_dist = F.size(F.array_distinct(lines)).cast("bigint")
     # chars in duplicated lines: a line is "duplicated" iff it occurs
@@ -286,7 +280,7 @@ def repetition_quality(docs: DataFrame, text_col: str = "text",
                 F.greatest(F.col("_tot_chars"), F.lit(1))).cast("bigint")
          .alias("dup_line_char_ratio_micro"))
     base = base_small.unionByName(base_big)
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     n_bg = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.when(
         F.size(toks) >= 2,

@@ -57,8 +57,7 @@ def _survivor_sets(docs: DataFrame, reps_path: str | None,
 
 def _gate(feats: DataFrame, jaccard_micro: int, min_tokens: int,
           max_mean_wl_micro: int, max_bucket: int | None,
-          max_top_bigram_micro: int | None,
-          max_dup_line_micro: int | None) -> DataFrame:
+          max_top_bigram_micro: int | None) -> DataFrame:
     """:func:`training_kept` over the survivors' table of
     :func:`_survivor_sets`."""
     victims = (D.sets_jaccard_pairs(feats.select("doc_id", "_sh"),
@@ -76,16 +75,12 @@ def _gate(feats: DataFrame, jaccard_micro: int, min_tokens: int,
                            "en_score_micro": T.stopword_ratio_col("text")})
              .where((F.col("n_tokens") >= min_tokens) &
                     (F.col("mean_word_len_micro") <= max_mean_wl_micro)))
-    # optional Gopher-style repetition gate (text.repetition_quality):
-    # catches bigram-spam / boilerplate-heavy docs the per-token quality
-    # features pass. Off by default — thresholds are corpus policy.
-    if max_top_bigram_micro is not None or max_dup_line_micro is not None:
+    # optional Gopher-style repetition gate (text.repetition_quality's
+    # top-bigram ratio): catches bigram-spam docs the per-token quality
+    # features pass. Off by default — the threshold is corpus policy.
+    if max_top_bigram_micro is not None:
         rq = T.repetition_quality(gated.select("doc_id", "text"))
-        cond = F.lit(True)
-        if max_top_bigram_micro is not None:
-            cond &= F.col("top_bigram_ratio_micro") <= max_top_bigram_micro
-        if max_dup_line_micro is not None:
-            cond &= F.col("dup_line_ratio_micro") <= max_dup_line_micro
+        cond = F.col("top_bigram_ratio_micro") <= max_top_bigram_micro
         gated = gated.join(rq.where(cond).select("doc_id"),
                            "doc_id", "left_semi")
     return gated
@@ -97,8 +92,7 @@ def training_kept(docs: DataFrame,
                   max_mean_wl_micro: int = MAX_MEAN_WL_MICRO,
                   reps_path: str | None = None,
                   max_bucket: int | None = None,
-                  max_top_bigram_micro: int | None = None,
-                  max_dup_line_micro: int | None = None) -> DataFrame:
+                  max_top_bigram_micro: int | None = None) -> DataFrame:
     """Documents surviving dedup + near-dup removal + the quality gate,
     with the gate features attached.
 
@@ -114,10 +108,10 @@ def training_kept(docs: DataFrame,
     ``max_bucket`` caps degenerate LSH buckets (the n² guard a corpus
     run needs); pair it with ``training_oversized_buckets`` over the
     same input so everything the cap drops is reported — never cap
-    silently."""
+    silently. ``max_top_bigram_micro`` turns on the repetition gate."""
     return _gate(_survivor_sets(docs, reps_path, grams=False),
                  jaccard_micro, min_tokens, max_mean_wl_micro, max_bucket,
-                 max_top_bigram_micro, max_dup_line_micro)
+                 max_top_bigram_micro)
 
 
 def corpus_pipeline(pages: DataFrame,
@@ -126,12 +120,7 @@ def corpus_pipeline(pages: DataFrame,
                     benchmark: DataFrame | None = None,
                     rates_milli: dict[str, int] | None = None,
                     budget_tokens: int = 4096,
-                    jaccard_micro: int = JACCARD_MICRO,
-                    min_tokens: int = MIN_TOKENS,
-                    max_mean_wl_micro: int = MAX_MEAN_WL_MICRO,
-                    max_bucket: int | None = None,
-                    max_top_bigram_micro: int | None = None,
-                    max_dup_line_micro: int | None = None) -> DataFrame:
+                    max_top_bigram_micro: int | None = None) -> DataFrame:
     """The COMPLETE web-corpus build, crawl table to training shards —
     every hygiene stage this engine implements, composed in the order
     a production corpus run applies them:
@@ -141,9 +130,9 @@ def corpus_pipeline(pages: DataFrame,
       3. domain blocklist,
       4. latest-per-CANONICAL-url dedup,
       5. exact + near-dup removal and the quality gate
-         (:func:`training_kept`, including the optional Gopher-style
-         repetition gate via max_top_bigram_micro /
-         max_dup_line_micro),
+         (:func:`training_kept` under JACCARD_MICRO, MIN_TOKENS and
+         MAX_MEAN_WL_MICRO, no LSH bucket cap, plus the optional
+         Gopher-style repetition gate via max_top_bigram_micro),
       6. benchmark decontamination (n-gram overlap),
       7. stratified per-language training mix,
       8. token-budget shard packing.
@@ -169,9 +158,8 @@ def corpus_pipeline(pages: DataFrame,
     p = D.dedup_latest(p)
     docs = p.select("doc_id", "text", "lang")
     feats = _survivor_sets(docs, None, grams=benchmark is not None)
-    kept = _gate(feats.drop("_grams"), jaccard_micro, min_tokens,
-                 max_mean_wl_micro, max_bucket, max_top_bigram_micro,
-                 max_dup_line_micro)
+    kept = _gate(feats.drop("_grams"), JACCARD_MICRO, MIN_TOKENS,
+                 MAX_MEAN_WL_MICRO, None, max_top_bigram_micro)
     if benchmark is not None:
         # the survivors' 5-grams from the materialized table: one
         # semi-join to the distinct dirty ids, one anti-join
@@ -197,17 +185,12 @@ def training_oversized_buckets(docs: DataFrame,
 
 
 def training_flagship_rollup(docs: DataFrame,
-                             jaccard_micro: int = JACCARD_MICRO,
-                             min_tokens: int = MIN_TOKENS,
-                             max_mean_wl_micro: int = MAX_MEAN_WL_MICRO,
                              reps_path: str | None = None,
                              max_bucket: int | None = None) -> DataFrame:
-    """Per-language corpus stats over the kept set — the pipeline's
-    one-small-table answer (what a 100 TB run ships to the trainer's
-    manifest)."""
-    kept = training_kept(docs, jaccard_micro, min_tokens,
-                         max_mean_wl_micro, reps_path=reps_path,
-                         max_bucket=max_bucket)
+    """Per-language corpus stats over :func:`training_kept`'s kept set
+    under the default gate — the pipeline's one-small-table answer
+    (what a 100 TB run ships to the trainer's manifest)."""
+    kept = training_kept(docs, reps_path=reps_path, max_bucket=max_bucket)
     return (kept.groupBy("lang")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
                  F.sum("n_tokens").cast("bigint").alias("total_tokens"),

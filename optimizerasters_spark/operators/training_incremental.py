@@ -59,9 +59,8 @@ _SCHEMAS = {"shas": "text_sha STRING",
 class CorpusBuilder:
     """CorpusBuilder(workdir).ingest(batch_df) -> per-batch stats."""
 
-    def __init__(self, workdir: str, jaccard_micro: int = T.JACCARD_MICRO):
+    def __init__(self, workdir: str):
         self.workdir = workdir
-        self.jaccard_micro = jaccard_micro
         # test hook: raise after the named state write ("shas" |
         # "bands" | "kept") to simulate a crash inside the write window
         self._crash_after: str | None = None
@@ -114,7 +113,7 @@ class CorpusBuilder:
         # 2. intra-batch near-dups: the batch rule verbatim
         victims = D.sets_jaccard_pairs(
             sets.select("doc_id", "_sh"),
-            min_jaccard_micro=self.jaccard_micro).select("doc_b")
+            min_jaccard_micro=T.JACCARD_MICRO).select("doc_b")
 
         # 3. cross-state near-dups: new docs meeting ACCEPTED docs in a
         #    band bucket, Jaccard-verified against those old docs only
@@ -132,7 +131,7 @@ class CorpusBuilder:
             both = sets.select("doc_id", "_sh").unionByName(old_sets)
             victims = victims.unionByName(
                 D.jaccard_pairs(cand, both)
-                .where(F.col("jaccard_micro") >= self.jaccard_micro)
+                .where(F.col("jaccard_micro") >= T.JACCARD_MICRO)
                 .select("doc_b"))
 
         # 4. materialize the survivors once (the count fills the cache),

@@ -51,7 +51,7 @@ def _md(int_part: Column, frac_part: Column) -> Column:
     return sign * mag
 
 
-def geoparse(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def geoparse(docs: DataFrame) -> DataFrame:
     """Extract the first coordinate pair into (geo_lat_md, geo_lon_md)
     millidegrees; NULL when no pattern matches. Three formats, first
     match in priority order wins: "lat=12.345 lon=-67.89", then
@@ -59,7 +59,7 @@ def geoparse(docs: DataFrame, text_col: str = "text") -> DataFrame:
     "12.345,-67.89" decimal pair. All parsing is regex + integer math
     (codegen); a model-based geoparser replaces the pattern matrix
     behind the same two columns."""
-    t = F.col(text_col)
+    t = F.col("text")
     # format 1: lat=/lon= labels, sign on the number
     la1_i = F.regexp_extract(t, _COORD_RX, 1)
     lat1 = _md(la1_i, F.regexp_extract(t, _COORD_RX, 2))
@@ -108,10 +108,10 @@ def url_parts(pages: DataFrame, url_col: str = "url") -> DataFrame:
                  .withColumn("path_depth", depth.cast("int")))
 
 
-def domain_cap(pages: DataFrame, k: int, url_col: str = "url") -> DataFrame:
+def domain_cap(pages: DataFrame, k: int) -> DataFrame:
     """Keep at most k pages per host (lowest doc_id first) — bounds any
     single site's contribution to the corpus."""
-    with_host = url_parts(pages, url_col)
+    with_host = url_parts(pages)
     w = Window.partitionBy("host").orderBy(F.col("doc_id").asc())
     return (with_host.withColumn("_r", F.row_number().over(w))
             .where(F.col("_r") <= k).drop("_r", "domain", "path_depth"))
@@ -145,14 +145,14 @@ def scrubbed_col(t: Column) -> Column:
         F.regexp_replace(t, EMAIL_RX, "<EMAIL>"), PHONE_RX, "<PHONE>")
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Redact emails and phone numbers from web text before training —
     the standard corpus-hygiene pass (C4/RefinedWeb-style). Emits the
     per-doc match counts, the scrubbed text, and its sha256 (the
     byte-exact parity surface). Pure regexp_replace/extract_all —
     JVM-side codegen, no UDF; a learned PII tagger slots in behind the
     same columns."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_emails = F.size(F.regexp_extract_all(t, F.lit(EMAIL_RX), F.lit(0)))
     n_phones = F.size(F.regexp_extract_all(t, F.lit(PHONE_RX), F.lit(0)))
     scrubbed = scrubbed_col(t)
@@ -164,42 +164,39 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
         F.sha2(scrubbed, 256).alias("scrub_sha"))
 
 
-def blocklist_filter(pages: DataFrame, blocked: DataFrame,
-                     url_col: str = "url",
-                     dom_col: str = "bdom") -> DataFrame:
-    """Drop pages whose registered domain is on a blocklist — exact
-    host match OR any subdomain (host ends with ".domain"). The spam /
-    adult / known-pirated domain list every crawl corpus applies. A
-    blocklist is tiny by definition, so this is a broadcast anti-join
-    on the suffix predicate (nested-loop on the broadcast side — rows
-    scale with |pages| * |blocklist|, the standard shape); pages never
-    shuffle. Returns the surviving pages with their host attached."""
-    withh = url_parts(pages, url_col)
-    cond = (withh["host"] == blocked[dom_col]) | \
-        withh["host"].endswith(F.concat(F.lit("."), blocked[dom_col]))
+def blocklist_filter(pages: DataFrame, blocked: DataFrame) -> DataFrame:
+    """Drop pages whose registered domain is on a blocklist (``blocked``'s
+    ``bdom`` column) — exact host match OR any subdomain (host ends with
+    ".domain"). The spam / adult / known-pirated domain list every crawl
+    corpus applies. A blocklist is tiny by definition, so this is a
+    broadcast anti-join on the suffix predicate (nested-loop on the
+    broadcast side — rows scale with |pages| * |blocklist|, the standard
+    shape); pages never shuffle. Returns the surviving pages with their
+    host attached."""
+    withh = url_parts(pages)
+    cond = (withh["host"] == blocked["bdom"]) | \
+        withh["host"].endswith(F.concat(F.lit("."), blocked["bdom"]))
     return (withh.join(F.broadcast(blocked), cond, "left_anti")
             .drop("domain", "path_depth"))
 
 
-def stratified_hash_sample(df: DataFrame, rates_milli: dict[str, int],
-                           default_milli: int = 0,
-                           strat_col: str = "lang",
-                           key_col: str = "doc_id") -> DataFrame:
-    """Deterministic per-stratum sampling — the training-MIX knob: each
-    language (or any stratum) gets its own md5-threshold rate out of
-    1000, so a corpus can up/down-weight languages reproducibly (the
-    same rows survive on any engine, cluster size, or partitioning —
-    unlike rand()-based stratified sampling). Strata absent from
-    ``rates_milli`` fall back to ``default_milli``. Pure column
+def stratified_hash_sample(df: DataFrame, rates_milli: dict[str, int]
+                           ) -> DataFrame:
+    """Deterministic per-language sampling — the training-MIX knob: each
+    ``lang`` gets its own md5(doc_id)-threshold rate out of 1000, so a
+    corpus can up/down-weight languages reproducibly (the same rows
+    survive on any engine, cluster size, or partitioning — unlike
+    rand()-based stratified sampling). Languages absent from
+    ``rates_milli`` are dropped (rate 0). Pure column
     expression: the rate lookup is a plan-time CASE chain, the bucket
     the same md5 primitive as hash_sample."""
     bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("bigint"),
         F.lit(1000))
-    rate = F.lit(default_milli)
+    rate = F.lit(0)
     for stratum, milli in sorted(rates_milli.items()):
-        rate = F.when(F.col(strat_col) == stratum,
+        rate = F.when(F.col("lang") == stratum,
                       F.lit(milli)).otherwise(rate)
     return df.where(bucket < rate)
 
@@ -209,7 +206,7 @@ def stratified_hash_sample(df: DataFrame, rates_milli: dict[str, int],
 TRACKING_PARAMS = ["fbclid", "gclid", "msclkid", "ref"]
 
 
-def url_canonicalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_canonicalize(pages: DataFrame) -> DataFrame:
     """Canonical URL for crawl-level dedup — the normalization pass
     that makes byte-different URLs of the same resource collide
     BEFORE content hashing (every crawler's first dedup lever):
@@ -224,7 +221,7 @@ def url_canonicalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
     Pure regexp + array functions (codegen, zero shuffle — folds into
     the scan). Emits canon_url and a changed flag; downstream exact
     dedup groups on canon_url instead of url."""
-    u = F.col(url_col)
+    u = F.col("url")
     scheme = F.lower(F.regexp_extract(
         u, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
     auth = F.lower(F.regexp_extract(
@@ -253,8 +250,7 @@ def url_canonicalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
             .withColumn("changed", canon != u))
 
 
-def robots_wildcard_rules(robots: DataFrame, host_col: str = "host",
-                          robots_col: str = "robots_txt") -> DataFrame:
+def robots_wildcard_rules(robots: DataFrame) -> DataFrame:
     """Parse robots.txt bodies into
     (host, rules: array<struct<prefix, allow>>) for the wildcard
     agent: split into User-agent blocks, keep blocks whose agent line
@@ -266,7 +262,7 @@ def robots_wildcard_rules(robots: DataFrame, host_col: str = "host",
     semantics are the standard simplification (wildcard group only;
     per-agent overrides belong to the fetcher, not the corpus
     filter)."""
-    body = F.regexp_replace(F.col(robots_col), "(?i)user-agent:",
+    body = F.regexp_replace(F.col("robots_txt"), "(?i)user-agent:",
                             "User-agent:")
     blocks = F.split(body, "User-agent:")
     wc = F.filter(
@@ -289,12 +285,11 @@ def robots_wildcard_rules(robots: DataFrame, host_col: str = "host",
     # an empty prefix ("Disallow:" with no value = allow everything)
     # matches nothing in the longest-match model — drop it
     return robots.select(
-        F.col(host_col),
+        F.col("host"),
         F.filter(rules, lambda r: r["prefix"] != "").alias("rules"))
 
 
-def robots_filter(pages: DataFrame, robots: DataFrame,
-                  url_col: str = "url") -> DataFrame:
+def robots_filter(pages: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop pages whose URL path is governed by a wildcard-agent
     Disallow rule for their host — the crawl-politeness filter
     re-applied at corpus build (hosts' robots bodies ride as a table).
@@ -304,9 +299,9 @@ def robots_filter(pages: DataFrame, robots: DataFrame,
     robots row pass through, and a malformed URL (NULL path) is
     treated as the empty path — governed only by an empty-prefix rule,
     never silently dropped."""
-    withh = url_parts(pages, url_col).withColumn(
+    withh = url_parts(pages).withColumn(
         "_path",
-        F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("")))
+        F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("")))
     rules = robots_wildcard_rules(robots)
     joined = withh.join(F.broadcast(rules), "host", "left")
     matched = F.filter(F.col("rules"),

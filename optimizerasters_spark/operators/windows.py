@@ -71,10 +71,11 @@ def cumulative_until_target(events: DataFrame, order_cols: list[str],
             .drop("_total"))
 
 
-def apply_eviction(victims: DataFrame, path_col: str = "path") -> int:
-    """A8 action: DELETE the selected victim files (CleanMRFCache.py
-    :168-196 removes oldest-first until the space target is met; the
-    selection is ``cumulative_until_target``, this applies it).
+def apply_eviction(victims: DataFrame) -> int:
+    """A8 action: DELETE the selected victim files, ``victims``' ``path``
+    column (CleanMRFCache.py :168-196 removes oldest-first until the
+    space target is met; the selection is ``cumulative_until_target``,
+    this applies it).
 
     foreachPartition — a distributed side-effect sink: each executor
     deletes its shard of paths; genuinely imperative work, so this is
@@ -90,13 +91,13 @@ def apply_eviction(victims: DataFrame, path_col: str = "path") -> int:
         n = 0
         for r in rows:
             try:
-                os.remove(r[path_col])
+                os.remove(r["path"])
                 n += 1
             except FileNotFoundError:
                 pass
         acc.add(n)
 
-    victims.select(path_col).foreachPartition(rm)
+    victims.select("path").foreachPartition(rm)
     return acc.value
 
 
@@ -110,31 +111,29 @@ def stage_pivot(metrics: DataFrame, entity_col: str, stage_col: str,
             .na.fill(0))
 
 
-def asof_join(queries: DataFrame, versions: DataFrame,
-              key: str = "url", qts_col: str = "q_epoch",
-              vts_col: str = "warc_epoch",
-              version_id: str = "doc_id") -> DataFrame:
-    """As-of join (SURVEY.md J6 done for real): each query row gets the
-    LATEST version at or before its timestamp (ties -> lowest id), NULL
-    when no version qualifies.
+def asof_join(queries: DataFrame, versions: DataFrame) -> DataFrame:
+    """As-of join (SURVEY.md J6 done for real): each (url, q_epoch)
+    query row gets the LATEST (url, warc_epoch, doc_id) version at or
+    before its timestamp (ties -> lowest doc_id), NULL when no version
+    qualifies.
 
-    Shape: one equi-join on the key + ONE max_by aggregation per
-    (key, query-ts) — the timestamp predicate folds into the max_by key
+    Shape: one equi-join on url + ONE max_by aggregation per
+    (url, q_epoch) — the timestamp predicate folds into the max_by key
     (NULL-keyed rows are skipped), so the shuffle carries one row per
-    (key, query) per map task after partial combine; never a window
+    (url, query) per map task after partial combine; never a window
     over every (query x version) pair and never a range θ-join."""
-    q = queries.select(key, qts_col).dropDuplicates([key, qts_col])
-    j = q.join(versions, key, "left")
-    valid = F.col(vts_col) <= F.col(qts_col)
+    q = queries.select("url", "q_epoch").dropDuplicates(["url", "q_epoch"])
+    j = q.join(versions, "url", "left")
+    valid = F.col("warc_epoch") <= F.col("q_epoch")
     # (ts, -id) packed into one BIGINT so the tiebreak is one orderable
     # key on any engine (epoch * 1e8 dominates any id < 1e8)
-    ord_key = F.when(valid, F.col(vts_col) * F.lit(100000000) -
-                     F.col(version_id))
+    ord_key = F.when(valid, F.col("warc_epoch") * F.lit(100000000) -
+                     F.col("doc_id"))
     picked = F.max_by(
-        F.struct(F.col(version_id).alias("vid"),
-                 F.col(vts_col).alias("vts")), ord_key)
-    return (j.groupBy(key, qts_col)
+        F.struct(F.col("doc_id").alias("vid"),
+                 F.col("warc_epoch").alias("vts")), ord_key)
+    return (j.groupBy("url", "q_epoch")
             .agg(picked.alias("_m"))
-            .select(key, qts_col,
+            .select("url", "q_epoch",
                     F.col("_m.vid").alias("matched_id"),
                     F.col("_m.vts").alias("matched_epoch")))

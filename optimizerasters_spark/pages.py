@@ -13,7 +13,8 @@ Coordinate model (millidegrees, integer):
   lat_md in [0, 170000)  — measured from the NORTH (top): lat = 85 - lat_md/1000
   px_x = floor(lon_md * W / 360000), px_y = floor(lat_md * H / 170000)
 This mirrors the reference's pixel->block discretization
-(OptimizeRasters.py:3992-3998) with a declared world raster of W x H px.
+(OptimizeRasters.py:3992-3998) with a declared world raster of W x H px
+(tiling.WORLD_W x tiling.WORLD_H, the one grid definition).
 
 Skew injector: 20 % of rows (doc_id % 5 == 0) snap to 3 fixed "urban"
 centers +/- ~10 millidegrees — the hot-cell skew the engine must handle
@@ -24,11 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# World raster extent (pixels). max(W,H)/512 = 1024 -> 10 pyramid levels.
-WORLD_W = 524288  # 2^19
-WORLD_H = 262144  # 2^18
-BLOCK = 512
 
 # Hot centers in the millidegree domain (NYC, Tokyo, Paris), lat from top.
 HOT_LON_MD = (105994, 319692, 182352)

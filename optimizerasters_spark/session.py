@@ -1,18 +1,18 @@
 """SparkSession factory with scale-oriented defaults.
 
-The reference (OptimizeRasters.py:3848, :6692-6709) hand-rolls a 10-thread
-pool; here parallelism is Spark's job. The confs below are the ones that
-matter at 100 TB: AQE (runtime coalesce + skew-join splitting), a shuffle
-partition count sized for the local harness but overridable via
-``spark.sql.shuffle.partitions`` at submit time, Arrow for every
+The reference (OptimizeRasters.py:3848, :6692-6709) hand-rolls a
+10-thread pool; here parallelism is Spark's job. The confs below are the
+ones that matter at 100 TB: AQE (runtime coalesce + skew-join
+splitting), the shuffle partition count the caller passes
+(``DEFAULT_SHUFFLE_PARTITIONS`` when it passes none), Arrow for every
 pandas-UDF boundary, and zstd as the Parquet codec of every table the
 package writes. Spark's default, snappy, has no entropy stage, so
 bit-packed dictionary ids, hex digests and URLs are stored near raw: in
 a perfbench tile_join output file (seed 7) the ``polygon_id``,
 ``tile_x`` and ``tile_y`` chunks take 55,553 / 56,365, 72,240 / 72,217
 and 63,586 / 63,564 bytes (compressed / uncompressed) under snappy.
-Parquet records the codec per column chunk, so a table that mixes
-files of both codecs reads as one.
+Parquet records the codec per column chunk, so a table that mixes files
+of both codecs reads as one.
 """
 
 from __future__ import annotations
@@ -51,11 +51,10 @@ def get_spark(app_name: str = "optimizerasters-spark",
               shuffle_partitions: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for the tiling engine.
 
-    On a real cluster this is invoked via ``spark-submit --py-files`` and
-    ``master`` is left to the submitter; locally it defaults to
-    ``local[$SPARK_GRAFT_CPUS]`` (or all cores).
+    ``master`` (e.g. ``local[4]``) is set when given; ``None`` leaves the
+    master to ``spark-submit``, which is how a cluster run invokes this
+    (``spark-submit --py-files``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # Shuffle spill on tmpfs: the local-mode stand-in for executor-local
     # NVMe. With 32 writer threads, /tmp-on-rootdisk serializes the
     # shuffle; RAM-backed dirs restore near-linear scaling.
@@ -93,6 +92,4 @@ def get_spark(app_name: str = "optimizerasters-spark",
         builder = builder.config("spark.local.dir", local_dir)
     if master:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_GRAFT_NO_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
     return builder.getOrCreate()

@@ -23,21 +23,20 @@ from pyspark.sql import DataFrame
 
 MEMBER_SCHEMA = ("archive STRING, member STRING, size BIGINT, "
                  "payload BINARY, extract_ok BOOLEAN")
+MAX_MEMBER_BYTES = 64 * 1024 * 1024  # larger members are not extracted
 
 
-def expand_tars(archives: DataFrame, name_col: str = "archive",
-                data_col: str = "data",
-                max_member_bytes: int = 64 * 1024 * 1024) -> DataFrame:
+def expand_tars(archives: DataFrame) -> DataFrame:
     """(archive, data:binary) -> one row per member file. Corrupt
     archives surface as a single extract_ok=false row (dead-letter), not
-    a task failure. Members above max_member_bytes are skipped with
+    a task failure. Members above MAX_MEMBER_BYTES are skipped with
     extract_ok=false rows naming them."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"archive": [], "member": [], "size": [],
                    "payload": [], "extract_ok": []}
-            for name, data in zip(pdf[name_col], pdf[data_col]):
+            for name, data in zip(pdf["archive"], pdf["data"]):
                 try:
                     buf = io.BytesIO(bytes(data) if data is not None
                                      else b"")
@@ -45,7 +44,7 @@ def expand_tars(archives: DataFrame, name_col: str = "archive",
                         for m in tf.getmembers():
                             if not m.isfile():
                                 continue
-                            if m.size > max_member_bytes:
+                            if m.size > MAX_MEMBER_BYTES:
                                 out["archive"].append(name)
                                 out["member"].append(m.name)
                                 out["size"].append(m.size)

@@ -70,8 +70,7 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
     return rows
 
 
-def expand_warcs(segments: DataFrame, name_col: str = "path",
-                 data_col: str = "content") -> DataFrame:
+def expand_warcs(segments: DataFrame) -> DataFrame:
     """(path, content:binary) -> one row per WARC response record."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -79,7 +78,7 @@ def expand_warcs(segments: DataFrame, name_col: str = "path",
             out = {k: [] for k in ("segment", "record_id", "url",
                                    "warc_date", "content_length",
                                    "payload", "parse_ok")}
-            for name, data in zip(pdf[name_col], pdf[data_col]):
+            for name, data in zip(pdf["path"], pdf["content"]):
                 raw = bytes(data) if data is not None else b""
                 try:
                     if str(name).endswith(".gz") or \

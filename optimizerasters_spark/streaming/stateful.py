@@ -45,8 +45,7 @@ def track_crawls(key: tuple, pdfs: Iterable[pd.DataFrame],
                         "first_seen_batch": [first_batch]})
 
 
-def crawl_tracker_stream(pages_stream: DataFrame,
-                         batch_id_col: str = "batch_id") -> DataFrame:
+def crawl_tracker_stream(pages_stream: DataFrame) -> DataFrame:
     """Wire the stateful tracker over a streaming pages DataFrame that
     carries (url, warc_epoch, batch_id)."""
     return (pages_stream

@@ -1,7 +1,16 @@
-"""Tile-grid + pyramid-level math with exact reference parity.
+"""The tile grid, defined once, and pyramid-level math with exact
+reference parity.
+
+The grid: a declared world raster of ``WORLD_W`` x ``WORLD_H`` pixels
+over the millidegree domain (pages.py), a point's pixel given by
+:func:`pixel_cols` (inverse :func:`lonlat_md_cols`), cut into
+``BLOCK_SIZE`` x ``BLOCK_SIZE`` level-0 tiles. Every operator that
+places a point on the grid (tile assignment, the raster bins and their
+centroids, the tile manifest, the encoder's block size) reads these
+constants.
 
 Semantics derived from the reference (studied, not copied):
-  * block/tile size default 512 — OptimizeRasters.py:3844 (CCFG_BLOCK_SIZE),
+  * block/tile size 512 — OptimizeRasters.py:3844 (CCFG_BLOCK_SIZE),
     Templates/Imagery_to_MRF_LERC.xml:34 (<BlockSize>512).
   * pyramid level sequence — GDALInfo.pyramidLevels, OptimizeRasters.py:1400-1427:
       value  = max(w, h) / bs            (float division)
@@ -20,7 +29,10 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DEFAULT_BLOCK_SIZE = 512
+BLOCK_SIZE = 512  # CCFG_BLOCK_SIZE, OptimizeRasters.py:3844
+# World raster extent (pixels). max(W,H)/512 = 1024 -> 10 pyramid levels.
+WORLD_W = 524288  # 2^19
+WORLD_H = 262144  # 2^18
 DEFAULT_PYRAMID_FACTOR = "2"  # CDEFPYRAMID_LEV, OptimizeRasters.py:1417
 
 # Packing constants for 2-D tile ids into one BIGINT join/shuffle key.
@@ -33,7 +45,7 @@ CELL_Y_SPAN = 1 << CELL_Y_BITS
 # ---------------------------------------------------------------------------
 
 def pyramid_levels_str(width: int, height: int,
-                       block_size: int = DEFAULT_BLOCK_SIZE) -> str:
+                       block_size: int = BLOCK_SIZE) -> str:
     """Reference-parity pyramid factor string (OptimizeRasters.py:1400-1427).
 
     Examples: (40000, 512) -> "2 4 8 16 32 64 128"; (512, 512) -> "2";
@@ -53,23 +65,22 @@ def pyramid_levels_str(width: int, height: int,
 
 
 def pyramid_top_factor(width: int, height: int,
-                       block_size: int = DEFAULT_BLOCK_SIZE) -> int:
+                       block_size: int = BLOCK_SIZE) -> int:
     """Largest factor in the sequence (2 when the image fits in one block)."""
     s = pyramid_levels_str(width, height, block_size)
     return int(s.split(" ")[-1]) if s else 0
 
 
-def pyramid_num_levels(width: int, height: int,
-                       block_size: int = DEFAULT_BLOCK_SIZE) -> int:
+def pyramid_num_levels(width: int, height: int) -> int:
     """Number of overview levels = log2(top factor)."""
-    top = pyramid_top_factor(width, height, block_size)
+    top = pyramid_top_factor(width, height)
     return top.bit_length() - 1 if top else 0
 
 
-def tile_of(px: int, block_size: int = DEFAULT_BLOCK_SIZE) -> int:
+def tile_of(px: int) -> int:
     """Level-0 tile ordinal for a pixel coordinate (BLOCKSIZE grid,
     OptimizeRasters.py:3992-3998 creation options)."""
-    return px // block_size
+    return px // BLOCK_SIZE
 
 
 def level_up(tile: int, levels: int = 1) -> int:
@@ -86,6 +97,21 @@ def pack_cell(x: int, y: int) -> int:
 # ---------------------------------------------------------------------------
 # Catalyst column expressions (no UDFs; fold into whole-stage codegen)
 # ---------------------------------------------------------------------------
+
+def pixel_cols() -> tuple[Column, Column]:
+    """(px_x, px_y): the world-raster pixel of a row's (lon_md, lat_md),
+    floor(lon_md * WORLD_W / 360000) and floor(lat_md * WORLD_H /
+    170000)."""
+    return (F.floor(F.col("lon_md") * WORLD_W / 360000),
+            F.floor(F.col("lat_md") * WORLD_H / 170000))
+
+
+def lonlat_md_cols(px_x: Column, px_y: Column) -> tuple[Column, Column]:
+    """The inverse of :func:`pixel_cols`: the (lon_md, lat_md) of a
+    world-raster pixel position, floored."""
+    return (F.floor(px_x * 360000 / WORLD_W),
+            F.floor(px_y * 170000 / WORLD_H))
+
 
 def pyramid_top_factor_col(width: Column, height: Column,
                            block_size: Column) -> Column:

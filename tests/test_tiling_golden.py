@@ -102,3 +102,43 @@ def test_pyramid_resample_iterative_differs_from_single_jump(spark):
     l1 = {(r["tile_x"], r["tile_y"]): r["near_val"]
           for r in out.where(F.col("level") == 1).collect()}
     assert l1 == {(0, 0): 3, (1, 0): 3, (0, 1): 3, (1, 1): 7}
+
+
+def test_bin_centroids_round_trip_to_their_own_bin(spark, sf_dir):
+    """Raster and spatial share one grid (tiling.py): every bin centroid
+    vectorize_tiles emits, assigned again by with_tiles and with_bins,
+    lands in its own (tile_x, tile_y, bin)."""
+    from pyspark.sql import functions as F
+    from optimizerasters_spark.operators import raster, spatial
+    from optimizerasters_spark.pages import synth_pages
+
+    cents = raster.vectorize_tiles(spatial.with_tiles(synth_pages(spark,
+                                                                  sf_dir)))
+    back = raster.with_bins(spatial.with_tiles(cents.select(
+        F.col("tile_x").alias("_tx"), F.col("tile_y").alias("_ty"),
+        F.col("bin").alias("_bin"),
+        F.col("centroid_lon_md").alias("lon_md"),
+        F.col("centroid_lat_md").alias("lat_md"))))
+    row = back.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(((F.col("tile_x") != F.col("_tx")) |
+               (F.col("tile_y") != F.col("_ty")) |
+               (F.col("bin") != F.col("_bin"))).cast("int"))
+        .alias("misses")).first()
+    assert row["n"] > 0
+    assert row["misses"] == 0
+
+
+def test_every_bin_centroid_maps_back_to_its_bin():
+    """The same round trip in integers over the whole world raster:
+    each bin centre's floored millidegree coordinate projects back into
+    its own tile and bin, on both axes."""
+    from optimizerasters_spark.operators.raster import BINS
+
+    bs, step = tiling.BLOCK_SIZE, tiling.BLOCK_SIZE // BINS
+    for world, md in ((tiling.WORLD_W, 360000), (tiling.WORLD_H, 170000)):
+        for t in range(world // bs):
+            for b in range(BINS):
+                px = t * bs + b * step + step // 2
+                back = (px * md // world) * world // md
+                assert (back // bs, (back - t * bs) * BINS // bs) == (t, b)
