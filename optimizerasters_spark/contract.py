@@ -755,7 +755,7 @@ def q_simhash_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow mapInPandas media decode plumbing (rows-only: the decoder is
+    """Arrow-batched media decode plumbing (rows-only: the decoder is
     a deterministic stub — schema/batch shape is the contract)."""
     from optimizerasters_spark.operators import multimodal
     m = multimodal.synth_media(synth_pages(spark, sf_dir))
@@ -2299,7 +2299,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fit-within resize plumbing (Arrow mapInPandas): integer micro-
+    """Fit-within resize plumbing (Arrow batches): integer micro-
     unit scale, never upscale, thumbnail content hash — the oracle
     re-derives every column from the payload bytes in SQL, so the UDF
     boundary is value-exact like media_decode's."""

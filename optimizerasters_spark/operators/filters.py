@@ -138,17 +138,15 @@ def url_encode_segments(path: Column) -> Column:
             lambda s: F.when(s.contains(":"), s).otherwise(enc(s))))
 
 
-def rewrite_output_extension(path: Column, mode: str,
-                             keep_extension: bool = False) -> Column:
-    """F6 data-file form (OptimizeRasters.py:1114-1129): unless
-    KeepExtension, the output extension becomes the mode's first token
-    (``tif_cog`` -> ``tif``); if that equals the current extension
-    case-insensitively, the INPUT case is kept (so ledger status lookups
-    keyed by path still match). Paths without an extension pass through
-    (the reference's str.replace('') corner is undefined behavior there).
+def rewrite_output_extension(path: Column, mode: str) -> Column:
+    """F6 data-file form (OptimizeRasters.py:1114-1129): the output
+    extension becomes the mode's first token (``tif_cog`` -> ``tif``);
+    if that equals the current extension case-insensitively, the INPUT
+    case is kept (so ledger status lookups keyed by path still match).
+    Paths without an extension pass through (the reference's
+    str.replace('') corner is undefined behavior there). A job whose
+    template sets KeepExtension does not call this rewrite.
     """
-    if keep_extension:
-        return path
     mode_ext = mode.split("_")[0]
     base = F.substring_index(path, "/", -1)
     ext = F.regexp_extract(base, "\\.([^.]*)$", 1)

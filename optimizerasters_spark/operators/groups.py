@@ -50,17 +50,25 @@ def associate_join(files: DataFrame) -> DataFrame:
                         "primary_ext", "sidecar_ext")
 
 
+def _til_counts(members: DataFrame, group_col: str, processed_col: str,
+                *extra) -> DataFrame:
+    """The one definition of a complete TIL group: member_count ==
+    processed_count ('yes'), with the ``extra`` aggregates alongside in
+    the same groupBy. One shuffle on group_col; map-side partial
+    aggregation keeps it cheap."""
+    return (members.groupBy(group_col)
+            .agg(F.count(F.lit(1)).alias("member_count"),
+                 F.sum(F.when(F.col(processed_col) == "yes", 1)
+                        .otherwise(0)).alias("processed_count"), *extra)
+            .where(F.col("member_count") == F.col("processed_count")))
+
+
 def til_complete_groups(members: DataFrame,
                         group_col: str = "group_id",
                         processed_col: str = "processed") -> DataFrame:
     """A4: groups whose every member is processed ('yes') — the barrier that
-    gates group-level overview builds. One shuffle on group_id; map-side
-    partial aggregation keeps it cheap."""
-    return (members.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("member_count"),
-                 F.sum(F.when(F.col(processed_col) == "yes", 1)
-                        .otherwise(0)).alias("processed_count"))
-            .where(F.col("member_count") == F.col("processed_count")))
+    gates group-level overview builds."""
+    return _til_counts(members, group_col, processed_col)
 
 
 def til_finalize(members: DataFrame, group_col: str = "group_id",
@@ -70,17 +78,12 @@ def til_finalize(members: DataFrame, group_col: str = "group_id",
     the gated post-processing the reference runs per finished .til
     (createaOverview + ovr->mrf convert, OptimizeRasters.py:6767-6821).
 
-    Barrier + overview in ONE aggregation: member/processed counts and
-    the payload rollup partial-aggregate map-side, then the HAVING-style
-    filter keeps complete groups. Incomplete groups simply don't emit —
-    they finalize on a later run once their members process (engine.py
-    wires the resume semantics)."""
-    return (members.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("member_count"),
-                 F.sum(F.when(F.col(processed_col) == "yes", 1)
-                        .otherwise(0)).alias("processed_count"),
-                 F.sum(payload_col).alias("total_payload"))
-            .where(F.col("member_count") == F.col("processed_count"))
+    Barrier + overview in ONE aggregation: the payload rollup rides in
+    the barrier's groupBy. Incomplete groups simply don't emit — they
+    finalize on a later run once their members process (engine.py wires
+    the resume semantics)."""
+    return (_til_counts(members, group_col, processed_col,
+                        F.sum(payload_col).alias("total_payload"))
             .select(group_col,
                     F.col("member_count").cast("bigint")
                      .alias("member_count"),

@@ -43,20 +43,28 @@ def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _derive_pages(load_documents(spark, sf_dir))
 
 
+def _replicated(spark: SparkSession, sf_dir: str,
+                factor: int) -> tuple[DataFrame, int]:
+    """``factor`` replicas of every document, doc_id renumbered to the
+    replica id (replica ``doc_id // n`` of document ``doc_id % n``), and
+    the document count n. spark.range + broadcast dim — natively
+    parallel, no small-file bottleneck."""
+    d = load_documents(spark, sf_dir)
+    n = d.count()
+    base = spark.range(n * factor).select(
+        F.col("id").alias("new_id"), (F.col("id") % n).alias("doc_id"))
+    return (base.join(F.broadcast(d), "doc_id").drop("doc_id")
+            .withColumnRenamed("new_id", "doc_id")), n
+
+
 def synth_docs_scaled(spark: SparkSession, sf_dir: str,
                       factor: int) -> DataFrame:
     """Bench-scale documents with a REALISTIC duplicate mix per family
     of ``factor`` replicas: replica 0 is the original, odd replicas are
     byte-exact copies (exercise the sha256 dedup), even replicas append
     a one-token suffix (near-dups for the LSH stage to find and the
-    Jaccard verify to confirm). spark.range + broadcast dim — natively
-    parallel, no small-file bottleneck."""
-    d = load_documents(spark, sf_dir)
-    n = d.count()
-    base = spark.range(n * factor).select(
-        F.col("id").alias("new_id"), (F.col("id") % n).alias("doc_id"))
-    joined = (base.join(F.broadcast(d), "doc_id").drop("doc_id")
-              .withColumnRenamed("new_id", "doc_id"))
+    Jaccard verify to confirm)."""
+    joined, n = _replicated(spark, sf_dir, factor)
     replica = F.floor(F.col("doc_id") / n).cast("bigint")
     return joined.withColumn(
         "text",
@@ -69,20 +77,9 @@ def synth_docs_scaled(spark: SparkSession, sf_dir: str,
 def synth_pages_scaled(spark: SparkSession, sf_dir: str,
                        factor: int) -> DataFrame:
     """Bench-scale pages: ``factor`` deterministic replicas per document.
-
-    Built from ``spark.range`` (natively parallel — no small-file
-    bottleneck) broadcast-joined to the tiny documents dim; doc_id becomes
-    the replica id so every derived column (url, coords, ts) is unique and
-    the hot-cell skew shape is preserved at any scale."""
-    d = load_documents(spark, sf_dir)
-    n = d.count()
-    base = spark.range(n * factor).select(
-        F.col("id").alias("page_id"),
-        (F.col("id") % n).alias("doc_id"))
-    joined = (base.join(F.broadcast(d), "doc_id")
-              .drop("doc_id")
-              .withColumnRenamed("page_id", "doc_id"))
-    return _derive_pages(joined)
+    doc_id is the replica id, so every derived column (url, coords, ts)
+    is unique and the hot-cell skew shape is preserved at any scale."""
+    return _derive_pages(_replicated(spark, sf_dir, factor)[0])
 
 
 def _derive_pages(d: DataFrame) -> DataFrame:

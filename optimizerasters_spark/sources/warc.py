@@ -6,23 +6,20 @@ segments — the format every crawl corpus actually arrives in. WARC/1.0
 is a plain framed text format (header block, blank line, Content-Length
 payload, two CRLF record separators), so the parser is stdlib-only.
 
-Spark shape (identical to sources/archive.py): segments ride as BINARY
-rows (spark.read.format('binaryFile') or any blob table);
-``expand_warcs`` explodes each segment into one row per ``response``
-record via mapInPandas — Arrow batches, no driver IO, streaming
-compatible. Malformed segments surface as a parse_ok=false dead-letter
-row, never a task failure. gzip'd segments (.warc.gz) are decompressed
-in-task.
+Spark shape: segments ride as BINARY rows (spark.read.format('binaryFile')
+or any blob table); ``expand_warcs`` explodes each segment into one row
+per ``response`` record through ``expand_blobs`` (functions/blobs.py),
+which owns the batch loop and the dead-letter policy. gzip'd segments
+(.warc.gz) are decompressed in-task.
 """
 
 from __future__ import annotations
 
 import gzip
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from optimizerasters_spark.functions.blobs import expand_blobs
 
 WARC_ROW_SCHEMA = ("segment STRING, record_id STRING, url STRING, "
                    "warc_date STRING, content_length BIGINT, "
@@ -70,39 +67,18 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
     return rows
 
 
+def _responses(name, raw: bytes) -> list[tuple]:
+    if str(name).endswith(".gz") or raw[:2] == b"\x1f\x8b":
+        raw = gzip.decompress(raw)
+    return [(r["record_id"], r["url"], r["warc_date"], r["content_length"],
+             r["payload"], True) for r in parse_warc_bytes(raw)]
+
+
 def expand_warcs(segments: DataFrame) -> DataFrame:
-    """(path, content:binary) -> one row per WARC response record."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("segment", "record_id", "url",
-                                   "warc_date", "content_length",
-                                   "payload", "parse_ok")}
-            for name, data in zip(pdf["path"], pdf["content"]):
-                raw = bytes(data) if data is not None else b""
-                try:
-                    if str(name).endswith(".gz") or \
-                            raw[:2] == b"\x1f\x8b":
-                        raw = gzip.decompress(raw)
-                    for r in parse_warc_bytes(raw):
-                        out["segment"].append(name)
-                        out["record_id"].append(r["record_id"])
-                        out["url"].append(r["url"])
-                        out["warc_date"].append(r["warc_date"])
-                        out["content_length"].append(r["content_length"])
-                        out["payload"].append(r["payload"])
-                        out["parse_ok"].append(True)
-                except Exception:
-                    out["segment"].append(name)
-                    out["record_id"].append("")
-                    out["url"].append("")
-                    out["warc_date"].append("")
-                    out["content_length"].append(0)
-                    out["payload"].append(None)
-                    out["parse_ok"].append(False)
-            yield pd.DataFrame(out)
-
-    return segments.mapInPandas(run, WARC_ROW_SCHEMA)
+    """(path, content:binary) -> one row per WARC response record; a
+    NULL or malformed segment is a single parse_ok=false row."""
+    return expand_blobs(segments, "path", "content", WARC_ROW_SCHEMA,
+                        _responses, ("", "", "", 0, None, False))
 
 
 def write_warc_bytes(records: list[tuple[str, str, bytes]]) -> bytes:

@@ -1,4 +1,5 @@
-"""Every defaulted parameter of the package is one some caller passes.
+"""Every defaulted parameter of the package is one some caller passes,
+and the package has one ``mapInPandas`` call.
 
 A defaulted parameter that no call passes is a constant written as a
 knob. Counting rule: a defaulted parameter of a function defined under
@@ -21,11 +22,10 @@ PACKAGE = "optimizerasters_spark"
 CALLER_DIRS = (PACKAGE, "jobs", "perfbench", "tests")
 
 # Defaulted parameters that stay although no call passes them:
-# deployment choices of the streaming queries, the config reader's
-# fallback, and the KeepExtension template key.
+# deployment choices of the streaming queries and the config reader's
+# fallback.
 ALLOWED = {
     ("config.py", "Config.get_boolean", "default"),
-    ("operators/filters.py", "rewrite_output_extension", "keep_extension"),
     ("streaming/snapshot.py", "run_incremental", "available_now"),
     ("streaming/snapshot.py", "run_incremental", "processing_time"),
     ("streaming/snapshot.py", "streaming_exact_dedup", "watermark"),
@@ -131,3 +131,15 @@ def test_defaulted_parameter_budget():
     assert n <= MAX_DEFAULTED, (
         f"{n} defaulted parameters under {PACKAGE}/, budget "
         f"{MAX_DEFAULTED}")
+
+
+def test_one_map_in_pandas_call():
+    """Every blob stage is a parser behind ``functions/blobs.py``'s
+    ``expand_blobs``; no other module hand-rolls an Arrow batch loop."""
+    pkg = os.path.join(ROOT, PACKAGE)
+    calls = [(os.path.relpath(path, pkg), node.lineno)
+             for path in _files(pkg) for node in ast.walk(_parse(path))
+             if isinstance(node, ast.Call)
+             and isinstance(node.func, ast.Attribute)
+             and node.func.attr == "mapInPandas"]
+    assert [f for f, _ in calls] == ["functions/blobs.py"], calls

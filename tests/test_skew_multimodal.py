@@ -52,27 +52,33 @@ def test_decode_images_batch_shape(spark, sf_dir):
         assert again[r["doc_id"]] == (r["width"], r["height"])
 
 
-def test_decode_failure_is_dead_letter_not_task_failure(spark, sf_dir):
+def _media_with_dead_buffers(spark, sf_dir):
+    """10 media rows whose odd doc_ids carry a NULL buffer, plus doc -1
+    with an empty one."""
     m = multimodal.synth_media(synth_pages(spark, sf_dir).limit(10)) \
         .withColumn("media", F.when(F.col("doc_id") % 2 == 0,
                                     F.col("media")))
-    out = multimodal.decode_images(m)
-    bad = out.where(~F.col("decode_ok")).count()
-    assert bad == 5
+    empty = spark.createDataFrame([(-1, bytearray(), "image/fake", 0, 0)],
+                                  multimodal.IMAGE_META_SCHEMA)
+    return m.unionByName(empty)
+
+
+def test_decode_failure_is_dead_letter_not_task_failure(spark, sf_dir):
+    out = multimodal.decode_images(_media_with_dead_buffers(spark, sf_dir))
+    bad = [r["doc_id"] for r in out.where(~F.col("decode_ok")).collect()]
+    assert len(bad) == 6 and all(i % 2 or i == -1 for i in bad)
 
 
 def test_resize_failure_is_dead_letter_not_task_failure(spark, sf_dir):
     """ADVICE r03: resize_images mirrors decode_images' dead-letter
     pattern — a null/empty buffer yields resize_ok=false, never a task
     failure."""
-    m = multimodal.synth_media(synth_pages(spark, sf_dir).limit(10)) \
-        .withColumn("media", F.when(F.col("doc_id") % 2 == 0,
-                                    F.col("media")))
-    out = multimodal.resize_images(m)
+    out = multimodal.resize_images(_media_with_dead_buffers(spark, sf_dir))
     rows = out.collect()
-    assert len(rows) == 10
+    assert len(rows) == 11
     bad = [r for r in rows if not r["resize_ok"]]
-    assert len(bad) == 5
+    assert len(bad) == 6 and all(r["doc_id"] % 2 or r["doc_id"] == -1
+                                 for r in bad)
     assert all(r["out_w"] == 0 and r["thumb_sha"] == "" for r in bad)
     good = [r for r in rows if r["resize_ok"]]
     assert all(1 <= r["out_w"] <= 256 and 1 <= r["out_h"] <= 256

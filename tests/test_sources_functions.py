@@ -92,6 +92,7 @@ def test_expand_tars(spark, tmp_path):
         ("a.tgz", mk_tar([("x.tif", b"AAAA"), ("d/y.mrf", b"BB")])),
         ("b.tgz", mk_tar([("z.til", b"filename = \"m.tif\";")])),
         ("broken.tgz", b"not a tar at all"),
+        ("null.tgz", None),
     ]
     df = spark.createDataFrame(rows, "archive STRING, data BINARY")
     out = expand_tars(df)
@@ -101,7 +102,7 @@ def test_expand_tars(spark, tmp_path):
     assert ok[("a.tgz", "d/y.mrf")] == b"BB"
     assert ok[("b.tgz", "z.til")].startswith(b"filename")
     bad = out.where("NOT extract_ok").collect()
-    assert len(bad) == 1 and bad[0]["archive"] == "broken.tgz"
+    assert sorted(r["archive"] for r in bad) == ["broken.tgz", "null.tgz"]
 
 
 def test_url_encode_matches_python_quote_plus(spark):
@@ -252,7 +253,8 @@ def test_warc_expand_roundtrip_gzip_and_dead_letter(spark):
     row per response record: plain + gzip segments round-trip through
     write_warc_bytes/parse, request records are skipped, and a corrupt
     segment dead-letters as parse_ok=false instead of failing the
-    task."""
+    task; a NULL segment dead-letters the same way, so a lost segment is
+    told apart from an empty one."""
     import gzip as _gz
     from optimizerasters_spark.sources import warc
 
@@ -269,13 +271,14 @@ def test_warc_expand_roundtrip_gzip_and_dead_letter(spark):
     df = spark.createDataFrame(
         [("s1.warc", bytearray(seg)),
          ("s2.warc.gz", bytearray(_gz.compress(seg))),
-         ("bad.warc", bytearray(b"not a warc at all"))],
+         ("bad.warc", bytearray(b"not a warc at all")),
+         ("null.warc", None)],
         "path string, content binary")
     out = warc.expand_warcs(df).collect()
     ok = [r for r in out if r["parse_ok"]]
     bad = [r for r in out if not r["parse_ok"]]
-    assert len(ok) == 10 and len(bad) == 1  # 5 responses x 2 segments
-    assert bad[0]["segment"] == "bad.warc"
+    assert len(ok) == 10  # 5 responses x 2 segments
+    assert sorted(r["segment"] for r in bad) == ["bad.warc", "null.warc"]
     by_seg = {}
     for r in ok:
         by_seg.setdefault(r["segment"], []).append(r)
